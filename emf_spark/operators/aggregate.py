@@ -22,9 +22,19 @@ Shuffle plan (the part that must survive 100 TB):
        satisfies the ClusteredDistribution of the superset key]
     └─ groupBy(keys) collect bounded arrays           [no exchange]
 
+  records (one row per valid record; north-rule mode: one per distinct
+  namespace the record projects to)
+    └─ groupBy(keys) first-wins dims, last-wins ts, records, bytes,
+       collect_set(projection list)                   [shuffle 1, the only]
+       Partial aggregation dedupes the projection lists map-side, so
+       only distinct lists per group cross the exchange.
+    └─ per-row higher-order functions: per-namespace union of dimension
+       sets and metric definitions, sorted             [no exchange]
+
 Per-group state is bounded everywhere: collect_list only ever sees
-post-SEH cardinality (distinct buckets), never raw observations
-(SURVEY.md §7.4 "cardinality-dependent reduce" decision).
+post-SEH cardinality (distinct buckets), never raw observations, and
+collect_set only distinct projection lists (SURVEY.md §7.4
+"cardinality-dependent reduce" decision).
 
 Reference semantics (citations into /root/reference/):
   - A1 group key = dimension hash only (aggregator.go:98); namespace is
@@ -49,7 +59,7 @@ Reference semantics (citations into /root/reference/):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from emf_spark.functions import seh_bucket, seh_value_of
 
@@ -223,55 +233,47 @@ def aggregate_metadata(df: DataFrame, key_by_namespace: bool = False) -> DataFra
         )
     keys = group_keys(df, key_by_namespace)
 
+    # collect_set's partial aggregation dedupes the projection lists
+    # map-side: per-group state is the group's DISTINCT lists, bounded at
+    # any input scale, and the per-namespace union below runs per row.
     ord_ = F.struct(F.col("ts"), F.col("doc_id"))
     meta = df.groupBy(*keys).agg(
         F.min_by("dims", ord_).alias("dimensions"),
         F.max("ts").alias("timestamp"),
         F.count(F.lit(1)).alias("records"),
         F.sum("n_tok").alias("bytes_in"),
+        F.collect_set("cwm").alias("_cwms"),
     )
-
-    # Dedupe projection lists BEFORE exploding/collecting: partial
-    # aggregation collapses the per-record replication map-side, so the
-    # collect below only ever sees distinct (group, projection-list)
-    # combinations — bounded per-group state at any input scale.
-    distinct_cwm = df.select(*keys, "cwm").distinct()
-    proj = distinct_cwm.select(*keys, F.explode("cwm").alias("p"))
+    projs = F.flatten(F.col("_cwms"))
     if key_by_namespace:
         # a namespace-keyed group's projection metadata is only the
         # projections OF that namespace (north-rule EMF structure keyed
         # by (namespace, dim_hash, window))
-        proj = proj.filter(F.col("p.Namespace") == F.col("namespace"))
-    # "proj_ns" avoids a case-insensitive clash with the optional
-    # "namespace" group key in north-rule keying mode
-    per_ns = proj.groupBy(*keys, F.col("p.Namespace").alias("proj_ns")).agg(
-        F.sort_array(
-            F.array_distinct(F.flatten(F.collect_list(F.col("p.Dimensions"))))
-        ).alias("Dimensions"),
-        F.sort_array(
-            F.array_distinct(F.flatten(F.collect_list(F.col("p.Metrics"))))
-        ).alias("Metrics"),
+        projs = F.filter(projs, lambda p: p["Namespace"] == F.col("namespace"))
+    meta = meta.withColumn("_projs", projs)
+
+    def ns_union(ns: Column, field: str) -> Column:
+        of_ns = F.filter("_projs", lambda p: p["Namespace"] == ns)
+        return F.sort_array(
+            F.array_distinct(F.flatten(F.transform(of_ns, lambda p: p[field])))
+        )
+
+    # one entry per namespace, ascending; a group whose records had zero
+    # valid projections (e.g. the "Dimnesions" typo slice) still
+    # flushes, with an empty list (aggregator.go:163-207 emits per
+    # dimHash unconditionally)
+    namespaces = F.sort_array(
+        F.array_distinct(F.transform("_projs", lambda p: p["Namespace"]))
     )
-    cwm = per_ns.groupBy(*keys).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    F.col("proj_ns").alias("Namespace"), "Dimensions", "Metrics"
-                )
-            )
-        ).alias("cw_metrics")
-    )
-    joined = meta.join(cwm, keys, "left")
-    # a group whose records had zero valid projections (e.g. the
-    # "Dimnesions" typo slice) still flushes, with an empty projection
-    # list (aggregator.go:163-207 emits per dimHash unconditionally)
-    return joined.withColumn(
-        "cw_metrics",
-        F.coalesce(
-            F.col("cw_metrics"),
-            F.array().cast(cwm.schema["cw_metrics"].dataType.simpleString()),
+    cw_metrics = F.transform(
+        namespaces,
+        lambda ns: F.struct(
+            ns.alias("Namespace"),
+            ns_union(ns, "Dimensions").alias("Dimensions"),
+            ns_union(ns, "Metrics").alias("Metrics"),
         ),
     )
+    return meta.withColumn("cw_metrics", cw_metrics).drop("_cwms", "_projs")
 
 
 def assemble_groups(

@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from emf_spark import fixtures
@@ -50,43 +51,50 @@ def _aggregate_batch(
     window_ms: int,
     key_by_namespace: bool = False,
 ) -> None:
-    spark = batch.sparkSession
-    parsed = parse_op.parse_emf(with_payload(batch))
-    valid, errors = parse_op.split_valid(parsed)
-    # idempotent under micro-batch REPLAY (append-then-crash-before-
-    # checkpoint-commit re-runs the same batch_id): every write is a
-    # dynamic partition overwrite scoped to this batch_id, so a replay
-    # overwrites its own partition instead of appending duplicates
-    (
-        errors.withColumn("batch_id", F.lit(batch_id))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(os.path.join(out_dir, "errors"))
+    # The errors write and both aggregation branches read one cached
+    # detokenize+parse pass (slim: tokens/payload dropped, as
+    # build_events(persist_parsed=True)); released even if a write fails.
+    parsed = (
+        parse_op.parse_emf(with_payload(batch))
+        .drop("tokens", "payload")
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    windowed = agg.with_window(enrich_op.enrich(valid, lookup), window_ms)
-    obs = agg.explode_observations(windowed, key_by_namespace)
-    hist = agg.aggregate_histograms(obs, key_by_namespace)
-    meta = agg.aggregate_metadata(windowed, key_by_namespace)
-    events = output_op.events_json(
-        agg.assemble_groups(hist, meta, key_by_namespace)
-    ).withColumn(
-        "batch_id", F.lit(batch_id)
-    )
-    # ALL partials are persisted, including oversize-flagged ones: the
-    # events dir is the MERGE's input store, not the final sink. The
-    # oversize policy applies to the MERGED final event (compact_events
-    # re-renders the JSON and filters there) — silently dropping a
-    # partial here made the merged final event undercount where the
-    # one-shot batch run would have dropped the whole group (review
-    # finding, merge.py's streaming==batch contract).
-    (
-        events
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "sink")
-        .parquet(os.path.join(out_dir, "events"))
-    )
+    try:
+        valid, errors = parse_op.split_valid(parsed)
+        # idempotent under micro-batch REPLAY (append-then-crash-before-
+        # checkpoint-commit re-runs the same batch_id): every write is a
+        # dynamic partition overwrite scoped to this batch_id, so a replay
+        # overwrites its own partition instead of appending duplicates
+        (
+            errors.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id")
+            .parquet(os.path.join(out_dir, "errors"))
+        )
+        windowed = agg.with_window(enrich_op.enrich(valid, lookup), window_ms)
+        obs = agg.explode_observations(windowed, key_by_namespace)
+        hist = agg.aggregate_histograms(obs, key_by_namespace)
+        meta = agg.aggregate_metadata(windowed, key_by_namespace)
+        events = output_op.events_json(
+            agg.assemble_groups(hist, meta, key_by_namespace)
+        ).withColumn("batch_id", F.lit(batch_id))
+        # ALL partials are persisted, including oversize-flagged ones: the
+        # events dir is the MERGE's input store, not the final sink. The
+        # oversize policy applies to the MERGED final event (compact_events
+        # re-renders the JSON and filters there) — silently dropping a
+        # partial here made the merged final event undercount where the
+        # one-shot batch run would have dropped the whole group (review
+        # finding, merge.py's streaming==batch contract).
+        (
+            events
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id", "sink")
+            .parquet(os.path.join(out_dir, "events"))
+        )
+    finally:
+        parsed.unpersist()
 
 
 def run_microbatch(

@@ -5,10 +5,12 @@ The reference keeps its aggregation maps alive between fluent-bit flush
 calls under a mutex (aggregator.go:30-42,71-72). The Spark-native
 equivalent is keyed state: per (sink, dim_hash) group we maintain
 running totals — records, observation count, sum, min, max — merged
-incrementally each micro-batch and emitted as an update row. State is
-bounded (five scalars per group) and evicted by a processing-time
-timeout, mirroring the reference's flush-and-reset lifecycle
-(aggregator.go:223-227).
+incrementally each micro-batch and emitted as an update row: each
+batch's update rows are the flush of every group it touched. State is
+five scalars per group, kept for the life of the query's checkpoint
+(no timeout). A processing-time timeout makes Spark run an empty batch
+after every batch to check for expiry, so an ``availableNow``
+(drain-and-stop) query never stopped.
 """
 
 from __future__ import annotations
@@ -52,10 +54,6 @@ OUTPUT_SCHEMA = StructType(
 def _update_group(
     key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    if state.hasTimedOut:
-        # flush-and-reset (aggregator.go:223-227 equivalent)
-        state.remove()
-        return
     records, obs, s, mn, mx = (
         state.get if state.exists else (0, 0, 0.0, float("inf"), float("-inf"))
     )
@@ -66,7 +64,6 @@ def _update_group(
         mn = min(mn, float(pdf["min"].min()))
         mx = max(mx, float(pdf["max"].max()))
     state.update((records, obs, s, mn, mx))
-    state.setTimeoutDuration(3_600_000)
     yield pd.DataFrame(
         [
             {
@@ -122,7 +119,7 @@ def running_group_totals(parsed_stream: DataFrame) -> DataFrame:
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

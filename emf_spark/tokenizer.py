@@ -50,6 +50,7 @@ def _detok_batch(series: pd.Series) -> pd.Series:
     if isinstance(arr, pa.ChunkedArray):  # pragma: no cover
         arr = arr.combine_chunks()
     vals = arr.values
+    offsets = arr.offsets.to_numpy(zero_copy_only=False)
     if arr.null_count == 0 and vals.null_count == 0 and arr.offset == 0:
         # Zero-alloc-per-row fast path: narrow the int32 token buffer
         # to bytes once (vectorized), strict-validate the WHOLE batch
@@ -57,26 +58,24 @@ def _detok_batch(series: pd.Series) -> pd.Series:
         # string column directly over the original list offsets —
         # no per-row Python str objects anywhere (guide-§4.2 re-slice:
         # same data buffer, new offsets interpretation).
-        buf = vals.to_numpy(zero_copy_only=False).astype(np.uint8).tobytes()
-        try:
-            buf.decode("utf-8")
-            sarr = pa.StringArray.from_buffers(
-                len(arr), arr.buffers()[1], pa.py_buffer(buf)
-            )
-            return pd.Series(pd.arrays.ArrowExtensionArray(sarr))
-        except UnicodeDecodeError:
-            # a row carries invalid UTF-8: per-row decode with
-            # errors="replace" below (rare; correctness contract)
-            pass
-        offsets = arr.offsets.to_numpy(zero_copy_only=False)
-        return pd.Series(
-            [
-                buf[offsets[i] : offsets[i + 1]].decode("utf-8", errors="replace")
-                for i in range(len(arr))
-            ],
-            dtype=object,
-        )
-    offsets = arr.offsets.to_numpy(zero_copy_only=False)
+        flat = vals.to_numpy(zero_copy_only=False).astype(np.uint8)
+        # The whole-buffer check cannot see row boundaries: a character
+        # split across rows ([0xC3], [0xA9]) validates as one buffer while
+        # each row alone is invalid. A non-empty row that starts with a
+        # continuation byte (0b10xxxxxx) is exactly that case.
+        starts = offsets[:-1][offsets[:-1] < offsets[1:]]
+        if not np.any((flat[starts] & 0xC0) == 0x80):
+            buf = flat.tobytes()
+            try:
+                buf.decode("utf-8")
+                sarr = pa.StringArray.from_buffers(
+                    len(arr), arr.buffers()[1], pa.py_buffer(buf)
+                )
+                return pd.Series(pd.arrays.ArrowExtensionArray(sarr))
+            except UnicodeDecodeError:
+                pass
+        # a row is invalid UTF-8 on its own: the per-row
+        # errors="replace" decode below (rare; correctness contract)
     elem_valid = None
     if vals.null_count:
         elem_valid = vals.is_valid().to_numpy(zero_copy_only=False)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import itertools
 
 import pytest
 from pyspark.sql import functions as F
@@ -61,6 +62,46 @@ def test_histogram_agg_shuffle_count(parsed):
     plan = plan_of(hist, "simple")
     n_exchanges = plan.count("Exchange hashpartitioning")
     assert n_exchanges == 2, plan[:2000]
+
+
+@pytest.mark.parametrize("key_by_namespace", [False, True])
+def test_metadata_agg_shuffle_count(parsed, key_by_namespace):
+    """One exchange on the group keys in either keying mode: the
+    projection lists ride the metadata groupBy as a collect_set and merge
+    per row, with no second groupBy and no join."""
+    meta = agg.aggregate_metadata(parsed.drop("tokens", "payload"), key_by_namespace)
+    plan = plan_of(meta, "simple")
+    assert plan.count("Exchange hashpartitioning") == 1, plan[:2000]
+
+
+def _janino_compiles(spark) -> int:
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_warm_calls_reuse_compiled_classes(spark, tmp_path):
+    """A repeated call compiles nothing: the codegen cache holds one
+    pipeline.run's and one micro-batch's generated classes (Spark's
+    default of 100 entries is smaller than either working set)."""
+    from emf_spark.streaming import job as sjob
+
+    src = str(tmp_path / "in")
+    fixtures.write_corpus(f"{src}/part-0.parquet", 200)
+    stream_runs = itertools.count()
+
+    def batch_call():
+        pipeline.run(spark, src, str(tmp_path / "batch")).stats.collect()
+
+    def stream_call():
+        # a fresh checkpoint per call, so each call drains the file again
+        out = str(tmp_path / f"stream{next(stream_runs)}")
+        assert sjob.run_microbatch(spark, src, out).awaitTermination(300)
+
+    for call in (batch_call, stream_call):
+        call()
+        n = _janino_compiles(spark)
+        call()
+        assert _janino_compiles(spark) - n == 0, call.__name__
 
 
 def test_staged_scan_prunes_columns(spark, corpus_path, tmp_path):

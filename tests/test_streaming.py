@@ -10,6 +10,15 @@ from emf_spark import fixtures, pipeline
 from emf_spark.streaming import job as sjob
 
 
+@pytest.fixture(autouse=True)
+def _stop_streams(spark):
+    """No query outlives its test: a stream that failed to drain would
+    otherwise keep running beside every later test."""
+    yield
+    for q in spark.streams.active:
+        q.stop()
+
+
 @pytest.fixture(scope="module")
 def stream_input(spark, tmp_path_factory):
     """Corpus split across several files to exercise multi-batch reads."""
@@ -119,7 +128,7 @@ def test_stateful_running_totals(spark, stream_input, tmp_path):
 
     out = str(tmp_path / "stateful_out")
     q = stateful.run_stateful(spark, stream_input, out)
-    q.awaitTermination(300)
+    assert q.awaitTermination(120), "availableNow stateful query did not drain"
     got = spark.read.parquet(f"{out}/totals")
     # update mode emits one row per touched group per batch: the last
     # batch's row per group is the running total
@@ -349,6 +358,68 @@ def test_microbatch_replay_is_idempotent(spark, stream_input, tmp_path):
     # a different batch id still appends (normal progress)
     _aggregate_batch(batch, out, 8, lookup, 60_000)
     assert spark.read.parquet(f"{out}/events").count() == 2 * n1
+
+
+def _persistent_rdd_ids(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def _plan_nodes(plan) -> list[str]:
+    """Node names of a physical plan's own tree (a cached relation's
+    plan is not a child of its scan, so it is not listed)."""
+    children = plan.children()
+    names = [plan.nodeName()]
+    for i in range(children.length()):
+        names += _plan_nodes(children.apply(i))
+    return names
+
+
+def test_microbatch_releases_cached_parse(spark, stream_input, tmp_path):
+    """Each micro-batch caches its parsed rows for its three readers and
+    releases them before the next batch: a drained query leaves no
+    persisted RDD behind."""
+    spark.catalog.clearCache()
+    before = _persistent_rdd_ids(spark)
+    q = sjob.run_microbatch(spark, stream_input, str(tmp_path / "out"))
+    assert q.awaitTermination(300)
+    assert q.exception() is None
+    assert _persistent_rdd_ids(spark) == before
+
+
+def test_microbatch_events_read_cached_parse_and_release_on_failure(
+    spark, stream_input, tmp_path, monkeypatch
+):
+    """The events write scans the cached parse instead of detokenizing
+    and parsing again, and the cache is released even when that write
+    raises (injected here, after the errors write filled the cache)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from emf_spark import fixtures as fx
+
+    real_parquet = DataFrameWriter.parquet
+    calls, at_failure = [], {}
+
+    def failing_second_write(self, path, *args, **kwargs):
+        calls.append(path)
+        if len(calls) == 2:
+            at_failure["cached"] = _persistent_rdd_ids(spark) - before
+            at_failure["nodes"] = _plan_nodes(self._df._jdf.queryExecution().sparkPlan())
+            raise OSError("injected write failure")
+        return real_parquet(self, path, *args, **kwargs)
+
+    spark.catalog.clearCache()
+    before = _persistent_rdd_ids(spark)
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_second_write)
+    with pytest.raises(OSError, match="injected"):
+        sjob._aggregate_batch(
+            spark.read.parquet(stream_input), str(tmp_path / "out"), 0,
+            fx.lookup_df(spark), 60_000,
+        )
+    assert len(calls) == 2 and calls[1].endswith("events")
+    assert at_failure["cached"], "the parse was not cached when the write ran"
+    nodes = at_failure["nodes"]
+    assert "InMemoryTableScan" in nodes and "ArrowEvalPython" not in nodes, nodes
+    assert _persistent_rdd_ids(spark) == before
 
 
 def test_eventtime_counts_sliding(spark, stream_input, tmp_path):

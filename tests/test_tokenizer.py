@@ -63,3 +63,50 @@ def test_null_token_element_yields_empty_payload(spark):
         with_payload(df.filter("doc_id = 'holed'"))
     ).collect()[0]
     assert parsed["valid"] is False
+
+
+def _detok_rows(rows):
+    import pandas as pd
+
+    from emf_spark.tokenizer import _detok_batch
+
+    return list(_detok_batch(pd.Series(rows, dtype=object)))
+
+
+def test_detok_batch_utf8_split_across_rows():
+    """A multi-byte character split over two rows validates as one batch
+    buffer but not per row: each row decodes on its own, with
+    errors="replace", as the pure-python contract does."""
+    rows = [[0xC3], [0xA9], list("ok".encode())]
+    assert _detok_rows(rows) == ["�", "�", "ok"]
+    assert _detok_rows(rows) == [detokenize_bytes(t) for t in rows]
+
+
+def _chopped(b):
+    """One encoded text cut into rows at arbitrary byte positions, so
+    characters split across row boundaries."""
+    return st.lists(st.integers(0, len(b)), max_size=3).map(
+        lambda cuts: [b[i:j] for i, j in zip([0, *sorted(cuts)], [*sorted(cuts), len(b)])]
+    )
+
+
+_ROW = st.one_of(
+    st.none(),
+    st.lists(st.one_of(st.integers(0, 255), st.none()), max_size=12),
+    st.lists(st.integers(0, 255), max_size=12),
+)
+
+
+@given(
+    st.lists(
+        st.one_of(
+            _ROW.map(lambda r: [r]),
+            st.text(min_size=1, max_size=6).map(tokenize_bytes).flatmap(_chopped),
+        ),
+        max_size=10,
+    ).map(lambda groups: [r for g in groups for r in g])
+)
+@settings(max_examples=300, deadline=None)
+def test_detok_batch_matches_pure_python(rows):
+    expect = [None if t is None else detokenize_bytes(t) for t in rows]
+    assert _detok_rows(rows) == expect
