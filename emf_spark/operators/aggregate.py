@@ -28,8 +28,10 @@ Shuffle plan (the part that must survive 100 TB):
        collect_set(projection list)                   [shuffle 1, the only]
        Partial aggregation dedupes the projection lists map-side, so
        only distinct lists per group cross the exchange.
-    └─ per-row higher-order functions: per-namespace union of dimension
-       sets and metric definitions, sorted             [no exchange]
+    └─ cw_union per row: per-namespace union of dimension sets and
+       metric definitions, sorted                      [no exchange]
+       The partial-event merge (streaming/merge.py) re-merges partial
+       unions with the same groupBy + collect_set + cw_union.
 
 Per-group state is bounded everywhere: collect_list only ever sees
 post-SEH cardinality (distinct buckets), never raw observations, and
@@ -235,7 +237,7 @@ def aggregate_metadata(df: DataFrame, key_by_namespace: bool = False) -> DataFra
 
     # collect_set's partial aggregation dedupes the projection lists
     # map-side: per-group state is the group's DISTINCT lists, bounded at
-    # any input scale, and the per-namespace union below runs per row.
+    # any input scale, and cw_union merges them per row.
     ord_ = F.struct(F.col("ts"), F.col("doc_id"))
     meta = df.groupBy(*keys).agg(
         F.min_by("dims", ord_).alias("dimensions"),
@@ -250,30 +252,42 @@ def aggregate_metadata(df: DataFrame, key_by_namespace: bool = False) -> DataFra
         # projections OF that namespace (north-rule EMF structure keyed
         # by (namespace, dim_hash, window))
         projs = F.filter(projs, lambda p: p["Namespace"] == F.col("namespace"))
-    meta = meta.withColumn("_projs", projs)
+    return meta.withColumn("cw_metrics", cw_union(projs)).drop("_cwms")
 
-    def ns_union(ns: Column, field: str) -> Column:
-        of_ns = F.filter("_projs", lambda p: p["Namespace"] == ns)
-        return F.sort_array(
-            F.array_distinct(F.flatten(F.transform(of_ns, lambda p: p[field])))
+
+def cw_union(projs: Column) -> Column:
+    """A6 CloudWatchMetrics union of a projection list: one entry per
+    namespace, ascending, holding the sorted distinct union of that
+    namespace's dimension sets and metric definitions. A union of
+    unions is the union, so partial events re-merge through it too
+    (``streaming/merge.py``). An empty list gives an empty list: a group
+    whose records had zero valid projections (e.g. the "Dimnesions"
+    typo slice) still flushes (aggregator.go:163-207 emits per dimHash
+    unconditionally)."""
+
+    def union(ps: Column) -> Column:
+        def of_ns(ns: Column, field: str) -> Column:
+            mine = F.filter(ps, lambda p: p["Namespace"] == ns)
+            return F.sort_array(
+                F.array_distinct(F.flatten(F.transform(mine, lambda p: p[field])))
+            )
+
+        namespaces = F.sort_array(
+            F.array_distinct(F.transform(ps, lambda p: p["Namespace"]))
+        )
+        return F.transform(
+            namespaces,
+            lambda ns: F.struct(
+                ns.alias("Namespace"),
+                of_ns(ns, "Dimensions").alias("Dimensions"),
+                of_ns(ns, "Metrics").alias("Metrics"),
+            ),
         )
 
-    # one entry per namespace, ascending; a group whose records had zero
-    # valid projections (e.g. the "Dimnesions" typo slice) still
-    # flushes, with an empty list (aggregator.go:163-207 emits per
-    # dimHash unconditionally)
-    namespaces = F.sort_array(
-        F.array_distinct(F.transform("_projs", lambda p: p["Namespace"]))
-    )
-    cw_metrics = F.transform(
-        namespaces,
-        lambda ns: F.struct(
-            ns.alias("Namespace"),
-            ns_union(ns, "Dimensions").alias("Dimensions"),
-            ns_union(ns, "Metrics").alias("Metrics"),
-        ),
-    )
-    return meta.withColumn("cw_metrics", cw_metrics).drop("_cwms", "_projs")
+    # bind ``projs`` once as a lambda variable: Catalyst does no common
+    # subexpression elimination inside lambdas, so each inner reference
+    # would re-evaluate it
+    return F.element_at(F.transform(F.array(projs), union), 1)
 
 
 def assemble_groups(

@@ -1,9 +1,12 @@
-"""End-to-end batch pipeline (SURVEY.md §3.2-§3.3 Spark equivalent):
+"""End-to-end batch pipeline (SURVEY.md §3.2-§3.3 Spark equivalent).
 
-scan(tokenized) -> detokenize (Arrow UDF) -> from_json parse -> validity
-split -> broadcast enrich -> fan-out routed write -> windowed salted
-two-phase aggregation -> metadata merge -> EMF event assembly ->
-per-sink event writes + compression stats.
+The EMF composition is written once and shared by ``build_events``,
+``run`` and the micro-batch (``streaming/job.py``): ``stage``
+(detokenize -> parse -> broadcast enrich -> event-time window), the
+caller's own materialization, ``parse.split_valid`` (valid rows and the
+errors side-output), then ``aggregate`` (windowed salted two-phase
+histogram + metadata merge -> EMF event assembly). ``run`` adds the
+routed write, per-sink event writes and compression stats.
 
 On a cluster the same composition runs via ``spark-submit --py-files``;
 parquet paths become Iceberg tables and nothing else changes.
@@ -12,8 +15,10 @@ parquet paths become Iceberg tables and nothing else changes.
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from emf_spark import fixtures
@@ -29,50 +34,9 @@ from emf_spark.tokenizer import with_payload
 class PipelineResult:
     parsed: DataFrame
     errors: DataFrame
-    enriched: DataFrame
     events: DataFrame
     stats: DataFrame | None = None
     paths: dict = field(default_factory=dict)
-    cached: list = field(default_factory=list)
-
-
-def build_events(
-    spark: SparkSession,
-    tokenized: DataFrame,
-    lookup: DataFrame | None = None,
-    window_ms: int = agg.WINDOW_MS,
-    key_by_namespace: bool = False,
-    persist_parsed: bool = False,
-) -> PipelineResult:
-    """Compose the logical plan up to assembled EMF events (no writes).
-
-    ``persist_parsed`` caches the slim parsed+windowed intermediate
-    (tokens/payload dropped) before the aggregation fan-out — the
-    histogram, metadata, and event branches otherwise each recompute
-    detokenize+parse. MEMORY_AND_DISK so large inputs spill instead of
-    recomputing; on a cluster this is the natural stage boundary to
-    checkpoint.
-    """
-    lookup = lookup if lookup is not None else fixtures.lookup_df(spark)
-    parsed_all = parse_op.parse_emf(with_payload(tokenized))
-    valid, errors = parse_op.split_valid(parsed_all)
-    enriched = enrich_op.enrich(valid, lookup)
-    windowed = agg.with_window(enriched, window_ms)
-    agg_input = windowed.drop("tokens", "payload")
-    cached = []
-    if persist_parsed:
-        from pyspark import StorageLevel
-
-        agg_input = agg_input.persist(StorageLevel.MEMORY_AND_DISK)
-        cached.append(agg_input)
-    obs = agg.explode_observations(agg_input, key_by_namespace)
-    hist = agg.aggregate_histograms(obs, key_by_namespace)
-    meta = agg.aggregate_metadata(agg_input, key_by_namespace)
-    groups = agg.assemble_groups(hist, meta, key_by_namespace)
-    events = output_op.events_json(groups)
-    res = PipelineResult(parsed=valid, errors=errors, enriched=enriched, events=events)
-    res.cached = cached
-    return res
 
 
 STAGED_COLS = [
@@ -91,6 +55,44 @@ STAGED_COLS = [
 ]
 
 
+def stage(
+    tokenized: DataFrame, lookup: DataFrame, window_ms: int = agg.WINDOW_MS
+) -> DataFrame:
+    """Detokenize, parse, enrich and window every record, valid or not,
+    down to ``STAGED_COLS``: the one frame each caller materializes its
+    own way before ``split_valid`` (tokens/payload never survive it)."""
+    parsed = parse_op.parse_emf(with_payload(tokenized))
+    return agg.with_window(enrich_op.enrich(parsed, lookup), window_ms).select(
+        *STAGED_COLS
+    )
+
+
+def aggregate(valid: DataFrame, key_by_namespace: bool = False) -> DataFrame:
+    """Valid staged records -> one assembled EMF event per group: the
+    histogram and metadata branches both read ``valid``, so callers that
+    materialize it parse once."""
+    obs = agg.explode_observations(valid, key_by_namespace)
+    hist = agg.aggregate_histograms(obs, key_by_namespace)
+    meta = agg.aggregate_metadata(valid, key_by_namespace)
+    return output_op.events_json(agg.assemble_groups(hist, meta, key_by_namespace))
+
+
+def build_events(
+    spark: SparkSession,
+    tokenized: DataFrame,
+    lookup: DataFrame | None = None,
+    window_ms: int = agg.WINDOW_MS,
+    key_by_namespace: bool = False,
+) -> PipelineResult:
+    """Compose the logical plan up to assembled EMF events (no writes,
+    nothing materialized)."""
+    lookup = lookup if lookup is not None else fixtures.lookup_df(spark)
+    valid, errors = parse_op.split_valid(stage(tokenized, lookup, window_ms))
+    return PipelineResult(
+        parsed=valid, errors=errors, events=aggregate(valid, key_by_namespace)
+    )
+
+
 def run(
     spark: SparkSession,
     input_path: str,
@@ -107,10 +109,11 @@ def run(
 
     Topology (each arrow is one job; detok+parse runs exactly ONCE):
 
-      tokenized --detok/parse/enrich/window--> staged parquet  [checkpoint]
-      staged --filter !valid--> errors
+      tokenized --stage--> staged parquet | persist     [checkpoint]
+      staged --split_valid--> errors
       tokenized --anti-join(error ids)+broadcast lookup--> routed (no parse)
-      staged --filter valid--> hist+meta --> events --> per-sink writes
+      staged --split_valid--> aggregate --> events (persisted)
+      events --> per-sink writes; events --> compression stats
 
     ``staging`` picks the materialization of the parsed intermediate
     (VERDICT r1 item 8 — run-once workloads shouldn't pay checkpoint I/O):
@@ -138,77 +141,64 @@ def run(
         tokenized = tokenized.repartition(target)
 
     # 1. staged checkpoint: the only pass that pays detok+parse
-    parsed_all = parse_op.parse_emf(with_payload(tokenized))
-    enriched_all = enrich_op.enrich(parsed_all, lookup)
-    staged_df = agg.with_window(enriched_all, window_ms).select(*STAGED_COLS)
-    res = PipelineResult(parsed=None, errors=None, enriched=None, events=None)
+    staged = stage(tokenized, lookup, window_ms)
+    paths, cached = {}, []
     if staging == "parquet":
-        staged_path = os.path.join(out_dir, "staged")
-        staged_df.write.mode("overwrite").parquet(staged_path)
-        res.paths["staged"] = staged_path
-        staged = spark.read.parquet(staged_path)
+        paths["staged"] = os.path.join(out_dir, "staged")
+        staged.write.mode("overwrite").parquet(paths["staged"])
+        staged = spark.read.parquet(paths["staged"])
     elif staging == "persist":
-        from pyspark import StorageLevel
-
-        staged = staged_df.persist(StorageLevel.MEMORY_AND_DISK)
-        res.cached.append(staged)
+        staged = staged.persist(StorageLevel.MEMORY_AND_DISK)
+        cached.append(staged)
     else:
         raise ValueError(f"unknown staging mode: {staging!r}")
 
-    # 2-4 are independent given the staged checkpoint — submit them as
-    # concurrent driver threads so Spark's scheduler interleaves their
-    # stages (the errors/routed jobs are small; overlapping them hides
-    # their fixed per-job latency behind the aggregation).
-    from concurrent.futures import ThreadPoolExecutor
+    # every cache this run takes is released even if a write raises
+    try:
+        valid, errors = parse_op.split_valid(staged)
+        events = aggregate(valid, key_by_namespace).persist()
+        cached.append(events)
+        paths["errors"] = os.path.join(out_dir, "errors")
 
-    # 2. errors side-output (columnar filter scan of staged)
-    res.errors = staged.filter(~F.col("valid")).select(
-        "doc_id", "source", "n_tok", "error"
-    )
-    res.paths["errors"] = os.path.join(out_dir, "errors")
+        # 2. errors, 3. routed rows and 4. events are independent given
+        # the staged checkpoint — submit them as concurrent driver
+        # threads so Spark's scheduler interleaves their stages (the
+        # errors/routed jobs are small; overlapping them hides their
+        # fixed per-job latency behind the aggregation).
+        def _write_errors():
+            errors.write.mode("overwrite").parquet(paths["errors"])
 
-    def _write_errors():
-        res.errors.write.mode("overwrite").parquet(res.paths["errors"])
+        def _write_routed():
+            # no re-parse: drop the (typically tiny) malformed set via
+            # broadcast anti-join on doc_id, then broadcast-enrich
+            bad_ids = F.broadcast(errors.select("doc_id"))
+            routed = enrich_op.enrich(
+                tokenized.join(bad_ids, "doc_id", "left_anti"), lookup
+            )
+            paths["routed"] = route_op.write_routed(routed, out_dir)
 
-    # 3. routed rows: no re-parse — drop the (typically tiny) malformed
-    # set via broadcast anti-join on doc_id, then broadcast-enrich
-    def _write_routed():
-        bad_ids = staged.filter(~F.col("valid")).select("doc_id")
-        routed = enrich_op.enrich(
-            tokenized.join(F.broadcast(bad_ids), "doc_id", "left_anti"), lookup
+        def _write_events():
+            paths["events"], paths["events_jsonl"] = output_op.write_events(
+                events, out_dir
+            )
+
+        with ThreadPoolExecutor(max_workers=3) as pool:
+            futures = [pool.submit(_write_errors)]
+            if write_events:
+                # resumable callers write events through the lineage
+                # manifest instead (a second write here would double
+                # every event row — review finding)
+                futures.append(pool.submit(_write_events))
+            if write_routed:
+                futures.append(pool.submit(_write_routed))
+            for f in futures:
+                f.result()
+        paths["stats"] = os.path.join(out_dir, "stats")
+        output_op.compression_stats(events).write.mode("overwrite").parquet(
+            paths["stats"]
         )
-        res.enriched = routed
-        res.paths["routed"] = route_op.write_routed(routed, out_dir)
-
-    # 4. aggregate + assemble from the staged checkpoint
-    valid = staged.filter(F.col("valid"))
-    obs = agg.explode_observations(valid, key_by_namespace)
-    hist = agg.aggregate_histograms(obs, key_by_namespace)
-    meta = agg.aggregate_metadata(valid, key_by_namespace)
-    groups = agg.assemble_groups(hist, meta, key_by_namespace)
-    events = output_op.events_json(groups).persist()
-    res.events = events
-
-    def _write_events():
-        pq, txt = output_op.write_events(events, out_dir)
-        res.paths["events"], res.paths["events_jsonl"] = pq, txt
-
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = [pool.submit(_write_errors)]
-        if write_events:
-            # resumable callers write events through the lineage
-            # manifest instead (a second write here would double every
-            # event row — review finding)
-            futures.append(pool.submit(_write_events))
-        if write_routed:
-            futures.append(pool.submit(_write_routed))
-        for f in futures:
-            f.result()
-    res.stats = output_op.compression_stats(events)
-    res.paths["stats"] = os.path.join(out_dir, "stats")
-    res.stats.write.mode("overwrite").parquet(res.paths["stats"])
-    res.stats = spark.read.parquet(res.paths["stats"])
-    events.unpersist()
-    for df in res.cached:
-        df.unpersist()
-    return res
+        stats = spark.read.parquet(paths["stats"])
+    finally:
+        for df in cached:
+            df.unpersist()
+    return PipelineResult(valid, errors, events, stats, paths)

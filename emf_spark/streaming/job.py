@@ -34,13 +34,23 @@ import os
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from emf_spark import fixtures
+from emf_spark import fixtures, pipeline
 from emf_spark.operators import aggregate as agg
-from emf_spark.operators import enrich as enrich_op
-from emf_spark.operators import output as output_op
 from emf_spark.operators import parse as parse_op
 from emf_spark.schema import TOKENIZED_SCHEMA
 from emf_spark.tokenizer import with_payload
+
+
+def read_tokenized(
+    spark: SparkSession, input_dir: str, max_files_per_trigger: int
+) -> DataFrame:
+    """The tokenized parquet file stream every EMF stream entry point
+    reads, at most ``max_files_per_trigger`` new files per micro-batch."""
+    return (
+        spark.readStream.schema(TOKENIZED_SCHEMA)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(input_dir)
+    )
 
 
 def _aggregate_batch(
@@ -52,15 +62,13 @@ def _aggregate_batch(
     key_by_namespace: bool = False,
 ) -> None:
     # The errors write and both aggregation branches read one cached
-    # detokenize+parse pass (slim: tokens/payload dropped, as
-    # build_events(persist_parsed=True)); released even if a write fails.
-    parsed = (
-        parse_op.parse_emf(with_payload(batch))
-        .drop("tokens", "payload")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # staged pass (pipeline.stage: detokenize, parse, enrich, window;
+    # tokens/payload dropped); released even if a write fails.
+    staged = pipeline.stage(batch, lookup, window_ms).persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     try:
-        valid, errors = parse_op.split_valid(parsed)
+        valid, errors = parse_op.split_valid(staged)
         # idempotent under micro-batch REPLAY (append-then-crash-before-
         # checkpoint-commit re-runs the same batch_id): every write is a
         # dynamic partition overwrite scoped to this batch_id, so a replay
@@ -72,13 +80,9 @@ def _aggregate_batch(
             .partitionBy("batch_id")
             .parquet(os.path.join(out_dir, "errors"))
         )
-        windowed = agg.with_window(enrich_op.enrich(valid, lookup), window_ms)
-        obs = agg.explode_observations(windowed, key_by_namespace)
-        hist = agg.aggregate_histograms(obs, key_by_namespace)
-        meta = agg.aggregate_metadata(windowed, key_by_namespace)
-        events = output_op.events_json(
-            agg.assemble_groups(hist, meta, key_by_namespace)
-        ).withColumn("batch_id", F.lit(batch_id))
+        events = pipeline.aggregate(valid, key_by_namespace).withColumn(
+            "batch_id", F.lit(batch_id)
+        )
         # ALL partials are persisted, including oversize-flagged ones: the
         # events dir is the MERGE's input store, not the final sink. The
         # oversize policy applies to the MERGED final event (compact_events
@@ -94,7 +98,7 @@ def _aggregate_batch(
             .parquet(os.path.join(out_dir, "events"))
         )
     finally:
-        parsed.unpersist()
+        staged.unpersist()
 
 
 def run_microbatch(
@@ -112,16 +116,28 @@ def run_microbatch(
     for the reference's ticker behavior. ``key_by_namespace`` switches
     the per-batch aggregation to the north-rule key, same as batch."""
     lookup = lookup if lookup is not None else fixtures.lookup_df(spark)
-    stream = (
-        spark.readStream.schema(TOKENIZED_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    stream = read_tokenized(spark, input_dir, max_files_per_trigger)
     writer = stream.writeStream.foreachBatch(
         lambda b, i: _aggregate_batch(b, out_dir, i, lookup, window_ms, key_by_namespace)
     ).option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
     writer = writer.trigger(**(trigger or {"availableNow": True}))
     return writer.start()
+
+
+def _watermarked_valid(
+    spark: SparkSession, input_dir: str, max_files_per_trigger: int, watermark: str
+) -> DataFrame:
+    """Valid parsed records of the file stream with an ``event_time``
+    column (``ts``) under ``watermark``: the input of the event-time
+    counts and sessions."""
+    parsed = parse_op.parse_emf(
+        with_payload(read_tokenized(spark, input_dir, max_files_per_trigger))
+    )
+    return (
+        parsed.filter(F.col("valid"))
+        .withColumn("event_time", F.timestamp_millis(F.col("ts")))
+        .withWatermark("event_time", watermark)
+    )
 
 
 def run_eventtime_counts(
@@ -145,17 +161,8 @@ def run_eventtime_counts(
     ``slide`` turns the window hopping (each event lands in
     size/slide windows — the streaming form of emf_sliding_window);
     state grows by the same factor, watermark eviction unchanged."""
-    stream = (
-        spark.readStream.schema(TOKENIZED_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    parsed = parse_op.parse_emf(with_payload(stream))
-    valid = parsed.filter(F.col("valid")).withColumn(
-        "event_time", F.timestamp_millis(F.col("ts"))
-    )
     counts = (
-        valid.withWatermark("event_time", watermark)
+        _watermarked_valid(spark, input_dir, max_files_per_trigger, watermark)
         .groupBy(
             F.window("event_time", window, slide or window).alias("w"),
             "dim_hash",
@@ -198,17 +205,8 @@ def run_eventtime_sessions(
     by the parity test. Scale: state is one (key, open-session) entry
     per in-flight session — bounded by key cardinality x gap, evicted
     by the watermark, never by job restarts (checkpointed)."""
-    stream = (
-        spark.readStream.schema(TOKENIZED_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    parsed = parse_op.parse_emf(with_payload(stream))
-    valid = parsed.filter(F.col("valid")).withColumn(
-        "event_time", F.timestamp_millis(F.col("ts"))
-    )
     sessions = (
-        valid.withWatermark("event_time", watermark)
+        _watermarked_valid(spark, input_dir, max_files_per_trigger, watermark)
         .groupBy(F.session_window("event_time", gap).alias("sw"), "dim_hash")
         .agg(
             F.count(F.lit(1)).alias("records"),

@@ -22,11 +22,15 @@ associative merge, the partials re-merge EXACTLY:
 - dims: identical within a dim_hash group by construction (the hash IS
   the sorted dim pairs), so first-wins is value-stable.
 - timestamp last-wins = max; records/bytes_in = summation;
-  CloudWatchMetrics = the same per-namespace sorted union as
-  aggregate_metadata (idempotent over partial unions).
+  CloudWatchMetrics = ``aggregate.cw_union`` over the partials' distinct
+  unions, the function aggregate_metadata builds them with (a union of
+  unions is the union).
 
-One shuffle per phase on the group keys; per-group state stays bounded
-(post-SEH cardinality), so the merge scales like the aggregation
+Five hash shuffles, none per namespace: three in the metric merge (the
+true-stats window, the value-pair groupBy and its cardinality window),
+one metadata groupBy on the group keys, and one to gather each group's
+metric list. Per-group state stays bounded (post-SEH cardinality,
+distinct partial unions), so the merge scales like the aggregation
 itself.
 """
 
@@ -145,34 +149,17 @@ def merge_partial_events(
     )
 
     # ---- metadata merge (same shapes as aggregate_metadata's output) ----
-    meta = events.groupBy(*keys).agg(
-        F.min_by("dimensions", F.struct(F.col("timestamp"))).alias("dimensions"),
-        F.max("timestamp").alias("timestamp"),
-        F.sum("records").alias("records"),
-        F.sum("bytes_in").alias("bytes_in"),
-    )
-    cw = events.select(*keys, F.explode("cw_metrics").alias("p"))
-    per_ns = cw.groupBy(*keys, F.col("p.Namespace").alias("proj_ns")).agg(
-        F.sort_array(
-            F.array_distinct(F.flatten(F.collect_list(F.col("p.Dimensions"))))
-        ).alias("Dimensions"),
-        F.sort_array(
-            F.array_distinct(F.flatten(F.collect_list(F.col("p.Metrics"))))
-        ).alias("Metrics"),
-    )
-    cwm = per_ns.groupBy(*keys).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(F.col("proj_ns").alias("Namespace"), "Dimensions", "Metrics")
-            )
-        ).alias("cw_metrics")
-    )
-    meta = meta.join(cwm, keys, "left").withColumn(
-        "cw_metrics",
-        F.coalesce(
-            F.col("cw_metrics"),
-            F.array().cast(cwm.schema["cw_metrics"].dataType.simpleString()),
-        ),
+    meta = (
+        events.groupBy(*keys)
+        .agg(
+            F.min_by("dimensions", F.struct(F.col("timestamp"))).alias("dimensions"),
+            F.max("timestamp").alias("timestamp"),
+            F.sum("records").alias("records"),
+            F.sum("bytes_in").alias("bytes_in"),
+            F.collect_set("cw_metrics").alias("_cws"),
+        )
+        .withColumn("cw_metrics", agg.cw_union(F.flatten("_cws")))
+        .drop("_cws")
     )
 
     assembled = agg.assemble_groups(hist, meta, key_by_namespace)

@@ -130,20 +130,12 @@ def run_stateful(
     output lands one row per touched group per micro-batch."""
     import os
 
-    from emf_spark import fixtures
-    from emf_spark.operators import enrich as enrich_op
-    from emf_spark.operators import parse as parse_op
-    from emf_spark.schema import TOKENIZED_SCHEMA
-    from emf_spark.tokenizer import with_payload
+    from emf_spark import fixtures, pipeline
+    from emf_spark.streaming.job import read_tokenized
 
-    stream = (
-        spark.readStream.schema(TOKENIZED_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    parsed = parse_op.parse_emf(with_payload(stream)).filter(F.col("valid"))
-    enriched = enrich_op.enrich(parsed, fixtures.lookup_df(spark))
-    totals = running_group_totals(enriched)
+    stream = read_tokenized(spark, input_dir, max_files_per_trigger)
+    staged = pipeline.stage(stream, fixtures.lookup_df(spark))
+    totals = running_group_totals(staged.filter(F.col("valid")))
     return (
         totals.writeStream.outputMode("update")
         .foreachBatch(

@@ -12,9 +12,7 @@ from emf_spark.operators import lineage
 
 @pytest.fixture(scope="module")
 def events(spark, corpus_path):
-    res = pipeline.build_events(
-        spark, spark.read.parquet(corpus_path), persist_parsed=True
-    )
+    res = pipeline.build_events(spark, spark.read.parquet(corpus_path))
     ev = res.events.persist()
     ev.count()
     yield ev

@@ -246,3 +246,52 @@ def test_singlepass_staging_matches_parquet_staging(spark, corpus_path, tmp_path
     import os
     assert os.path.exists(f"{tmp_path}/pq/staged")
     assert not os.path.exists(f"{tmp_path}/sp/staged")
+
+
+@pytest.mark.parametrize("key_by_namespace", [False, True])
+def test_build_events_matches_run_events(spark, corpus_path, tmp_path, key_by_namespace):
+    """The no-write path and the batch path are one composition: the
+    events build_events plans hold exactly the rows run writes."""
+    out = str(tmp_path / "run")
+    pipeline.run(
+        spark, corpus_path, out, write_routed=False, key_by_namespace=key_by_namespace
+    )
+    cols = ["sink", "window_start"] + (["namespace"] if key_by_namespace else [])
+    cols += ["dim_hash", "event_json"]
+    written = spark.read.parquet(f"{out}/events").select(*cols)
+    planned = (
+        pipeline.build_events(
+            spark, spark.read.parquet(corpus_path), key_by_namespace=key_by_namespace
+        )
+        .events.filter(~F.col("dropped_oversize"))
+        .select(*cols)
+    )
+    assert written.count() > 0
+    assert written.exceptAll(planned).count() == 0
+    assert planned.exceptAll(written).count() == 0
+
+
+@pytest.mark.parametrize("staging", ["parquet", "persist"])
+@pytest.mark.parametrize("failing", ["errors", "stats"])
+def test_run_releases_caches_when_a_write_fails(
+    spark, corpus_path, tmp_path, monkeypatch, staging, failing
+):
+    """A write that raises (in a concurrent leg, or the last one) still
+    leaves no persisted staging or events frame behind."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real_parquet = DataFrameWriter.parquet
+
+    def failing_write(self, path, *args, **kwargs):
+        if path.endswith(failing):
+            raise OSError("injected write failure")
+        return real_parquet(self, path, *args, **kwargs)
+
+    spark.catalog.clearCache()
+    before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
+    with pytest.raises(OSError, match="injected"):
+        pipeline.run(
+            spark, corpus_path, str(tmp_path / "out"), write_routed=False, staging=staging
+        )
+    assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == before

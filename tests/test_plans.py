@@ -74,6 +74,22 @@ def test_metadata_agg_shuffle_count(parsed, key_by_namespace):
     assert plan.count("Exchange hashpartitioning") == 1, plan[:2000]
 
 
+@pytest.mark.parametrize("key_by_namespace", [False, True])
+def test_merge_partials_shuffle_count(spark, corpus_path, tmp_path, key_by_namespace):
+    """The partial-event merge shuffles five times in either keying mode:
+    its metadata is one groupBy whose collect_set feeds cw_union, with no
+    explode, per-namespace groupBy or join of its own."""
+    from emf_spark.streaming.merge import merge_partial_events
+
+    path = str(tmp_path / "events")
+    pipeline.build_events(
+        spark, spark.read.parquet(corpus_path), key_by_namespace=key_by_namespace
+    ).events.write.parquet(path)
+    merged = merge_partial_events(spark.read.parquet(path), key_by_namespace)
+    plan = plan_of(merged, "simple")
+    assert plan.count("Exchange hashpartitioning") == 5, plan[:4000]
+
+
 def _janino_compiles(spark) -> int:
     metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     return metrics.METRIC_COMPILATION_TIME().getCount()
