@@ -294,7 +294,20 @@ def write_corpus(path: str, n: int, seed: int = 42, **kw) -> str:
 
 
 def lookup_df(spark):
-    """Broadcast-side enrichment table (FIXTURES.md §4)."""
+    """Broadcast-side enrichment table (FIXTURES.md §4), as an inline
+    ``VALUES`` table. Spark plans it as a ``LocalRelation``, so each
+    query that broadcasts it collects the rows inside the JVM.
+    ``createDataFrame`` over a Python list plans a ``LogicalRDD``
+    instead, whose broadcast runs a job through Python workers on every
+    query. String literals are non-null, so the schema is exactly
+    ``LOOKUP_SCHEMA``."""
     from emf_spark.schema import LOOKUP_SCHEMA
 
-    return spark.createDataFrame(SOURCE_LOOKUP_ROWS, LOOKUP_SCHEMA)
+    def sql_str(v: str) -> str:
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+    rows = ", ".join(
+        "(" + ", ".join(map(sql_str, row)) + ")" for row in SOURCE_LOOKUP_ROWS
+    )
+    cols = ", ".join(LOOKUP_SCHEMA.fieldNames())
+    return spark.sql(f"SELECT * FROM VALUES {rows} AS lookup({cols})")

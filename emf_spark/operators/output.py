@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from emf_spark.functions import per_session
+
 # CloudWatch Logs constants (flush/cloudwatch.go:19-23)
 MAX_EVENT_BYTES = 262_144
 EVENT_OVERHEAD = 26
@@ -47,6 +49,15 @@ def events_json(groups: DataFrame, scalar_collapse: bool = True) -> DataFrame:
     """Attach ``event_json`` (one EMF object per group) and ``event_bytes``;
     apply the P7 oversize drop (flush/cloudwatch.go:77-80) keeping a
     ``dropped_oversize`` marker column instead of silently losing rows."""
+    event_json, event_bytes, oversize = _event_cols(scalar_collapse)
+    df = groups.withColumn("event_json", event_json)
+    df = df.withColumn("event_bytes", event_bytes)
+    return df.withColumn("dropped_oversize", oversize)
+
+
+@per_session
+def _event_cols(scalar_collapse: bool) -> tuple[Column, Column, Column]:
+    """``events_json``' three columns, each over the ones before it."""
     aws_json = F.to_json(
         F.struct(
             F.col("timestamp").alias("Timestamp"),
@@ -82,14 +93,11 @@ def events_json(groups: DataFrame, scalar_collapse: bool = True) -> DataFrame:
             F.regexp_replace(F.to_json(F.col("dimensions")), r"^\{|\}$", ""),
         ),
     ).otherwise(F.lit(""))
-    df = groups.withColumn(
-        "event_json",
+    return (
         F.concat(F.lit('{"_aws":'), aws_json, metric_parts, dims_inner, F.lit("}")),
+        F.octet_length("event_json") + F.lit(EVENT_OVERHEAD),
+        F.col("event_bytes") > MAX_EVENT_BYTES,
     )
-    df = df.withColumn(
-        "event_bytes", F.octet_length("event_json") + F.lit(EVENT_OVERHEAD)
-    )
-    return df.withColumn("dropped_oversize", F.col("event_bytes") > MAX_EVENT_BYTES)
 
 
 def write_events(df: DataFrame, out_dir: str, mode: str = "overwrite") -> tuple[str, str]:

@@ -37,6 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from emf_spark.functions import per_session
 from emf_spark.schema import METRIC_VALUE_DDL
 
 # Projection layers parse as RAW JSON text and re-parse per element: a
@@ -174,37 +175,43 @@ def parse_emf(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     (array<struct<name, namespace, pairs:array<struct<v,c>>>>),
     ``valid`` (P1 predicate), ``error`` (reject reason or null).
     """
+    for step in _parse_steps(payload_col):
+        df = df.withColumns(step)
+    return df.drop("_top", "_rec", "_pe")
+
+
+@per_session
+def _parse_steps(payload_col: str) -> tuple[dict[str, Column], ...]:
+    """``parse_emf``'s projections, in order; each reads only columns
+    the ones before it added."""
     payload = F.col(payload_col)
-    df = df.withColumns(
+    aws = F.col("_top")["_aws"]
+    cwm = F.col("cwm")
+    rec = F.col("_rec")
+    return (
         {
             "_top": F.from_json(payload, TOP_DDL),
             "_rec": F.from_json(payload, "map<string,string>"),
-        }
-    )
-    aws = F.col("_top")["_aws"]
-    # the shared once-parsed projection column: cwm AND dim_names read
-    # from this attribute, so each projection/dimension-set JSON string
-    # is from_json'd exactly once per record
-    df = df.withColumn("_pe", _eligible_parsed(aws["CloudWatchMetrics"]))
-    df = df.withColumns(
+        },
+        # the shared once-parsed projection column: cwm AND dim_names
+        # read from this attribute, so each projection/dimension-set
+        # JSON string is from_json'd exactly once per record
+        {"_pe": _eligible_parsed(aws["CloudWatchMetrics"])},
         {
             "ts": aws["Timestamp"],
             "cwm": parsed_projections(F.col("_pe")),
-            "valid": F.col("_rec").isNotNull()
+            "valid": rec.isNotNull()
             & aws.isNotNull()
             & aws["Timestamp"].isNotNull()
             & aws["CloudWatchMetrics"].isNotNull(),
-            "error": F.when(F.col("_rec").isNull(), F.lit("unparseable record"))
+            "error": F.when(rec.isNull(), F.lit("unparseable record"))
             .when(aws.isNull(), F.lit("no aws metadata found in record"))
             .when(aws["Timestamp"].isNull(), F.lit("no timestamp found in aws data"))
             .when(
                 aws["CloudWatchMetrics"].isNull(),
                 F.lit("no CloudWatchMetrics key found"),
             ),
-        }
-    )
-    cwm = F.col("cwm")
-    df = df.withColumns(
+        },
         {
             # dim_names from dims-ELIGIBLE projections (Metrics leg may be
             # invalid — reference accumulates DimensionSet first, ADVICE r1)
@@ -214,30 +221,28 @@ def parse_emf(df: DataFrame, payload_col: str = "payload") -> DataFrame:
                     F.transform(cwm, lambda p: F.transform(p["Metrics"], lambda m: m["Name"]))
                 )
             ),
-        }
+        },
+        # dims: referenced-and-present, not shadowed by a metric name (P2/P4)
+        {
+            "dims": F.map_filter(
+                rec,
+                lambda k, v: F.array_contains(F.col("dim_names"), k)
+                & ~F.array_contains(F.col("metric_names"), k),
+            )
+        },
+        # metric_raw: declared-and-present metric values as raw JSON text.
+        # Value normalization (F2/A3/P5/P6) happens AFTER the aggregation
+        # explode (aggregate.explode_observations): the from_json runs once
+        # per flat (record, metric) row under whole-stage codegen instead of
+        # inside a nested HOF here, and the persisted intermediate stays a
+        # cheap map<string,string> instead of deep structs.
+        {
+            "metric_raw": F.map_filter(
+                rec, lambda k, v: F.array_contains(F.col("metric_names"), k)
+            )
+        },
+        {"dim_hash": dim_hash_expr(F.col("dims"))},
     )
-    rec = F.col("_rec")
-    # dims: referenced-and-present, not shadowed by a metric name (P2/P4)
-    df = df.withColumn(
-        "dims",
-        F.map_filter(
-            rec,
-            lambda k, v: F.array_contains(F.col("dim_names"), k)
-            & ~F.array_contains(F.col("metric_names"), k),
-        ),
-    )
-    # metric_raw: declared-and-present metric values as raw JSON text.
-    # Value normalization (F2/A3/P5/P6) happens AFTER the aggregation
-    # explode (aggregate.explode_observations): the from_json runs once
-    # per flat (record, metric) row under whole-stage codegen instead of
-    # inside a nested HOF here, and the persisted intermediate stays a
-    # cheap map<string,string> instead of deep structs.
-    df = df.withColumn(
-        "metric_raw",
-        F.map_filter(rec, lambda k, v: F.array_contains(F.col("metric_names"), k)),
-    )
-    df = df.withColumn("dim_hash", dim_hash_expr(F.col("dims")))
-    return df.drop("_top", "_rec", "_pe")
 
 
 def namespace_of(cwm: Column, name: Column) -> Column:

@@ -8,6 +8,12 @@ errors side-output), then ``aggregate`` (windowed salted two-phase
 histogram + metadata merge -> EMF event assembly). ``run`` adds the
 routed write, per-sink event writes and compression stats.
 
+The composition's expressions are built once per session: the
+operators build every ``Column`` tree that does not depend on the
+input DataFrame through ``functions.per_session``, so a warm call or
+micro-batch only assembles DataFrames from trees it already has. A
+build used to cost about a second of py4j round trips on every call.
+
 On a cluster the same composition runs via ``spark-submit --py-files``;
 parquet paths become Iceberg tables and nothing else changes.
 """

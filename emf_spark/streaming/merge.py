@@ -39,7 +39,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.window import Window
 
-from emf_spark.functions import seh_bucket, seh_value_of
 from emf_spark.operators import aggregate as agg
 from emf_spark.operators import output as output_op
 
@@ -116,13 +115,8 @@ def merge_partial_events(
         "n_distinct",
         F.greatest(F.count(F.lit(1)).over(wv), F.max("pnd").over(wv)),
     )
-    out_v = (
-        F.when(F.col("n_distinct") <= 2, F.col("v"))
-        .otherwise(seh_value_of(seh_bucket(F.col("v"))))
-        .alias("out_v")
-    )
     p3 = (
-        j.groupBy(*keys, "metric_name", out_v)
+        j.groupBy(*keys, "metric_name", agg.seh_out_v())
         .agg(F.sum("c").alias("c"), F.max("n_distinct").alias("n_distinct"))
         .filter((F.col("n_distinct") <= 2) | (F.col("c") > 0))
     )

@@ -54,6 +54,12 @@ def test_logfmt_unterminated_quote_keeps_raw(spark):
     # a CLOSING quote)
     assert _one(spark, 'a=1 k="abc', logfmt_records) == {"a": "1", "k": '"abc'}
     assert _one(spark, 'k="', logfmt_records) == {"k": '"'}
+    # in `k="a\"` the last quote is escaped, so the scanner's quoted
+    # form does not match and the value is bare-matched: it stays raw
+    assert _one(spark, 'k="a\\"', logfmt_records) == {"k": '"a\\"'}
+    assert _one(spark, 'k="a\\" b=1', logfmt_records) == {"k": '"a\\"', "b": "1"}
+    # an escaped backslash before the last quote leaves it closing
+    assert _one(spark, 'k="a\\\\" b=1', logfmt_records) == {"k": "a\\", "b": "1"}
 
 
 def test_ltsv_grammar(spark):

@@ -120,6 +120,72 @@ def test_warm_calls_reuse_compiled_classes(spark, tmp_path):
         assert _janino_compiles(spark) - n == 0, call.__name__
 
 
+def test_session_turns_off_call_site_capture(spark):
+    """get_spark turns off PySpark's per-call stack capture, which costs
+    several py4j round trips on every DataFrame and functions call."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+def test_composition_expressions_built_once_per_session(spark, corpus_path, monkeypatch):
+    """A second build of the composition in one SparkContext reuses
+    every memoized expression; a new SparkContext rebuilds them."""
+    from pyspark import SparkContext
+
+    from emf_spark import functions as fn
+
+    tokenized = spark.read.parquet(corpus_path)
+    lookup = fixtures.lookup_df(spark)
+
+    def build():
+        valid, _ = parse_op.split_valid(pipeline.stage(tokenized, lookup))
+        pipeline.aggregate(valid)
+        return dict(fn._memo)
+
+    first = build()
+    second = build()
+    assert {b.__name__ for b, _ in first} >= {
+        "_parse_steps", "_window_start", "_observation_cols", "_histogram_cols",
+        "seh_out_v", "_metadata_cols", "_metric_list", "_event_cols",
+    }
+    assert second.keys() == first.keys()
+    assert all(second[k] is v for k, v in first.items())
+
+    real = SparkContext._active_spark_context
+
+    class OtherContext:
+        """A new SparkContext identity over the same JVM."""
+
+        def __getattr__(self, name):
+            return getattr(real, name)
+
+    monkeypatch.setattr(SparkContext, "_active_spark_context", OtherContext())
+    key = (parse_op._parse_steps.__wrapped__, ("payload",))
+    rebuilt = parse_op._parse_steps("payload")
+    assert rebuilt is not first[key]
+    assert fn._memo == {key: rebuilt}
+
+
+def test_lookup_is_an_inline_table(spark, corpus_path):
+    """The default lookup is a LocalRelation with exactly LOOKUP_SCHEMA,
+    so its broadcast collects in the JVM; a Python-list createDataFrame
+    would be a Python RDD scan ("Scan ExistingRDD") on every query."""
+    from emf_spark.schema import LOOKUP_SCHEMA
+
+    lookup = fixtures.lookup_df(spark)
+    assert lookup.schema == LOOKUP_SCHEMA
+    assert [f.nullable for f in lookup.schema] == [f.nullable for f in LOOKUP_SCHEMA]
+    optimized = lookup._jdf.queryExecution().optimizedPlan()
+    assert optimized.getClass().getSimpleName() == "LocalRelation"
+    assert sorted(tuple(r) for r in lookup.collect()) == sorted(fixtures.SOURCE_LOOKUP_ROWS)
+
+    lines = plan_of(pipeline.stage(spark.read.parquet(corpus_path), lookup), "simple")
+    lines = lines.splitlines()
+    assert not [ln for ln in lines if "Scan ExistingRDD" in ln]
+    at = [i for i, ln in enumerate(lines) if "BroadcastExchange" in ln]
+    assert len(at) == 1
+    assert "LocalTableScan" in lines[at[0] + 1]
+
+
 def test_staged_scan_prunes_columns(spark, corpus_path, tmp_path):
     """The events path must never read tokens back from the staged
     checkpoint (ReadSchema excludes them by construction), and the
