@@ -162,13 +162,6 @@ def _perm_literals(num_perm: int, seed: int = 42):
     return [(int(x), int(y)) for x, y in zip(a, b)]
 
 
-def portable_shingle_hashes(text: F.Column, k: int = 3) -> F.Column:
-    """Shingle hashes bit-matchable by a DuckDB oracle: portable md5 word
-    hash + the same rolling-poly combine as the fast path. Column form —
-    hot paths use shingle_hash_rows(word_hash=portable_word_hash)."""
-    return word_shingle_hashes(text, k, word_hash=portable_word_hash)
-
-
 def shingle_hash_rows(
     df: DataFrame,
     text_col: str = "text",

@@ -33,11 +33,6 @@ def seh_value_of(bucket: Column) -> Column:
     return F.exp((bucket.cast("double") + F.lit(0.5)) * F.lit(LOG_1_1))
 
 
-def to_f64(v: Column) -> Column:
-    """F3 ConvertToFloat64 (utils/utils.go:9-25): parse else 0."""
-    return F.coalesce(v.try_cast("double"), F.lit(0.0))
-
-
 # (builder, args) -> what the builder returned, for ``_memo_owner`` only
 _memo: dict = {}
 _memo_owner = None

@@ -4,16 +4,16 @@ The reference dispatches every flush to exactly one configured sink
 (flush/flusher.go:13-25). The north rule requires fan-out to per-sink
 tables. We write ONCE with ``partitionBy("sink")`` — a single scan and
 zero shuffle produce one directory (≈ Iceberg partition) per sink;
-``sinks.<name>`` views read back a single partition with partition
-pruning. Per-sink row-level invariant: routed rows carry the original
-``tokens`` untouched (north-rule token-array equality).
+reading ``routed/sink=<name>`` back scans that one partition. Per-sink
+row-level invariant: routed rows carry the original ``tokens``
+untouched (north-rule token-array equality).
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 ROUTED_COLS = [
     "doc_id",
@@ -34,10 +34,3 @@ def write_routed(df: DataFrame, out_dir: str, mode: str = "overwrite") -> str:
     df.select(*cols).write.mode(mode).partitionBy("sink").parquet(path)
     return path
 
-
-def read_sink(spark: SparkSession, out_dir: str, sink: str) -> DataFrame:
-    """Read one sink's routed table (partition-pruned scan)."""
-    return (
-        spark.read.option("basePath", os.path.join(out_dir, "routed"))
-        .parquet(os.path.join(out_dir, "routed", f"sink={sink}"))
-    )

@@ -3,15 +3,11 @@ keyed snapshot — the stream-native sibling of datax/diff.apply_changes
 (same I/U/D row contract), i.e. the continuous MERGE a Delta/Iceberg
 sink performs, expressed with plain parquet + Structured Streaming.
 
-Snapshot storage is VERSIONED: each micro-batch ``b`` writes the merged
-result to ``<snapshot_dir>/v=<b+1>`` after reading its predecessor (the
-highest version <= b; v=0 is the bootstrap). That makes micro-batch
-REPLAY exact, not just harmless: a batch that crashed after writing but
-before the checkpoint commit re-runs against the same predecessor it
-read the first time — its own partial output lives at a HIGHER version
-and is excluded by construction, then overwritten. (apply_changes is
-additionally a no-op on re-applied feeds, but the versioning means we
-never rely on that.) Old versions are retained for time travel /
+Snapshot storage is the runner's VERSIONED store (``runner.py``): each
+micro-batch ``b`` writes the merged result to ``<snapshot_dir>/v=<b+1>``
+after reading its predecessor, which makes micro-batch REPLAY exact,
+not just harmless. (apply_changes is additionally a no-op on
+re-applied feeds, but the versioning means we never rely on that.) Old versions are retained for time travel /
 debugging; pruning them is a retention sweep, same as Delta's VACUUM.
 
 Ordering semantics: micro-batches apply in arrival order, with
@@ -33,42 +29,27 @@ amortizes the snapshot scan.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
 from emf_spark.datax.diff import apply_changes
+from emf_spark.streaming.runner import (
+    _versions,  # noqa: F401  (a store's version list, read through cdc)
+    file_stream,
+    read_version,
+    require_bootstrap,
+    run_stream,
+    write_version,
+)
 
 
 def init_snapshot(base: DataFrame, snapshot_dir: str) -> None:
     """Write the bootstrap snapshot as version 0."""
-    base.write.mode("overwrite").parquet(os.path.join(snapshot_dir, "v=0"))
-
-
-def _versions(spark: SparkSession, snapshot_dir: str) -> list[int]:
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    path = jvm.org.apache.hadoop.fs.Path(snapshot_dir)
-    fs = path.getFileSystem(conf)
-    if not fs.exists(path):
-        return []
-    out = []
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("v="):
-            try:
-                out.append(int(name[2:]))
-            except ValueError:
-                continue
-    return sorted(out)
+    write_version(base, snapshot_dir, 0)
 
 
 def current_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
     """Read the highest snapshot version."""
-    vs = _versions(spark, snapshot_dir)
-    if not vs:
-        raise ValueError(f"no snapshot versions under {snapshot_dir}")
-    return spark.read.parquet(os.path.join(snapshot_dir, f"v={vs[-1]}"))
+    return read_version(spark, snapshot_dir)
 
 
 def run_cdc_merge(
@@ -79,36 +60,18 @@ def run_cdc_merge(
     key_cols: list[str],
     seq_col: str,
     op_col: str = "op",
-    trigger: dict | None = None,
     max_files_per_trigger: int = 8,
 ):
     """Stream parquet change-feed files from ``feed_dir`` into the
     versioned snapshot at ``snapshot_dir`` (bootstrap with
     init_snapshot first). Returns the started StreamingQuery."""
-    if not _versions(spark, snapshot_dir):
-        raise ValueError(
-            f"bootstrap missing: call init_snapshot before streaming "
-            f"into {snapshot_dir}"
-        )
-    schema = spark.read.parquet(feed_dir).schema
+    require_bootstrap(spark, snapshot_dir, "init_snapshot")
 
     def merge_batch(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        prev = [v for v in _versions(s, snapshot_dir) if v <= batch_id]
-        base = s.read.parquet(os.path.join(snapshot_dir, f"v={prev[-1]}"))
+        base = read_version(batch.sparkSession, snapshot_dir, batch_id)
         merged = apply_changes(base, batch, key_cols, seq_col, op_col=op_col)
-        merged.write.mode("overwrite").parquet(
-            os.path.join(snapshot_dir, f"v={batch_id + 1}")
-        )
+        write_version(merged, snapshot_dir, batch_id + 1)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(feed_dir)
+    return run_stream(
+        file_stream(spark, feed_dir, max_files_per_trigger), merge_batch, checkpoint_dir
     )
-    writer = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-    )
-    return writer.start()

@@ -1,7 +1,7 @@
 """Streaming reset-aware counter accumulation: the stream-native
 sibling of ``datax/timeseries.counter_increase`` — same lattice, same
 reset rule, same tiebreak — accumulated across micro-batches with
-keyed state via ``applyInPandasWithState``.
+keyed state via ``runner.keyed_state``.
 
 Contract parity is engineered, not hoped for: the gauge is scaled to
 the integer lattice SPARK-SIDE (JVM ``round(value*scale)`` — the
@@ -30,8 +30,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import LongType, StructField, StructType
+
+from emf_spark.streaming.runner import keyed_state
 
 COUNTER_STATE_SCHEMA = StructType(
     [
@@ -112,18 +114,6 @@ def streaming_counter_increase(
     max-``batch_seq`` row per series equals the batch
     ``counter_increase`` over everything ingested so far (given
     per-series event-time-ordered batch arrival)."""
-    key_fields = [df.schema[k] for k in key_cols]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType) for f in key_fields]
-        + [
-            StructField("batch_seq", LongType()),
-            StructField("samples", LongType()),
-            StructField("resets", LongType()),
-            StructField("increase_units", LongType()),
-            StructField("last_units", LongType()),
-        ]
-    )
-
     def fn(key, pdfs, state):
         for out in _accumulate(key, pdfs, state):
             yield out.rename(
@@ -136,10 +126,8 @@ def streaming_counter_increase(
         F.col(tiebreak_col).cast("long").alias("_tie"),
         F.round(F.col(value_col) * scale).cast("long").alias("_v"),
     )
-    return keyed.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=COUNTER_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    values = [
+        StructField(name, LongType())
+        for name in ("batch_seq", "samples", "resets", "increase_units", "last_units")
+    ]
+    return keyed_state(keyed, key_cols, fn, values, COUNTER_STATE_SCHEMA)

@@ -1,7 +1,7 @@
 """Streaming CUSUM change-point detection: the stream-native sibling
 of ``datax/timeseries.cusum`` — same integer-cent lattice, same Page
 statistic, same (ts, tiebreak) ordering — carried across micro-batches
-with keyed state via ``applyInPandasWithState``.
+with keyed state via ``runner.keyed_state``.
 
 Where the batch operator de-sequentializes the recursion into prefix
 sums + running mins (two window passes), the streaming side exploits
@@ -34,8 +34,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+from emf_spark.streaming.runner import keyed_state
 
 CUSUM_STATE_SCHEMA = StructType(
     [
@@ -106,19 +108,6 @@ def streaming_cusum(
         raise ValueError("scale and threshold_cents must be >= 1")
     if slack_cents < 0:
         raise ValueError("slack_cents must be >= 0")
-    key_fields = [df.schema[k] for k in key_cols]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType) for f in key_fields]
-        + [
-            StructField("ts_micros", LongType()),
-            StructField("tiebreak", LongType()),
-            StructField("cusum_hi_cents", LongType()),
-            StructField("cusum_lo_cents", LongType()),
-            StructField("alarm_hi", IntegerType()),
-            StructField("alarm_lo", IntegerType()),
-        ]
-    )
-
     def fn(key, pdfs, state):
         for out in _fold(key, pdfs, state):
             yield out.rename(
@@ -137,10 +126,12 @@ def streaming_cusum(
             F.lit(target_cents - slack_cents).cast("long").alias("_klo"),
         )
     )
-    return keyed.groupBy(*key_cols).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=CUSUM_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    values = [
+        StructField("ts_micros", LongType()),
+        StructField("tiebreak", LongType()),
+        StructField("cusum_hi_cents", LongType()),
+        StructField("cusum_lo_cents", LongType()),
+        StructField("alarm_hi", IntegerType()),
+        StructField("alarm_lo", IntegerType()),
+    ]
+    return keyed_state(keyed, key_cols, fn, values, CUSUM_STATE_SCHEMA)

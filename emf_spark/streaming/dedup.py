@@ -3,10 +3,12 @@ across micro-batches (SURVEY.md §2.9 custom stateful operator; the
 stream-native sibling of datax/dedup.exact_dedup_incremental, which
 solves the same problem for batch ingests against a parquet store).
 
-Keyed state via ``applyInPandasWithState``: one state row per distinct
+Keyed state via ``runner.keyed_state``: one state row per distinct
 content hash holding the kept doc id. A micro-batch emits a document
 only when its hash has no state yet (first-seen wins; within a
-micro-batch the smallest id of the batch wins, deterministically).
+micro-batch the smallest non-null id of the batch wins,
+deterministically; null when the batch has none, like the batch
+operator's ``min``).
 Later arrivals of the same content — same batch or any later batch —
 are swallowed. Emissions are append-only facts (a hash is emitted at
 most once over the stream's lifetime), so downstream sinks can run in
@@ -29,13 +31,15 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     LongType,
     StringType,
     StructField,
     StructType,
 )
+
+from emf_spark.streaming.runner import file_stream, keyed_state, run_stream
 
 DEDUP_STATE_SCHEMA = StructType([StructField("keep_id", LongType())])
 
@@ -57,8 +61,10 @@ def _first_seen(
     min_id = None
     for pdf in pdfs:
         n += len(pdf)
-        m = int(pdf["_id"].min())
-        min_id = m if min_id is None else min(min_id, m)
+        ids = pdf["_id"].dropna()
+        if len(ids):
+            m = int(ids.min())
+            min_id = m if min_id is None else min(min_id, m)
     if state.exists:
         return  # duplicate of an earlier batch: swallow
     state.update((min_id,))
@@ -82,12 +88,8 @@ def streaming_exact_dedup(
         F.md5(normalized(F.col(text_col))).alias("content_hash"),
         F.col(id_col).cast("long").alias("_id"),
     )
-    return keyed.groupBy("content_hash").applyInPandasWithState(
-        _first_seen,
-        outputStructType=DEDUP_OUTPUT_SCHEMA,
-        stateStructType=DEDUP_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        keyed, ["content_hash"], _first_seen, DEDUP_OUTPUT_SCHEMA, DEDUP_STATE_SCHEMA
     )
 
 
@@ -100,17 +102,9 @@ def run_streaming_dedup(
 ):
     """Wire the dedup operator onto a parquet file stream; append-mode
     output lands one row per newly-seen document per micro-batch."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    unique = streaming_exact_dedup(stream)
-    return (
-        unique.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", os.path.join(out_dir, "unique"))
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+    stream = file_stream(spark, input_dir, max_files_per_trigger, schema)
+    return run_stream(
+        streaming_exact_dedup(stream),
+        os.path.join(out_dir, "unique"),
+        os.path.join(out_dir, "_checkpoint"),
     )

@@ -1,8 +1,8 @@
 """Streaming distribution-drift monitor: watch a category stream's
 cumulative mix drift away from a FROZEN reference window — the
 stream-native sibling of ``datax/quality.distribution_drift``, built
-on the repo's versioned-store foreachBatch contract (``cdc.py`` /
-``scd2.py`` verbatim).
+on the runner's versioned store (``runner.py``), like ``cdc.py`` and
+``scd2.py``.
 
 Why counts merge exactly: ``category_counts`` frames are mergeable —
 union + re-aggregate of two windows' count frames IS the count frame
@@ -12,13 +12,10 @@ counts into the predecessor store version, and the drift rows are
 recomputed from the collapsed frames in O(|categories|).
 
 Replay exactness: version ``b+1`` is written after reading the
-highest version <= ``b`` (v=0 is the empty bootstrap), so a batch that
-crashed after writing but before the checkpoint commit re-runs
-against the same predecessor it read the first time — its own partial
-output lives at a higher version and is excluded by construction,
-then overwritten. Per-batch drift verdicts land under
-``drift_dir/batch_id=<b>`` the same idempotent way. The latest drift
-partition always equals the one-shot batch
+highest version <= ``b`` (v=0 is the empty bootstrap), so a replayed
+batch re-runs against the same predecessor. Per-batch drift verdicts
+land under ``drift_dir/batch_id=<b>`` via ``runner.write_batch``. The
+latest drift partition always equals the one-shot batch
 ``distribution_drift(reference, everything-ingested-so-far)`` —
 pinned row-identical by the parity test.
 
@@ -34,7 +31,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from emf_spark.datax.quality import category_counts, drift_from_counts
-from emf_spark.streaming.cdc import _versions
+from emf_spark.streaming.runner import (
+    file_stream,
+    read_version,
+    require_bootstrap,
+    run_stream,
+    write_batch,
+    write_version,
+)
 
 
 def init_reference(ref: DataFrame, cat_col: str, store_dir: str) -> None:
@@ -42,9 +46,7 @@ def init_reference(ref: DataFrame, cat_col: str, store_dir: str) -> None:
     ``<store_dir>/ref`` and an EMPTY cumulative bootstrap at v=0."""
     counts = category_counts(ref, cat_col)
     counts.write.mode("overwrite").parquet(os.path.join(store_dir, "ref"))
-    counts.limit(0).write.mode("overwrite").parquet(
-        os.path.join(store_dir, "cum", "v=0")
-    )
+    write_version(counts.limit(0), os.path.join(store_dir, "cum"), 0)
 
 
 def current_drift(spark: SparkSession, store_dir: str,
@@ -62,7 +64,6 @@ def run_drift_monitor(
     drift_dir: str,
     checkpoint_dir: str,
     cat_col: str,
-    trigger: dict | None = None,
     max_files_per_trigger: int = 8,
 ):
     """Stream parquet files from ``feed_dir``; per micro-batch, fold
@@ -71,39 +72,21 @@ def run_drift_monitor(
     reference to ``<drift_dir>/batch_id=<b>``. Bootstrap with
     ``init_reference`` first. Returns the started StreamingQuery."""
     cum_dir = os.path.join(store_dir, "cum")
-    if not _versions(spark, cum_dir):
-        raise ValueError(
-            f"bootstrap missing: call init_reference before streaming "
-            f"into {store_dir}"
-        )
-    schema = spark.read.parquet(feed_dir).schema
+    require_bootstrap(spark, cum_dir, "init_reference")
 
     def fold_batch(batch: DataFrame, batch_id: int) -> None:
         s = batch.sparkSession
         ref = s.read.parquet(os.path.join(store_dir, "ref"))
-        prev = [v for v in _versions(s, cum_dir) if v <= batch_id]
-        base = s.read.parquet(os.path.join(cum_dir, f"v={prev[-1]}"))
         cum = (
-            base.unionByName(category_counts(batch, cat_col))
+            read_version(s, cum_dir, batch_id)
+            .unionByName(category_counts(batch, cat_col))
             .groupBy("category")
             .agg(F.sum("n").alias("n"))
         )
-        cum.write.mode("overwrite").parquet(
-            os.path.join(cum_dir, f"v={batch_id + 1}")
-        )
-        merged = s.read.parquet(os.path.join(cum_dir, f"v={batch_id + 1}"))
-        drift_from_counts(ref, merged).write.mode("overwrite").parquet(
-            os.path.join(drift_dir, f"batch_id={batch_id}")
-        )
+        write_version(cum, cum_dir, batch_id + 1)
+        merged = read_version(s, cum_dir, batch_id + 1)
+        write_batch(drift_from_counts(ref, merged), drift_dir, batch_id)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(feed_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(fold_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return run_stream(
+        file_stream(spark, feed_dir, max_files_per_trigger), fold_batch, checkpoint_dir
     )

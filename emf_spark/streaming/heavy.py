@@ -29,12 +29,11 @@ counters.py convention).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     LongType,
@@ -42,6 +41,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from emf_spark.streaming.runner import keyed_state
 
 HEAVY_STATE_SCHEMA = StructType(
     [
@@ -137,42 +138,10 @@ def streaming_heavy_hitters(
         .alias("shard"),
         F.col(key_col).cast("string").alias("_k"),
     )
-    return keyed.groupBy("shard").applyInPandasWithState(
+    return keyed_state(
+        keyed,
+        ["shard"],
         _make_space_saving(capacity, emit_top),
-        outputStructType=HEAVY_OUTPUT_SCHEMA,
-        stateStructType=HEAVY_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_streaming_heavy_hitters(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    schema: str,
-    key_col: str,
-    n_shards: int = 8,
-    capacity: int = 64,
-    emit_top: int = 16,
-    max_files_per_trigger: int = 1,
-):
-    """Wire the operator onto a parquet file stream (availableNow jobs
-    compose with cron for incremental ingest)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    top = streaming_heavy_hitters(
-        stream, key_col, n_shards=n_shards, capacity=capacity,
-        emit_top=emit_top,
-    )
-    return (
-        top.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", os.path.join(out_dir, "heavy"))
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+        HEAVY_OUTPUT_SCHEMA,
+        HEAVY_STATE_SCHEMA,
     )

@@ -2,29 +2,28 @@
 
 The reference is a streaming aggregator: fluent-bit pushes chunks, a
 wall-clock ticker flushes accumulated state every aggregation_period and
-resets it (task.go:29-47, aggregator.go:153-231). Two faithful Spark
-mappings are provided:
+resets it (task.go:29-47, aggregator.go:153-231). Every query here is
+declared on the stream runner (``streaming/runner.py``), which owns the
+file source, checkpoint, trigger, keyed state and replay rules:
 
-1. ``run_microbatch`` — ``readStream`` + ``foreachBatch`` at a
-   processing-time trigger. Each micro-batch runs the SAME batch
-   aggregation (event-time tumbling windows inside the batch) and
-   appends per-sink events + lineage. Because event output is keyed by
-   (sink, window_start, dim_hash) and the histogram merge is
-   associative, re-aggregating a window across micro-batches appends
-   *partial* event rows per batch — exactly the reference's semantics
-   of flushing what arrived during each interval (its groups also split
-   across flushes, aggregator.go:223-227). Downstream exact merges use
-   the per-sink value-count outputs, which merge by summation.
+- ``run_microbatch`` is the ticker: a ``foreachBatch`` query whose
+  trigger defaults to availableNow and can be a processing-time
+  interval. Each micro-batch runs the SAME batch aggregation
+  (event-time tumbling windows inside the batch) and writes per-sink
+  events. Because event output is keyed by (sink, window_start,
+  dim_hash) and the histogram merge is associative, re-aggregating a
+  window across micro-batches writes *partial* event rows per batch —
+  exactly the reference's semantics of flushing what arrived during
+  each interval (its groups also split across flushes,
+  aggregator.go:223-227). ``streaming/merge.py`` re-merges them.
+- ``run_eventtime_counts`` / ``run_eventtime_sessions`` are watermarked
+  aggregations for the simple count/sum surface, with genuine
+  cross-batch streaming state and late-data handling (the reference has
+  none, W2: any record aggregates into the in-flight interval).
 
-2. ``run_eventtime_counts`` — a watermarked update-mode windowed
-   aggregation for the simple count/sum surface, demonstrating genuine
-   cross-batch streaming state + late-data handling (the reference has
-   none, W2: any record aggregates into the in-flight interval).
-
-Checkpointing: standard Structured Streaming checkpoint dir; resume
-picks up from the last committed micro-batch (W3 — strictly stronger
-than the reference, whose shutdown flush is admittedly broken,
-fluent-bit-emf/main.go:78-85).
+Checkpointing: a second start on the same checkpoint picks up from the
+last committed micro-batch (W3 — strictly stronger than the reference,
+whose shutdown flush is admittedly broken, fluent-bit-emf/main.go:78-85).
 """
 
 from __future__ import annotations
@@ -38,6 +37,7 @@ from emf_spark import fixtures, pipeline
 from emf_spark.operators import aggregate as agg
 from emf_spark.operators import parse as parse_op
 from emf_spark.schema import TOKENIZED_SCHEMA
+from emf_spark.streaming.runner import file_stream, run_stream, write_batch
 from emf_spark.tokenizer import with_payload
 
 
@@ -46,11 +46,7 @@ def read_tokenized(
 ) -> DataFrame:
     """The tokenized parquet file stream every EMF stream entry point
     reads, at most ``max_files_per_trigger`` new files per micro-batch."""
-    return (
-        spark.readStream.schema(TOKENIZED_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
+    return file_stream(spark, input_dir, max_files_per_trigger, TOKENIZED_SCHEMA)
 
 
 def _aggregate_batch(
@@ -69,20 +65,9 @@ def _aggregate_batch(
     )
     try:
         valid, errors = parse_op.split_valid(staged)
-        # idempotent under micro-batch REPLAY (append-then-crash-before-
-        # checkpoint-commit re-runs the same batch_id): every write is a
-        # dynamic partition overwrite scoped to this batch_id, so a replay
-        # overwrites its own partition instead of appending duplicates
-        (
-            errors.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(os.path.join(out_dir, "errors"))
-        )
-        events = pipeline.aggregate(valid, key_by_namespace).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
+        # both writes are scoped to this batch_id, so a replayed batch
+        # overwrites its own partitions (runner.write_batch)
+        write_batch(errors, os.path.join(out_dir, "errors"), batch_id)
         # ALL partials are persisted, including oversize-flagged ones: the
         # events dir is the MERGE's input store, not the final sink. The
         # oversize policy applies to the MERGED final event (compact_events
@@ -90,12 +75,11 @@ def _aggregate_batch(
         # partial here made the merged final event undercount where the
         # one-shot batch run would have dropped the whole group (review
         # finding, merge.py's streaming==batch contract).
-        (
-            events
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "sink")
-            .parquet(os.path.join(out_dir, "events"))
+        write_batch(
+            pipeline.aggregate(valid, key_by_namespace),
+            os.path.join(out_dir, "events"),
+            batch_id,
+            "sink",
         )
     finally:
         staged.unpersist()
@@ -116,12 +100,12 @@ def run_microbatch(
     for the reference's ticker behavior. ``key_by_namespace`` switches
     the per-batch aggregation to the north-rule key, same as batch."""
     lookup = lookup if lookup is not None else fixtures.lookup_df(spark)
-    stream = read_tokenized(spark, input_dir, max_files_per_trigger)
-    writer = stream.writeStream.foreachBatch(
-        lambda b, i: _aggregate_batch(b, out_dir, i, lookup, window_ms, key_by_namespace)
-    ).option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-    writer = writer.trigger(**(trigger or {"availableNow": True}))
-    return writer.start()
+    return run_stream(
+        read_tokenized(spark, input_dir, max_files_per_trigger),
+        lambda b, i: _aggregate_batch(b, out_dir, i, lookup, window_ms, key_by_namespace),
+        os.path.join(out_dir, "_checkpoint"),
+        trigger=trigger,
+    )
 
 
 def _watermarked_valid(
@@ -178,11 +162,8 @@ def run_eventtime_counts(
             "metric_keys",
         )
     )
-    return (
-        counts.writeStream.outputMode("append")
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start(path=os.path.join(out_dir, "counts"), format="parquet")
+    return run_stream(
+        counts, os.path.join(out_dir, "counts"), os.path.join(out_dir, "_checkpoint")
     )
 
 
@@ -220,9 +201,6 @@ def run_eventtime_sessions(
             "metric_keys",
         )
     )
-    return (
-        sessions.writeStream.outputMode("append")
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start(path=os.path.join(out_dir, "sessions"), format="parquet")
+    return run_stream(
+        sessions, os.path.join(out_dir, "sessions"), os.path.join(out_dir, "_checkpoint")
     )

@@ -8,10 +8,9 @@ downstream tables.
 Per micro-batch cost is ONE aggregate over the batch (the suite
 compiles to a single scan — quality.py's core promise), so the gate
 adds no second pass over the ingest. Verdict rows land as
-batch_id-partitioned parquet via dynamic partition overwrite, the
-repo's standard replay-idempotent streaming write (streaming/job.py):
-a batch replayed after a pre-commit crash overwrites its own partition
-instead of duplicating history.
+batch_id-partitioned parquet via ``runner.write_batch``, the repo's
+replay-idempotent streaming write: a batch replayed after a pre-commit
+crash overwrites its own partition instead of duplicating history.
 
 ``fail_on_violation=True`` raises inside foreachBatch AFTER the
 verdict rows are written, so the stream dies loudly (awaitTermination
@@ -24,9 +23,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession
 
 from emf_spark.datax.quality import check_constraints
+from emf_spark.streaming.runner import file_stream, run_stream, write_batch
 
 
 def run_quality_monitor(
@@ -35,30 +35,24 @@ def run_quality_monitor(
     out_dir: str,
     constraints: list[tuple],
     fail_on_violation: bool = False,
-    trigger: dict | None = None,
     max_files_per_trigger: int = 8,
 ):
     """Stream parquet files from ``input_dir``; write one verdict row
     per (constraint, micro-batch) to ``out_dir/verdicts``. Returns the
     started StreamingQuery."""
-    schema = spark.read.parquet(input_dir).schema
 
     def gate(batch, batch_id: int) -> None:
-        res = check_constraints(batch, constraints).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
+        res = check_constraints(batch, constraints)
         # ONE scan of the micro-batch: collect the O(constraints)
         # verdict rows, then write them back from driver memory —
         # writing `res` directly and collecting it again would
         # re-execute the aggregate (and re-read the batch source) a
         # second time (ADVICE r4, low).
         rows = res.collect()
-        (
-            spark.createDataFrame(rows, res.schema)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(os.path.join(out_dir, "verdicts"))
+        write_batch(
+            spark.createDataFrame(rows, res.schema),
+            os.path.join(out_dir, "verdicts"),
+            batch_id,
         )
         if fail_on_violation:
             bad = [
@@ -73,14 +67,8 @@ def run_quality_monitor(
                     + "; ".join(bad)
                 )
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(input_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(gate)
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return run_stream(
+        file_stream(spark, input_dir, max_files_per_trigger),
+        gate,
+        os.path.join(out_dir, "_checkpoint"),
     )

@@ -1,7 +1,7 @@
 """Streaming per-key rate limiting: the stream-native sibling of
 ``datax/timeseries.rate_limit`` — keep the first ``max_per_window``
 events of every (key, time-window) cell, decided IN FLIGHT with keyed
-state via ``applyInPandasWithState`` (a throttle that waits for a
+state via ``runner.keyed_state`` (a throttle that waits for a
 batch job has already let the flood through).
 
 Contract parity is engineered the counters.py way: the window start is
@@ -33,8 +33,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+from emf_spark.streaming.runner import keyed_state
 
 RL_STATE_SCHEMA = StructType(
     [
@@ -112,16 +114,6 @@ def streaming_rate_limit(
         raise ValueError("step_seconds must be >= 1")
     if keep_windows < 1:
         raise ValueError("keep_windows must be >= 1")
-    key_fields = [df.schema[k] for k in key_cols]
-    tie_field = df.schema[tiebreak_col]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType) for f in key_fields]
-        + [
-            StructField(tiebreak_col, tie_field.dataType),
-            StructField("window_start", LongType()),
-            StructField("kept", LongType()),
-        ]
-    )
     # cast handles TIMESTAMP_NTZ sources (parquet written by arrow)
     ts = F.col(ts_col).cast("timestamp")
     epoch = F.unix_timestamp(ts)
@@ -137,10 +129,15 @@ def streaming_rate_limit(
         (F.floor(epoch / step_seconds) * step_seconds)
         .cast("bigint").alias("_w"),
     )
-    return keyed.groupBy(*key_cols).applyInPandasWithState(
+    values = [
+        StructField(tiebreak_col, df.schema[tiebreak_col].dataType),
+        StructField("window_start", LongType()),
+        StructField("kept", LongType()),
+    ]
+    return keyed_state(
+        keyed,
+        key_cols,
         _throttle_fn(max_per_window, keep_windows, key_cols, tiebreak_col),
-        outputStructType=out_schema,
-        stateStructType=RL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        values,
+        RL_STATE_SCHEMA,
     )

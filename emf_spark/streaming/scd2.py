@@ -6,13 +6,11 @@ downstream wants (a) a maintained type-2 history and (b) the
 added/removed/changed delta feed — without anyone re-running batch jobs
 by hand.
 
-Both reuse streaming/cdc.py's VERSIONED-store replay contract verbatim:
+Both keep their state in the runner's VERSIONED store (``runner.py``):
 micro-batch ``b`` reads the highest store version <= b and writes
 version ``b+1``, so a batch replayed after a pre-commit crash re-runs
-against the same predecessor it read the first time; its own partial
-output lives at a higher version and is overwritten. Diff deltas
-additionally land batch_id-partitioned with dynamic partition overwrite
-(the repo's standard idempotent streaming write).
+against the same predecessor it read the first time. Diff deltas
+additionally land batch_id-partitioned via ``runner.write_batch``.
 
 Input contract: EACH MICRO-BATCH IS ONE COMPLETE SNAPSHOT. Feed one
 snapshot file per trigger (``maxFilesPerTrigger=1`` is the default
@@ -36,26 +34,28 @@ trade as the CDC merge.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from emf_spark.datax.diff import scd2_apply, snapshot_diff
-from emf_spark.streaming.cdc import _versions
+from emf_spark.streaming.runner import (
+    file_stream,
+    read_version,
+    require_bootstrap,
+    run_stream,
+    write_batch,
+    write_version,
+)
 
 
 def init_history(history: DataFrame, history_dir: str) -> None:
     """Write the bootstrap SCD2 history as version 0. For a cold start
     pass an empty frame with the full history schema (keys + attrs +
     valid_from/valid_to)."""
-    history.write.mode("overwrite").parquet(os.path.join(history_dir, "v=0"))
+    write_version(history, history_dir, 0)
 
 
 def current_history(spark: SparkSession, history_dir: str) -> DataFrame:
-    vs = _versions(spark, history_dir)
-    if not vs:
-        raise ValueError(f"no history versions under {history_dir}")
-    return spark.read.parquet(os.path.join(history_dir, f"v={vs[-1]}"))
+    return read_version(spark, history_dir)
 
 
 def run_scd2_stream(
@@ -65,7 +65,6 @@ def run_scd2_stream(
     checkpoint_dir: str,
     key_cols: list[str],
     attr_cols: list[str] | None = None,
-    trigger: dict | None = None,
     max_files_per_trigger: int = 1,
 ):
     """Stream landed full-snapshot parquet files from
@@ -73,40 +72,23 @@ def run_scd2_stream(
     ``history_dir`` (bootstrap with init_history first). Batch ``b``
     applies scd2_apply(history<=b, batch, version=b+1) and writes
     history v=b+1. Returns the started StreamingQuery."""
-    if not _versions(spark, history_dir):
-        raise ValueError(
-            f"bootstrap missing: call init_history before streaming "
-            f"into {history_dir}"
-        )
-    schema = spark.read.parquet(snapshot_feed_dir).schema
+    require_bootstrap(spark, history_dir, "init_history")
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        prev = [v for v in _versions(s, history_dir) if v <= batch_id]
-        hist = s.read.parquet(os.path.join(history_dir, f"v={prev[-1]}"))
+        hist = read_version(batch.sparkSession, history_dir, batch_id)
         out = scd2_apply(
             hist, batch, key_cols, version=batch_id + 1, attr_cols=attr_cols
         )
-        out.write.mode("overwrite").parquet(
-            os.path.join(history_dir, f"v={batch_id + 1}")
-        )
+        write_version(out, history_dir, batch_id + 1)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(snapshot_feed_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return run_stream(
+        file_stream(spark, snapshot_feed_dir, max_files_per_trigger), fold, checkpoint_dir
     )
 
 
 def init_prev_snapshot(snapshot: DataFrame, store_dir: str) -> None:
     """Write the diff stream's bootstrap 'previous snapshot' as v=0."""
-    snapshot.write.mode("overwrite").parquet(os.path.join(store_dir, "v=0"))
+    write_version(snapshot, store_dir, 0)
 
 
 def run_snapshot_diff_stream(
@@ -117,7 +99,6 @@ def run_snapshot_diff_stream(
     checkpoint_dir: str,
     key_cols: list[str],
     compare_cols: list[str] | None = None,
-    trigger: dict | None = None,
     max_files_per_trigger: int = 1,
 ):
     """Stream landed full-snapshot parquet files and publish the
@@ -125,41 +106,18 @@ def run_snapshot_diff_stream(
     ``delta_dir`` (batch_id-partitioned, dynamic overwrite), keeping the
     predecessor in the versioned store at ``store_dir`` (bootstrap with
     init_prev_snapshot). Returns the started StreamingQuery."""
-    if not _versions(spark, store_dir):
-        raise ValueError(
-            f"bootstrap missing: call init_prev_snapshot before streaming "
-            f"into {store_dir}"
-        )
-    schema = spark.read.parquet(snapshot_feed_dir).schema
+    require_bootstrap(spark, store_dir, "init_prev_snapshot")
 
     def publish(batch: DataFrame, batch_id: int) -> None:
-        s = batch.sparkSession
-        prev = [v for v in _versions(s, store_dir) if v <= batch_id]
-        old = s.read.parquet(os.path.join(store_dir, f"v={prev[-1]}"))
-        delta = snapshot_diff(old, batch, key_cols, compare_cols).withColumn(
-            "batch_id", F.lit(batch_id)
-        )
-        (
-            delta.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(delta_dir)
-        )
+        old = read_version(batch.sparkSession, store_dir, batch_id)
+        write_batch(snapshot_diff(old, batch, key_cols, compare_cols), delta_dir, batch_id)
         # the new snapshot becomes the next batch's predecessor; written
         # AFTER the delta so a crash between the writes replays cleanly
         # (delta partition is overwritten, store version is overwritten)
-        batch.write.mode("overwrite").parquet(
-            os.path.join(store_dir, f"v={batch_id + 1}")
-        )
+        write_version(batch, store_dir, batch_id + 1)
 
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(snapshot_feed_dir)
-    )
-    return (
-        stream.writeStream.foreachBatch(publish)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-        .start()
+    return run_stream(
+        file_stream(spark, snapshot_feed_dir, max_files_per_trigger),
+        publish,
+        checkpoint_dir,
     )

@@ -1,7 +1,7 @@
 """Streaming HyperLogLog distinct counting: the stream-native sibling
 of ``datax/sketches.hll_distinct`` — same portable 56-bit hash, same
 bucket/rank derivation, same integer-scaled harmonic sum — folded
-across micro-batches with keyed state via ``applyInPandasWithState``.
+across micro-batches with keyed state via ``runner.keyed_state``.
 
 Parity is structural: register-update rows are derived SPARK-SIDE by
 the shared ``sketches.hll_register_rows`` (the exact JVM expressions
@@ -33,7 +33,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -43,6 +43,7 @@ from pyspark.sql.types import (
 )
 
 from emf_spark.datax.sketches import _hll_alpha, hll_register_rows
+from emf_spark.streaming.runner import keyed_state
 
 HLL_STATE_SCHEMA = StructType(
     [
@@ -109,25 +110,15 @@ def streaming_hll_distinct(
     scale = 56 - p + 1
     numer = _hll_alpha(m) * m * m * float(1 << scale)
     keyed = hll_register_rows(df, value_col, group_cols, p)
-    key_fields = [keyed.schema[k] for k in group_cols]
-    out_schema = StructType(
-        [StructField(f.name, f.dataType) for f in key_fields]
-        + [
-            StructField("batch_seq", LongType()),
-            StructField("hll_sum_scaled", LongType()),
-            StructField("hll_zero_regs", LongType()),
-            StructField("hll_raw", DoubleType()),
-            StructField("hll_estimate", DoubleType()),
-        ]
-    )
 
     def fn(key, pdfs, state):
         yield from _emit(key, pdfs, state, list(group_cols), m, scale, numer)
 
-    return keyed.groupBy(*group_cols).applyInPandasWithState(
-        fn,
-        outputStructType=out_schema,
-        stateStructType=HLL_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    values = [
+        StructField("batch_seq", LongType()),
+        StructField("hll_sum_scaled", LongType()),
+        StructField("hll_zero_regs", LongType()),
+        StructField("hll_raw", DoubleType()),
+        StructField("hll_estimate", DoubleType()),
+    ]
+    return keyed_state(keyed, list(group_cols), fn, values, HLL_STATE_SCHEMA)

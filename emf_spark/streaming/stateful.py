@@ -1,4 +1,4 @@
-"""Custom stateful streaming operator via ``applyInPandasWithState``
+"""Custom stateful streaming operator on pandas keyed state
 (SURVEY.md §2.6 W4, §2.9): cross-micro-batch running EMF group state.
 
 The reference keeps its aggregation maps alive between fluent-bit flush
@@ -8,9 +8,7 @@ running totals — records, observation count, sum, min, max — merged
 incrementally each micro-batch and emitted as an update row: each
 batch's update rows are the flush of every group it touched. State is
 five scalars per group, kept for the life of the query's checkpoint
-(no timeout). A processing-time timeout makes Spark run an empty batch
-after every batch to check for expiry, so an ``availableNow``
-(drain-and-stop) query never stopped.
+(``runner.keyed_state``).
 """
 
 from __future__ import annotations
@@ -19,7 +17,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -27,6 +25,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from emf_spark.streaming.runner import keyed_state, run_stream, write_batch
 
 STATE_SCHEMA = StructType(
     [
@@ -114,12 +114,9 @@ def running_group_totals(parsed_stream: DataFrame) -> DataFrame:
             F.array_max(F.transform("pairs", lambda p: p["v"])).alias("max"),
         )
     )
-    return obs.groupBy("sink", "dim_hash").applyInPandasWithState(
-        _update_group,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        obs, ["sink", "dim_hash"], _update_group, OUTPUT_SCHEMA, STATE_SCHEMA,
+        output_mode="update",
     )
 
 
@@ -136,14 +133,10 @@ def run_stateful(
     stream = read_tokenized(spark, input_dir, max_files_per_trigger)
     staged = pipeline.stage(stream, fixtures.lookup_df(spark))
     totals = running_group_totals(staged.filter(F.col("valid")))
-    return (
-        totals.writeStream.outputMode("update")
-        .foreachBatch(
-            lambda b, i: b.withColumn("batch_id", F.lit(i))
-            .write.mode("append")
-            .parquet(os.path.join(out_dir, "totals"))
-        )
-        .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
+    path = os.path.join(out_dir, "totals")
+    return run_stream(
+        totals,
+        lambda b, i: write_batch(b, path, i),
+        os.path.join(out_dir, "_checkpoint"),
+        output_mode="update",
     )

@@ -2,7 +2,7 @@
 ``operators/templates.mine_templates`` — same pre-mask, same
 (token_count, head) branching, same per-position consensus —
 accumulated across micro-batches with keyed state via
-``applyInPandasWithState``.
+``runner.keyed_state``.
 
 Parity is structural, not hoped for: lines are normalized, masked,
 and tokenized SPARK-SIDE with the exact JVM expressions the batch
@@ -37,7 +37,7 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     ArrayType,
     IntegerType,
@@ -48,6 +48,7 @@ from pyspark.sql.types import (
 )
 
 from emf_spark.operators.templates import WILDCARD
+from emf_spark.streaming.runner import keyed_state
 
 TEMPLATE_STATE_SCHEMA = StructType(
     [
@@ -140,10 +141,6 @@ def streaming_mine_templates(
     def fn(key, pdfs, state):
         yield from _fold(key, pdfs, state, wildcard)
 
-    return base.groupBy("n", "head").applyInPandasWithState(
-        fn,
-        outputStructType=TEMPLATE_OUT_SCHEMA,
-        stateStructType=TEMPLATE_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return keyed_state(
+        base, ["n", "head"], fn, TEMPLATE_OUT_SCHEMA, TEMPLATE_STATE_SCHEMA
     )

@@ -587,8 +587,9 @@ def test_streaming_dedup_first_seen_once(spark, tmp_path):
     q2.awaitTermination(300)
     assert spark.read.parquet(f"{out}/unique").count() == n_before
 
-    # one-batch parity vs the batch operator (hash + min-id tiebreak)
-    allrows = [r for b in batches for r in b]
+    # one-batch parity vs the batch operator (hash + min-id tiebreak),
+    # including a text whose only id is null (keep_id null, no crash)
+    allrows = [r for b in batches for r in b] + [(None, "zeta")]
     bdf = spark.createDataFrame(allrows, "doc_id bigint, text string")
     batch = {
         (r["content_hash"], r["keep_id"])
