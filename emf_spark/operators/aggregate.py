@@ -4,7 +4,8 @@ histograms, cardinality-dependent SEH reduce, metadata merge.
 Shuffle plan (the part that must survive 100 TB):
 
   obs (one row per observation pair)
-    └─ groupBy(keys + value)      -> exact (value -> count) map   [shuffle 1]
+    └─ groupBy(keys + metric + value) -> exact (value -> count) map
+                                                                  [shuffle 1]
        The *value* participates in the hash key, so a hot
        (dim_hash, metric) group spreads over the cluster — this IS the
        salted first phase of the two-phase aggregation (north rule), with
@@ -12,26 +13,36 @@ Shuffle plan (the part that must survive 100 TB):
        aggregation does map-side combining before the exchange, playing
        the role of the reference's in-memory map
        (aggregator.go:96-151).
-    └─ groupBy(keys)  per-group stats (n_distinct/min/max/sum/count)
-                                                                  [shuffle 2]
-    └─ join stats back (AQE: broadcast when small, skew-split else)
+    └─ repartition on the group keys (NOT keys + metric)  [shuffle 2]
+       One reducer per group now sees every metric's distinct values,
+       not one metric's, and everything after it, up to the join with
+       the metadata branch, reuses this partitioning. Phase 1's value
+       salt is unchanged: a hot group's raw observations still spread,
+       and phase 2 only moves the distinct (value, count) pairs.
+    └─ window over (keys + metric): per-metric stats
+       (n_distinct/min/max/sum/count)                      [no exchange]
     └─ project out_value = value            (n_distinct <= 2, exact)
                          | seh_value(bucket(value))  (>= 3, seh.go)
-    └─ groupBy(keys + out_value) -> merged buckets    [no exchange: the
-       stats join output is already hash-partitioned by keys, which
-       satisfies the ClusteredDistribution of the superset key]
-    └─ groupBy(keys) collect bounded arrays           [no exchange]
+    └─ groupBy(keys + metric + out_value) -> merged buckets  [no exchange]
+    └─ groupBy(keys + metric) collect bounded arrays         [no exchange]
+    └─ assemble: groupBy(keys) collect the metric list, join the
+       metadata branch on keys    [no exchange: both sides are already
+       hash-partitioned on the group keys]
 
   records (one row per valid record; north-rule mode: one per distinct
   namespace the record projects to)
     └─ groupBy(keys) first-wins dims, last-wins ts, records, bytes,
-       collect_set(projection list)                   [shuffle 1, the only]
+       collect_set(projection list)                   [shuffle 3, the only
+                                                       one of this branch]
        Partial aggregation dedupes the projection lists map-side, so
        only distinct lists per group cross the exchange.
     └─ cw_union per row: per-namespace union of dimension sets and
        metric definitions, sorted                      [no exchange]
        The partial-event merge (streaming/merge.py) re-merges partial
        unions with the same groupBy + collect_set + cw_union.
+
+Every count sum saturates at 2^63-1 (``count_sum``) instead of failing
+the job on a long overflow under ANSI (SURVEY.md §7.4).
 
 Per-group state is bounded everywhere: collect_list only ever sees
 post-SEH cardinality (distinct buckets), never raw observations, and
@@ -66,6 +77,20 @@ from pyspark.sql import Column, DataFrame, functions as F
 from emf_spark.functions import per_session, seh_bucket, seh_value_of
 
 WINDOW_MS = 60_000  # default aggregation_period 1m (main.go:38-41)
+LONG_MAX = 2**63 - 1
+
+
+def count_sum(c: Column, window=None) -> Column:
+    """Sum of non-negative observation counts (over ``window`` if given)
+    that saturates at 2^63-1 instead of raising ARITHMETIC_OVERFLOW
+    under ANSI: the SURVEY.md §7.4 count rule. Saturation is
+    associative for non-negative addends, so partial aggregation and
+    the partial-event merge keep it exact. ``c`` is never null here, so
+    a null ``try_sum`` only ever means an overflow."""
+    total = F.try_sum(c)
+    if window is not None:
+        total = total.over(window)
+    return F.coalesce(total, F.lit(LONG_MAX))
 
 
 def with_window(df: DataFrame, window_ms: int = WINDOW_MS) -> DataFrame:
@@ -133,13 +158,18 @@ def aggregate_histograms(
 ) -> DataFrame:
     """obs -> one row per (group keys, metric) with
     (values, counts, min, max, sum, count, n_distinct)."""
-    keys = group_keys(obs, key_by_namespace) + ["metric_name"]
+    gkeys = group_keys(obs, key_by_namespace)
+    keys = gkeys + ["metric_name"]
     h = _histogram_cols(tuple(keys))
 
     # Phase 1 (A2): exact sparse histogram; value in the grouping key is
     # the natural salt for hot groups.
     p1 = obs.groupBy(*keys, "v").agg(h["c"])
-    joined = p1.select(*keys, "v", "c", *h["stats"])
+    # Phase 2 is partitioned on the group keys alone: the stats window,
+    # the SEH merge, the bucket collect and assemble_groups' per-group
+    # collect and metadata join all reuse it (one exchange fewer than
+    # partitioning on keys + metric).
+    joined = p1.repartition(*gkeys).select(*keys, "v", "c", *h["stats"])
     p3 = joined.groupBy(*keys, h["out_v"]).agg(*h["merge"])
     # SEH drops empty buckets (GetNonEmptyBuckets, seh.go:53-61); the
     # exact branch keeps zero-count values (histogram.go:43-58).
@@ -154,12 +184,13 @@ def aggregate_histograms(
 def _histogram_cols(keys: tuple[str, ...]) -> dict:
     """``aggregate_histograms``' expressions over the group ``keys``."""
     # Per-(group, metric) stats — always exact (histogram.go:39-88).
-    # Whole-partition window aggregates over the already-reduced p1: one
-    # shuffle on the group keys, no self-join (a join here would
-    # recompute the entire upstream once per side), and every following
-    # groupBy reuses this partitioning (subset-key clustering) with no
-    # further exchange. p1 rows are distinct values only, so the
-    # per-partition sort is over post-reduction cardinality.
+    # Whole-partition window aggregates over the already-reduced p1,
+    # which aggregate_histograms hash-partitions on the group keys: no
+    # self-join (a join here would recompute the entire upstream once
+    # per side), and every following groupBy reuses that partitioning
+    # (subset-key clustering) with no further exchange. p1 rows are
+    # distinct values only, so the per-partition sort is over
+    # post-reduction cardinality.
     from pyspark.sql.window import Window
 
     # Value-ordered full frame: double SUM accumulates ascending-v, so
@@ -175,18 +206,19 @@ def _histogram_cols(keys: tuple[str, ...]) -> dict:
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
     stats = ("n_distinct", "min", "max", "sum", "count")
+    c = F.col("c")
     return {
-        "c": F.sum("c").alias("c"),
+        "c": count_sum(c).alias("c"),
         "stats": [
             F.count(F.lit(1)).over(w).alias("n_distinct"),
             F.min("v").over(w).alias("min"),
             F.max("v").over(w).alias("max"),
-            F.sum(F.col("v") * F.col("c")).over(w).alias("sum"),
-            F.sum("c").over(w).alias("count"),
+            F.sum(F.col("v") * c).over(w).alias("sum"),
+            count_sum(c, w).alias("count"),
         ],
         # A7 branch select: exact passthrough vs SEH representative value.
         "out_v": seh_out_v(),
-        "merge": [F.sum("c").alias("c"), *(F.max(s).alias(s) for s in stats)],
+        "merge": [count_sum(c).alias("c"), *(F.max(s).alias(s) for s in stats)],
         "keep": (F.col("n_distinct") <= 2) | (F.col("c") > 0),
         "collect": [
             F.sort_array(
@@ -307,7 +339,9 @@ def assemble_groups(
     """Join per-metric histograms (as a bounded sorted array) onto group
     metadata. Groups with no surviving metrics still emit (the reference
     flushes an event per dimHash even when the metric map is empty,
-    aggregator.go:163-207)."""
+    aggregator.go:163-207). From ``aggregate_histograms`` and
+    ``aggregate_metadata`` both sides arrive hash-partitioned on the
+    group keys, so neither the collect nor the join adds an exchange."""
     keys = [c for c in hist.columns if c in ("sink", "window_start", "namespace", "dim_hash")]
     per_group = hist.groupBy(*keys).agg(_metric_list())
     return meta.join(per_group, keys, "left").withColumn(

@@ -29,6 +29,8 @@ Reference semantics mirrored (citations into /root/reference/):
   - P5 NaN/Inf rejection at insert (histogram/seh.go:65-67), applied
     uniformly (the reference's exact-branch NaN handling is
     unserializable anyway: Go json.Marshal errors on NaN).
+  - Count range: a negative, non-finite or >= 2^63 count drops its
+    value (the reference's int64 conversion would wrap; SURVEY.md §7.4).
   - F5/O1 dimension-set sort (metric.go:109), F6 dimension hash
     (aggregator.go:234-248).
 """
@@ -53,6 +55,7 @@ PROJECTION_RAW_DDL = (
 )
 
 _INF = float("inf")
+_2_63 = float(2**63)
 
 
 def _eligible_parsed(cwm_raw: Column) -> Column:
@@ -127,19 +130,29 @@ def parsed_projections(pe: Column) -> Column:
     )
 
 
+def _count(c: Column) -> Column:
+    """A count (double) -> bigint, truncated (metric.go:193-197), or
+    NULL when it is negative, non-finite or not below 2^63: such a
+    count makes its value invalid (SURVEY.md §7.4), instead of failing
+    the job with CAST_OVERFLOW under ANSI."""
+    return F.when((c >= F.lit(0.0)) & (c < F.lit(_2_63)), c.try_cast("bigint"))
+
+
 def _metric_pairs(raw: Column) -> Column:
     """Normalize one raw metric value (JSON text) into
     array<struct<v:double, c:bigint>> — the unit the aggregator consumes
-    (A3, aggregator.go:129-150). NaN/Inf filtered (P5)."""
+    (A3, aggregator.go:129-150). NaN/Inf values filtered (P5), and so
+    are values whose count is out of range (``_count``)."""
     mv = F.from_json(raw, METRIC_VALUE_DDL)
     is_obj = F.startswith(F.ltrim(raw), F.lit("{"))
     scalar = F.coalesce(raw.try_cast("double"), F.lit(0.0))
     one = F.lit(1).cast("bigint")
     pair = lambda v, c: F.struct(v.cast("double").alias("v"), c.alias("c"))
+    # a missing count (Counts shorter than Values, or null) counts 1
     zipped = F.zip_with(
         mv["Values"],
         F.coalesce(mv["Counts"], F.array()),
-        lambda v, c: pair(v, F.coalesce(c.cast("bigint"), one)),
+        lambda v, c: pair(v, F.when(c.isNull(), one).otherwise(_count(c))),
     )
     degenerate = (
         mv["Max"].isNotNull() & mv["Min"].eqNullSafe(mv["Max"]) & mv["Count"].isNotNull()
@@ -148,10 +161,13 @@ def _metric_pairs(raw: Column) -> Column:
         F.when(raw.isNull(), F.array().cast("array<struct<v:double,c:bigint>>"))
         .when(~is_obj, F.array(pair(scalar, one)))
         .when(mv["Values"].isNotNull(), zipped)
-        .when(degenerate, F.array(pair(mv["Max"], mv["Count"].cast("bigint"))))
+        .when(degenerate, F.array(pair(mv["Max"], _count(mv["Count"]))))
         .otherwise(F.array().cast("array<struct<v:double,c:bigint>>"))
     )
-    return F.filter(pairs, lambda p: ~F.isnan(p["v"]) & (F.abs(p["v"]) != F.lit(_INF)))
+    return F.filter(
+        pairs,
+        lambda p: ~F.isnan(p["v"]) & (F.abs(p["v"]) != F.lit(_INF)) & p["c"].isNotNull(),
+    )
 
 
 def dim_hash_expr(dims: Column) -> Column:

@@ -8,11 +8,17 @@ file source, checkpoint, trigger, keyed state and replay rules:
 
 - ``run_microbatch`` is the ticker: a ``foreachBatch`` query whose
   trigger defaults to availableNow and can be a processing-time
-  interval. Each micro-batch runs the SAME batch aggregation
+  interval. The stage (``pipeline.stage``: detokenize, parse,
+  broadcast enrich, window) is built once per query, on the file
+  stream itself, so a micro-batch only persists rows that are already
+  staged. Each micro-batch then runs the SAME batch aggregation
   (event-time tumbling windows inside the batch) and writes per-sink
-  events. Because event output is keyed by (sink, window_start,
-  dim_hash) and the histogram merge is associative, re-aggregating a
-  window across micro-batches writes *partial* event rows per batch —
+  events. Its errors write and its events leg (the ``aggregate`` build
+  and write) run concurrently (``pipeline.run_legs``), so the events
+  plan is built while the errors write fills the batch's cache.
+  Because event output is keyed by (sink, window_start, dim_hash) and
+  the histogram merge is associative, re-aggregating a window across
+  micro-batches writes *partial* event rows per batch —
   exactly the reference's semantics of flushing what arrived during
   each interval (its groups also split across flushes,
   aggregator.go:223-227). ``streaming/merge.py`` re-merges them.
@@ -50,24 +56,22 @@ def read_tokenized(
 
 
 def _aggregate_batch(
-    batch: DataFrame,
+    staged: DataFrame,
     out_dir: str,
     batch_id: int,
-    lookup: DataFrame,
-    window_ms: int,
     key_by_namespace: bool = False,
 ) -> None:
     # The errors write and both aggregation branches read one cached
-    # staged pass (pipeline.stage: detokenize, parse, enrich, window;
-    # tokens/payload dropped); released even if a write fails.
-    staged = pipeline.stage(batch, lookup, window_ms).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # pass over the batch's staged rows (pipeline.stage ran in the
+    # query: detokenize, parse, enrich, window; tokens/payload
+    # dropped); released even if a write fails.
+    staged = staged.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         valid, errors = parse_op.split_valid(staged)
-        # both writes are scoped to this batch_id, so a replayed batch
-        # overwrites its own partitions (runner.write_batch)
-        write_batch(errors, os.path.join(out_dir, "errors"), batch_id)
+        # Two concurrent legs: the events plan is built while the errors
+        # write fills the cache. Both writes are scoped to this batch_id,
+        # so a replayed batch overwrites its own partitions
+        # (runner.write_batch).
         # ALL partials are persisted, including oversize-flagged ones: the
         # events dir is the MERGE's input store, not the final sink. The
         # oversize policy applies to the MERGED final event (compact_events
@@ -75,11 +79,16 @@ def _aggregate_batch(
         # partial here made the merged final event undercount where the
         # one-shot batch run would have dropped the whole group (review
         # finding, merge.py's streaming==batch contract).
-        write_batch(
-            pipeline.aggregate(valid, key_by_namespace),
-            os.path.join(out_dir, "events"),
-            batch_id,
-            "sink",
+        pipeline.run_legs(
+            errors=lambda: write_batch(
+                errors, os.path.join(out_dir, "errors"), batch_id
+            ),
+            events=lambda: write_batch(
+                pipeline.aggregate(valid, key_by_namespace),
+                os.path.join(out_dir, "events"),
+                batch_id,
+                "sink",
+            ),
         )
     finally:
         staged.unpersist()
@@ -98,11 +107,17 @@ def run_microbatch(
     """File-source streaming job; ``trigger`` defaults to availableNow
     (drain-and-stop, for tests); pass {'processingTime': '5 seconds'}
     for the reference's ticker behavior. ``key_by_namespace`` switches
-    the per-batch aggregation to the north-rule key, same as batch."""
+    the per-batch aggregation to the north-rule key, same as batch.
+
+    The stage (detokenize, parse, broadcast enrich, window) is part of
+    the query, built once: each micro-batch receives staged rows."""
     lookup = lookup if lookup is not None else fixtures.lookup_df(spark)
+    staged = pipeline.stage(
+        read_tokenized(spark, input_dir, max_files_per_trigger), lookup, window_ms
+    )
     return run_stream(
-        read_tokenized(spark, input_dir, max_files_per_trigger),
-        lambda b, i: _aggregate_batch(b, out_dir, i, lookup, window_ms, key_by_namespace),
+        staged,
+        lambda b, i: _aggregate_batch(b, out_dir, i, key_by_namespace),
         os.path.join(out_dir, "_checkpoint"),
         trigger=trigger,
     )

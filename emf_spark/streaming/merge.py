@@ -11,7 +11,8 @@ associative merge, the partials re-merge EXACTLY:
   to its own bucket (seh_bucket(seh_value_of(b)) == b — floor(b+0.5)),
   so bucket counts merge losslessly (A8's associativity).
 - min/max/sum/count: merged from the partials' TRUE stats columns
-  (min-of-mins, max-of-maxes, sum-of-sums, sum-of-counts) — never
+  (min-of-mins, max-of-maxes, sum-of-sums, sum-of-counts; count sums
+  saturate like the aggregation's, ``aggregate.count_sum``) — never
   recomputed from post-SEH representatives. The double ``sum``
   accumulates in ascending-addend order (same canonicalization trick
   as aggregate_histograms' value-ordered window) so the merge is
@@ -80,7 +81,7 @@ def merge_partial_events(
             F.min("pmin").over(ws).alias("min"),
             F.max("pmax").over(ws).alias("max"),
             F.sum("psum").over(ws).alias("sum"),
-            F.sum("pcount").over(ws).alias("count"),
+            agg.count_sum(F.col("pcount"), ws).alias("count"),
         )
         .dropDuplicates(keys + ["metric_name"])
     )
@@ -97,7 +98,7 @@ def merge_partial_events(
         F.col("p.counts").alias("c"),
     )
     p1 = pairs.groupBy(*keys, "metric_name", "v").agg(
-        F.sum("c").alias("c"), F.max("pnd").alias("pnd")
+        agg.count_sum(F.col("c")).alias("c"), F.max("pnd").alias("pnd")
     )
     wv = (
         Window.partitionBy(*keys, "metric_name")
@@ -117,7 +118,10 @@ def merge_partial_events(
     )
     p3 = (
         j.groupBy(*keys, "metric_name", agg.seh_out_v())
-        .agg(F.sum("c").alias("c"), F.max("n_distinct").alias("n_distinct"))
+        .agg(
+            agg.count_sum(F.col("c")).alias("c"),
+            F.max("n_distinct").alias("n_distinct"),
+        )
         .filter((F.col("n_distinct") <= 2) | (F.col("c") > 0))
     )
     hist = (

@@ -10,7 +10,8 @@ Mirrors (citations into /root/reference/):
   - histogram/histogram.go + histogram/seh.go reduce
 Documented divergences (SURVEY.md §7.4): deterministic (ts, doc_id)
 arrival order; NaN/Inf filtered at insert; P6 Min==Max by value;
-A6 intended per-namespace union; canonical ascending value order.
+A6 intended per-namespace union; canonical ascending value order;
+out-of-range counts drop their value and count sums saturate.
 """
 
 from __future__ import annotations
@@ -21,6 +22,7 @@ from collections import defaultdict
 
 LOG11 = math.log(1.1)
 WINDOW_MS = 60_000
+LONG_MAX = 2**63 - 1
 
 
 def parse_float(v) -> float:
@@ -91,6 +93,19 @@ def parse_record(rec: dict):
     return ts, cwm, dims, pairs
 
 
+def count_of(c) -> int | None:
+    """A count truncated to an int, or None when it is negative,
+    non-finite or not below 2^63: such a count makes its value invalid
+    and the value is dropped (SURVEY.md §7.4 count rule)."""
+    x = parse_float(c)
+    return int(x) if 0.0 <= x < 2.0**63 else None
+
+
+def add_counts(a: int, b: int) -> int:
+    """Count sums saturate at 2^63-1 (SURVEY.md §7.4 count rule)."""
+    return min(a + b, LONG_MAX)
+
+
 def metric_value_pairs(v):
     """A3/P6/P5: metric value -> [(value, count)] after filters."""
     if isinstance(v, dict):
@@ -100,7 +115,7 @@ def metric_value_pairs(v):
             out = []
             for i, val in enumerate(values):
                 c = (
-                    int(parse_float(counts[i]))
+                    count_of(counts[i])
                     if counts is not None and i < len(counts)
                     else 1
                 )
@@ -110,10 +125,14 @@ def metric_value_pairs(v):
             and v.get("Min") == v.get("Max")
             and v.get("Count") is not None
         ):
-            out = [(parse_float(v["Max"]), int(parse_float(v["Count"])))]
+            out = [(parse_float(v["Max"]), count_of(v["Count"]))]
         else:
             return []
-        return [(x, c) for x, c in out if not (math.isnan(x) or math.isinf(x))]
+        return [
+            (x, c)
+            for x, c in out
+            if c is not None and not (math.isnan(x) or math.isinf(x))
+        ]
     x = parse_float(v)
     if math.isnan(x) or math.isinf(x):
         return []
@@ -151,7 +170,7 @@ def reduce_histogram(vc: dict[float, int]):
         }
     buckets: dict[int, int] = defaultdict(int)
     for v, c in vc.items():
-        buckets[seh_bucket(v)] += c
+        buckets[seh_bucket(v)] = add_counts(buckets[seh_bucket(v)], c)
     out = {b: c for b, c in buckets.items() if c > 0}
     values = sorted(seh_value(b) for b in out)
     counts = [c for _, c in sorted((seh_value(b), c) for b, c in out.items())]
@@ -251,7 +270,7 @@ def aggregate(records, window_ms: int = WINDOW_MS, key_by_namespace: bool = Fals
                 key = (sink, w, dh)
             vc = groups[key]["metrics"][name]
             for v, c in vps:
-                vc[v] += c
+                vc[v] = add_counts(vc[v], c)
 
     # canonicalize cw_metrics like the engine (sorted ns / dims / metrics)
     for g in groups.values():

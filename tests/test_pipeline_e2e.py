@@ -7,6 +7,10 @@ value-counts, token-array equality on every routed row."""
 from __future__ import annotations
 
 import json
+import os
+import sys
+import threading
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -295,3 +299,117 @@ def test_run_releases_caches_when_a_write_fails(
             spark, corpus_path, str(tmp_path / "out"), write_routed=False, staging=staging
         )
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == before
+
+
+def _hostile_record(svc: str, name: str, value, ts: int = fixtures.BASE_TS) -> dict:
+    return {
+        "_aws": {
+            "Timestamp": ts,
+            "CloudWatchMetrics": [
+                {
+                    "Namespace": "Hostile",
+                    "Dimensions": [["Svc"]],
+                    "Metrics": [{"Name": name}, {"Name": "Ok"}],
+                }
+            ],
+        },
+        "Svc": svc,
+        name: value,
+        "Ok": 1.0,
+    }
+
+
+HOSTILE_RECORDS = [
+    # out-of-range counts: CAST_OVERFLOW under ANSI at a plain cast
+    _hostile_record("a", "Big", {"Values": [1], "Counts": [1e30]}),
+    _hostile_record("b", "Big", {"Min": 2, "Max": 2, "Count": 1e30}),
+    _hostile_record("b", "Neg", {"Values": [1, 2], "Counts": [-1, 2]}),
+    # in-range counts whose sums overflow a long: per value, per metric
+    # and per SEH bucket
+    _hostile_record("c", "Sum", {"Values": [3.0], "Counts": [9e18]}),
+    _hostile_record("c", "Sum", {"Values": [3.0], "Counts": [9e18]}),
+    _hostile_record("d", "Sum", {"Values": [3.0, 4.0], "Counts": [9e18, 9e18]}),
+    _hostile_record("e", "Seh", {"Values": [10.0, 10.01, 10.02], "Counts": [9e18, 9e18, 1]}),
+]
+
+
+def _assert_events_match_oracle(rows, groups):
+    got = {(r["sink"], r["window_start"], r["dim_hash"]): r for r in rows}
+    assert set(got) == set(groups)
+    for key, g in groups.items():
+        metrics = {m["metric_name"]: m for m in got[key]["metrics"]}
+        assert set(metrics) == {n for n, vc in g["metrics"].items() if vc}, key
+        for name, m in metrics.items():
+            vc = dict(g["metrics"][name])
+            exp = oracle.reduce_histogram(vc)
+            assert list(m["values"]) == pytest.approx(exp["Values"]), (key, name)
+            assert list(m["counts"]) == exp["Counts"], (key, name)
+            assert (m["min"], m["max"]) == (exp["Min"], exp["Max"]), (key, name)
+            assert m["sum"] == pytest.approx(exp["Sum"]), (key, name)
+            assert m["count"] == min(sum(vc.values()), oracle.LONG_MAX), (key, name)
+
+
+def test_hostile_counts_complete_and_match_oracle(spark, tmp_path):
+    """Out-of-range or negative counts drop their value, and count sums
+    saturate at 2^63-1 (SURVEY.md §7.4): under ANSI no count fails the
+    job, in batch, pipeline.run or a micro-batch."""
+    from emf_spark.streaming import job as sjob
+    from emf_spark.tokenizer import tokenize_bytes
+
+    docs = [
+        (f"h{i}", json.dumps(r, separators=(",", ":")))
+        for i, r in enumerate(HOSTILE_RECORDS)
+    ]
+    src = str(tmp_path / "in")
+    spark.createDataFrame(
+        [(d, tokenize_bytes(js), len(js), "app-a") for d, js in docs],
+        "doc_id string, tokens array<int>, n_tok int, source string",
+    ).coalesce(1).write.parquet(src)
+    groups = oracle.aggregate([(d, js, SINK_OF["app-a"]) for d, js in docs])
+    counts = [c for g in groups.values() for vc in g["metrics"].values() for c in vc.values()]
+    assert oracle.LONG_MAX in counts  # the saturating sums are exercised
+
+    built = pipeline.build_events(spark, spark.read.parquet(src))
+    _assert_events_match_oracle(built.events.collect(), groups)
+
+    pipeline.run(spark, src, str(tmp_path / "batch"))
+    _assert_events_match_oracle(
+        spark.read.parquet(str(tmp_path / "batch" / "events")).collect(), groups
+    )
+
+    out = str(tmp_path / "stream")
+    q = sjob.run_microbatch(spark, src, out)
+    assert q.awaitTermination(300)
+    assert q.exception() is None
+    _assert_events_match_oracle(spark.read.parquet(f"{out}/events").collect(), groups)
+
+
+def test_run_legs_waits_for_every_leg_and_reraises(spark):
+    """run_legs under more legs than cores and a short switch interval:
+    every leg runs to the end, each result is kept under its name, and
+    the first failure is raised only after all legs finished."""
+    done, lock = [], threading.Lock()
+
+    def leg(i):
+        def body():
+            time.sleep(0.01 * (i % 5))
+            with lock:
+                done.append(i)
+            if i == 3:
+                raise ValueError("leg 3")
+            return i * i
+
+        return body
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        legs = {f"leg{i}": leg(i) for i in range(4 * (os.cpu_count() or 1))}
+        ok = {k: v for k, v in legs.items() if k != "leg3"}
+        assert pipeline.run_legs(**ok) == {k: int(k[3:]) ** 2 for k in ok}
+        done.clear()
+        with pytest.raises(ValueError, match="leg 3"):
+            pipeline.run_legs(**legs)
+        assert sorted(done) == list(range(len(legs)))
+    finally:
+        sys.setswitchinterval(old)

@@ -53,6 +53,17 @@ def test_observation_explode_has_no_shuffle(parsed):
     assert "Exchange hashpartitioning" not in plan
 
 
+@pytest.mark.parametrize("key_by_namespace", [False, True])
+def test_aggregate_shuffle_count(parsed, key_by_namespace):
+    """Three exchanges in event assembly: the value-salted phase 1, the
+    phase-2 repartition on the group keys and the metadata groupBy. The
+    per-group metric collect and the join with the metadata branch
+    reuse the group-key partitioning."""
+    events = pipeline.aggregate(parsed.drop("tokens", "payload"), key_by_namespace)
+    plan = plan_of(events, "simple")
+    assert plan.count("Exchange hashpartitioning") == 3, plan[:4000]
+
+
 def test_histogram_agg_shuffle_count(parsed):
     """Exactly two exchanges: (keys+value) partial/final agg, then the
     window-function repartition on the group keys. Everything after
@@ -118,6 +129,78 @@ def test_warm_calls_reuse_compiled_classes(spark, tmp_path):
         n = _janino_compiles(spark)
         call()
         assert _janino_compiles(spark) - n == 0, call.__name__
+
+
+# Jobs of one warm call on the fixed 200-record input, per leg (AQE
+# submits one job per query stage; a broadcast is one job). "caller"
+# counts the jobs outside any leg.
+LEGS = ("staged", "errors", "routed", "events", "stats")
+JOB_BUDGET = {
+    "batch": {"caller": 2, "staged": 4, "errors": 1, "routed": 4, "events": 7, "stats": 3},
+    "stream": {"caller": 1, "errors": 1, "events": 7},
+}
+
+
+def _group_jobs(spark, group: str) -> list[str]:
+    """Descriptions of the jobs tagged with job group ``group``, in job
+    id order, once the listener bus has recorded every job."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    return [
+        store.job(i).description().getOrElse(None)
+        for i in sorted(sc.statusTracker().getJobIdsForGroup(group))
+    ]
+
+
+@contextlib.contextmanager
+def _job_group(spark, group: str):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        yield
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_pipeline_legs_keep_the_callers_job_group(spark, tmp_path):
+    """pipeline.run's concurrent legs keep the caller's job group: the
+    errors, routed and events writes are attributable to the call."""
+    src = str(tmp_path / "in")
+    fixtures.write_corpus(f"{src}/part-0.parquet", 200)
+    with _job_group(spark, "legs-g"):
+        pipeline.run(spark, src, str(tmp_path / "out"))
+    descs = _group_jobs(spark, "legs-g")
+    assert set(LEGS) <= set(descs), descs
+
+
+@pytest.mark.parametrize("kind", ["batch", "stream"])
+def test_job_budget(spark, tmp_path, kind):
+    """A warm pipeline.run and a warm micro-batch run exactly the jobs
+    pinned in JOB_BUDGET, counted through the call's job group (a
+    stream query tags its jobs with its run id)."""
+    from emf_spark.streaming import job as sjob
+
+    src = str(tmp_path / "in")
+    fixtures.write_corpus(f"{src}/part-0.parquet", 200)
+    calls = itertools.count()
+
+    def call() -> str:
+        group = f"budget-{next(calls)}"
+        out = str(tmp_path / group)
+        if kind == "batch":
+            with _job_group(spark, group):
+                pipeline.run(spark, src, out).stats.collect()
+            return group
+        q = sjob.run_microbatch(spark, src, out)
+        assert q.awaitTermination(300)
+        return str(q.runId)
+
+    call()  # cold
+    legs = [d if d in LEGS else "caller" for d in _group_jobs(spark, call())]
+    per_leg = {d: legs.count(d) for d in legs}
+    assert per_leg == JOB_BUDGET[kind], per_leg
 
 
 def test_session_turns_off_call_site_capture(spark):

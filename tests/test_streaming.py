@@ -3,6 +3,9 @@
 
 from __future__ import annotations
 
+import threading
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -342,22 +345,27 @@ def test_microbatch_replay_is_idempotent(spark, stream_input, tmp_path):
     checkpoint commit didn't) used to append duplicate partial events.
     The per-batch dynamic partition overwrite makes re-running the same
     batch_id a no-op."""
-    from emf_spark import fixtures as fx
     from emf_spark.streaming.job import _aggregate_batch
 
     out = str(tmp_path / "replay_out")
-    batch = spark.read.parquet(stream_input)
-    lookup = fx.lookup_df(spark)
-    _aggregate_batch(batch, out, 7, lookup, 60_000)
+    batch = _staged(spark, stream_input)
+    _aggregate_batch(batch, out, 7)
     n1 = spark.read.parquet(f"{out}/events").count()
     e1 = spark.read.parquet(f"{out}/errors").count()
     # replay the SAME batch id — counts must not change
-    _aggregate_batch(batch, out, 7, lookup, 60_000)
+    _aggregate_batch(batch, out, 7)
     assert spark.read.parquet(f"{out}/events").count() == n1
     assert spark.read.parquet(f"{out}/errors").count() == e1
     # a different batch id still appends (normal progress)
-    _aggregate_batch(batch, out, 8, lookup, 60_000)
+    _aggregate_batch(batch, out, 8)
     assert spark.read.parquet(f"{out}/events").count() == 2 * n1
+
+
+def _staged(spark, input_dir):
+    """A batch read of ``input_dir`` as the stream query stages it."""
+    return pipeline.stage(
+        spark.read.parquet(input_dir), fixtures.lookup_df(spark), 60_000
+    )
 
 
 def _persistent_rdd_ids(spark):
@@ -394,32 +402,89 @@ def test_microbatch_events_read_cached_parse_and_release_on_failure(
     raises (injected here, after the errors write filled the cache)."""
     from pyspark.sql.readwriter import DataFrameWriter
 
-    from emf_spark import fixtures as fx
-
     real_parquet = DataFrameWriter.parquet
     calls, at_failure = [], {}
+    errors_written = threading.Event()
 
-    def failing_second_write(self, path, *args, **kwargs):
-        calls.append(path)
-        if len(calls) == 2:
+    def failing_events_write(self, path, *args, **kwargs):
+        if path.endswith("events"):
+            # the legs run concurrently: fail only once the errors
+            # write has filled the cache
+            assert errors_written.wait(300)
+            calls.append(path)
             at_failure["cached"] = _persistent_rdd_ids(spark) - before
             at_failure["nodes"] = _plan_nodes(self._df._jdf.queryExecution().sparkPlan())
             raise OSError("injected write failure")
-        return real_parquet(self, path, *args, **kwargs)
+        calls.append(path)
+        try:
+            return real_parquet(self, path, *args, **kwargs)
+        finally:
+            errors_written.set()
 
     spark.catalog.clearCache()
     before = _persistent_rdd_ids(spark)
-    monkeypatch.setattr(DataFrameWriter, "parquet", failing_second_write)
+    monkeypatch.setattr(DataFrameWriter, "parquet", failing_events_write)
     with pytest.raises(OSError, match="injected"):
         sjob._aggregate_batch(
-            spark.read.parquet(stream_input), str(tmp_path / "out"), 0,
-            fx.lookup_df(spark), 60_000,
+            _staged(spark, stream_input), str(tmp_path / "out"), 0
         )
     assert len(calls) == 2 and calls[1].endswith("events")
     assert at_failure["cached"], "the parse was not cached when the write ran"
     nodes = at_failure["nodes"]
     assert "InMemoryTableScan" in nodes and "ArrowEvalPython" not in nodes, nodes
     assert _persistent_rdd_ids(spark) == before
+
+
+@pytest.mark.parametrize("failing", ["errors", "events"])
+def test_microbatch_leg_failure_waits_for_the_other_leg(
+    spark, stream_input, tmp_path, monkeypatch, failing
+):
+    """The errors and events legs run concurrently: a failure in either
+    is raised from the micro-batch only after the other leg finished,
+    and the batch's cache is released."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real_parquet = DataFrameWriter.parquet
+    finished = []
+
+    def write(self, path, *args, **kwargs):
+        if path.endswith(failing):
+            raise OSError(f"injected {failing} failure")
+        time.sleep(1)  # the other leg outlasts the failure
+        out = real_parquet(self, path, *args, **kwargs)
+        finished.append(path)
+        return out
+
+    spark.catalog.clearCache()
+    before = _persistent_rdd_ids(spark)
+    monkeypatch.setattr(DataFrameWriter, "parquet", write)
+    out = str(tmp_path / "out")
+    with pytest.raises(OSError, match=f"injected {failing}"):
+        sjob._aggregate_batch(_staged(spark, stream_input), out, 0)
+    other = "events" if failing == "errors" else "errors"
+    assert finished == [f"{out}/{other}"]
+    assert _persistent_rdd_ids(spark) == before
+
+
+def test_microbatch_stages_once_per_query(spark, stream_input, tmp_path, monkeypatch):
+    """The stage plan (detokenize, parse, enrich, window) is built once
+    for the query, not once per micro-batch."""
+    src = str(tmp_path / "in")
+    spark.read.parquet(stream_input).repartition(3).write.parquet(src)
+    real_stage, built = pipeline.stage, []
+
+    def counting_stage(*args, **kwargs):
+        built.append(1)
+        return real_stage(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "stage", counting_stage)
+    q = sjob.run_microbatch(
+        spark, src, str(tmp_path / "out"), max_files_per_trigger=1
+    )
+    assert q.awaitTermination(300)
+    assert q.exception() is None
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 3
+    assert len(built) == 1
 
 
 def test_eventtime_counts_sliding(spark, stream_input, tmp_path):
