@@ -132,8 +132,8 @@ def distribution_drift(
 def category_counts(df: DataFrame, cat_col: str) -> DataFrame:
     """Collapsed ``(category, n)`` frame — the mergeable form of a
     window for drift purposes (two count frames union+re-aggregate to
-    the count frame of the concatenated windows, which is what the
-    streaming monitor's cumulative store exploits)."""
+    the count frame of the concatenated windows, so a cumulative count
+    store merges exactly)."""
     return df.groupBy(F.col(cat_col).alias("category")).agg(
         F.count(F.lit(1)).alias("n")
     )
@@ -143,11 +143,11 @@ def drift_from_counts(
     ref_counts: DataFrame, cur_counts: DataFrame
 ) -> DataFrame:
     """``distribution_drift`` over pre-collapsed ``(category, n)``
-    frames (see ``category_counts``) — the count-level entry point the
-    streaming monitor reuses against its cumulative store. Totals are
-    the count sums (== the raw windows' row counts); an empty side
-    coalesces to total 0 so the ppm division still THROWS under ANSI,
-    same contract as the raw-frame form."""
+    frames (see ``category_counts``) — the count-level entry point for
+    a cumulative count store. Totals are the count sums (== the raw
+    windows' row counts); an empty side coalesces to total 0 so the ppm
+    division still THROWS under ANSI, same contract as the raw-frame
+    form."""
     a = ref_counts.select("category", F.col("n").alias("n_ref"))
     b = cur_counts.select("category", F.col("n").alias("n_cur"))
     ta = a.agg(F.coalesce(F.sum("n_ref"), F.lit(0)).alias("t_ref"))

@@ -172,11 +172,9 @@ def hll_register_rows(
     group_cols: list[str] | None = None,
     p: int = 8,
 ) -> DataFrame:
-    """(groups..., _b, _r) register-update rows — the shared JVM-side
+    """(groups..., _b, _r) register-update rows — the JVM-side
     derivation (portable 56-bit hash, bucket = h mod m, rank =
-    leading-zeros+1 of the remaining word) used by both batch
-    ``hll_distinct`` and ``streaming.sketches.streaming_hll_distinct``,
-    so stream and batch registers agree bit-for-bit by construction."""
+    leading-zeros+1 of the remaining word) used by ``hll_distinct``."""
     from emf_spark.datax.dedup import portable_hash56
 
     if not 2 <= p <= 16:

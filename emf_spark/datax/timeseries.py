@@ -183,8 +183,7 @@ def ewma(
     a deliberate semantic choice, not a scale accident: EWMA is a
     sequential recurrence, so one series is irreducibly one task's
     work, exactly like the ffill window above. The collected array is
-    bounded by samples-per-series; for unbounded streams use the
-    streaming job's stateful path instead. Requires nonnegative
+    bounded by samples-per-series. Requires nonnegative
     values (lattice trunc-div is engine-portable only away from the
     sign boundary) — enforced with a filter documented to the caller."""
     if not (0 < alpha_num < alpha_den):

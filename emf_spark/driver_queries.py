@@ -3931,8 +3931,8 @@ def q_ts_ewma(spark, sf):
     division -- every step exact, so DuckDB's list_reduce over the
     identically-ordered list reproduces the final BIGINT bit-for-bit.
     The recurrence is irreducibly sequential per series, so the fold
-    runs over a per-series sorted collect_list (series length bounded;
-    unbounded streams use the streaming stateful path)."""
+    runs over a per-series sorted collect_list (series length
+    bounded)."""
     from emf_spark.datax.timeseries import ewma
 
     ev = _t(spark, sf, "events")

@@ -130,7 +130,7 @@ def write_table(
     API (``writeTo().createOrReplace()`` / ``append()``), which gives
     atomic snapshot commits, hidden-partition evolution, and
     rewrite-files compaction downstream — the capabilities
-    compact_parquet and the streaming writers emulate by hand on bare
+    compact_parquet and the streaming writer emulate by hand on bare
     parquet. Without one (this sandbox), the fallback is the repo's
     standing parquet stand-in: a partitioned managed table with the
     same logical layout, so the caller's read side is unchanged."""
