@@ -124,32 +124,14 @@ def distribution_drift(
     windows per side swap the ppm literal for a DECIMAL(38) cast
     (ANSI throws loudly at the boundary).
     """
-    return drift_from_counts(
-        category_counts(ref, cat_col), category_counts(cur, cat_col)
-    )
 
+    def counts(df: DataFrame, n: str) -> DataFrame:
+        return df.groupBy(F.col(cat_col).alias("category")).agg(
+            F.count(F.lit(1)).alias(n)
+        )
 
-def category_counts(df: DataFrame, cat_col: str) -> DataFrame:
-    """Collapsed ``(category, n)`` frame — the mergeable form of a
-    window for drift purposes (two count frames union+re-aggregate to
-    the count frame of the concatenated windows, so a cumulative count
-    store merges exactly)."""
-    return df.groupBy(F.col(cat_col).alias("category")).agg(
-        F.count(F.lit(1)).alias("n")
-    )
-
-
-def drift_from_counts(
-    ref_counts: DataFrame, cur_counts: DataFrame
-) -> DataFrame:
-    """``distribution_drift`` over pre-collapsed ``(category, n)``
-    frames (see ``category_counts``) — the count-level entry point for
-    a cumulative count store. Totals are the count sums (== the raw
-    windows' row counts); an empty side coalesces to total 0 so the ppm
-    division still THROWS under ANSI, same contract as the raw-frame
-    form."""
-    a = ref_counts.select("category", F.col("n").alias("n_ref"))
-    b = cur_counts.select("category", F.col("n").alias("n_cur"))
+    a, b = counts(ref, "n_ref"), counts(cur, "n_cur")
+    # an empty side coalesces its total to 0, so the ppm division throws
     ta = a.agg(F.coalesce(F.sum("n_ref"), F.lit(0)).alias("t_ref"))
     tb = b.agg(F.coalesce(F.sum("n_cur"), F.lit(0)).alias("t_cur"))
     return (

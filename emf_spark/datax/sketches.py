@@ -166,34 +166,6 @@ def _hll_alpha(m: int) -> float:
     return {16: 0.673, 32: 0.697, 64: 0.709}.get(m, 0.7213 / (1 + 1.079 / m))
 
 
-def hll_register_rows(
-    df: DataFrame,
-    value_col: str,
-    group_cols: list[str] | None = None,
-    p: int = 8,
-) -> DataFrame:
-    """(groups..., _b, _r) register-update rows — the JVM-side
-    derivation (portable 56-bit hash, bucket = h mod m, rank =
-    leading-zeros+1 of the remaining word) used by ``hll_distinct``."""
-    from emf_spark.datax.dedup import portable_hash56
-
-    if not 2 <= p <= 16:
-        raise ValueError(f"p must be in [2, 16], got {p}")
-    groups = group_cols or []
-    m = 1 << p
-    scale = 56 - p + 1
-    h = portable_hash56(F.col(value_col).cast("string"))
-    w = F.shiftright(F.col("_h"), p)
-    rank = F.when(w == 0, F.lit(scale)).otherwise(
-        F.lit(scale) - F.length(F.conv(w.cast("string"), 10, 2))
-    )
-    return (
-        df.filter(F.col(value_col).isNotNull())
-        .select(*groups, h.alias("_h"))
-        .select(*groups, (F.col("_h") % m).alias("_b"), rank.alias("_r"))
-    )
-
-
 def hll_distinct(
     df: DataFrame,
     value_col: str,
@@ -232,12 +204,21 @@ def hll_distinct(
 
     Standard error ~ 1.04/sqrt(m) (8.5% at the default p=8; raise p
     for tighter bounds — the shuffle bound scales with m)."""
+    from emf_spark.datax.dedup import portable_hash56
+
+    if not 2 <= p <= 16:
+        raise ValueError(f"p must be in [2, 16], got {p}")
     groups = group_cols or []
     m = 1 << p
-    wbits = 56 - p
-    scale = wbits + 1
+    scale = 56 - p + 1
+    w = F.shiftright(F.col("_h"), p)
+    rank = F.when(w == 0, F.lit(scale)).otherwise(
+        F.lit(scale) - F.length(F.conv(w.cast("string"), 10, 2))
+    )
     regs = (
-        hll_register_rows(df, value_col, groups, p)
+        df.filter(F.col(value_col).isNotNull())
+        .select(*groups, portable_hash56(F.col(value_col).cast("string")).alias("_h"))
+        .select(*groups, (F.col("_h") % m).alias("_b"), rank.alias("_r"))
         .groupBy(*groups, "_b")
         .agg(F.max("_r").alias("_reg"))
     )

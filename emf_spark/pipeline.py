@@ -141,13 +141,19 @@ def run(
     """Full job with writes: staged parse checkpoint, routed rows,
     per-sink events, errors, stats.
 
-    Topology (each arrow is one job; detok+parse runs exactly ONCE):
+    Topology (detok+parse runs exactly ONCE):
 
-      tokenized --stage--> staged parquet | persist     [checkpoint]
+      tokenized --rebalance--> stage --> staged parquet | persist [checkpoint]
       staged --split_valid--> errors
       tokenized --anti-join(error ids)+broadcast lookup--> routed (no parse)
       staged --split_valid--> aggregate --> events (persisted)
       events --> per-sink writes; events --> compression stats
+
+    AQE sizes every stage by its data: it coalesces the rebalance of the
+    input, and it also re-plans the persisted events
+    (``canChangeCachedPlanOutputPartitioning``, session.py), so a small
+    call runs one or two tasks per stage and a large one up to
+    ``spark.sql.shuffle.partitions``.
 
     The errors, routed and events writes are independent given the
     checkpoint and run concurrently through ``run_legs``; the staged
@@ -172,13 +178,14 @@ def run(
 
     # Byte-based split sizing misjudges this workload: token payloads
     # are ~20x cheaper on disk (dictionary-compressed parquet) than the
-    # JSON parse they cost, so a "small" input can still be minutes of
-    # CPU. If the scan yields fewer partitions than the cluster has
-    # cores, fan out first — the shuffle moves only compressed tokens
-    # and buys a fully parallel parse stage.
-    target = spark.sparkContext.defaultParallelism * 2
-    if tokenized.rdd.getNumPartitions() < target:
-        tokenized = tokenized.repartition(target)
+    # JSON parse they cost, so a one-split input can still be minutes of
+    # CPU. A rebalance shuffle moves only compressed tokens and lets AQE
+    # size the parse stage by the shuffled bytes: under Spark's default
+    # coalescing (parallelismFirst, 1 MB minPartitionSize) a large input
+    # fans out to spark.sql.shuffle.partitions tasks and a small one
+    # stays at one or two. A repartition to a fixed count is never
+    # coalesced: 2x cores cut a 3k-record parse into 8 tasks on 4 cores.
+    tokenized = tokenized.hint("rebalance")
 
     # 1. staged checkpoint: the only pass that pays detok+parse
     staged = stage(tokenized, lookup, window_ms)

@@ -413,3 +413,45 @@ def test_run_legs_waits_for_every_leg_and_reraises(spark):
         assert sorted(done) == list(range(len(legs)))
     finally:
         sys.setswitchinterval(old)
+
+
+def _sorted_rows(df) -> list[str]:
+    """Every row as JSON with its columns in name order, sorted: a
+    comparison that ignores row order and partitioning."""
+    return sorted(
+        r[0] for r in df.select(F.to_json(F.struct(*sorted(df.columns)))).collect()
+    )
+
+
+@pytest.mark.parametrize("staging", ["parquet", "persist"])
+@pytest.mark.parametrize("key_by_namespace", [False, True])
+def test_run_outputs_do_not_depend_on_input_layout(
+    spark, tmp_path, key_by_namespace, staging
+):
+    """AQE picks pipeline.run's partition counts from the data, so its
+    outputs must not depend on them: the same 600 records in 1 file and
+    in 6 files give identical events, errors, stats and routed tokens."""
+    import pyarrow.parquet as pq
+
+    table = fixtures.corpus_table(600)
+    outputs = []
+    for files in (1, 6):
+        src, out = tmp_path / f"in{files}", str(tmp_path / f"out{files}")
+        src.mkdir()
+        step = len(table) // files
+        for i in range(files):
+            pq.write_table(table.slice(i * step, step), str(src / f"part-{i}.parquet"))
+        res = pipeline.run(
+            spark, str(src), out, key_by_namespace=key_by_namespace, staging=staging
+        )
+        outputs.append({
+            "events": _sorted_rows(spark.read.parquet(f"{out}/events")),
+            "errors": _sorted_rows(spark.read.parquet(f"{out}/errors")),
+            "stats": _sorted_rows(res.stats),
+            "routed": _sorted_rows(spark.read.parquet(f"{out}/routed").select("doc_id", "tokens")),
+        })
+    one, six = outputs
+    assert len(one["routed"]) + len(one["errors"]) == 600
+    assert one["events"] and one["errors"] and one["stats"]
+    for name in one:
+        assert one[name] == six[name], name

@@ -141,16 +141,19 @@ JOB_BUDGET = {
 }
 
 
-def _group_jobs(spark, group: str) -> list[str]:
-    """Descriptions of the jobs tagged with job group ``group``, in job
-    id order, once the listener bus has recorded every job."""
+def _group_jobs(spark, group: str) -> list:
+    """The status-store records of the jobs tagged with job group
+    ``group``, in job id order, once the listener bus has recorded every
+    job."""
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     store = sc._jsc.sc().statusStore()
-    return [
-        store.job(i).description().getOrElse(None)
-        for i in sorted(sc.statusTracker().getJobIdsForGroup(group))
-    ]
+    return [store.job(i) for i in sorted(sc.statusTracker().getJobIdsForGroup(group))]
+
+
+def _leg_of(job) -> str:
+    desc = job.description().getOrElse(None)
+    return desc if desc in LEGS else "caller"
 
 
 @contextlib.contextmanager
@@ -171,15 +174,14 @@ def test_pipeline_legs_keep_the_callers_job_group(spark, tmp_path):
     fixtures.write_corpus(f"{src}/part-0.parquet", 200)
     with _job_group(spark, "legs-g"):
         pipeline.run(spark, src, str(tmp_path / "out"))
-    descs = _group_jobs(spark, "legs-g")
-    assert set(LEGS) <= set(descs), descs
+    legs = {_leg_of(job) for job in _group_jobs(spark, "legs-g")}
+    assert set(LEGS) <= legs, legs
 
 
-@pytest.mark.parametrize("kind", ["batch", "stream"])
-def test_job_budget(spark, tmp_path, kind):
-    """A warm pipeline.run and a warm micro-batch run exactly the jobs
-    pinned in JOB_BUDGET, counted through the call's job group (a
-    stream query tags its jobs with its run id)."""
+def _warm_call(spark, tmp_path, kind: str) -> list:
+    """The jobs of a warm pipeline.run (``batch``) or a warm micro-batch
+    (``stream``) on the fixed 200-record input, found through the call's
+    job group (a stream query tags its jobs with its run id)."""
     from emf_spark.streaming import job as sjob
 
     src = str(tmp_path / "in")
@@ -187,7 +189,7 @@ def test_job_budget(spark, tmp_path, kind):
     calls = itertools.count()
 
     def call() -> str:
-        group = f"budget-{next(calls)}"
+        group = f"{tmp_path.name}-{next(calls)}"  # unique per test
         out = str(tmp_path / group)
         if kind == "batch":
             with _job_group(spark, group):
@@ -198,9 +200,50 @@ def test_job_budget(spark, tmp_path, kind):
         return str(q.runId)
 
     call()  # cold
-    legs = [d if d in LEGS else "caller" for d in _group_jobs(spark, call())]
+    return _group_jobs(spark, call())
+
+
+@pytest.mark.parametrize("kind", ["batch", "stream"])
+def test_job_budget(spark, tmp_path, kind):
+    """A warm pipeline.run and a warm micro-batch run exactly the jobs
+    pinned in JOB_BUDGET."""
+    legs = [_leg_of(job) for job in _warm_call(spark, tmp_path, kind)]
     per_leg = {d: legs.count(d) for d in legs}
     assert per_leg == JOB_BUDGET[kind], per_leg
+
+
+# Tasks of one warm pipeline.run on the fixed 200-record input, per leg:
+# a job's tasks less those of the stages it skipped (an AQE job lists
+# the stages it reads from as skipped).
+TASK_BUDGET = {
+    "batch": {"caller": 2, "staged": 7, "errors": 1, "routed": 7, "events": 7, "stats": 3},
+}
+
+
+@pytest.mark.parametrize("kind", ["batch"])
+def test_task_budget(spark, tmp_path, kind):
+    """A warm pipeline.run's stages are sized by its data: the staged
+    write rebalances the input (AQE coalesces the shuffle, no fixed-count
+    round-robin), and AQE re-plans the persisted events, so every leg
+    runs the tasks pinned in TASK_BUDGET."""
+    jobs = _warm_call(spark, tmp_path, kind)
+    per_leg = {}
+    for job in jobs:
+        leg = _leg_of(job)
+        per_leg[leg] = per_leg.get(leg, 0) + job.numTasks() - job.numSkippedTasks()
+    assert per_leg == TASK_BUDGET[kind], per_leg
+
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    staged = [
+        ex.physicalPlanDescription()
+        for ex in (executions.apply(k) for k in range(executions.size()))
+        if ex.description() == "staged"
+        and any(ex.jobs().contains(job.jobId()) for job in jobs)
+    ]
+    assert len(staged) == 1
+    round_robin = [ln for ln in staged[0].splitlines() if "RoundRobinPartitioning" in ln]
+    assert round_robin, staged[0]
+    assert all("REBALANCE_PARTITIONS" in ln for ln in round_robin), round_robin
 
 
 def test_session_turns_off_call_site_capture(spark):

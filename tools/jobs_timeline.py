@@ -19,7 +19,8 @@ duration, the stages that ran and their tasks, and its job description
 (``pipeline.run_legs`` names each leg's jobs). For a streaming query the
 offsets count from the trigger start and the query's progress is
 printed too, so the time before the first job shows the driver's work
-inside ``addBatch``. A summary counts jobs per description.
+inside ``addBatch``. A summary counts the call's tasks, and the jobs
+and tasks per description.
 """
 
 from __future__ import annotations
@@ -130,9 +131,12 @@ def main() -> None:
         )
     print("\n".join(timeline(jobs, origin)))
     end = max(j["end"] or j["start"] for j in jobs)
-    per_desc = Counter(j["desc"] for j in jobs)
-    print(f"span {end - jobs[0]['start']} ms; jobs per description: "
-          + ", ".join(f"{d} {n}" for d, n in per_desc.items()))
+    per_desc, tasks = Counter(j["desc"] for j in jobs), Counter()
+    for j in jobs:
+        tasks[j["desc"]] += j["tasks"]
+    print(f"span {end - jobs[0]['start']} ms; {sum(tasks.values())} tasks; "
+          "jobs/tasks per description: "
+          + ", ".join(f"{d} {n}/{tasks[d]}" for d, n in per_desc.items()))
 
 
 if __name__ == "__main__":
