@@ -7,6 +7,10 @@ zero shuffle produce one directory (≈ Iceberg partition) per sink;
 reading ``routed/sink=<name>`` back scans that one partition. Per-sink
 row-level invariant: routed rows carry the original ``tokens``
 untouched (north-rule token-array equality).
+
+``pipeline.STAGED_COLS`` starts with ``ROUTED_COLS``, so ``pipeline.run``
+routes the valid side of its one staged pass: per record, not per
+``doc_id`` (SURVEY.md §7.4).
 """
 
 from __future__ import annotations
@@ -27,10 +31,9 @@ ROUTED_COLS = [
 ]
 
 
-def write_routed(df: DataFrame, out_dir: str, mode: str = "overwrite") -> str:
-    """Fan-out write of enriched rows, partitioned by sink."""
+def write_routed(df: DataFrame, out_dir: str) -> str:
+    """Fan-out write of ``ROUTED_COLS``, partitioned by sink."""
     path = os.path.join(out_dir, "routed")
-    cols = [c for c in ROUTED_COLS if c in df.columns]
-    df.select(*cols).write.mode(mode).partitionBy("sink").parquet(path)
+    df.select(*ROUTED_COLS).write.mode("overwrite").partitionBy("sink").parquet(path)
     return path
 

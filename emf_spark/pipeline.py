@@ -6,7 +6,8 @@ The EMF composition is written once and shared by ``build_events``,
 caller's own materialization, ``parse.split_valid`` (valid rows and the
 errors side-output), then ``aggregate`` (windowed salted two-phase
 histogram + metadata merge -> EMF event assembly). ``run`` adds the
-routed write, per-sink event writes and compression stats.
+routed write of the valid staged rows, per-sink event writes and
+compression stats.
 
 The composition's expressions are built once per session: the
 operators build every ``Column`` tree that does not depend on the
@@ -25,7 +26,7 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark import InheritableThread, SparkContext, StorageLevel
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 from emf_spark import fixtures
 from emf_spark.operators import aggregate as agg
@@ -45,17 +46,16 @@ class PipelineResult:
     paths: dict = field(default_factory=dict)
 
 
-STAGED_COLS = [
-    "doc_id",
-    "source",
-    "sink",
+# The routed table's columns (its ids, exact tokens, sink and lookup
+# attributes), then the ones only the aggregation and the errors
+# side-output read.
+STAGED_COLS = route_op.ROUTED_COLS + [
     "window_start",
     "dim_hash",
     "ts",
     "dims",
     "cwm",
     "metric_raw",
-    "n_tok",
     "valid",
     "error",
 ]
@@ -94,7 +94,9 @@ def stage(
 ) -> DataFrame:
     """Detokenize, parse, enrich and window every record, valid or not,
     down to ``STAGED_COLS``: the one frame each caller materializes its
-    own way before ``split_valid`` (tokens/payload never survive it)."""
+    own way before ``split_valid``. It keeps the input tokens and the
+    lookup attributes, so the valid side is also the routed table; the
+    detokenized payload never survives it."""
     parsed = parse_op.parse_emf(with_payload(tokenized))
     return agg.with_window(enrich_op.enrich(parsed, lookup), window_ms).select(
         *STAGED_COLS
@@ -141,12 +143,12 @@ def run(
     """Full job with writes: staged parse checkpoint, routed rows,
     per-sink events, errors, stats.
 
-    Topology (detok+parse runs exactly ONCE):
+    Topology (the input is scanned and detok+parse runs exactly ONCE):
 
       tokenized --rebalance--> stage --> staged parquet | persist [checkpoint]
       staged --split_valid--> errors
-      tokenized --anti-join(error ids)+broadcast lookup--> routed (no parse)
-      staged --split_valid--> aggregate --> events (persisted)
+      staged --split_valid--> valid --> routed (by sink)
+      valid --> aggregate --> events (persisted)
       events --> per-sink writes; events --> compression stats
 
     AQE sizes every stage by its data: it coalesces the rebalance of the
@@ -174,8 +176,8 @@ def run(
     """
     lookup = lookup if lookup is not None else fixtures.lookup_df(spark)
     os.makedirs(out_dir, exist_ok=True)
-    tokenized = spark.read.parquet(input_path)
-
+    # 1. staged checkpoint: the only scan of the input, and the only
+    # pass that pays detok+parse.
     # Byte-based split sizing misjudges this workload: token payloads
     # are ~20x cheaper on disk (dictionary-compressed parquet) than the
     # JSON parse they cost, so a one-split input can still be minutes of
@@ -185,10 +187,7 @@ def run(
     # fans out to spark.sql.shuffle.partitions tasks and a small one
     # stays at one or two. A repartition to a fixed count is never
     # coalesced: 2x cores cut a 3k-record parse into 8 tasks on 4 cores.
-    tokenized = tokenized.hint("rebalance")
-
-    # 1. staged checkpoint: the only pass that pays detok+parse
-    staged = stage(tokenized, lookup, window_ms)
+    staged = stage(spark.read.parquet(input_path).hint("rebalance"), lookup, window_ms)
     paths, cached = {}, []
     if staging == "parquet":
         paths["staged"] = os.path.join(out_dir, "staged")
@@ -211,22 +210,16 @@ def run(
         cached.append(events)
         paths["errors"] = os.path.join(out_dir, "errors")
 
-        # 2. errors, 3. routed rows and 4. events are independent given
-        # the staged checkpoint: concurrent legs, so Spark's scheduler
-        # interleaves their stages (the errors/routed jobs are small;
-        # overlapping them hides their fixed per-job latency behind the
-        # aggregation).
+        # 2. errors, 3. routed rows (the valid staged rows, by sink) and
+        # 4. events are independent given the staged checkpoint:
+        # concurrent legs, so Spark's scheduler interleaves their stages
+        # (the errors/routed jobs are small; overlapping them hides their
+        # fixed per-job latency behind the aggregation).
         def _write_errors():
             errors.write.mode("overwrite").parquet(paths["errors"])
 
         def _write_routed():
-            # no re-parse: drop the (typically tiny) malformed set via
-            # broadcast anti-join on doc_id, then broadcast-enrich
-            bad_ids = F.broadcast(errors.select("doc_id"))
-            routed = enrich_op.enrich(
-                tokenized.join(bad_ids, "doc_id", "left_anti"), lookup
-            )
-            paths["routed"] = route_op.write_routed(routed, out_dir)
+            paths["routed"] = route_op.write_routed(valid, out_dir)
 
         def _write_events():
             paths["events"], paths["events_jsonl"] = output_op.write_events(

@@ -75,8 +75,9 @@ def _aggregate_batch(
 ) -> None:
     # The errors write and both aggregation branches read one cached
     # pass over the batch's staged rows (pipeline.stage ran in the
-    # query: detokenize, parse, enrich, window; tokens/payload
-    # dropped); released even if a write fails.
+    # query), less the columns only a routed copy reads; released even
+    # if a write fails.
+    staged = staged.drop("tokens", "log_group_name", "log_stream_name", "env")
     staged = staged.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         valid, errors = parse_op.split_valid(staged)

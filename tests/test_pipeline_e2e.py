@@ -455,3 +455,39 @@ def test_run_outputs_do_not_depend_on_input_layout(
     assert one["events"] and one["errors"] and one["stats"]
     for name in one:
         assert one[name] == six[name], name
+
+
+def test_routed_rows_are_the_valid_rows_even_when_ids_repeat(spark, tmp_path):
+    """Routing is per record (SURVEY.md §7.4): a malformed record that
+    reuses a valid record's doc_id drops only itself, so the routed ids,
+    as a multiset, are the valid staged rows' ids."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = fixtures.corpus_table(200)
+    valid_id = table["doc_id"][50].as_py()  # an ordinary, valid record
+    bad = b"{not json"
+    extra = pa.table(
+        {
+            "doc_id": pa.array([valid_id], pa.string()),
+            "tokens": pa.array([list(bad)], pa.list_(pa.int32())),
+            "n_tok": pa.array([len(bad)], pa.int32()),
+            "source": pa.array(["app-a"], pa.string()),
+        }
+    )
+    src = tmp_path / "in"
+    src.mkdir()
+    pq.write_table(pa.concat_tables([table, extra]), str(src / "part-0.parquet"))
+    out = str(tmp_path / "out")
+    res = pipeline.run(spark, str(src), out)
+
+    routed = spark.read.parquet(f"{out}/routed")
+    staged = spark.read.parquet(f"{out}/staged").filter(F.col("valid"))
+    assert valid_id in {r[0] for r in staged.select("doc_id").collect()}
+    assert sorted(r[0] for r in routed.select("doc_id").collect()) == sorted(
+        r[0] for r in staged.select("doc_id").collect()
+    )
+    assert routed.count() == res.parsed.count()
+    assert spark.read.parquet(f"{out}/errors").filter(
+        F.col("doc_id") == valid_id
+    ).count() == 1

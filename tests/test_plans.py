@@ -8,6 +8,7 @@ from __future__ import annotations
 import contextlib
 import io
 import itertools
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -136,7 +137,7 @@ def test_warm_calls_reuse_compiled_classes(spark, tmp_path):
 # counts the jobs outside any leg.
 LEGS = ("staged", "errors", "routed", "events", "stats")
 JOB_BUDGET = {
-    "batch": {"caller": 2, "staged": 4, "errors": 1, "routed": 4, "events": 7, "stats": 3},
+    "batch": {"caller": 2, "staged": 4, "errors": 1, "routed": 1, "events": 7, "stats": 3},
     "stream": {"caller": 1, "errors": 1, "events": 7},
 }
 
@@ -216,7 +217,7 @@ def test_job_budget(spark, tmp_path, kind):
 # a job's tasks less those of the stages it skipped (an AQE job lists
 # the stages it reads from as skipped).
 TASK_BUDGET = {
-    "batch": {"caller": 2, "staged": 7, "errors": 1, "routed": 7, "events": 7, "stats": 3},
+    "batch": {"caller": 2, "staged": 7, "errors": 1, "routed": 1, "events": 7, "stats": 3},
 }
 
 
@@ -225,7 +226,8 @@ def test_task_budget(spark, tmp_path, kind):
     """A warm pipeline.run's stages are sized by its data: the staged
     write rebalances the input (AQE coalesces the shuffle, no fixed-count
     round-robin), and AQE re-plans the persisted events, so every leg
-    runs the tasks pinned in TASK_BUDGET."""
+    runs the tasks pinned in TASK_BUDGET. The staged write is the only
+    scan of the input: every other leg reads the staged rows."""
     jobs = _warm_call(spark, tmp_path, kind)
     per_leg = {}
     for job in jobs:
@@ -234,13 +236,15 @@ def test_task_budget(spark, tmp_path, kind):
     assert per_leg == TASK_BUDGET[kind], per_leg
 
     executions = spark._jsparkSession.sharedState().statusStore().executionsList()
-    staged = [
-        ex.physicalPlanDescription()
+    plans = [
+        (ex.description(), ex.physicalPlanDescription())
         for ex in (executions.apply(k) for k in range(executions.size()))
-        if ex.description() == "staged"
-        and any(ex.jobs().contains(job.jobId()) for job in jobs)
+        if any(ex.jobs().contains(job.jobId()) for job in jobs)
     ]
+    staged = [plan for desc, plan in plans if desc == "staged"]
     assert len(staged) == 1
+    scans_input = [desc for desc, plan in plans if f"{tmp_path / 'in'}]" in plan]
+    assert scans_input == ["staged"], scans_input
     round_robin = [ln for ln in staged[0].splitlines() if "RoundRobinPartitioning" in ln]
     assert round_robin, staged[0]
     assert all("REBALANCE_PARTITIONS" in ln for ln in round_robin), round_robin
@@ -313,13 +317,19 @@ def test_lookup_is_an_inline_table(spark, corpus_path):
 
 
 def test_staged_scan_prunes_columns(spark, corpus_path, tmp_path):
-    """The events path must never read tokens back from the staged
-    checkpoint (ReadSchema excludes them by construction), and the
-    validity filter must push down to the parquet scan."""
+    """The events path must never read tokens or the lookup attributes
+    back from the staged checkpoint (only the routed table reads them),
+    and the validity filter must push down to the parquet scan."""
     out = str(tmp_path / "plans_out")
     pipeline.run(spark, corpus_path, out, write_routed=False)
     staged = spark.read.parquet(f"{out}/staged")
-    assert "tokens" not in staged.columns  # never staged at all
+    valid, _ = parse_op.split_valid(staged)
+    events_plan = plan_of(pipeline.aggregate(valid))
+    read_schemas = [ln for ln in events_plan.splitlines() if "ReadSchema:" in ln]
+    assert read_schemas, events_plan[:2000]
+    for ln in read_schemas:
+        read = re.findall(r"[<,](\w+):", ln)
+        assert not {"tokens", "log_group_name", "log_stream_name", "env"} & set(read), ln
     q = staged.filter(F.col("valid")).select("dim_hash", "metric_raw")
     plan = plan_of(q)
     assert "PushedFilters: [IsNotNull(valid), EqualTo(valid,true)]" in plan or (
