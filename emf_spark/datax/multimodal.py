@@ -18,10 +18,17 @@ Two decode tiers (VERDICT r2 item 4):
   bit-for-bit pytest parity against an independent numpy quantization
   round trip, and the driver query quantizes synth params to 32 fixed
   classes (``JPEG_CLASSES``) whose precomputed decoded stats make an
-  exact 32-literal SQL oracle. Unsupported profiles (progressive JPEG,
-  palette/Adam7 PNG, chroma-subsampled color) degrade to the
-  header-only dimension probe (``probe_compressed_meta``) — enough for
-  the dimension/aspect filters a pipeline actually gates on. Compressed
+  exact 32-literal SQL oracle. The codec's DCT products do not use BLAS
+  (``_dct_product``): each is summed over ``k`` in ascending order with
+  every multiply and add rounded on its own. Some blocks' quantized DC
+  term is an exact half (``sum(block) / 128 = n + 0.5``), and a one-ulp
+  difference between BLAS kernels would flip its rounding, so the
+  frozen table would hold on some hosts only; with the fixed order
+  IEEE-754 fixes every result on every host. Unsupported profiles
+  (progressive JPEG, palette/Adam7 PNG, chroma-subsampled color)
+  degrade to the header-only dimension probe (``probe_compressed_meta``)
+  — enough for the dimension/aspect filters a pipeline actually gates
+  on. Compressed
   AUDIO decodes too: IMA ADPCM in WAV containers (format tag 0x11 —
   block header + 4-bit nibble reconstruction via the public step
   tables, ``_decode_adpcm``), pinned by an independent-reference
@@ -463,6 +470,24 @@ def _dct_matrix() -> np.ndarray:
 _DCT_C = _dct_matrix()
 _JPEG_QTABLE = np.full(64, 16, dtype=np.int64)  # flat quant (quality ~fixed)
 
+
+def _dct_product(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``a @ b`` over the last two axes (leading block axes broadcast),
+    without BLAS: each result is summed over ``k`` in ascending order and
+    every multiply and add is its own numpy ufunc, so every step is one
+    IEEE-754 rounding and the result is the same on every host.
+
+    A BLAS ``@`` may fuse multiply-adds or reorder the sum by kernel
+    (OpenBLAS picks one per CPU), which moves a product by an ulp. The
+    DC term is ``sum(block) / 8`` and its quantized value is exactly
+    ``n + 0.5`` for some blocks, so an ulp decides which way
+    ``np.round`` goes, and the decoded pixel sums would follow the
+    host's BLAS kernel instead of the codec."""
+    out = a[..., :, :1] * b[..., :1, :]
+    for k in range(1, a.shape[-1]):
+        out = out + a[..., :, k:k + 1] * b[..., k:k + 1, :]
+    return out
+
 # canonical tables: DC symbols = size categories 0..11, every code 4
 # bits; AC symbols = EOB, ZRL and (run 0-15, size 1-10), every code 8
 # bits. DHT expresses these as (counts per length, symbol order).
@@ -530,50 +555,54 @@ def synth_jpeg(width: int, height: int, base: int) -> bytes:
     entropy-coded with the canonical tables above. Decoded stats are
     reproduced bit-for-bit by the numpy reference round-trip in the
     tests (DCT quantization is lossy, so decoded != source — the
-    DECODER's output is the contract, not the source raster)."""
+    DECODER's output is the contract, not the source raster). The
+    forward DCT is ``_dct_product`` (fixed-order, separately rounded,
+    no BLAS): a block's DC coefficient / 16 can be exactly ``n + 0.5``,
+    so the quantized value must not depend on the host's BLAS kernel."""
     import struct
 
     px = ((np.arange(width * height, dtype=np.int64) + base) % 256).reshape(
         height, width
     )
     bw, bh = (width + 7) // 8, (height + 7) // 8
-    # edge-replicate pad to full blocks
+    # edge-replicate pad to full blocks, then one (8, 8) block per MCU in
+    # raster order (by, bx)
     padded = np.pad(px, ((0, bh * 8 - height), (0, bw * 8 - width)), "edge")
+    blocks = (padded - 128).reshape(bh, 8, bw, 8).swapaxes(1, 2)
+    blocks = blocks.reshape(-1, 8, 8).astype(np.float64)
+    coefs = _dct_product(_dct_product(_DCT_C, blocks), _DCT_C.T)
+    qs = np.round(coefs.reshape(-1, 64) / _JPEG_QTABLE).astype(np.int64)
     w = _BitWriter()
     prev_dc = 0
-    for by in range(bh):
-        for bx in range(bw):
-            block = padded[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] - 128
-            coef = _DCT_C @ block.astype(np.float64) @ _DCT_C.T
-            q = np.round(coef.reshape(64) / _JPEG_QTABLE).astype(np.int64)
-            zz = q[_ZIGZAG]
-            diff = int(zz[0]) - prev_dc
-            prev_dc = int(zz[0])
-            t = _category(diff)
-            code, length = _DC_CODES[t]
-            w.put(code, length)
-            if t:
-                w.put(_amplitude_bits(diff, t), t)
-            run = 0
-            nz = np.nonzero(zz[1:])[0]
-            last = nz[-1] + 1 if len(nz) else 0
-            for k in range(1, last + 1):
-                v = int(zz[k])
-                if v == 0:
-                    run += 1
-                    continue
-                while run >= 16:
-                    c, ln = _AC_CODES[0xF0]
-                    w.put(c, ln)
-                    run -= 16
-                s = _category(v)
-                c, ln = _AC_CODES[(run << 4) | s]
+    for q in qs:
+        zz = q[_ZIGZAG]
+        diff = int(zz[0]) - prev_dc
+        prev_dc = int(zz[0])
+        t = _category(diff)
+        code, length = _DC_CODES[t]
+        w.put(code, length)
+        if t:
+            w.put(_amplitude_bits(diff, t), t)
+        run = 0
+        nz = np.nonzero(zz[1:])[0]
+        last = nz[-1] + 1 if len(nz) else 0
+        for k in range(1, last + 1):
+            v = int(zz[k])
+            if v == 0:
+                run += 1
+                continue
+            while run >= 16:
+                c, ln = _AC_CODES[0xF0]
                 w.put(c, ln)
-                w.put(_amplitude_bits(v, s), s)
-                run = 0
-            if last < 63:
-                c, ln = _AC_CODES[0x00]
-                w.put(c, ln)  # EOB
+                run -= 16
+            s = _category(v)
+            c, ln = _AC_CODES[(run << 4) | s]
+            w.put(c, ln)
+            w.put(_amplitude_bits(v, s), s)
+            run = 0
+        if last < 63:
+            c, ln = _AC_CODES[0x00]
+            w.put(c, ln)  # EOB
     scan = w.flush()
 
     def seg(marker: int, body: bytes) -> bytes:
@@ -662,10 +691,13 @@ def _decode_jpeg(payload: bytes):
     baseline grayscale JPEG: marker walk (DQT/DHT/SOF0/SOS), canonical
     Huffman entropy decode with byte unstuffing, DC-differential +
     run-length AC reconstruction, dequantize, inverse zigzag, IDCT,
-    level shift + clamp. Supports the 1-component 8-bit baseline
-    profile; anything else (progressive, chroma subsampled color,
-    arithmetic coding) raises so the caller falls back to the
-    dimension probe."""
+    level shift + clamp. The IDCT is ``_dct_product`` (fixed-order,
+    separately rounded, no BLAS), so the decoded sums are the same on
+    every host and match the frozen class table exactly (an exact-half
+    DC tie must not follow the host's BLAS kernel). Supports the
+    1-component 8-bit baseline profile; anything else (progressive,
+    chroma subsampled color, arithmetic coding) raises so the caller
+    falls back to the dimension probe."""
     import struct
 
     if payload[:2] != b"\xff\xd8":
@@ -729,36 +761,34 @@ def _decode_jpeg(payload: bytes):
     q = qtables[comp_tq]
     dct, act = dc_tab[td], ac_tab[ta]
     bw, bh = (w + 7) // 8, (h + 7) // 8
-    out = np.empty((bh * 8, bw * 8), dtype=np.int64)
+    coefs = np.zeros((bh * bw, 64), dtype=np.int64)
     br = _BitReader(scan)
     prev_dc = 0
-    for by in range(bh):
-        for bx in range(bw):
-            zz = np.zeros(64, dtype=np.int64)
-            t = _read_huff_symbol(br, dct)
-            diff = _extend(br.take(t), t) if t else 0
-            prev_dc += diff
-            zz[0] = prev_dc
-            k = 1
-            while k < 64:
-                sym = _read_huff_symbol(br, act)
-                if sym == 0x00:  # EOB
-                    break
-                if sym == 0xF0:  # ZRL
-                    k += 16
-                    continue
-                run, size = sym >> 4, sym & 0x0F
-                k += run
-                if k > 63 or size == 0:
-                    raise ValueError("corrupt AC run")
-                zz[k] = _extend(br.take(size), size)
-                k += 1
-            coef = np.zeros(64, dtype=np.int64)
-            coef[_ZIGZAG] = zz
-            block = (coef * q).reshape(8, 8).astype(np.float64)
-            spatial = _DCT_C.T @ block @ _DCT_C
-            px = np.clip(np.round(spatial) + 128, 0, 255).astype(np.int64)
-            out[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = px
+    for coef in coefs:  # one block per MCU, raster order (by, bx)
+        zz = np.zeros(64, dtype=np.int64)
+        t = _read_huff_symbol(br, dct)
+        diff = _extend(br.take(t), t) if t else 0
+        prev_dc += diff
+        zz[0] = prev_dc
+        k = 1
+        while k < 64:
+            sym = _read_huff_symbol(br, act)
+            if sym == 0x00:  # EOB
+                break
+            if sym == 0xF0:  # ZRL
+                k += 16
+                continue
+            run, size = sym >> 4, sym & 0x0F
+            k += run
+            if k > 63 or size == 0:
+                raise ValueError("corrupt AC run")
+            zz[k] = _extend(br.take(size), size)
+            k += 1
+        coef[_ZIGZAG] = zz
+    blocks = (coefs * q).reshape(-1, 8, 8).astype(np.float64)
+    spatial = _dct_product(_dct_product(_DCT_C.T, blocks), _DCT_C)
+    px = np.clip(np.round(spatial) + 128, 0, 255).astype(np.int64)
+    out = px.reshape(bh, bw, 8, 8).swapaxes(1, 2).reshape(bh * 8, bw * 8)
     cropped = out[:h, :w]
     return int(w), int(h), int(w) * int(h), int(cropped.sum())
 

@@ -2034,7 +2034,13 @@ def q_multimodal_jpeg_decode(spark, sf):
 # by the independent numpy quantization round trip (encode DCT ->
 # round/quant -> dequant -> IDCT -> clip, no shared code with the
 # entropy codec) and pinned against a live regeneration by
-# test_jpeg_class_stats_match_independent_reference
+# test_jpeg_class_stats_match_independent_reference. Both the codec and
+# that round trip sum each DCT product over k in ascending order with
+# every multiply and add rounded on its own (no BLAS): some blocks' DC
+# term quantizes to an exact n + 0.5, and a BLAS kernel that fuses or
+# reorders the sum flips it by an ulp (4 of these rows change under an
+# FMA OpenBLAS kernel), so the fixed order is what makes the table hold
+# on every host.
 _JPEG_CLASS_STATS = [
     (0, 8, 8, 64, 2048), (1, 15, 13, 195, 26827), (2, 22, 18, 396, 53583),
     (3, 29, 23, 667, 90553), (4, 12, 12, 144, 20682),

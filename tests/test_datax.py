@@ -2110,10 +2110,29 @@ def test_adpcm_decode_matches_independent_reference(spark):
     assert abs(got["a"]["value_sum"] - got["p"]["value_sum"]) < 0.02 * got["p"]["value_sum"]
 
 
+def _fixed_order_matmul(a, b):
+    """``a @ b`` as a plain-Python dot product: each entry sums
+    ``a[i, k] * b[k, j]`` over ``k`` in ascending order, every multiply
+    and add one IEEE-754 double operation. A BLAS ``@`` would make the
+    reference, and so the frozen class table it is compared with, a
+    property of the host's BLAS kernel."""
+    a = np.asarray(a, dtype=np.float64).tolist()
+    b = np.asarray(b, dtype=np.float64).tolist()
+    out = [[0.0] * len(b[0]) for _ in a]
+    for i, row in enumerate(a):
+        for j in range(len(b[0])):
+            acc = 0.0
+            for k, x in enumerate(row):
+                acc += x * b[k][j]
+            out[i][j] = acc
+    return np.array(out)
+
+
 def _jpeg_reference_roundtrip(width, height, base):
     """Independent numpy replication of encode->quantize->decode (no
     shared code with the entropy codec under test beyond the DCT basis
-    and quant table constants)."""
+    and quant table constants). The DCT products follow the codec's
+    fixed-order rule, written out on their own (``_fixed_order_matmul``)."""
     px = ((np.arange(width * height, dtype=np.int64) + base) % 256).reshape(
         height, width
     )
@@ -2123,10 +2142,15 @@ def _jpeg_reference_roundtrip(width, height, base):
     for by in range(bh):
         for bx in range(bw):
             block = padded[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] - 128
-            coef = multimodal._DCT_C @ block.astype(np.float64) @ multimodal._DCT_C.T
+            coef = _fixed_order_matmul(
+                _fixed_order_matmul(multimodal._DCT_C, block),
+                multimodal._DCT_C.T,
+            )
             qc = np.round(coef.reshape(64) / multimodal._JPEG_QTABLE)
             rec = (qc * multimodal._JPEG_QTABLE).reshape(8, 8)
-            spatial = multimodal._DCT_C.T @ rec @ multimodal._DCT_C
+            spatial = _fixed_order_matmul(
+                _fixed_order_matmul(multimodal._DCT_C.T, rec), multimodal._DCT_C
+            )
             out[by * 8:(by + 1) * 8, bx * 8:(bx + 1) * 8] = np.clip(
                 np.round(spatial) + 128, 0, 255
             )
@@ -2162,6 +2186,47 @@ def test_jpeg_class_stats_match_independent_reference():
         assert _JPEG_CLASS_STATS[k] == (k, w, h, w * h, int(ref.sum()))
         W, H, n, vs = multimodal._decode_jpeg(multimodal.synth_jpeg(w, h, base))
         assert (W, H, n, vs) == (w, h, w * h, int(ref.sum()))
+
+
+def _numpy_blas_name():
+    cfg = getattr(np.__config__, "CONFIG", {})
+    return cfg.get("Build Dependencies", {}).get("blas", {}).get("name", "")
+
+
+@pytest.mark.skipif(
+    "openblas" not in _numpy_blas_name().lower(),
+    reason="numpy's BLAS is not OpenBLAS, so OPENBLAS_CORETYPE selects nothing",
+)
+def test_jpeg_class_stats_independent_of_openblas_kernel():
+    """The codec's 32 class sums are the same under an OpenBLAS kernel
+    without FMA (Sandybridge) and one with FMA (Haswell), and both equal
+    the frozen table: the DCT's exact-half DC ties must not follow the
+    host's BLAS kernel."""
+    import json
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    from emf_spark.driver_queries import _JPEG_CLASS_STATS
+
+    code = (
+        "import json\n"
+        "from emf_spark.datax import multimodal as m\n"
+        "print(json.dumps([m._decode_jpeg(m.synth_jpeg(w, h, b))[3]"
+        " for w, h, b in m.JPEG_CLASSES]))\n"
+    )
+    sums = {}
+    for core in ("Sandybridge", "Haswell"):
+        env = dict(os.environ, OPENBLAS_CORETYPE=core)
+        proc = subprocess.run(
+            [sys.executable, "-c", code], env=env, capture_output=True,
+            text=True, timeout=300, cwd=Path(__file__).resolve().parent.parent,
+        )
+        assert proc.returncode == 0, proc.stderr
+        sums[core] = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert sums["Sandybridge"] == sums["Haswell"]
+    assert sums["Haswell"] == [row[4] for row in _JPEG_CLASS_STATS]
 
 
 def test_jpeg_decode_fuzz():
