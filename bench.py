@@ -65,8 +65,7 @@ def build_corpus(spark, path: str) -> int:
     return spark.read.parquet(path).count()
 
 
-def run_pipeline_job(spark, path: str, out_dir: str, staging: str = "parquet",
-                     n: int | None = None) -> dict:
+def run_pipeline_job(spark, path: str, out_dir: str, n: int | None = None) -> dict:
     """The timed unit: full pipeline incl. routed + event writes.
     Pass ``n`` (the corpus row count) to skip the per-invocation
     recount of the immutable cached corpus (review finding: 7
@@ -74,7 +73,7 @@ def run_pipeline_job(spark, path: str, out_dir: str, staging: str = "parquet",
     from emf_spark import pipeline
 
     t0 = time.time()
-    res = pipeline.run(spark, path, out_dir, window_ms=3_600_000, staging=staging)
+    res = pipeline.run(spark, path, out_dir, window_ms=3_600_000)
     res.stats.collect()
     wall = time.time() - t0
     if n is None:
@@ -119,19 +118,14 @@ def main():
     shutil.rmtree(out_dir, ignore_errors=True)
     n_corpus = spark.read.parquet(path).count()
     run_pipeline_job(spark, path, out_dir, n=n_corpus)
-    pipe_runs, sp_runs = [], []
+    pipe_runs = []
     for _ in range(3):
         shutil.rmtree(out_dir, ignore_errors=True)
         pipe_runs.append(run_pipeline_job(spark, path, out_dir, n=n_corpus))
-        shutil.rmtree(out_dir, ignore_errors=True)
-        sp_runs.append(run_pipeline_job(spark, path, out_dir, staging="persist", n=n_corpus))
     pipe = sorted(pipe_runs, key=lambda r: r["seconds"])[1]
-    single = sorted(sp_runs, key=lambda r: r["seconds"])[1]
     queries, samples = bench_queries(spark)
     queries["emf_pipeline"] = pipe["seconds"]
-    queries["emf_pipeline_singlepass"] = single["seconds"]
     samples["emf_pipeline"] = sorted(r["seconds"] for r in pipe_runs)
-    samples["emf_pipeline_singlepass"] = sorted(r["seconds"] for r in sp_runs)
     compact = {
         "metric": "emf_pipeline_throughput_seq_per_s",
         "value": pipe["rows_per_s"],
@@ -143,17 +137,14 @@ def main():
         # samples live in BENCH/BENCH_LATEST.json.
         "queries": {
             "emf_pipeline": pipe["seconds"],
-            "emf_pipeline_singlepass": single["seconds"],
-            "n_queries": len(queries) - 2,
+            "n_queries": len(queries) - 1,
             "battery_total_sec": round(
-                sum(v for k, v in queries.items()
-                    if not k.startswith("emf_pipeline")), 1),
+                sum(v for k, v in queries.items() if k != "emf_pipeline"), 1),
         },
         "value_best_of_runs": max(r["rows_per_s"] for r in pipe_runs),
         "rows_per_s_per_core": round(pipe["rows_per_s"] / CPUS, 1),
         "sf": Path(SF_DIR).name,
         "pipeline_rows": pipe["rows"],
-        "singlepass_rows_per_s": single["rows_per_s"],
         "cpus": CPUS,
         "per_query_medians": "BENCH/BENCH_LATEST.json",
     }

@@ -5,7 +5,7 @@ Cluster:
     zip -r emf_spark.zip emf_spark
     spark-submit --py-files emf_spark.zip emf_spark/cli.py \
         --input s3://.../emf_tokenized --out s3://.../emf_out \
-        --window-ms 60000 [--key-by-namespace] [--resumable]
+        --window-ms 60000 [--key-by-namespace] [--no-routed] [--resumable]
 
 Local:
     python -m emf_spark.cli --input ... --out ... [--cpus 32]
@@ -708,10 +708,8 @@ def main(argv=None) -> int:
     ap.add_argument("--key-by-namespace", action="store_true")
     ap.add_argument("--no-routed", action="store_true")
     ap.add_argument("--resumable", action="store_true",
-                    help="resume event writes from the lineage manifest")
-    ap.add_argument("--staging", choices=["parquet", "persist"], default="parquet",
-                    help="parsed-intermediate materialization: parquet "
-                         "checkpoint (resumable) or persist (run-once)")
+                    help="write events through the lineage manifest, "
+                         "skipping the cells an earlier run completed")
     ap.add_argument("--cpus", type=int, default=None,
                     help="local-mode cores (ignored under spark-submit)")
     args = ap.parse_args(argv)
@@ -719,32 +717,20 @@ def main(argv=None) -> int:
     spark = _get_session(args.cpus)
 
     from emf_spark import pipeline
-    from emf_spark.operators import lineage
 
+    res = pipeline.run(
+        spark,
+        args.input,
+        args.out,
+        window_ms=args.window_ms,
+        key_by_namespace=args.key_by_namespace,
+        write_routed=not args.no_routed,
+        resumable=args.resumable,
+    )
     if args.resumable:
-        res = pipeline.run(
-            spark,
-            args.input,
-            args.out,
-            window_ms=args.window_ms,
-            key_by_namespace=args.key_by_namespace,
-            write_routed=not args.no_routed,
-            staging=args.staging,
-            write_events=False,  # the manifest write below is the ONLY
-            # event write (both writing would double every row)
-        )
-        info = lineage.write_events_resumable(spark, res.events, args.out)
-        print(json.dumps({"resumable": info["written_rows"], "run_id": info["run_id"]}))
-    else:
-        res = pipeline.run(
-            spark,
-            args.input,
-            args.out,
-            window_ms=args.window_ms,
-            key_by_namespace=args.key_by_namespace,
-            write_routed=not args.no_routed,
-            staging=args.staging,
-        )
+        print(json.dumps({
+            "resumable": res.lineage["written_rows"], "run_id": res.lineage["run_id"]
+        }))
     stats = [r.asDict() for r in res.stats.collect()]
     print(json.dumps({"out": args.out, "stats": stats}, default=str))
     return 0

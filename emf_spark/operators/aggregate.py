@@ -195,8 +195,9 @@ def _histogram_cols(keys: tuple[str, ...]) -> dict:
 
     # Value-ordered full frame: double SUM accumulates ascending-v, so
     # the canonical Sum is identical whatever the physical layout
-    # (persist vs parquet staging re-partitions reordered p1 rows and
-    # flipped last-ulp digits in event_json — caught in round 2). The
+    # (a persisted vs a parquet-staged input re-partitions p1 rows
+    # differently, which flipped last-ulp digits in event_json — caught
+    # in round 2). The
     # reference itself is map-order nondeterministic here; ascending-v
     # is our documented canonicalization (O3). WindowExec sorts by
     # (partition keys, order key) anyway, so the extra key is ~free.

@@ -122,30 +122,30 @@ def write_events_resumable(
     manifest = Manifest(spark, out_dir)
     run_id = uuid.uuid4().hex[:12]
     started = time.time()
-    todo = pending_cells(events, manifest, stage)
-    todo = todo.persist()
-    n = todo.count()
+    todo = pending_cells(events, manifest, stage).persist()
     path = os.path.join(out_dir, "events")
     written_n = 0
-    if n:
-        written = todo.filter(~F.col("dropped_oversize"))
-        written_n = written.count()
-        # dynamic overwrite of the CELL partitions, not append: the
-        # manifest row lands AFTER this write, so a crash between the
-        # two re-runs these cells on resume — an append would then
-        # duplicate every row of the partially-recorded cells, while
-        # re-overwriting the same (sink, window_start) partitions is
-        # idempotent (review finding; same pattern as the streaming
-        # micro-batch and dedup-store writers)
-        (
-            written.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("sink", "window_start")
-            .parquet(path)
-        )
-        record_cells(
-            todo, manifest, stage, run_id, started,
-            written_mask="dropped_oversize",
-        )
-    todo.unpersist()
+    try:
+        if todo.count():
+            written = todo.filter(~F.col("dropped_oversize"))
+            written_n = written.count()
+            # dynamic overwrite of the CELL partitions, not append: the
+            # manifest row lands AFTER this write, so a crash between the
+            # two re-runs these cells on resume — an append would then
+            # duplicate every row of the partially-recorded cells, while
+            # re-overwriting the same (sink, window_start) partitions is
+            # idempotent (review finding; same pattern as the streaming
+            # micro-batch and dedup-store writers)
+            (
+                written.write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("sink", "window_start")
+                .parquet(path)
+            )
+            record_cells(
+                todo, manifest, stage, run_id, started,
+                written_mask="dropped_oversize",
+            )
+    finally:
+        todo.unpersist()
     return {"written_rows": written_n, "run_id": run_id, "path": path}

@@ -25,7 +25,7 @@ MAX_EVENT_BYTES = 262_144
 EVENT_OVERHEAD = 26
 
 
-def _metric_fragment(m: Column, scalar_collapse: bool = True) -> Column:
+def _metric_fragment(m: Column) -> Column:
     """One metric's JSON value. A10: a single-distinct-value metric
     collapses to the bare scalar ``stats.Max`` — dropping its count, a
     reference quirk reproduced on purpose (aggregator.go:192-197)."""
@@ -38,25 +38,23 @@ def _metric_fragment(m: Column, scalar_collapse: bool = True) -> Column:
             m["sum"].alias("Sum"),
         )
     )
-    if not scalar_collapse:
-        return hist_json
     return F.when(F.size(m["values"]) == 1, m["max"].cast("string")).otherwise(
         hist_json
     )
 
 
-def events_json(groups: DataFrame, scalar_collapse: bool = True) -> DataFrame:
+def events_json(groups: DataFrame) -> DataFrame:
     """Attach ``event_json`` (one EMF object per group) and ``event_bytes``;
     apply the P7 oversize drop (flush/cloudwatch.go:77-80) keeping a
     ``dropped_oversize`` marker column instead of silently losing rows."""
-    event_json, event_bytes, oversize = _event_cols(scalar_collapse)
+    event_json, event_bytes, oversize = _event_cols()
     df = groups.withColumn("event_json", event_json)
     df = df.withColumn("event_bytes", event_bytes)
     return df.withColumn("dropped_oversize", oversize)
 
 
 @per_session
-def _event_cols(scalar_collapse: bool) -> tuple[Column, Column, Column]:
+def _event_cols() -> tuple[Column, Column, Column]:
     """``events_json``' three columns, each over the ones before it."""
     aws_json = F.to_json(
         F.struct(
@@ -82,7 +80,7 @@ def _event_cols(scalar_collapse: bool) -> tuple[Column, Column, Column]:
                 F.lit(","),
                 _quoted_key(m["metric_name"]),
                 F.lit(":"),
-                _metric_fragment(m, scalar_collapse),
+                _metric_fragment(m),
             ),
         ),
     )

@@ -25,12 +25,13 @@ import os
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
-from pyspark import InheritableThread, SparkContext, StorageLevel
+from pyspark import InheritableThread, SparkContext
 from pyspark.sql import DataFrame, SparkSession
 
 from emf_spark import fixtures
 from emf_spark.operators import aggregate as agg
 from emf_spark.operators import enrich as enrich_op
+from emf_spark.operators import lineage
 from emf_spark.operators import output as output_op
 from emf_spark.operators import parse as parse_op
 from emf_spark.operators import route as route_op
@@ -44,6 +45,8 @@ class PipelineResult:
     events: DataFrame
     stats: DataFrame | None = None
     paths: dict = field(default_factory=dict)
+    # the resumable events write's counters (``run(resumable=True)``)
+    lineage: dict | None = None
 
 
 # The routed table's columns (its ids, exact tokens, sink and lookup
@@ -137,19 +140,23 @@ def run(
     window_ms: int = agg.WINDOW_MS,
     key_by_namespace: bool = False,
     write_routed: bool = True,
-    staging: str = "parquet",
-    write_events: bool = True,
+    resumable: bool = False,
 ) -> PipelineResult:
     """Full job with writes: staged parse checkpoint, routed rows,
     per-sink events, errors, stats.
 
     Topology (the input is scanned and detok+parse runs exactly ONCE):
 
-      tokenized --rebalance--> stage --> staged parquet | persist [checkpoint]
+      tokenized --rebalance--> stage --> staged parquet [checkpoint]
       staged --split_valid--> errors
       staged --split_valid--> valid --> routed (by sink)
       valid --> aggregate --> events (persisted)
       events --> per-sink writes; events --> compression stats
+
+    The staged parquet is written and re-read: its vectorized nested
+    column scans (dims/cwm/metric_raw) measured ~8x faster than an
+    in-memory relation. ``run`` overwrites it on every call; nothing
+    reads it back across calls.
 
     AQE sizes every stage by its data: it coalesces the rebalance of the
     input, and it also re-plans the persisted events
@@ -163,16 +170,11 @@ def run(
     caller's job group and are described ``staged``, ``errors``,
     ``routed``, ``events`` or ``stats``.
 
-    ``staging`` picks the materialization of the parsed intermediate
-    (VERDICT r1 item 8 — run-once workloads shouldn't pay checkpoint I/O):
-
-    - "parquet" (default): write + re-read a columnar checkpoint.
-      Vectorized nested-column scans (measured ~8x faster than
-      InMemoryRelation for dims/cwm/metric_raw), doubles as the resume
-      checkpoint, natural Iceberg stage boundary.
-    - "persist": MEMORY_AND_DISK persist — single input pass, no
-      checkpoint durability; the right call for run-once jobs where
-      outputs land atomically anyway. BENCH/BASELINE.md quotes both.
+    ``resumable`` writes the events through the lineage manifest
+    (``lineage.write_events_resumable``) instead of the parquet and
+    JSONL tables: it skips the (sink, window_start) cells an earlier
+    run completed and returns its counters as ``PipelineResult.lineage``.
+    Both kinds of write read the same persisted events.
     """
     lookup = lookup if lookup is not None else fixtures.lookup_df(spark)
     os.makedirs(out_dir, exist_ok=True)
@@ -188,64 +190,49 @@ def run(
     # stays at one or two. A repartition to a fixed count is never
     # coalesced: 2x cores cut a 3k-record parse into 8 tasks on 4 cores.
     staged = stage(spark.read.parquet(input_path).hint("rebalance"), lookup, window_ms)
-    paths, cached = {}, []
-    if staging == "parquet":
-        paths["staged"] = os.path.join(out_dir, "staged")
+    paths = {leg: os.path.join(out_dir, leg) for leg in ("staged", "errors", "stats")}
 
-        def _write_staged():
-            staged.write.mode("overwrite").parquet(paths["staged"])
-            return spark.read.parquet(paths["staged"])
+    def _write_staged():
+        staged.write.mode("overwrite").parquet(paths["staged"])
+        return spark.read.parquet(paths["staged"])
 
-        staged = run_legs(staged=_write_staged)["staged"]
-    elif staging == "persist":
-        staged = staged.persist(StorageLevel.MEMORY_AND_DISK)
-        cached.append(staged)
-    else:
-        raise ValueError(f"unknown staging mode: {staging!r}")
+    staged = run_legs(staged=_write_staged)["staged"]
+    valid, errors = parse_op.split_valid(staged)
+    events = aggregate(valid, key_by_namespace).persist()
 
-    # every cache this run takes is released even if a write raises
+    # 2. errors, 3. routed rows (the valid staged rows, by sink) and
+    # 4. events are independent given the staged checkpoint: concurrent
+    # legs, so Spark's scheduler interleaves their stages (the
+    # errors/routed jobs are small; overlapping them hides their fixed
+    # per-job latency behind the aggregation).
+    def _write_errors():
+        errors.write.mode("overwrite").parquet(paths["errors"])
+
+    def _write_routed():
+        paths["routed"] = route_op.write_routed(valid, out_dir)
+
+    def _write_events():
+        if resumable:
+            info = lineage.write_events_resumable(spark, events, out_dir)
+            paths["events"] = info["path"]
+            return info
+        paths["events"], paths["events_jsonl"] = output_op.write_events(
+            events, out_dir
+        )
+
+    def _write_stats():
+        output_op.compression_stats(events).write.mode("overwrite").parquet(
+            paths["stats"]
+        )
+        return spark.read.parquet(paths["stats"])
+
+    legs = {"errors": _write_errors, "events": _write_events}
+    if write_routed:
+        legs["routed"] = _write_routed
+    # the events cache is released even if a write raises
     try:
-        valid, errors = parse_op.split_valid(staged)
-        events = aggregate(valid, key_by_namespace).persist()
-        cached.append(events)
-        paths["errors"] = os.path.join(out_dir, "errors")
-
-        # 2. errors, 3. routed rows (the valid staged rows, by sink) and
-        # 4. events are independent given the staged checkpoint:
-        # concurrent legs, so Spark's scheduler interleaves their stages
-        # (the errors/routed jobs are small; overlapping them hides their
-        # fixed per-job latency behind the aggregation).
-        def _write_errors():
-            errors.write.mode("overwrite").parquet(paths["errors"])
-
-        def _write_routed():
-            paths["routed"] = route_op.write_routed(valid, out_dir)
-
-        def _write_events():
-            paths["events"], paths["events_jsonl"] = output_op.write_events(
-                events, out_dir
-            )
-
-        legs = {"errors": _write_errors}
-        if write_events:
-            # resumable callers write events through the lineage
-            # manifest instead (a second write here would double
-            # every event row — review finding)
-            legs["events"] = _write_events
-        if write_routed:
-            legs["routed"] = _write_routed
-        run_legs(**legs)
-
-        paths["stats"] = os.path.join(out_dir, "stats")
-
-        def _write_stats():
-            output_op.compression_stats(events).write.mode("overwrite").parquet(
-                paths["stats"]
-            )
-            return spark.read.parquet(paths["stats"])
-
+        written = run_legs(**legs)
         stats = run_legs(stats=_write_stats)["stats"]
     finally:
-        for df in cached:
-            df.unpersist()
-    return PipelineResult(valid, errors, events, stats, paths)
+        events.unpersist()
+    return PipelineResult(valid, errors, events, stats, paths, written["events"])

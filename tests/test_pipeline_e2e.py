@@ -235,23 +235,6 @@ def test_namespace_keyed_histograms_match_oracle(spark, corpus_path):
     assert got == exp
 
 
-def test_singlepass_staging_matches_parquet_staging(spark, corpus_path, tmp_path):
-    """staging='persist' (run-once mode, VERDICT r1 item 8) must produce
-    identical events to the default parquet checkpoint."""
-    a = pipeline.run(spark, corpus_path, str(tmp_path / "pq"), staging="parquet")
-    b = pipeline.run(spark, corpus_path, str(tmp_path / "sp"), staging="persist")
-    ea = spark.read.parquet(f"{tmp_path}/pq/events").select(
-        "sink", "window_start", "dim_hash", "event_json")
-    eb = spark.read.parquet(f"{tmp_path}/sp/events").select(
-        "sink", "window_start", "dim_hash", "event_json")
-    assert ea.count() == eb.count()
-    assert ea.exceptAll(eb).count() == 0 and eb.exceptAll(ea).count() == 0
-    # resume checkpoint only exists in parquet mode
-    import os
-    assert os.path.exists(f"{tmp_path}/pq/staged")
-    assert not os.path.exists(f"{tmp_path}/sp/staged")
-
-
 @pytest.mark.parametrize("key_by_namespace", [False, True])
 def test_build_events_matches_run_events(spark, corpus_path, tmp_path, key_by_namespace):
     """The no-write path and the batch path are one composition: the
@@ -275,13 +258,20 @@ def test_build_events_matches_run_events(spark, corpus_path, tmp_path, key_by_na
     assert planned.exceptAll(written).count() == 0
 
 
-@pytest.mark.parametrize("staging", ["parquet", "persist"])
-@pytest.mark.parametrize("failing", ["errors", "stats"])
+@pytest.mark.parametrize(
+    "failing, resumable",
+    [
+        pytest.param("errors", False, id="errors"),
+        pytest.param("stats", False, id="stats"),
+        pytest.param("events", True, id="events-resumable"),
+    ],
+)
 def test_run_releases_caches_when_a_write_fails(
-    spark, corpus_path, tmp_path, monkeypatch, staging, failing
+    spark, corpus_path, tmp_path, monkeypatch, failing, resumable
 ):
     """A write that raises (in a concurrent leg, or the last one) still
-    leaves no persisted staging or events frame behind."""
+    leaves no persisted frame behind: neither the events cache nor the
+    resumable write's pending cells."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     real_parquet = DataFrameWriter.parquet
@@ -296,7 +286,8 @@ def test_run_releases_caches_when_a_write_fails(
     monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
     with pytest.raises(OSError, match="injected"):
         pipeline.run(
-            spark, corpus_path, str(tmp_path / "out"), write_routed=False, staging=staging
+            spark, corpus_path, str(tmp_path / "out"), write_routed=False,
+            resumable=resumable,
         )
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == before
 
@@ -423,11 +414,8 @@ def _sorted_rows(df) -> list[str]:
     )
 
 
-@pytest.mark.parametrize("staging", ["parquet", "persist"])
 @pytest.mark.parametrize("key_by_namespace", [False, True])
-def test_run_outputs_do_not_depend_on_input_layout(
-    spark, tmp_path, key_by_namespace, staging
-):
+def test_run_outputs_do_not_depend_on_input_layout(spark, tmp_path, key_by_namespace):
     """AQE picks pipeline.run's partition counts from the data, so its
     outputs must not depend on them: the same 600 records in 1 file and
     in 6 files give identical events, errors, stats and routed tokens."""
@@ -441,9 +429,7 @@ def test_run_outputs_do_not_depend_on_input_layout(
         step = len(table) // files
         for i in range(files):
             pq.write_table(table.slice(i * step, step), str(src / f"part-{i}.parquet"))
-        res = pipeline.run(
-            spark, str(src), out, key_by_namespace=key_by_namespace, staging=staging
-        )
+        res = pipeline.run(spark, str(src), out, key_by_namespace=key_by_namespace)
         outputs.append({
             "events": _sorted_rows(spark.read.parquet(f"{out}/events")),
             "errors": _sorted_rows(spark.read.parquet(f"{out}/errors")),

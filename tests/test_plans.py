@@ -213,6 +213,16 @@ def test_job_budget(spark, tmp_path, kind):
     assert per_leg == JOB_BUDGET[kind], per_leg
 
 
+def _executions_of(spark, jobs: list) -> list:
+    """The status-store records of the SQL executions that ran ``jobs``."""
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [
+        ex
+        for ex in (executions.apply(k) for k in range(executions.size()))
+        if any(ex.jobs().contains(job.jobId()) for job in jobs)
+    ]
+
+
 # Tasks of one warm pipeline.run on the fixed 200-record input, per leg:
 # a job's tasks less those of the stages it skipped (an AQE job lists
 # the stages it reads from as skipped).
@@ -235,11 +245,9 @@ def test_task_budget(spark, tmp_path, kind):
         per_leg[leg] = per_leg.get(leg, 0) + job.numTasks() - job.numSkippedTasks()
     assert per_leg == TASK_BUDGET[kind], per_leg
 
-    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
     plans = [
         (ex.description(), ex.physicalPlanDescription())
-        for ex in (executions.apply(k) for k in range(executions.size()))
-        if any(ex.jobs().contains(job.jobId()) for job in jobs)
+        for ex in _executions_of(spark, jobs)
     ]
     staged = [plan for desc, plan in plans if desc == "staged"]
     assert len(staged) == 1
@@ -248,6 +256,50 @@ def test_task_budget(spark, tmp_path, kind):
     round_robin = [ln for ln in staged[0].splitlines() if "RoundRobinPartitioning" in ln]
     assert round_robin, staged[0]
     assert all("REBALANCE_PARTITIONS" in ln for ln in round_robin), round_robin
+
+
+def _staged_agg_rows(store, execution_id: int) -> int:
+    """Rows one SQL execution read from storage for the aggregation: its
+    parquet scans of ``dim_hash``, which only the staged checkpoint
+    holds, by their SQL metrics. A scan a cache answers reads none,
+    though the plan still shows it."""
+    values = {}
+    it = store.executionMetrics(execution_id).iterator()
+    while it.hasNext():
+        kv = it.next()
+        values[kv._1()] = kv._2()
+    nodes = store.planGraph(execution_id).allNodes()
+    rows = 0
+    for node in (nodes.apply(i) for i in range(nodes.size())):
+        if node.name().startswith("Scan parquet") and "dim_hash#" in node.desc():
+            metrics = node.metrics()
+            for m in (metrics.apply(j) for j in range(metrics.size())):
+                if m.name() == "number of output rows":
+                    rows += int(values.get(m.accumulatorId(), "0").replace(",", ""))
+    return rows
+
+
+def test_resumable_run_aggregates_once(spark, tmp_path):
+    """A --resumable CLI run aggregates once: its lineage write reads the
+    persisted events (InMemoryTableScan), and the execution that fills
+    that cache is the only one to read the staged rows for the
+    aggregation."""
+    from emf_spark import cli
+
+    src, out = str(tmp_path / "in"), str(tmp_path / "out")
+    fixtures.write_corpus(f"{src}/part-0.parquet", 200)
+    with _job_group(spark, tmp_path.name):
+        assert cli.main(["--input", src, "--out", out, "--resumable", "--no-routed"]) == 0
+    call = _executions_of(spark, _group_jobs(spark, tmp_path.name))
+    store = spark._jsparkSession.sharedState().statusStore()
+    events_write = [
+        ex.physicalPlanDescription()
+        for ex in call
+        if f"Arguments: file:{out}/events," in ex.physicalPlanDescription()
+    ]
+    assert events_write and all("InMemoryTableScan" in p for p in events_write)
+    reads = [ex.description() for ex in call if _staged_agg_rows(store, ex.executionId())]
+    assert reads == ["events"], reads
 
 
 def test_session_turns_off_call_site_capture(spark):
