@@ -606,45 +606,6 @@ def simhash_near_duplicates(
     return pairs.select("id_a", "id_b", "hamming")
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-) -> DataFrame:
-    """Exact word-shingle Jaccard for verified candidate pairs
-    (id_a, id_b) -> (id_a, id_b, jaccard). Pair-local set math on
-    pre-computed shingle arrays — no re-tokenization per pair."""
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), shingle_k).alias("sh"),
-    )
-    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            # two docs both shorter than shingle_k words have EMPTY
-            # shingle sets; under ANSI 0/0 throws, so define their
-            # Jaccard as 1.0 (identical empty sets — they only meet
-            # here when a candidate generator already bucketed them)
-            F.when(
-                F.size(F.array_union("sh_a", "sh_b")) == 0, F.lit(1.0)
-            ).otherwise(
-                F.round(
-                    F.size(F.array_intersect("sh_a", "sh_b"))
-                    / F.size(F.array_union("sh_a", "sh_b")),
-                    6,
-                )
-            ).alias("jaccard"),
-        )
-    )
-
-
 def jaccard_threshold_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -1038,30 +999,6 @@ def _fs_exists(spark, path: str) -> bool:
     return bool(fs.exists(hpath))
 
 
-def _orphaned_flat_files(spark, path: str) -> list[str]:
-    """Data files sitting DIRECTLY in a store dir ALONGSIDE
-    ``_ingest=`` partition dirs — the mixed layout created when a new
-    partitioned write lands on a legacy (round-3 ``mode('append')``)
-    flat store. In that layout Spark's partition discovery returns
-    ONLY the partitioned rows and the flat files silently vanish from
-    reads (review finding), so they are listed explicitly and unioned
-    back in by the caller. A PURE flat store (no partition dirs) reads
-    normally and returns [] here — no double counting."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return []
-    files, has_partition_dirs = [], False
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("_ingest="):
-            has_partition_dirs = True
-        elif st.isFile() and not name.startswith(("_", ".")):
-            files.append(st.getPath().toString())
-    return files if has_partition_dirs else []
-
-
 def _read_store(spark, path: str, schema: str, drop: list[str] = ()) -> DataFrame:
     """Read an incremental-store parquet dir; a MISSING path means
     first ingest (empty frame of ``schema``), but any other read
@@ -1151,103 +1088,6 @@ def _store_meta(spark, store_path: str, num_perm: int, shingle_k: int,
         spark.createDataFrame(
             [(num_perm, shingle_k, seed, wh)], _STORE_META_SCHEMA
         ).coalesce(1).write.mode("overwrite").json(meta_dir)
-
-
-def exact_dedup_incremental(
-    new_df: DataFrame,
-    store_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    update_store: bool = True,
-) -> DataFrame:
-    """Per-ingest exact dedup against a content-hash store: returns the
-    new batch's rows tagged ``is_dup`` (true if the normalized text was
-    already in the store OR earlier in the batch by min id) plus the
-    surviving representative's ``keep_id``. The exact-dedup counterpart
-    of minhash_incremental — together they make the whole dedup family
-    ingest-shaped (hash the batch, one join against (content_hash,
-    keep_id) store rows, append the batch's NEW hashes).
-
-    The store never stores text: (content_hash, keep_id) rows only, so
-    at 100 TB the store is ~48 bytes/distinct-doc and the join ships
-    hashes. Store updates are safe under at-least-once AND concurrent
-    execution (VERDICT r3 item 4): fresh hashes land in a partition
-    keyed by the batch's min id with DYNAMIC partition overwrite — a
-    crashed-then-retried ingest overwrites its own partition instead of
-    double-appending — and the read path collapses the store to
-    min(keep_id) per hash, so two concurrent ingests that race the same
-    new hash into their respective partitions still resolve to one
-    deterministic representative on every subsequent read."""
-    spark = new_df.sparkSession
-    # null text hashes to a sentinel, not to NULL: md5(NULL) is NULL
-    # and inner equality joins drop NULL keys — the null-text rows
-    # would silently vanish from the returned batch (review finding)
-    hashed = new_df.select(
-        F.col(id_col).alias("id"),
-        F.coalesce(
-            F.md5(normalized(F.col(text_col))), F.lit("__NULL_TEXT__")
-        ).alias("content_hash"),
-    )
-    # min id per hash WITHIN the batch (batch-internal dup structure)
-    batch_min = hashed.groupBy("content_hash").agg(F.min("id").alias("_bmin"))
-    # min-collapse absorbs the concurrent-writer race (two ingests both
-    # inserting a hash the store lacked): duplicate store rows resolve
-    # to one deterministic keep_id at read time. A legacy flat-layout
-    # store (round-3 append mode) keeps working: its directly-placed
-    # files disappear from partition-discovery reads once an _ingest=
-    # dir exists, so they are listed and unioned back explicitly.
-    store = _read_store(
-        spark, store_path,
-        "content_hash string, keep_id bigint", drop=["_ingest"],
-    )
-    flat = _orphaned_flat_files(spark, store_path)
-    if flat:
-        store = store.unionByName(
-            spark.read.parquet(*flat).select("content_hash", "keep_id")
-        )
-    store = store.groupBy("content_hash").agg(F.min("keep_id").alias("keep_id"))
-    if update_store:
-        # the collapsed store feeds BOTH j's checkpoint and fresh's
-        # anti-join during the write — at scale the store scan +
-        # min-collapse is the dominant input; persist it for the call
-        # (review finding). The update_store=False path returns a lazy
-        # frame and must not leave a cache behind.
-        store = store.persist()
-    j = (
-        hashed.join(batch_min, "content_hash")
-        .join(store, "content_hash", "left")
-        .select(
-            F.col("id").alias(id_col),
-            "content_hash",
-            F.coalesce(F.col("keep_id"), F.col("_bmin")).alias("keep_id"),
-        )
-        .withColumn("is_dup", F.col(id_col) != F.col("keep_id"))
-    )
-    if update_store:
-        # materialize BEFORE the store write: j's plan reads the store
-        # files, and a retried ingest's dynamic overwrite replaces that
-        # batch's old partition under the lazy plan
-        j = j.localCheckpoint(eager=True)
-        # only hashes the store has not seen, into THIS batch's
-        # partition (deterministic key = batch min id)
-        fresh = (
-            batch_min.join(store, "content_hash", "left_anti")
-            .select("content_hash", F.col("_bmin").alias("keep_id"))
-        )
-        # min over batch_min's per-hash minima == min over the batch,
-        # from a frame a groupBy has already shrunk (review finding:
-        # re-aggregating `hashed` was a whole redundant pass)
-        batch_key = batch_min.agg(F.min("_bmin")).collect()[0][0]
-        if batch_key is not None:
-            (
-                fresh.withColumn("_ingest", F.lit(int(batch_key)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_ingest")
-                .parquet(store_path)
-            )
-        store.unpersist()
-    return j
 
 
 def line_dedup(

@@ -7,11 +7,10 @@ an incremental dedup/index refresh, see dedup.minhash_incremental)
 actually want, instead of a full re-read.
 
 Scale shape: ONE full-outer shuffle join on the key (both sides shuffle
-once; at 100 TB pair it with bucketed storage on the key —
-operators/storage.write_bucketed — and the Exchange disappears).
-Change detection hashes the compared columns to one 64-bit value per
-side BEFORE the join, so the shuffle carries (key, hash), never the
-full row payload.
+once; a side stored bucketed on the key with Spark's ``bucketBy`` drops
+its Exchange). Change detection hashes the compared columns to one
+64-bit value per side BEFORE the join, so the shuffle carries (key,
+hash), never the full row payload.
 """
 
 from __future__ import annotations
@@ -183,8 +182,8 @@ def apply_changes(
     row per key (map-side combinable — a day's feed usually dwarfs its
     key count), then ONE full-outer shuffle join against the snapshot;
     both shuffles share the key, and with the snapshot bucketed on the
-    key (operators/storage.write_bucketed) the snapshot side's
-    Exchange disappears. Deletes filter post-join; nothing collects.
+    key (Spark's ``bucketBy``) the snapshot side's Exchange
+    disappears. Deletes filter post-join; nothing collects.
 
     Idempotent: re-applying an already-applied feed yields the same
     snapshot (U/I rows rewrite identical payloads, D keys are already

@@ -90,28 +90,6 @@ def fuzzy_match(
     )
 
 
-def str_prefix_key(col, n: int = 7):
-    """Numeric proxy of a string's first ``n`` ASCII bytes (n <= 7 so
-    the big-endian value stays positive int64): monotone in the string
-    for ASCII data, which is what global_index needs to range-bucket a
-    string sort key. Strings sharing their first n bytes collapse to
-    one bucket — the in-bucket tiebreak (the full string) keeps the
-    ORDER exact; only bucket-size balance degrades, per the
-    global_index docstring."""
-    if not (1 <= n <= 7):
-        raise ValueError("n must be in [1, 7]")
-    col = F.col(col) if isinstance(col, str) else col
-    # hex() of the NUL-padded prefix is big-endian by construction, so
-    # its base-16 integer value is monotone in the byte sequence; take
-    # the first 2n HEX CHARS (= first n BYTES): substring() counts
-    # CHARACTERS, so a multibyte prefix would otherwise hex to more
-    # than 2n digits and overflow the bigint cast (ANSI throw) — the
-    # byte-prefix value stays monotone in Spark's binary string order
-    # either way. n <= 7 bytes < 2^56 always fits a signed bigint.
-    padded = F.rpad(F.substring(col, 1, n), n, "\x00")
-    return F.conv(F.substring(F.hex(padded), 1, 2 * n), 16, 10).cast("bigint")
-
-
 def sorted_neighborhood_pairs(
     df: DataFrame,
     key_col: str,
@@ -133,8 +111,8 @@ def sorted_neighborhood_pairs(
     EQUI-join: each row explodes to window-1 probe indexes (idx+1 ..
     idx+window-1) and hash-joins the index column. No sort-merge of the
     whole table, no inequality join, no cartesian. ``key_col`` must be
-    numeric (global_index's contract) — for ASCII string keys pass a
-    str_prefix_key proxy column and the raw string in ``tiebreak``.
+    numeric (global_index's contract) — for string keys pass a numeric
+    proxy of a fixed-length prefix and the raw string in ``tiebreak``.
 
     Returns (id_a, id_b, key_a, key_b, gap) where gap = idx_b - idx_a
     in [1, window-1]; refine with a similarity predicate downstream

@@ -2059,34 +2059,6 @@ def media_png_from_documents(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "n_chars").mapInPandas(run, MEDIA_SCHEMA)
 
 
-def media_jpeg_from_documents(docs: DataFrame) -> DataFrame:
-    """Deterministic REAL baseline JPEGs derived from the documents
-    table — full entropy-coded scans the decoder must Huffman-decode,
-    dequantize, and IDCT. Closed-form in (doc_id, n_chars):
-    w = n_chars % 24 + 8, h = n_chars % 16 + 8, source pixel
-    i = (doc_id + i) % 256. Decoded pixel sums are NOT closed-form
-    (DCT quantization); the exact-value contract is pinned by the
-    pytest parity against an independent numpy round-trip. The DRIVER
-    query uses media_jpeg_classes_from_documents instead, whose bounded
-    class space buys an exact SQL oracle."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, n_chars in zip(pdf["doc_id"], pdf["n_chars"]):
-                d, n = int(doc_id), int(n_chars)
-                payload = synth_jpeg(n % 24 + 8, n % 16 + 8, d)
-                rows.append(
-                    (f"doc-{d}", "image", payload,
-                     (n % 24 + 8, n % 16 + 8, None, "image/jpeg"))
-                )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "kind", "payload", "meta"]
-            )
-
-    return docs.select("doc_id", "n_chars").mapInPandas(run, MEDIA_SCHEMA)
-
-
 # 32 fixed (w, h, base) synth classes keyed by doc_id % 32: quantizing
 # the parameter space makes the DCT round trip's decoded stats a
 # 32-row lookup, so the driver query gets an EXACT SQL oracle (VERDICT
@@ -2101,10 +2073,9 @@ JPEG_CLASSES = [
 def media_jpeg_classes_from_documents(docs: DataFrame) -> DataFrame:
     """Deterministic REAL baseline JPEGs with class-quantized synth
     params: doc k-class = doc_id % 32, payload = synth_jpeg(*JPEG_CLASSES[k]).
-    Identical codec work per media to media_jpeg_from_documents; the
-    bounded class table is what buys the exact oracle. Payloads are
-    memoized per class inside each Arrow batch (32 distinct encodes per
-    task, not one per row)."""
+    Every row still runs the full codec; the bounded class table is
+    what buys the exact oracle. Payloads are memoized per class inside
+    each Arrow batch (32 distinct encodes per task, not one per row)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cache: dict[int, bytes] = {}

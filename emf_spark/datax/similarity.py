@@ -339,97 +339,6 @@ def embedding_near_duplicates(
     )
 
 
-def pairwise_topk_per_row(
-    df: DataFrame,
-    k: int = 5,
-    n_planes: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """All-rows ANN: top-k neighbors per row within its LSH bucket
-    (bucket self-join + windowed rank — never a global cross join)."""
-    dim = len(df.select(vec_col).first()[0])
-    planes = _hyperplanes(dim, n_planes, seed)
-    b = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        rp_lsh_bucket(F.col(vec_col), planes).alias("bucket"),
-    )
-    o = b.select(
-        F.col("id").alias("id_b"), F.col("v").alias("v_b"), F.col("bucket").alias("bucket_b")
-    )
-    pairs = (
-        b.join(o, (F.col("bucket") == F.col("bucket_b")) & (F.col("id") != F.col("id_b")))
-        .withColumn(
-            "cosine",
-            F.round(
-                _dot_cols("v", "v_b") / (_norm(F.col("v")) * _norm(F.col("v_b"))), 6
-            ),
-        )
-    )
-    w = Window.partitionBy("id").orderBy(F.desc("cosine"), "id_b")
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("id", "id_b", "cosine", "rank")
-    )
-
-
-def lsh_topk_batch(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "query_id",
-    q_vec_col: str = "embedding",
-    seed: int = 42,
-    probe_hamming: int = 1,
-) -> DataFrame:
-    """Batched ANN: top-k per QUERY ROW (a DataFrame of queries, not a
-    literal vector) — the query-service shape at scale. Each query
-    explodes into its hamming-ball bucket set and hash-joins the
-    bucketed corpus; exact cosine + per-query window rank on the
-    candidates only. Never a cross join; wall-clock is one join pass
-    for the whole batch instead of one scan per query.
-
-    Returns (query_id, id, cosine, rank)."""
-    dim = len(df.select(vec_col).first()[0])
-    planes = _hyperplanes(dim, n_planes, seed)
-    b = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        rp_lsh_bucket(F.col(vec_col), planes).alias("bucket"),
-    )
-    masks = _hamming_masks(n_planes, probe_hamming)
-    q = queries.select(
-        F.col(q_id_col).alias("query_id"),
-        F.col(q_vec_col).alias("qv"),
-        rp_lsh_bucket(F.col(q_vec_col), planes).alias("qbucket"),
-    )
-    probes = q.select(
-        "query_id",
-        "qv",
-        F.explode(
-            F.array(*[F.col("qbucket").bitwiseXOR(F.lit(m)) for m in masks])
-        ).alias("bucket"),
-    )
-    cand = probes.join(b, "bucket")
-    cos = F.round(
-        _dot_cols("qv", "v") / (_norm(F.col("qv")) * _norm(F.col("v"))), 6
-    )
-    scored = cand.select("query_id", "id", cos.alias("cosine")).dropDuplicates(
-        ["query_id", "id"]
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), "id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
 def _scaled_vec(vec_col: F.Column, scale: int) -> F.Column:
     """Embedding coordinates on the integer lattice: round(x * scale)
     per coordinate as bigint — every downstream distance/centroid is

@@ -571,40 +571,6 @@ def bpe_encode_corpus(
     )
 
 
-def bpe_encode_docs(
-    df: DataFrame,
-    merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document BPE token accounting: (id, n_words, n_bpe_tokens)
-    under the merge list. Encodes each DISTINCT word once and
-    broadcast-joins the per-word token count back onto occurrences
-    (a BPE vocab is ~1e6 short strings — comfortably broadcastable;
-    for a pathological vocab swap in a shuffle join, semantics
-    unchanged)."""
-    enc = bpe_apply(merges)
-    words = df.select(
-        F.col(id_col),
-        F.explode(
-            F.split(F.lower(F.col(text_col)), r"[^a-z0-9']+")
-        ).alias("word"),
-    ).filter(F.col("word") != "")
-    sizes = (
-        words.select("word")
-        .distinct()
-        .select("word", F.size(enc(F.col("word"))).alias("_n"))
-    )
-    return (
-        words.join(F.broadcast(sizes), "word")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("_n").alias("n_bpe_tokens"),
-        )
-    )
-
-
 def chunk_documents(
     df: DataFrame,
     chunk_tokens: int = 128,

@@ -172,7 +172,7 @@ def cidr_enrich(
     fact row survives; no match / NULL ip => NULL attributes and NULL
     ``matched_prefix_len``. Addresses outside ``[0, 2^32)`` fail the
     job in-plan (corrupt facts should be loud, and the guard rides the
-    join key so pruning can't drop it — the unique_key_join lesson).
+    join key so column pruning can't drop it).
 
     Plan: broadcast hash LEFT join on the /16 bucket with the disjoint
     interval bounds as residual predicates — at most one match per row

@@ -20,51 +20,3 @@ def enrich(df: DataFrame, lookup: DataFrame, default_sink: str = "archive") -> D
     return out.withColumn("sink", F.coalesce(F.col("sink"), F.lit(default_sink)))
 
 
-def unique_key_join(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str] | str,
-    how: str = "left",
-) -> DataFrame:
-    """Join with an IN-PLAN uniqueness assertion on the right side's
-    key: a duplicate dimension key silently FANS OUT every matching
-    fact row — the classic quiet corruption of a 100 TB enrichment
-    (row counts inflate, downstream sums double) — so this join makes
-    it a loud job failure instead, with zero extra passes.
-
-    Mechanics: a count window keyed like the join runs over the right
-    side; any key seen twice routes through raise_error. The window's
-    Exchange partitions the right side exactly as the join itself
-    needs, so the guard rides the shuffle the join was already paying —
-    the only added cost is the within-partition count. (A broadcast
-    right side pays one small shuffle for the guard; dimension-sized
-    by assumption.)"""
-    from pyspark.sql.window import Window
-
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    w = Window.partitionBy(*keys)
-    # the guard wraps the FIRST KEY COLUMN itself (same value when
-    # unique): a free-standing guard column would be dropped by column
-    # pruning and the raise_error optimized away entirely — the join
-    # key is the one expression the join cannot prune.
-    # NULL keys are exempt: they can never match the equi-join, so they
-    # cannot fan out — two NULL-key dimension rows are harmless, not a
-    # duplicate (ADVICE r4, low: the bare count raised spuriously).
-    any_key_null = F.lit(False)
-    for k in keys:
-        any_key_null = any_key_null | F.col(k).isNull()
-    guarded_key = F.when(
-        (F.count(F.lit(1)).over(w) == 1) | any_key_null, F.col(keys[0])
-    ).otherwise(
-        F.raise_error(
-            F.concat(
-                F.lit("unique_key_join: duplicate right-side key ("),
-                F.concat_ws(
-                    ", ", *[F.col(k).cast("string") for k in keys]
-                ),
-                F.lit(")"),
-            ).cast("string")
-        ).cast(dict(right.dtypes)[keys[0]])
-    )
-    checked = right.withColumn(keys[0], guarded_key)
-    return left.join(checked, keys, how)

@@ -38,7 +38,7 @@ are skipped.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, functions as F
 
 # a quoted value: quotes around non-quote/non-backslash chars or escapes
 _LOGFMT_QUOTED = r'"(?:[^"\\]|\\.)*"'
@@ -119,11 +119,3 @@ def parse_ltsv(line_col: str) -> Column:
     )
 
 
-def logfmt_records(df: DataFrame, line_col: str, out_col: str = "record") -> DataFrame:
-    """Attach the parsed logfmt map of ``df[line_col]`` as ``out_col``."""
-    return df.withColumn(out_col, parse_logfmt(F.col(line_col)))
-
-
-def ltsv_records(df: DataFrame, line_col: str, out_col: str = "record") -> DataFrame:
-    """Attach the parsed LTSV map of ``df[line_col]`` as ``out_col``."""
-    return df.withColumn(out_col, parse_ltsv(line_col))

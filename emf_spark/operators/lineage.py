@@ -66,50 +66,6 @@ def pending_cells(df: DataFrame, manifest: Manifest, stage: str) -> DataFrame:
     return df.join(F.broadcast(done), CELL_KEYS, "left_anti")
 
 
-def record_cells(
-    df_written: DataFrame,
-    manifest: Manifest,
-    stage: str,
-    run_id: str,
-    started_at: float,
-    bytes_col: str | None = "event_bytes",
-    written_mask: str | None = None,
-) -> None:
-    """``written_mask`` names a boolean column that is True for rows
-    NOT actually written (e.g. dropped_oversize): such rows still keep
-    their cell in the manifest (so it completes and is never retried)
-    but are excluded from rows_out/bytes_out — the manifest must count
-    what the events table really contains (review finding)."""
-    if written_mask and written_mask in df_written.columns:
-        written = ~F.col(written_mask)
-    else:
-        written = F.lit(True)
-    agg_cols = [F.sum(written.cast("long")).alias("rows_out")]
-    if bytes_col and bytes_col in df_written.columns:
-        agg_cols.append(
-            F.sum(F.when(written, F.col(bytes_col)).otherwise(F.lit(0)))
-            .cast("bigint").alias("bytes_out")
-        )
-    else:
-        agg_cols.append(F.lit(0).cast("bigint").alias("bytes_out"))
-    finished = time.time()
-    cells = (
-        df_written.groupBy(*CELL_KEYS)
-        .agg(*agg_cols)
-        .select(
-            F.lit(stage).alias("stage"),
-            *CELL_KEYS,
-            "rows_out",
-            "bytes_out",
-            F.lit(started_at).alias("started_at"),
-            F.lit(finished).alias("finished_at"),
-            F.lit(run_id).alias("run_id"),
-            F.lit("done").alias("status"),
-        )
-    )
-    manifest.append(cells)
-
-
 def write_events_resumable(
     spark: SparkSession,
     events: DataFrame,
@@ -117,18 +73,32 @@ def write_events_resumable(
     stage: str = "events",
 ) -> dict:
     """Resumable per-sink event write: skips manifest-completed
-    (sink, window_start) cells, appends the rest partitioned by sink,
-    then records their lineage rows. Returns counters."""
+    (sink, window_start) cells, writes the rest partitioned by cell,
+    then records one lineage row per cell. Returns counters.
+
+    One aggregate over the pending rows, collected on the driver, gives
+    each cell's ``rows_out`` and ``bytes_out``; no cells means nothing
+    to write. An oversize-dropped row is not written, so it counts in
+    neither, but its cell is still recorded: the cell completes and is
+    never retried, and the manifest counts what the events table really
+    contains (review finding)."""
     manifest = Manifest(spark, out_dir)
     run_id = uuid.uuid4().hex[:12]
     started = time.time()
     todo = pending_cells(events, manifest, stage).persist()
     path = os.path.join(out_dir, "events")
-    written_n = 0
+    written = ~F.col("dropped_oversize")
     try:
-        if todo.count():
-            written = todo.filter(~F.col("dropped_oversize"))
-            written_n = written.count()
+        cells = (
+            todo.groupBy(*CELL_KEYS)
+            .agg(
+                F.sum(written.cast("long")).alias("rows_out"),
+                F.sum(F.when(written, F.col("event_bytes")).otherwise(F.lit(0)))
+                .cast("bigint").alias("bytes_out"),
+            )
+            .collect()
+        )
+        if cells:
             # dynamic overwrite of the CELL partitions, not append: the
             # manifest row lands AFTER this write, so a crash between the
             # two re-runs these cells on resume — an append would then
@@ -137,15 +107,14 @@ def write_events_resumable(
             # idempotent (review finding; same pattern as the streaming
             # micro-batch and dedup-store writers)
             (
-                written.write.mode("overwrite")
+                todo.filter(written).write.mode("overwrite")
                 .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("sink", "window_start")
+                .partitionBy(*CELL_KEYS)
                 .parquet(path)
             )
-            record_cells(
-                todo, manifest, stage, run_id, started,
-                written_mask="dropped_oversize",
-            )
+            finished = time.time()
+            rows = [(stage, *c, started, finished, run_id, "done") for c in cells]
+            manifest.append(spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1))
     finally:
         todo.unpersist()
-    return {"written_rows": written_n, "run_id": run_id, "path": path}
+    return {"written_rows": sum(c["rows_out"] for c in cells), "run_id": run_id, "path": path}

@@ -174,26 +174,6 @@ def _apply_one(m: Column, r: dict) -> Column:
     return applied
 
 
-def compile_modify(rules: list[dict]):
-    """Compile an ordered rule list into a Column->Column transform.
-
-    NOTE: the returned transform is one nested expression whose size
-    grows geometrically with rule count (see module docstring); it is
-    kept for call sites that need a pure Column (short chains, tests).
-    For DataFrame columns always prefer ``records_modify``, which
-    chains one projection per rule and stays linear."""
-    _validate(rules)
-
-    def transform(m: Column) -> Column:
-        out = m
-        for r in rules:
-            out = _apply_one(out, r)
-        # NULL record -> NULL record, whatever the rules say
-        return F.when(m.isNull(), F.lit(None).cast("map<string,string>")).otherwise(out)
-
-    return transform
-
-
 def records_modify(df: DataFrame, col: str, rules: list[dict]) -> DataFrame:
     """Apply a modify chain to ``df[col]`` in place, ONE projection per
     rule: each stage's input is a named attribute evaluated once per

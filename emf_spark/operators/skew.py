@@ -86,47 +86,6 @@ def salted_join(
     return lt.join(rt, on + [_SALT], how).drop(_SALT)
 
 
-def recommend_salt(
-    df: DataFrame,
-    key: str,
-    n_partitions: int,
-    hot_factor: float = 2.0,
-    top: int = 20,
-) -> tuple[list, int]:
-    """Turn skew_profile's exact basis-point shares into the
-    ``(hot_keys, n_salt)`` arguments salted_join wants — the wiring
-    VERDICT r4 item 6 asked for, so the user stops doing the
-    arithmetic by hand.
-
-    A key is HOT when its share exceeds ``hot_factor`` x the uniform
-    per-partition share (10000/n_partitions bp): below that, the plain
-    hash shuffle already spreads it acceptably. ``n_salt`` is the
-    number of fair partition-loads the HEAVIEST key fills —
-    ceil(share_bp * n_partitions / 10000) — capped at ``n_partitions``
-    (more salts than reducers buys nothing), so the hot key's rows
-    land ~one fair load per salted reducer.
-
-    Returns ``([], 1)`` when nothing crosses the threshold: feed that
-    straight to salted_join (n_salt=1, no replication — it degenerates
-    to the plain join) or skip salting entirely.
-
-    Cost: one skew_profile pass (bounded collect of <= ``top`` rows);
-    only keys the profiler surfaced can be recommended — a tail beyond
-    ``top`` is by construction not hot."""
-    if n_partitions < 1:
-        raise ValueError("n_partitions must be >= 1")
-    if hot_factor <= 0:
-        raise ValueError("hot_factor must be > 0")
-    prof = skew_profile(df, [key], top=top).collect()
-    uniform_bp = 10000.0 / n_partitions
-    hot = [r for r in prof if r["share_bp"] > hot_factor * uniform_bp]
-    if not hot:
-        return [], 1
-    worst = max(r["share_bp"] for r in hot)
-    n_salt = min(n_partitions, -(-worst * n_partitions // 10000))
-    return [r[key] for r in hot], int(max(n_salt, 2))
-
-
 def _skew_profile_plan(counts: DataFrame, key_cols: list[str],
                        top: int, total: int) -> DataFrame:
     """The lazy report plan over the keyed count frame — split out so

@@ -59,8 +59,8 @@ def service_graph(
     the tracing data model's own invariant. A duplicated span id would
     fan the join out and double-count its children's calls; enforcing
     it here would cost a full second aggregate over the stream, so it
-    stays the producer's contract (wrap the parents side in
-    ``enrich.unique_key_join`` when ingesting untrusted spans).
+    stays the producer's contract (deduplicate the parents side on
+    ``(trace_id, span_id)`` when ingesting untrusted spans).
     """
     for c in ("_sg_client", "_sg_t", "_sg_s"):
         if c in spans.columns:

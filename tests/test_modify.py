@@ -4,11 +4,7 @@ nest/lift semantics over map<string,string> record columns."""
 import pytest
 from pyspark.sql import functions as F
 
-from emf_spark.operators.modify import (
-    canonical_kv,
-    compile_modify,
-    records_modify,
-)
+from emf_spark.operators.modify import canonical_kv, records_modify
 
 
 def _run(spark, rec: dict | None, rules: list[dict]) -> dict | None:
@@ -105,11 +101,12 @@ def test_null_record_passthrough(spark):
 
 
 def test_unknown_op_and_condition_fail_at_compile_time(spark):
+    df = spark.createDataFrame([({"a": "1"},)], "record map<string,string>")
     with pytest.raises(ValueError, match="unknown modify op"):
-        compile_modify([{"op": "frobnicate"}])
+        records_modify(df, "record", [{"op": "frobnicate"}])
     with pytest.raises(ValueError, match="unknown modify condition"):
-        compile_modify([{"op": "set", "key": "a", "value": "1",
-                         "when": [("sometimes", "a")]}])
+        records_modify(df, "record", [{"op": "set", "key": "a", "value": "1",
+                                       "when": [("sometimes", "a")]}])
 
 
 def test_canonical_kv_sorted_and_separator_safe(spark):

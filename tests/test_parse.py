@@ -193,62 +193,3 @@ def test_metric_shadows_dimension(spark):
     m = {m["name"]: m for m in row["metrics"]}
     assert m["Both"]["pairs"] == [(3.0, 1)]
     assert row["dims"] == {}
-import os
-
-def test_read_jsonl_splits_valid_and_malformed(spark, tmp_path):
-    from emf_spark.sources import read_jsonl
-
-    p = str(tmp_path / "in.jsonl")
-    with open(p, "w") as f:
-        f.write('{"a": 1, "b": "x"}\n')
-        f.write('{"a": 2, "b": "y"}\n')
-        f.write('{"a": broken\n')
-        f.write('not json at all\n')
-    valid, errors = read_jsonl(spark, p)
-    assert sorted(r["a"] for r in valid.collect()) == [1, 2]
-    errs = [r["raw"] for r in errors.collect()]
-    assert len(errs) == 2 and "not json at all" in errs
-    assert all(r["reason"] == "malformed_json" for r in errors.collect())
-
-
-def test_read_jsonl_all_malformed_raises_without_schema(spark, tmp_path):
-    import pytest
-    from emf_spark.sources import read_jsonl
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    p = str(tmp_path / "bad.jsonl")
-    with open(p, "w") as f:
-        f.write("oops\n}{\n")
-    with pytest.raises(ValueError, match="pass a schema"):
-        read_jsonl(spark, p)
-    # with an explicit schema the same file just routes everything to errors
-    valid, errors = read_jsonl(
-        spark, p, StructType([StructField("a", LongType())])
-    )
-    assert valid.count() == 0 and errors.count() == 2
-
-
-def test_read_jsonl_stream_matches_batch(spark, tmp_path):
-    from emf_spark.sources import read_jsonl, read_jsonl_stream
-
-    ind = str(tmp_path / "stream_in")
-    os.makedirs(ind)
-    with open(f"{ind}/f0.jsonl", "w") as f:
-        f.write('{"a": 1}\nbroken\n{"a": 3}\n')
-    bvalid, berr = read_jsonl(spark, ind)
-    schema = bvalid.schema
-    svalid, serr = read_jsonl_stream(spark, ind, schema)
-    outv, oute = str(tmp_path / "v"), str(tmp_path / "e")
-    q1 = (svalid.writeStream.format("parquet")
-          .option("path", outv)
-          .option("checkpointLocation", outv + "_ck")
-          .trigger(availableNow=True).start())
-    q2 = (serr.writeStream.format("parquet")
-          .option("path", oute)
-          .option("checkpointLocation", oute + "_ck")
-          .trigger(availableNow=True).start())
-    q1.awaitTermination(300)
-    q2.awaitTermination(300)
-    got_v = sorted(r["a"] for r in spark.read.parquet(outv).collect())
-    assert got_v == sorted(r["a"] for r in bvalid.collect()) == [1, 3]
-    assert spark.read.parquet(oute).count() == berr.count() == 1

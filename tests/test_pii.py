@@ -387,21 +387,6 @@ def test_bpe_encode_reproduces_training_segmentation(spark):
         assert list(r["re_enc"]) == list(r["syms"]), r["word"]
 
 
-def test_bpe_encode_docs_counts(spark):
-    from emf_spark.datax.textstats import bpe_encode_docs
-
-    df = spark.createDataFrame(
-        [(1, "low lower"), (2, "new low!"), (3, "")],
-        "doc_id bigint, text string",
-    )
-    merges = [("l", "o"), ("lo", "w")]
-    got = {r["doc_id"]: r for r in bpe_encode_docs(df, merges).collect()}
-    # 'low' -> [low] (1), 'lower' -> [low, e, r] (3), 'new' -> [n,e,w] (3)
-    assert (got[1]["n_words"], got[1]["n_bpe_tokens"]) == (2, 4)
-    assert (got[2]["n_words"], got[2]["n_bpe_tokens"]) == (2, 4)
-    assert 3 not in got  # no words -> no row
-
-
 def test_snapshot_diff_random_frames_fuzz(spark):
     """snapshot_diff == brute-force row comparison on random keyed
     frames with nulls and multi-column keys."""

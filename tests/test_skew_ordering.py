@@ -101,43 +101,6 @@ def test_salted_join_guards(spark, skewed):
 # --------------------------------------------------------------- global_index
 
 
-def test_recommend_salt_wires_profile_to_salted_join(spark):
-    """VERDICT r4 item 6: an 80%-share key at P=32 must yield
-    (hot_keys=['hot'], n_salt=ceil(0.8*32)=26); the recommendation fed
-    to salted_join reproduces the plain join's rows."""
-    import pytest as _pytest
-
-    from emf_spark.operators.skew import recommend_salt, salted_join
-
-    rows = [("hot", i) for i in range(80)] + [
-        (f"k{i % 4}", i) for i in range(20)
-    ]
-    df = spark.createDataFrame(rows, "k string, v bigint")
-    hot_keys, n_salt = recommend_salt(df, "k", n_partitions=32)
-    assert hot_keys == ["hot"]
-    assert n_salt == 26  # ceil(8000bp * 32 / 10000)
-
-    right = spark.createDataFrame(
-        [("hot", "H"), ("k0", "A"), ("k1", "B"), ("zzz", "Z")],
-        "k string, tag string",
-    )
-    got = salted_join(df, right, ["k"], n_salt=n_salt, hot_keys=hot_keys)
-    want = df.join(right, "k")
-    assert sorted(map(tuple, got.collect())) == \
-        sorted(map(tuple, want.collect()))
-
-    # uniform data: nothing hot, degenerate recommendation
-    uni = spark.createDataFrame(
-        [(f"k{i % 40}", i) for i in range(400)], "k string, v bigint"
-    )
-    assert recommend_salt(uni, "k", n_partitions=32) == ([], 1)
-
-    with _pytest.raises(ValueError, match="n_partitions"):
-        recommend_salt(df, "k", n_partitions=0)
-    with _pytest.raises(ValueError, match="hot_factor"):
-        recommend_salt(df, "k", n_partitions=8, hot_factor=0)
-
-
 def test_global_index_matches_window(spark):
     # clustered + duplicate keys: most rows pile into few value-range
     # buckets, with a tiebreak making the order total
