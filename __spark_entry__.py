@@ -3,7 +3,7 @@
 ``entry``   — flagship: the full EMF parse→enrich→route→aggregate
               pipeline over a tokenized corpus derived from the sf0.001
               ``events`` table.
-``queries`` / ``oracle_sql`` — 48-query operator battery from
+``queries`` / ``oracle_sql`` — 160-query operator battery from
               SURVEY.md §2 plus training-data ops (dedup, similarity,
               text stats, multimodal, sampling/packing), every query
               with an exact DuckDB oracle — engine-internal hash

@@ -73,12 +73,12 @@ def _collapse_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup: one survivor (min id) per distinct normalized text."""
-    h = F.md5(normalized(F.col(text_col)))
+    h = F.md5(normalized(F.col("text")))
     return (
         df.groupBy(h.alias("content_hash"))
-        .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
+        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
     )
 
 
@@ -353,7 +353,7 @@ def _estimate_pairs(
     return est.filter(F.col("est_jaccard") >= threshold)
 
 
-def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
+def dedup_clusters(pairs: DataFrame) -> DataFrame:
     """Cluster assignment from near-dup pairs: every id maps to the MIN
     id of its connected component (true connected components, not just
     the initial parent forest).
@@ -365,7 +365,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     pointer-jump step (root <- root-of-root, squaring jump distance),
     so a component of diameter d converges in O(log d) iterations.
     Iterates to a fixpoint (roots only ever decrease; changed = any
-    root strictly decreased) or ``max_iters``. Per iteration: one
+    root strictly decreased) or 20 iterations. Per iteration: one
     edge-join shuffle + one self-join shuffle + one small agg action;
     O(V + E) rows throughout — no component is ever materialized as
     pairs. Each iteration eagerly localCheckpoints the new labels to
@@ -379,7 +379,7 @@ def dedup_clusters(pairs: DataFrame, max_iters: int = 20) -> DataFrame:
     labels = edges.groupBy(F.col("id_a").alias("id")).agg(
         F.least(F.min("id_b"), F.min("id_a")).alias("root")
     ).localCheckpoint(eager=True)
-    for _ in range(max_iters):
+    for _ in range(20):
         # hash-to-min: push every node's root across each (undirected)
         # edge and take the neighborhood minimum
         nbr = (
@@ -441,10 +441,10 @@ def _bit_mask(j: int) -> int:
     return m - (1 << 64) if m >= 1 << 63 else m  # signed-64 literal
 
 
-def simhash64(text: F.Column, n_bits: int = 64) -> F.Column:
+def simhash64(text: F.Column) -> F.Column:
     """Column-level 64-bit SimHash (per word w, h = xxhash64(w); bit_j is
     the sign of sum_w(+/-1 by bit_j of h)). NOTE: nested-HOF form — each
-    of the n_bits aggregates re-walks the word-hash array because
+    of the 64 aggregates re-walks the word-hash array because
     Catalyst does not CSE across them. Kept for column-level use and as
     the semantic spec; hot paths go through simhash_fingerprints (the
     explode+groupBy form, same output, one pass — VERDICT r1 measured
@@ -465,7 +465,7 @@ def simhash64(text: F.Column, n_bits: int = 64) -> F.Column:
         return F.when(vote > 0, F.lit(_bit_mask(j))).otherwise(F.lit(0).cast("long"))
 
     return functools.reduce(
-        lambda a, b: a.bitwiseOR(b), [bit_expr(j) for j in range(n_bits)]
+        lambda a, b: a.bitwiseOR(b), [bit_expr(j) for j in range(64)]
     )
 
 
@@ -512,8 +512,6 @@ def simhash_fingerprints(
 
 def simhash_near_duplicates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_hamming: int = 3,
     n_bits: int = 64,
     word_hash=None,
@@ -539,7 +537,7 @@ def simhash_near_duplicates(
     modes are deterministic (row_number by id), so either is
     ANSI-SQL-oracle-checkable."""
     if pre_dedupe_exact:
-        df = _collapse_exact(df, text_col, id_col)
+        df = _collapse_exact(df, "text", "doc_id")
     # pigeonhole: hamming <= h implies >= 1 identical band only when
     # there are h+1 bands — the former fixed 4-band split silently
     # MISSED pairs for max_hamming >= 4 (4 differing bits can land in 4
@@ -551,7 +549,7 @@ def simhash_near_duplicates(
     base_w, extra = divmod(n_bits, n_bands)
     widths = [base_w + (1 if b < extra else 0) for b in range(n_bands)]
     offsets = [sum(widths[:b]) for b in range(n_bands)]
-    sh = simhash_fingerprints(df, text_col, id_col, n_bits, word_hash)
+    sh = simhash_fingerprints(df, n_bits=n_bits, word_hash=word_hash)
     banded = sh.select(
         "id",
         "sim",
@@ -608,10 +606,7 @@ def simhash_near_duplicates(
 
 def jaccard_threshold_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.6,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """EXACT Jaccard-threshold near-dup pairs via prefix filtering —
     every pair with shingle-set Jaccard >= ``threshold``, no
@@ -644,8 +639,8 @@ def jaccard_threshold_pairs(
         raise ValueError("threshold must be in (0, 1]")
     eps = 1e-9
     sets = df.select(
-        F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), shingle_k).alias("toks"),
+        F.col("doc_id").alias("id"),
+        word_shingles(F.col("text")).alias("toks"),
     ).filter(F.size("toks") > 0)
     rows = sets.select("id", F.explode("toks").alias("tok"))
     freq = rows.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
@@ -703,8 +698,6 @@ def decontaminate(
     train: DataFrame,
     test: DataFrame,
     k: int = 13,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     word_hash=None,
     max_test_df: int | None = 10_000,
 ) -> DataFrame:
@@ -712,7 +705,7 @@ def decontaminate(
     k-word shingle with any TEST doc (the 13-gram overlap rule used to
     scrub LLM training corpora against eval sets).
 
-    Returns (id_col, matching_shingles, test_docs) for contaminated
+    Returns (doc_id, matching_shingles, test_docs) for contaminated
     train docs only. Plan shape: shingles arrive as ROWS on both sides
     (words hashed once, window-lead combine), distinct per side, then
     ONE hash join on the shingle hash — never doc x doc. ``max_test_df``
@@ -722,9 +715,9 @@ def decontaminate(
     so an external oracle can reproduce the filter exactly). Pass
     ``word_hash=portable_hash56``-style hashing for an ANSI-SQL-checkable
     run."""
-    tr = shingle_hash_rows(train, text_col, id_col, k, word_hash).distinct()
+    tr = shingle_hash_rows(train, k=k, word_hash=word_hash).distinct()
     te = (
-        shingle_hash_rows(test, text_col, id_col, k, word_hash)
+        shingle_hash_rows(test, k=k, word_hash=word_hash)
         .distinct()
         .withColumnRenamed("id", "test_id")
     )
@@ -736,7 +729,7 @@ def decontaminate(
             F.col("_df") <= max_test_df
         ).drop("_df")
     j = tr.join(te, "h")
-    return j.groupBy(F.col("id").alias(id_col)).agg(
+    return j.groupBy(F.col("id").alias("doc_id")).agg(
         F.count_distinct("h").alias("matching_shingles"),
         F.count_distinct("test_id").alias("test_docs"),
     )
@@ -744,8 +737,6 @@ def decontaminate(
 
 def duplicated_ngram_spans(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 8,
     keep_first: bool = True,
     word_hash=None,
@@ -774,9 +765,7 @@ def duplicated_ngram_spans(
     form and finds every duplicated substring of length >= n words."""
     from pyspark.sql.window import Window
 
-    rows = shingle_hash_rows(
-        df, text_col, id_col, k=n, word_hash=word_hash, keep_pos=True
-    )
+    rows = shingle_hash_rows(df, k=n, word_hash=word_hash, keep_pos=True)
     occ = rows.groupBy("h").agg(
         F.count(F.lit(1)).alias("_occ"),
         F.min(F.struct("id", "pos")).alias("_first"),
@@ -804,7 +793,7 @@ def duplicated_ngram_spans(
         )
     )
     return spans.select(
-        F.col("id").alias(id_col),
+        F.col("id").alias("doc_id"),
         "span_start",
         "span_end",
         (F.col("span_end") - F.col("span_start") + 1).alias("span_tokens"),
@@ -813,8 +802,6 @@ def duplicated_ngram_spans(
 
 def duplication_profile(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 8,
     keep_first: bool = True,
     word_hash=None,
@@ -825,9 +812,9 @@ def duplication_profile(
     thresholds on. Docs with no duplicated span emit no row (left-join
     against the corpus to zero-fill if needed)."""
     spans = duplicated_ngram_spans(
-        df, text_col, id_col, n=n, keep_first=keep_first, word_hash=word_hash
+        df, n=n, keep_first=keep_first, word_hash=word_hash
     )
-    return spans.groupBy(id_col).agg(
+    return spans.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.sum("span_tokens").alias("dup_tokens"),
         F.min("span_start").alias("first_start"),
@@ -838,12 +825,9 @@ def duplication_profile(
 def write_signature_store(
     df: DataFrame,
     path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_perm: int = 64,
     shingle_k: int = 3,
     seed: int = 42,
-    word_hash=None,
     mode: str = "overwrite",
 ) -> None:
     """Materialize minhash signatures (id, sig:array<bigint>) to parquet.
@@ -870,13 +854,13 @@ def write_signature_store(
     )
     rebuild = mode == "overwrite" and not dynamic
     if not rebuild:
-        _store_meta(spark, path, num_perm, shingle_k, seed, word_hash,
+        _store_meta(spark, path, num_perm, shingle_k, seed, None,
                     write_if_absent=False)
     # persist: the min-id collect AND the write otherwise each run the
     # full shingle+permutation aggregation — ~all of minhash's cost,
     # paid twice per bootstrap (review finding)
     sigs = minhash_signatures(
-        df, text_col, id_col, num_perm, shingle_k, seed, word_hash
+        df, num_perm=num_perm, shingle_k=shingle_k, seed=seed
     ).persist()
     try:
         key = sigs.agg(F.min("id")).collect()[0][0]
@@ -888,7 +872,7 @@ def write_signature_store(
         )
     finally:
         sigs.unpersist()
-    _store_meta(spark, path, num_perm, shingle_k, seed, word_hash,
+    _store_meta(spark, path, num_perm, shingle_k, seed, None,
                 write_if_absent=True, overwrite=rebuild)
 
 
@@ -934,51 +918,61 @@ def minhash_incremental(
     new_sigs = minhash_signatures(
         new_df, text_col, id_col, num_perm, shingle_k, seed, word_hash
     ).persist()
-    new_ids = new_sigs.select(F.col("id").alias("_nid")).distinct()
-    old_sigs = _read_store(
-        spark, store_path, "id bigint, sig array<bigint>", drop=["_ingest"]
-    )
-    # a crashed-then-RETRIED ingest finds its own signatures already in
-    # the store (dynamic partition overwrite): anti-join the batch ids
-    # out of the store side so the union carries each doc exactly once —
-    # otherwise every pair row is emitted up to 4x and doubled bucket
-    # membership halves the effective max_bucket cap (ADVICE r3 medium)
-    old_sigs = old_sigs.join(
-        F.broadcast(new_ids), old_sigs.id == F.col("_nid"), "left_anti"
-    )
-    # the union feeds three plan branches (banding + both estimate
-    # sides) exactly like the batch path — without this persist the
-    # store parquet is scanned three times and the incremental path
-    # measured SLOWER than a full recompute (0.72x at 200k+20k docs)
-    sigs = old_sigs.union(new_sigs).persist()
-    pairs = lsh_candidate_pairs(sigs, bands, max_bucket)
-    # keep pairs with >= 1 new side; new ids broadcast (a batch is
-    # small next to the store)
-    pairs = (
-        pairs.join(
-            F.broadcast(new_ids), pairs.id_a == F.col("_nid"), "left"
+    sigs = None
+    try:
+        new_ids = new_sigs.select(F.col("id").alias("_nid")).distinct()
+        old_sigs = _read_store(
+            spark, store_path, "id bigint, sig array<bigint>", drop=["_ingest"]
         )
-        .withColumnRenamed("_nid", "_na")
-        .join(F.broadcast(new_ids), pairs.id_b == F.col("_nid"), "left")
-        .filter(F.col("_na").isNotNull() | F.col("_nid").isNotNull())
-        .select("id_a", "id_b")
-    )
-    est = _estimate_pairs(sigs, pairs, threshold)
-    if update_store:
-        # materialize BEFORE the store write: est's plan reads the
-        # store files, and a retried ingest's dynamic overwrite
-        # replaces that batch's old partition — collecting the lazy
-        # frame afterwards would hit deleted files
-        est = est.localCheckpoint(eager=True)
-        batch_key = new_sigs.agg(F.min("id")).collect()[0][0]
-        if batch_key is not None:
-            (
-                new_sigs.withColumn("_ingest", F.lit(int(batch_key)))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("_ingest")
-                .parquet(store_path)
+        # a crashed-then-RETRIED ingest finds its own signatures already in
+        # the store (dynamic partition overwrite): anti-join the batch ids
+        # out of the store side so the union carries each doc exactly once —
+        # otherwise every pair row is emitted up to 4x and doubled bucket
+        # membership halves the effective max_bucket cap (ADVICE r3 medium)
+        old_sigs = old_sigs.join(
+            F.broadcast(new_ids), old_sigs.id == F.col("_nid"), "left_anti"
+        )
+        # the union feeds three plan branches (banding + both estimate
+        # sides) exactly like the batch path — without this persist the
+        # store parquet is scanned three times and the incremental path
+        # measured SLOWER than a full recompute (0.72x at 200k+20k docs)
+        sigs = old_sigs.union(new_sigs).persist()
+        pairs = lsh_candidate_pairs(sigs, bands, max_bucket)
+        # keep pairs with >= 1 new side; new ids broadcast (a batch is
+        # small next to the store)
+        pairs = (
+            pairs.join(
+                F.broadcast(new_ids), pairs.id_a == F.col("_nid"), "left"
             )
+            .withColumnRenamed("_nid", "_na")
+            .join(F.broadcast(new_ids), pairs.id_b == F.col("_nid"), "left")
+            .filter(F.col("_na").isNotNull() | F.col("_nid").isNotNull())
+            .select("id_a", "id_b")
+        )
+        est = _estimate_pairs(sigs, pairs, threshold)
+        if update_store:
+            # materialize BEFORE the store write: est's plan reads the
+            # store files, and a retried ingest's dynamic overwrite
+            # replaces that batch's old partition — collecting the lazy
+            # frame afterwards would hit deleted files
+            est = est.localCheckpoint(eager=True)
+            batch_key = new_sigs.agg(F.min("id")).collect()[0][0]
+            if batch_key is not None:
+                (
+                    new_sigs.withColumn("_ingest", F.lit(int(batch_key)))
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("_ingest")
+                    .parquet(store_path)
+                )
+    except BaseException:
+        # a corrupt store makes _read_store raise, and any later step
+        # may: release what this call cached, then re-raise
+        new_sigs.unpersist()
+        if sigs is not None:
+            sigs.unpersist()
+        raise
+    if update_store:
         # est is checkpointed — release the corpus-sized caches so a
         # long-lived session running many ingests does not accumulate
         # one N+b signature cache per call (review finding). The
@@ -1162,10 +1156,7 @@ def line_dedup(
 
 def containment_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     threshold: float = 0.8,
-    shingle_k: int = 3,
 ) -> DataFrame:
     """EXACT containment-threshold pairs — every ORDERED pair (a, b),
     a != b, whose shingle containment ``|A∩B| / |A| >= threshold``:
@@ -1196,8 +1187,8 @@ def containment_pairs(
         raise ValueError("threshold must be in (0, 1]")
     eps = 1e-9
     sets = df.select(
-        F.col(id_col).alias("id"),
-        word_shingles(F.col(text_col), shingle_k).alias("toks"),
+        F.col("doc_id").alias("id"),
+        word_shingles(F.col("text")).alias("toks"),
     ).filter(F.size("toks") > 0)
     rows = sets.select("id", F.explode("toks").alias("tok"))
     freq = rows.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))

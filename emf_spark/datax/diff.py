@@ -22,15 +22,13 @@ def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
     key_cols: list[str],
-    compare_cols: list[str] | None = None,
 ) -> DataFrame:
     """(key_cols..., status) for every key present in either snapshot
     whose row was added, removed, or changed; unchanged keys are
-    dropped. ``compare_cols`` defaults to every non-key column both
-    sides share (order-insensitive by sorted name)."""
-    if compare_cols is None:
-        shared = set(old.columns) & set(new.columns)
-        compare_cols = sorted(shared - set(key_cols))
+    dropped. The compared columns are every non-key column both sides
+    share (order-insensitive by sorted name)."""
+    shared = set(old.columns) & set(new.columns)
+    compare_cols = sorted(shared - set(key_cols))
 
     def keyed(df: DataFrame, tag: str) -> DataFrame:
         # xxhash64 over the compared columns in a FIXED order. Spark's
@@ -69,9 +67,6 @@ def scd2_apply(
     snapshot: DataFrame,
     key_cols: list[str],
     version: int,
-    attr_cols: list[str] | None = None,
-    valid_from_col: str = "valid_from",
-    valid_to_col: str = "valid_to",
 ) -> DataFrame:
     """Apply a new full snapshot to an SCD type-2 history table and
     return the UPDATED history — the table-maintenance step downstream
@@ -95,9 +90,8 @@ def scd2_apply(
     single explode(array(...)) pass — the join output is traversed
     once, never re-filtered per case. Idempotent: re-applying the same
     snapshot at the same version is a no-op (re-run safe)."""
-    if attr_cols is None:
-        shared = set(history.columns) & set(snapshot.columns)
-        attr_cols = sorted(shared - set(key_cols))
+    shared = set(history.columns) & set(snapshot.columns)
+    attr_cols = sorted(shared - set(key_cols))
 
     def chash(prefix: str) -> F.Column:
         parts: list[F.Column] = []
@@ -106,13 +100,13 @@ def scd2_apply(
             parts.append(F.col(f"{prefix}{c}"))
         return F.xxhash64(*parts) if parts else F.lit(0)
 
-    open_ = history.filter(F.col(valid_to_col).isNull())
-    closed = history.filter(F.col(valid_to_col).isNotNull())
+    open_ = history.filter(F.col("valid_to").isNull())
+    closed = history.filter(F.col("valid_to").isNotNull())
 
     o = open_.select(
         *key_cols,
         *[F.col(c).alias(f"_o_{c}") for c in attr_cols],
-        F.col(valid_from_col).alias("_o_from"),
+        F.col("valid_from").alias("_o_from"),
         F.lit(True).alias("_in_o"),
     ).withColumn("_ho", chash("_o_"))
     n = snapshot.select(
@@ -130,8 +124,8 @@ def scd2_apply(
     def row(prefix: str, vfrom: F.Column, vto: F.Column) -> F.Column:
         return F.struct(
             *[F.col(f"{prefix}{c}").alias(c) for c in attr_cols],
-            vfrom.cast("bigint").alias(valid_from_col),
-            vto.cast("bigint").alias(valid_to_col),
+            vfrom.cast("bigint").alias("valid_from"),
+            vto.cast("bigint").alias("valid_to"),
         )
 
     null_b = F.lit(None).cast("bigint")
@@ -152,7 +146,7 @@ def scd2_apply(
         .filter(F.col("_r").isNotNull())
         .select(*key_cols, "_r.*")
     )
-    out_cols = [*key_cols, *attr_cols, valid_from_col, valid_to_col]
+    out_cols = [*key_cols, *attr_cols, "valid_from", "valid_to"]
     return closed.select(*out_cols).unionByName(emitted.select(*out_cols))
 
 
@@ -162,12 +156,12 @@ def apply_changes(
     key_cols: list[str],
     seq_col: str,
     op_col: str = "op",
-    payload_cols: list[str] | None = None,
 ) -> DataFrame:
     """CDC merge — the Delta/Iceberg MERGE pattern as a pure DataFrame
     program: fold a change feed into a keyed snapshot and return the
     new snapshot. Change rows carry the FULL new row (not per-column
-    patches): ``key_cols + [seq_col, op_col] + payload_cols`` with op
+    patches): ``key_cols + [seq_col, op_col]`` plus every other column
+    of ``base``, with op
     'I' (insert), 'U' (upsert), or 'D' (delete the key); any other op
     value fails the job in-plan via raise_error — no separate
     validation pass over the feed. Latest change per key wins: max
@@ -188,8 +182,7 @@ def apply_changes(
     Idempotent: re-applying an already-applied feed yields the same
     snapshot (U/I rows rewrite identical payloads, D keys are already
     gone)."""
-    if payload_cols is None:
-        payload_cols = [c for c in base.columns if c not in key_cols]
+    payload_cols = [c for c in base.columns if c not in key_cols]
     missing = [c for c in key_cols + [seq_col, op_col] + payload_cols
                if c not in changes.columns]
     if missing:

@@ -95,11 +95,9 @@ def sorted_neighborhood_pairs(
     key_col: str,
     id_col: str = "id",
     window: int = 3,
-    tiebreak: list[str] | None = None,
-    n_buckets: int = 1024,
 ) -> DataFrame:
     """Sorted-neighborhood method (Hernandez & Stolfo 1995) candidate
-    generation: order the table by (``key_col``, tiebreak..., id) and
+    generation: order the table by (``key_col``, id) and
     pair every row with its next ``window-1`` neighbors — (window-1)*n
     candidate pairs total, the classic alternative to hash blocking
     when near-duplicates share an ORDERABLE key (names, balances,
@@ -112,7 +110,7 @@ def sorted_neighborhood_pairs(
     idx+window-1) and hash-joins the index column. No sort-merge of the
     whole table, no inequality join, no cartesian. ``key_col`` must be
     numeric (global_index's contract) — for string keys pass a numeric
-    proxy of a fixed-length prefix and the raw string in ``tiebreak``.
+    proxy of a fixed-length prefix.
 
     Returns (id_a, id_b, key_a, key_b, gap) where gap = idx_b - idx_a
     in [1, window-1]; refine with a similarity predicate downstream
@@ -122,12 +120,8 @@ def sorted_neighborhood_pairs(
         raise ValueError("window must be >= 2")
     from emf_spark.datax.ordering import global_index
 
-    tiebreak = tiebreak or []
     base = df.filter(F.col(key_col).isNotNull())
-    idx = global_index(
-        base, key_col, tiebreak=tiebreak + [id_col],
-        n_buckets=n_buckets, out_col="_sni",
-    ).select(
+    idx = global_index(base, key_col, tiebreak=[id_col], out_col="_sni").select(
         F.col(id_col).alias("_id"), F.col(key_col).alias("_k"), "_sni"
     )
     probes = idx.select(

@@ -24,8 +24,6 @@ from emf_spark.datax.textstats import repetition_stats
 
 def quality_filter(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_words: int = 5,
     max_words: int = 100_000,
     max_dup_word_frac: float = 0.4,
@@ -50,22 +48,22 @@ def quality_filter(
     are intentionally distinct, now documented)."""
     from emf_spark.datax.dedup import normalized
 
-    words = F.split(normalized(F.col(text_col)), " ")
+    words = F.split(normalized(F.col("text")), " ")
     n_words = F.size(words)
     quality = F.round(
         (F.size(F.array_distinct(words)) / n_words)
-        * F.least(F.length(text_col) / F.lit(200.0), F.lit(1.0)),
+        * F.least(F.length("text") / F.lit(200.0), F.lit(1.0)),
         6,
     )
-    rep = repetition_stats(df, text_col, id_col, word_hash=word_hash)
-    j = df.join(rep.select(id_col, "dup_word_frac", "dup_line_frac",
-                           "top_bigram_frac"), id_col)
+    rep = repetition_stats(df, word_hash=word_hash)
+    j = df.join(rep.select("doc_id", "dup_word_frac", "dup_line_frac",
+                           "top_bigram_frac"), "doc_id")
     # NULL text must not fall through the rule chain: every predicate
     # below evaluates to NULL on it (never true), and the otherwise()
     # would wave a garbage document through the gate (review finding)
     reason = (
         F.when(
-            F.col(text_col).isNull() | (F.trim(F.col(text_col)) == ""),
+            F.col("text").isNull() | (F.trim(F.col("text")) == ""),
             "empty",
         )
         .when(n_words < min_words, "too_short")

@@ -161,8 +161,6 @@ def cohort_retention(
 
 def rolling_active_users(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     window_days: int = 7,
 ) -> DataFrame:
     """Daily active users plus EXACT trailing-window distinct users
@@ -179,7 +177,7 @@ def rolling_active_users(
     DISTINCT user-day table by window_days, not the raw events."""
     if window_days < 1:
         raise ValueError("window_days must be >= 1")
-    u, t = F.col(user_col), F.col(ts_col)
+    u, t = F.col("user_id"), F.col("ts")
     ud = (
         events.filter(u.isNotNull() & t.isNotNull())
         .select(u.alias("_u"), F.to_date(t).alias("_d"))
@@ -203,9 +201,6 @@ def rolling_active_users(
 
 def value_outliers(
     events: DataFrame,
-    group_col: str = "event_type",
-    value_col: str = "value",
-    id_col: str = "event_id",
     z: int = 2,
     scale: int = 100,
 ) -> DataFrame:
@@ -223,7 +218,7 @@ def value_outliers(
     the square stays in int64 while max|x|*n*scale < ~1.5e9 — at
     larger volumes raise the aggregate to DECIMAL(38) or pre-aggregate
     per partition; the driver-query sizes sit far inside."""
-    g, v = F.col(group_col), F.col(value_col)
+    g, v = F.col("event_type"), F.col("value")
     x = F.round(v.cast("double") * scale, 0).cast("bigint")
     stats = (
         events.filter(v.isNotNull())
@@ -243,7 +238,7 @@ def value_outliers(
     return (
         joined.filter(dev * dev > F.lit(z * z) * var_n2)
         .select(
-            F.col(id_col),
+            F.col("event_id"),
             g.alias("grp"),
             v.alias("value"),
             F.when(dev > 0, F.lit(1)).otherwise(F.lit(-1)).alias("side"),
@@ -255,13 +250,9 @@ def attribution_report(
     conv_type: str,
     touch_types: Sequence[str],
     window_sec: int = 86_400,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-    type_col: str = "event_type",
-    id_col: str = "event_id",
 ) -> DataFrame:
     """Multi-touch marketing attribution: for every conversion event
-    (``type_col == conv_type``), credit the touch events of
+    (``event_type == conv_type``), credit the touch events of
     ``touch_types`` the same user produced in the ``window_sec``
     seconds strictly BEFORE the conversion (end-exclusive: a touch at
     the conversion's own second does not count). Returns one row per
@@ -287,11 +278,11 @@ def attribution_report(
     """
     from emf_spark.operators.ranges import range_join
 
-    ep = F.unix_timestamp(F.col(ts_col)).cast("bigint")
+    ep = F.unix_timestamp(F.col("ts")).cast("bigint")
     base = events.select(
-        F.col(user_col).alias("u"),
-        F.col(id_col).alias("eid"),
-        F.col(type_col).alias("etype"),
+        F.col("user_id").alias("u"),
+        F.col("event_id").alias("eid"),
+        F.col("event_type").alias("etype"),
         ep.alias("ep"),
     )
     conv = base.filter(F.col("etype") == conv_type).select(

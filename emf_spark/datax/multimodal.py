@@ -1579,18 +1579,19 @@ def _ima_step(predictor: int, index: int, nibble: int) -> tuple[int, int]:
     return predictor, index
 
 
-def synth_adpcm_wav(n_samples: int, rate: int, base: int,
-                    block_bytes: int = 256) -> bytes:
+def synth_adpcm_wav(n_samples: int, rate: int, base: int) -> bytes:
     """Deterministic RIFF/WAV **IMA ADPCM** mono (format tag 0x11):
     source sample i = ((base*7 + i*13) %% 2001) - 1000 (the PCM synth's
     formula), 4-bit-encoded in standard blocks (4-byte header carrying
-    the block's first sample + step index, then low-nibble-first data).
+    the block's first sample + step index, then low-nibble-first data)
+    of 256 bytes.
     The encoder tracks the DECODER's reconstruction, so decode is
     deterministic and a pure-python reference reproduces it exactly."""
     import struct
 
     src = (((np.int64(base) * 7 + np.arange(n_samples, dtype=np.int64) * 13)
             % 2001) - 1000).tolist()
+    block_bytes = 256
     samples_per_block = 1 + (block_bytes - 4) * 2
     blocks = bytearray()
     i = 0
@@ -1864,9 +1865,9 @@ def media_real_from_documents(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", "n_chars").mapInPandas(run, MEDIA_SCHEMA)
 
 
-def _real_feature(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
-    """Real decoded-content feature: a ``dim``-bin normalized histogram
-    of the decoded pixel bytes (PPM) or 16-bit samples (WAV). Payloads
+def _real_feature(payload: bytes) -> np.ndarray:
+    """Real decoded-content feature: a ``FEATURE_DIM``-bin normalized
+    histogram of the decoded pixel bytes (PPM) or 16-bit samples (WAV). Payloads
     that are neither raise — real mode never silently fakes; compressed
     formats (JPEG/MP3/...) need PIL/ffmpeg, absent in this container."""
     p = bytes(payload) if payload is not None else b""
@@ -1875,12 +1876,12 @@ def _real_feature(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
         vals = np.frombuffer(p, dtype=np.uint8, count=n, offset=pos).astype(
             np.float64
         )
-        hist, _ = np.histogram(vals, bins=dim, range=(0, 256))
+        hist, _ = np.histogram(vals, bins=FEATURE_DIM, range=(0, 256))
     elif p[:4] == b"RIFF":
         # histogram over the DECODED linear samples for every
         # supported encoding (PCM-16 / A-law / mu-law / IMA ADPCM)
         _fmt, _rate, s = _wav_samples(p)
-        hist, _ = np.histogram(s.astype(np.float64), bins=dim,
+        hist, _ = np.histogram(s.astype(np.float64), bins=FEATURE_DIM,
                                range=(-32768, 32768))
     else:
         raise ValueError(
@@ -1892,20 +1893,19 @@ def _real_feature(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
     return v / nrm
 
 
-def _fake_feature(payload: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
+def _fake_feature(payload: bytes) -> np.ndarray:
     """Deterministic stand-in for a decoded-media embedding: bytes ->
     seeded RNG -> unit vector. Replace with a real decoder+encoder."""
     seed = int.from_bytes((payload or b"\x00")[:8].ljust(8, b"\x00"), "little")
     rng = np.random.default_rng(seed)
-    v = rng.standard_normal(dim).astype(np.float32)
+    v = rng.standard_normal(FEATURE_DIM).astype(np.float32)
     n = float(np.linalg.norm(v)) or 1.0
     return v / n
 
 
-def extract_features(
-    df: DataFrame, decode_mode: str = "fake", frame_stride_ms: int = 1000
-) -> DataFrame:
-    """mapInPandas feature extraction over media rows.
+def extract_features(df: DataFrame, decode_mode: str = "fake") -> DataFrame:
+    """mapInPandas feature extraction over media rows; a video counts
+    one frame per second of its ``duration_ms``.
 
     Batch shape: the iterator yields Arrow-sized pandas batches; each
     batch is processed vectorized and yields one output row per input
@@ -1934,7 +1934,7 @@ def extract_features(
                 )
                 if kind == "video":
                     dur = (meta or {}).get("duration_ms") or 0
-                    frames.append(max(1, int(dur // frame_stride_ms)))
+                    frames.append(max(1, int(dur // 1000)))
                 else:
                     frames.append(1)
             yield pd.DataFrame(
@@ -1953,9 +1953,9 @@ def extract_features(
     return df.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def fake_media_df(spark, n: int = 64, seed: int = 42) -> DataFrame:
+def fake_media_df(spark, n: int = 64) -> DataFrame:
     """Deterministic synthetic media table for tests/benches."""
-    rng = np.random.default_rng(seed)
+    rng = np.random.default_rng(42)
     kinds = ["image", "audio", "video"]
     rows = []
     for i in range(n):

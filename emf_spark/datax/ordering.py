@@ -165,9 +165,7 @@ def write_training_shards(
 
 def equidepth_boundaries(
     df: DataFrame,
-    value_col: str = "value",
     n_bins: int = 10,
-    scale: int = 100,
 ) -> DataFrame:
     """Exact equi-depth bin boundaries on the integer lattice: for
     k = 1..n_bins-1, ``boundary_units[k]`` is the value at 0-based
@@ -193,8 +191,8 @@ def equidepth_boundaries(
     """
     if n_bins < 2:
         raise ValueError("n_bins must be >= 2")
-    x = df.filter(F.col(value_col).isNotNull()).select(
-        F.round(F.col(value_col) * scale).cast("long").alias("v")
+    x = df.filter(F.col("value").isNotNull()).select(
+        F.round(F.col("value") * 100).cast("long").alias("v")
     )
     n = x.count()
     spark = df.sparkSession

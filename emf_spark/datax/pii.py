@@ -38,39 +38,31 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 def pii_scrub(
     df: DataFrame,
     text_col: str = "text",
-    patterns: list[tuple[str, str, str]] | None = None,
-    out_col: str = "text_redacted",
-    count_prefix: str = "n_",
 ) -> DataFrame:
     """Redact PII and attach per-type match counts.
 
-    Adds ``out_col`` (the fully redacted text) and one
-    ``{count_prefix}{name}`` int column per pattern. One narrow
+    Adds ``text_redacted`` (the fully redacted text) and one
+    ``n_{name}`` int column per ``PII_PATTERNS`` entry. One narrow
     Project per stage, no shuffle — at 100 TB this is a pure map over
     the scan, and the regexes stay inside whole-stage codegen."""
-    pats = PII_PATTERNS if patterns is None else patterns
     cur = F.col(text_col)
     counts = []
-    for name, pat, repl in pats:
-        counts.append(F.regexp_count(cur, F.lit(pat)).alias(f"{count_prefix}{name}"))
+    for name, pat, repl in PII_PATTERNS:
+        counts.append(F.regexp_count(cur, F.lit(pat)).alias(f"n_{name}"))
         cur = F.regexp_replace(cur, pat, repl)
-    return df.select("*", *counts, cur.alias(out_col))
+    return df.select("*", *counts, cur.alias("text_redacted"))
 
 
-def sql_scrub_exprs(
-    text_expr: str,
-    patterns: list[tuple[str, str, str]] | None = None,
-) -> tuple[str, dict[str, str]]:
+def sql_scrub_exprs(text_expr: str) -> tuple[str, dict[str, str]]:
     """DuckDB-SQL expressions reproducing :func:`pii_scrub` exactly:
     (redacted_text_expr, {name: count_expr}). Counts nest the previous
     stages' regexp_replace, mirroring the progressive semantics; the
     'g' flag matches Spark's replace-all default. Single quotes in the
     pattern would need escaping — none of the shipped patterns use
     them, asserted here."""
-    pats = PII_PATTERNS if patterns is None else patterns
     cur = text_expr
     counts: dict[str, str] = {}
-    for name, pat, repl in pats:
+    for name, pat, repl in PII_PATTERNS:
         assert "'" not in pat and "'" not in repl
         counts[name] = f"len(regexp_extract_all({cur}, '{pat}'))"
         cur = f"regexp_replace({cur}, '{pat}', '{repl}', 'g')"
@@ -81,8 +73,6 @@ def k_anonymity(
     df: DataFrame,
     quasi_cols: list[str],
     k: int,
-    flag_col: str = "suppressed",
-    size_col: str = "group_size",
 ) -> DataFrame:
     """k-anonymity suppression flag: a row is ``suppressed`` when its
     quasi-identifier combination is shared by fewer than ``k`` rows —
@@ -102,15 +92,15 @@ def k_anonymity(
         raise ValueError("k must be >= 1")
     if not quasi_cols:
         raise ValueError("k_anonymity needs at least one quasi column")
-    for c in (flag_col, size_col):
+    for c in ("suppressed", "group_size"):
         if c in df.columns:
             raise ValueError(f"column {c!r} collides with k_anonymity outputs")
     # rename the count side's keys up front — a self-join against an
     # aggregate of the same frame trips Spark's ambiguous-attribute
     # resolution if both sides keep the original names
-    counts = df.groupBy(*quasi_cols).agg(F.count(F.lit(1)).alias(size_col))
+    counts = df.groupBy(*quasi_cols).agg(F.count(F.lit(1)).alias("group_size"))
     renamed = counts.select(
-        *[F.col(c).alias(f"_ka_{c}") for c in quasi_cols], size_col
+        *[F.col(c).alias(f"_ka_{c}") for c in quasi_cols], "group_size"
     )
     # null-safe equi-join: NULL quasi values must meet their own count
     cond = None
@@ -118,4 +108,4 @@ def k_anonymity(
         eq = F.col(c).eqNullSafe(F.col(f"_ka_{c}"))
         cond = eq if cond is None else cond & eq
     joined = df.join(renamed, cond).drop(*[f"_ka_{c}" for c in quasi_cols])
-    return joined.withColumn(flag_col, F.col(size_col) < F.lit(k))
+    return joined.withColumn("suppressed", F.col("group_size") < F.lit(k))

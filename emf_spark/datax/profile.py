@@ -57,8 +57,6 @@ def mode_per_group(
     df: DataFrame,
     group_cols: list[str],
     value_col: str,
-    out_col: str = "mode_value",
-    count_col: str = "mode_count",
 ) -> DataFrame:
     """Most frequent ``value_col`` per group (majority label — the
     label-consolidation step of weak supervision / multi-annotator
@@ -85,8 +83,8 @@ def mode_per_group(
     )
     return best.select(
         *group_cols,
-        F.col(f"_b.{value_col}").alias(out_col),
-        F.col("_b._c").alias(count_col),
+        F.col(f"_b.{value_col}").alias("mode_value"),
+        F.col("_b._c").alias("mode_count"),
     )
 
 

@@ -30,13 +30,12 @@ def hash_fraction(col: F.Column, salt: str = "") -> F.Column:
 
 def hash_split(
     df: DataFrame,
-    id_col: str = "doc_id",
     val_frac: float = 0.1,
     test_frac: float = 0.1,
     salt: str = "split",
 ) -> DataFrame:
     """Assign 'train'/'val'/'test' deterministically by id hash."""
-    frac = hash_fraction(F.col(id_col), salt)
+    frac = hash_fraction(F.col("doc_id"), salt)
     split = (
         F.when(frac < test_frac, "test")
         .when(frac < test_frac + val_frac, "val")
@@ -48,17 +47,13 @@ def hash_split(
 def stratified_fractions(
     df: DataFrame,
     fractions: dict[str, float],
-    stratum_col: str = "lang",
-    id_col: str = "doc_id",
-    default: float = 1.0,
-    salt: str = "strat",
 ) -> DataFrame:
     """Keep a deterministic per-stratum fraction of rows (hash-gated, so
     re-runs and engines agree row-for-row; no sampleBy RNG)."""
-    frac = hash_fraction(F.col(id_col), salt)
-    keep_frac = F.lit(default)
+    frac = hash_fraction(F.col("doc_id"), "strat")
+    keep_frac = F.lit(1.0)
     for stratum, f in sorted(fractions.items()):
-        keep_frac = F.when(F.col(stratum_col) == stratum, F.lit(f)).otherwise(keep_frac)
+        keep_frac = F.when(F.col("lang") == stratum, F.lit(f)).otherwise(keep_frac)
     return df.filter(frac < keep_frac)
 
 
@@ -68,7 +63,6 @@ def tail_sample(
     interesting: F.Column,
     base_rate: float = 0.01,
     salt: str = "tail",
-    reason_col: str = "keep_reason",
 ) -> DataFrame:
     """Tail-based trace sampling — the OpenTelemetry tail-sampler
     policy as a batch operator: keep EVERY row of a trace whose
@@ -86,7 +80,7 @@ def tail_sample(
     portable 56-bit md5 hash of the joined trace key + salt — no RNG,
     re-runs and external engines agree trace-for-trace.
 
-    Returns the kept rows with ``reason_col`` appended
+    Returns the kept rows with ``keep_reason`` appended
     ('interesting' wins over 'sampled'). Rows whose trace key is NULL
     in any component still group and join (null-safe equi-join).
 
@@ -100,7 +94,7 @@ def tail_sample(
         raise ValueError("trace_cols must be non-empty")
     if not 0.0 <= base_rate <= 1.0:
         raise ValueError(f"base_rate must be in [0, 1], got {base_rate}")
-    for c in ("_interesting", "_keyfrac", reason_col):
+    for c in ("_interesting", "_keyfrac", "keep_reason"):
         if c in df.columns:
             raise ValueError(f"column '{c}' collides with tail_sample internals")
     frac = hash_fraction(
@@ -110,12 +104,12 @@ def tail_sample(
         df.groupBy(*trace_cols)
         .agg(interesting.cast("boolean").alias("_interesting"))
         .withColumn(
-            reason_col,
+            "keep_reason",
             F.when(F.col("_interesting"), F.lit("interesting")).otherwise(
                 F.when(frac < F.lit(base_rate), F.lit("sampled"))
             ),
         )
-        .filter(F.col(reason_col).isNotNull())
+        .filter(F.col("keep_reason").isNotNull())
         .drop("_interesting")
     )
     # dec derives from df, so joining on df[c] == dec[c] is the classic
@@ -123,7 +117,7 @@ def tail_sample(
     # make the join condition unambiguous by construction
     renamed = dec.select(
         *[F.col(c).alias(f"_k{i}") for i, c in enumerate(trace_cols)],
-        reason_col,
+        "keep_reason",
     )
     cond = [
         F.col(c).eqNullSafe(F.col(f"_k{i}")) for i, c in enumerate(trace_cols)
@@ -341,10 +335,8 @@ def priority_sample(
 def importance_votes(
     df: DataFrame,
     is_target_col: str,
-    text_col: str = "text",
     id_col: str = "doc_id",
     n_buckets: int = 4096,
-    gram_k: int = 2,
     word_hash=None,
 ) -> DataFrame:
     """DSIR-style data-selection scores (Xie et al. 2023): measure how
@@ -362,7 +354,8 @@ def importance_votes(
     external engine where ``ln`` itself does not (the HLL oracle
     lesson). Returns one row per input row: (id_col, n_grams, votes),
     votes = #target-leaning grams − #raw-leaning grams, counted PER
-    OCCURRENCE like the paper; docs shorter than gram_k words score 0.
+    OCCURRENCE like the paper, over 2-word grams; docs shorter than 2
+    words score 0.
 
     Scale shape: DSIR is inherently two-pass — estimate the bucket
     distributions, then score. Pass 1 is ONE map-side-combinable
@@ -386,7 +379,7 @@ def importance_votes(
     )
     grams = (
         shingle_hash_rows(
-            df, text_col=text_col, id_col=id_col, k=gram_k,
+            df, id_col=id_col, k=2,
             word_hash=word_hash,
         )
         .withColumn("_b", F.pmod(F.col("h"), F.lit(n_buckets)))

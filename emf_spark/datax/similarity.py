@@ -63,14 +63,12 @@ def cosine_topk(
     df: DataFrame,
     qvec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact brute-force cosine top-k against one query vector."""
     qn = math.sqrt(sum(float(x) * float(x) for x in qvec)) or 1.0
-    sim = _dot_lit(F.col(vec_col), qvec) / (_norm(F.col(vec_col)) * F.lit(qn))
+    sim = _dot_lit(F.col("embedding"), qvec) / (_norm(F.col("embedding")) * F.lit(qn))
     return (
-        df.select(F.col(id_col).alias("id"), F.round(sim, 6).alias("cosine"))
+        df.select(F.col("vec_id").alias("id"), F.round(sim, 6).alias("cosine"))
         .orderBy(F.desc("cosine"), "id")
         .limit(k)
     )
@@ -132,8 +130,6 @@ def materialize_buckets(
     df: DataFrame,
     path: str,
     n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
 ) -> None:
     """Write the corpus parquet-partitioned by its RP-LSH bucket
@@ -143,10 +139,10 @@ def materialize_buckets(
     recompute was the last non-materialized scale path). 2^n_planes
     directories: keep n_planes <= ~12 for file-count sanity; within a
     bucket files split normally so one hot bucket still parallelizes."""
-    dim = len(df.select(vec_col).first()[0])
+    dim = len(df.select("embedding").first()[0])
     planes = _hyperplanes(dim, n_planes, seed)
     (
-        df.withColumn("_bucket", rp_lsh_bucket(F.col(vec_col), planes))
+        df.withColumn("_bucket", rp_lsh_bucket(F.col("embedding"), planes))
         .write.mode("overwrite")
         .partitionBy("_bucket")
         .parquet(path)
@@ -158,8 +154,6 @@ def lsh_topk(
     qvec: list[float],
     k: int = 10,
     n_planes: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     seed: int = 42,
     probe_hamming: int = 1,
     bucketed_path: str | None = None,
@@ -189,26 +183,25 @@ def lsh_topk(
             .filter(F.col("_bucket").isin(ball))
         )
         if exclude_ids:
-            probe = probe.filter(~F.col(id_col).isin(list(exclude_ids)))
+            probe = probe.filter(~F.col("vec_id").isin(list(exclude_ids)))
     else:
-        bucketed = df.withColumn("_bucket", rp_lsh_bucket(F.col(vec_col), planes))
+        bucketed = df.withColumn("_bucket", rp_lsh_bucket(F.col("embedding"), planes))
         probe = bucketed.filter(
             F.bit_count(F.col("_bucket").bitwiseXOR(F.lit(qbits))) <= probe_hamming
         )
-    return cosine_topk(probe, qvec, k, id_col, vec_col)
+    return cosine_topk(probe, qvec, k)
 
 
 def ivf_assign(
     df: DataFrame,
     centroids: list[list[float]],
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Coarse quantization: nearest (max cosine) centroid index per row —
     one pass, R fused dot products per row."""
+    v = F.col("embedding")
     sims = F.array(
         *[
-            _dot_lit(F.col(vec_col), c)
-            / (_norm(F.col(vec_col)) * F.lit(math.sqrt(sum(x * x for x in c)) or 1.0))
+            _dot_lit(v, c) / (_norm(v) * F.lit(math.sqrt(sum(x * x for x in c)) or 1.0))
             for c in centroids
         ]
     )
@@ -216,11 +209,11 @@ def ivf_assign(
 
 
 def deterministic_centroids(
-    df: DataFrame, r: int = 16, id_col: str = "vec_id", vec_col: str = "embedding"
+    df: DataFrame, r: int = 16
 ) -> list[list[float]]:
     """Deterministic seed centroids: the r lowest-id vectors (a k-means
     refinement round is an optional improvement, not a correctness need)."""
-    rows = df.orderBy(id_col).limit(r).select(vec_col).collect()
+    rows = df.orderBy("vec_id").limit(r).select("embedding").collect()
     return [[float(x) for x in row[0]] for row in rows]
 
 
@@ -228,7 +221,6 @@ def kmeans_refine(
     df: DataFrame,
     centroids: list[list[float]],
     iters: int = 2,
-    vec_col: str = "embedding",
 ) -> list[list[float]]:
     """Lloyd refinement of the seed centroids (cosine assignment, mean
     update). Per iteration: ONE distributed pass (R fused dot products
@@ -237,12 +229,12 @@ def kmeans_refine(
     dim = len(centroids[0])
     cents = [[float(x) for x in c] for c in centroids]
     for _ in range(iters):
-        assigned = ivf_assign(df, cents, vec_col)
+        assigned = ivf_assign(df, cents)
         rows = (
             assigned.groupBy("_list")
             .agg(
                 *[
-                    F.avg(F.col(vec_col)[i].cast("double")).alias(f"c{i}")
+                    F.avg(F.col("embedding")[i].cast("double")).alias(f"c{i}")
                     for i in range(dim)
                 ]
             )
@@ -259,8 +251,6 @@ def ivf_topk(
     centroids: list[list[float]],
     k: int = 10,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF ANN: probe the n_probe centroid lists nearest to the query."""
     qn = math.sqrt(sum(x * x for x in qvec)) or 1.0
@@ -272,9 +262,9 @@ def ivf_topk(
         ),
     )
     probe_lists = scored[:n_probe]
-    assigned = ivf_assign(df, centroids, vec_col)
+    assigned = ivf_assign(df, centroids)
     cand = assigned.filter(F.col("_list").isin(probe_lists))
-    return cosine_topk(cand, qvec, k, id_col, vec_col)
+    return cosine_topk(cand, qvec, k)
 
 
 def embedding_near_duplicates(
@@ -282,11 +272,7 @@ def embedding_near_duplicates(
     dim: int,
     threshold: float = 0.95,
     n_planes: int = 6,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
     probe_hamming: int = 1,
-    probe_partitions: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs: (id_a, id_b, cosine) with
     bucket-hamming <= probe_hamming AND exact cosine >= threshold.
@@ -304,19 +290,14 @@ def embedding_near_duplicates(
     probe side is round-robin repartitioned first: with a broadcast
     build side the candidate cosines evaluate map-side on the probe
     stream, and an un-fanned scan would run every pair on one core
-    (measured 6.7s -> 0.6s on 2k vectors at local[32]). Pass
-    ``probe_partitions`` to pin the fan-out explicitly, or 0 to
-    disable (e.g. when the input is already well-partitioned and the
-    build side is too big to broadcast — then the join shuffles by
-    bucket anyway and a pre-shuffle would be pure overhead)."""
-    planes = _hyperplanes(dim, n_planes, seed)
-    if probe_partitions is None:
-        target = df.sparkSession.sparkContext.defaultParallelism
-        probe_partitions = target if df.rdd.getNumPartitions() < target else 0
+    (measured 6.7s -> 0.6s on 2k vectors at local[32])."""
+    planes = _hyperplanes(dim, n_planes)
+    target = df.sparkSession.sparkContext.defaultParallelism
+    probe_partitions = target if df.rdd.getNumPartitions() < target else 0
     b = df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        rp_lsh_bucket(F.col(vec_col), planes).alias("bucket"),
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("v"),
+        rp_lsh_bucket(F.col("embedding"), planes).alias("bucket"),
     )
     masks = _hamming_masks(n_planes, probe_hamming)
     probes = b.select(
@@ -379,28 +360,21 @@ def _trunc_div(s: int, n: int) -> int:
     return -((-s) // n) if s < 0 else s // n
 
 
-def kmeans_exact(
-    df: DataFrame,
-    k: int = 8,
-    iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 10**6,
-) -> DataFrame:
+def kmeans_exact(df: DataFrame, k: int = 8, iters: int = 3) -> DataFrame:
     """Lloyd k-means on the integer lattice: assignments, centroid
     updates, and inertia all in EXACT int64 arithmetic, so the full
     iterative algorithm is deterministic (no float sum-order effects)
     and an external SQL engine replays it bit-for-bit — the
     embedding-clustering primitive behind semantic dedup / IVF list
-    building, here with a provable answer. Returns (id_col, cluster,
+    building, here with a provable answer. Returns (vec_id, cluster,
     dist) after ``iters`` Lloyd rounds.
 
-    Protocol: coordinates quantize to round(x*scale) bigints; seeds
+    Protocol: coordinates quantize to round(x*1e6) bigints; seeds
     are the k lowest-id vectors; assignment is argmin exact squared L2
     with lowest-index tie-break; updates are per-dimension
     truncate-toward-zero integer mean (Spark div == DuckDB // on
     bigint); empty clusters keep their previous centroid. Quantization
-    at the default scale perturbs squared distances by ~1e-6
+    at that scale perturbs squared distances by ~1e-6
     relative — immaterial for cluster assignment, decisive for
     verifiability.
 
@@ -413,13 +387,13 @@ def kmeans_exact(
     if k < 1 or iters < 0:
         raise ValueError("k >= 1 and iters >= 0 required")
     sv = df.select(
-        F.col(id_col), _scaled_vec(F.col(vec_col), scale).alias("_sv")
+        F.col("vec_id"), _scaled_vec(F.col("embedding"), 10**6).alias("_sv")
     )
     # one job seeds the centroids AND reveals the dimensionality (no
     # separate first() probe); the per-pass source re-read is a cheap
     # column-pruned scan, so no checkpoint either — job count is
     # 1 + iters + 1, the floor for driver-coordinated Lloyd
-    seeds = sv.orderBy(id_col).limit(k).collect()
+    seeds = sv.orderBy("vec_id").limit(k).collect()
     if not seeds:
         raise ValueError("input is empty")
     cents = [[int(x) for x in r["_sv"]] for r in seeds]
@@ -455,7 +429,7 @@ def kmeans_exact(
         }
         cents = [new.get(i, cents[i]) for i in range(len(cents))]
     return sv.withColumn("_b", argmin_struct()).select(
-        id_col,
+        "vec_id",
         F.col("_b.i").cast("int").alias("cluster"),
         F.col("_b.d").alias("dist"),
     )
@@ -481,8 +455,6 @@ def pq_train(
     m_sub: int = 4,
     k: int = 4,
     iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     scale: int = 10**6,
 ) -> list[list[list[int]]]:
     """Product-quantization codebooks: split each scaled vector into
@@ -503,8 +475,8 @@ def pq_train(
     if k < 1 or iters < 0 or m_sub < 1:
         raise ValueError("k >= 1, iters >= 0, m_sub >= 1 required")
     sv = df.select(
-        F.col(id_col).alias("_id"),
-        _scaled_vec(F.col(vec_col), scale).alias("_sv"),
+        F.col("vec_id").alias("_id"),
+        _scaled_vec(F.col("embedding"), scale).alias("_sv"),
     )
     seeds = sv.orderBy("_id").limit(k).collect()
     if not seeds:
@@ -555,11 +527,9 @@ def pq_train(
 def pq_encode(
     df: DataFrame,
     books: list[list[list[int]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     scale: int = 10**6,
 ) -> DataFrame:
-    """``(id_col, codes:array<int>)`` — nearest-codebook-entry index
+    """``(vec_id, codes:array<int>)`` — nearest-codebook-entry index
     per subspace. Pure map (one projection of m_sub fused argmin
     expressions, JVM codegen): dim floats compress to m_sub small ints
     per row, the ~dim/m_sub-fold index-size reduction that makes
@@ -567,12 +537,12 @@ def pq_encode(
     m_sub, d = len(books), len(books[0][0])
     codes = F.array(*[
         _argmin_struct(
-            F.slice(_scaled_vec(F.col(vec_col), scale), s * d + 1, d),
+            F.slice(_scaled_vec(F.col("embedding"), scale), s * d + 1, d),
             books[s],
         )["i"].cast("int")
         for s in range(m_sub)
     ])
-    return df.select(F.col(id_col), codes.alias("codes"))
+    return df.select(F.col("vec_id"), codes.alias("codes"))
 
 
 def pq_topk(
@@ -580,8 +550,6 @@ def pq_topk(
     books: list[list[list[int]]],
     q_scaled: list[int],
     topk: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     scale: int = 10**6,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k: per subspace the exact squared
@@ -589,7 +557,7 @@ def pq_topk(
     precomputed driver-side into an m_sub x k literal lookup table, so
     the scan costs m_sub array lookups + one add chain per row (no
     per-row distance math), then TakeOrderedAndProject cuts to
-    ``topk`` by (approx dist, id). Returns ``(id_col, adist)`` —
+    ``topk`` by (approx dist, id). Returns ``(vec_id, adist)`` —
     BIGINT, oracle-exact. At 100 TB the scan reads only the codes
     column of the encoded table; here encode fuses into the same pass
     for a self-contained operator."""
@@ -602,15 +570,15 @@ def pq_topk(
         [_sq_dist(q_scaled[s * d:(s + 1) * d], cent) for cent in books[s]]
         for s in range(m_sub)
     ]
-    enc = pq_encode(df, books, id_col, vec_col, scale)
+    enc = pq_encode(df, books, scale=scale)
     adist = None
     for s in range(m_sub):
         lut = F.array(*[F.lit(int(v)).cast("bigint") for v in luts[s]])
         term = F.element_at(lut, F.col("codes")[s] + 1)
         adist = term if adist is None else adist + term
     return (
-        enc.select(F.col(id_col), adist.alias("adist"))
-        .orderBy(F.col("adist").asc(), F.col(id_col).asc())
+        enc.select(F.col("vec_id"), adist.alias("adist"))
+        .orderBy(F.col("adist").asc(), F.col("vec_id").asc())
         .limit(topk)
     )
 
@@ -620,9 +588,6 @@ def semantic_dedup(
     k: int = 8,
     iters: int = 2,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 10**6,
     max_cluster: int | None = 100_000,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): cluster embeddings with exact
@@ -637,7 +602,7 @@ def semantic_dedup(
     the exact int64 lattice distance as the metric and the smaller id
     winning ties, so the verdicts are engine-portable.
 
-    Returns one row per input row: ``(id_col, cluster, centroid_dist,
+    Returns one row per input row: ``(vec_id, cluster, centroid_dist,
     n_dups, kept)`` where n_dups counts within-cluster neighbors with
     cosine >= threshold and kept=false iff some such neighbor is
     strictly greater under (centroid_dist, then lower id). The drop
@@ -656,14 +621,12 @@ def semantic_dedup(
     """
     if not (0.0 <= threshold <= 1.0):
         raise ValueError("threshold must be in [0, 1]")
-    lab = kmeans_exact(
-        df, k=k, iters=iters, id_col=id_col, vec_col=vec_col, scale=scale
-    )
+    lab = kmeans_exact(df, k=k, iters=iters)
     v = (
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
+        df.select(F.col("vec_id").alias("_id"), F.col("embedding").alias("_v"))
         .join(
             lab.select(
-                F.col(id_col).alias("_id"), "cluster",
+                F.col("vec_id").alias("_id"), "cluster",
                 F.col("dist").alias("_d"),
             ),
             "_id",
@@ -717,7 +680,7 @@ def semantic_dedup(
     return (
         v.join(per, v["_id"] == per["_ida"], "left")
         .select(
-            F.col("_id").alias(id_col),
+            F.col("_id").alias("vec_id"),
             "cluster",
             F.col("_d").alias("centroid_dist"),
             F.coalesce("n_dups", F.lit(0)).alias("n_dups"),

@@ -20,15 +20,15 @@ LANG_MARKERS = {
 BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
 
 
-def token_counts(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_counts(df: DataFrame) -> DataFrame:
     """Whitespace tokens and BPE-ish regex tokens per document."""
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    bpe = F.regexp_extract_all(F.col(text_col), F.lit(BPE_RE), 0)
+    words = F.split(F.trim(F.col("text")), r"\s+")
+    bpe = F.regexp_extract_all(F.col("text"), F.lit(BPE_RE), 0)
     return df.withColumns(
         {
             "n_words": F.size(words),
             "n_bpe_tokens": F.size(bpe),
-            "n_bytes": F.octet_length(text_col),
+            "n_bytes": F.octet_length("text"),
         }
     )
 
@@ -49,9 +49,9 @@ def lang_scores(text: F.Column) -> F.Column:
     return F.map_from_entries(F.array(*entries))
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Predicted language = argmax marker ratio, 'unk' when all zero."""
-    scores = lang_scores(F.col(text_col))
+    scores = lang_scores(F.col("text"))
     entries = F.map_entries(scores)
     best = F.aggregate(
         entries,
@@ -63,10 +63,10 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Composite quality in [0,1]: length band, word-uniqueness,
     alpha ratio, stopword presence — the usual cheap pretraining filters."""
-    text = F.col(text_col)
+    text = F.col("text")
     words = F.split(F.lower(F.trim(text)), r"\s+")
     n_words = F.greatest(F.size(words), F.lit(1))
     uniq_ratio = F.size(F.array_distinct(words)) / n_words
@@ -85,16 +85,9 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("quality", score)
 
 
-def fingerprint(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = 5,
-    keep: int = 8,
-    portable: bool = False,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Winnowing-style document fingerprint: k-word rolling shingle
-    hashes -> keep the ``keep`` smallest DISTINCT (a deterministic min-k
+def fingerprint(df: DataFrame, portable: bool = False) -> DataFrame:
+    """Winnowing-style document fingerprint: 5-word rolling shingle
+    hashes -> keep the 8 smallest DISTINCT (a deterministic min-k
     sketch; two docs sharing most content share most of the sketch).
 
     Hot path: dedup.shingle_hash_rows (words hashed once, window-lead
@@ -103,16 +96,16 @@ def fingerprint(
     sort + slice per doc (reuses the rows' id partitioning), then one
     join back onto df. ``portable=True`` swaps in the md5-based word
     hash so a DuckDB oracle reproduces the sketch bit-exactly. Docs
-    shorter than k words sketch to the empty list (key = md5(''))."""
+    shorter than 5 words sketch to the empty list (key = md5(''))."""
     from emf_spark.datax.dedup import portable_word_hash, shingle_hash_rows
 
     rows = shingle_hash_rows(
-        df, text_col, id_col, k, portable_word_hash if portable else None
+        df, k=5, word_hash=portable_word_hash if portable else None
     )
     sk = rows.groupBy("id").agg(
-        F.slice(F.array_sort(F.collect_set("h")), 1, keep).alias("_fp")
+        F.slice(F.array_sort(F.collect_set("h")), 1, 8).alias("_fp")
     )
-    out = df.join(sk.withColumnRenamed("id", id_col), id_col, "left")
+    out = df.join(sk.withColumnRenamed("id", "doc_id"), "doc_id", "left")
     fp = F.coalesce(F.col("_fp"), F.array().cast("array<bigint>"))
     return (
         out.withColumn("fingerprint", fp)
@@ -128,9 +121,7 @@ def fingerprint(
     )
 
 
-def repetition_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", word_hash=None
-) -> DataFrame:
+def repetition_stats(df: DataFrame, word_hash=None) -> DataFrame:
     """Gopher/MassiveText-style repetition signals per document:
 
     - ``dup_word_frac``: 1 - distinct words / words (a high value means
@@ -145,12 +136,12 @@ def repetition_stats(
     """
     from emf_spark.datax.dedup import normalized, shingle_hash_rows
 
-    words = F.split(normalized(F.col(text_col)), " ")
+    words = F.split(normalized(F.col("text")), " ")
     lines = F.filter(
-        F.split(F.col(text_col), "\n"), lambda l: F.trim(l) != ""
+        F.split(F.col("text"), "\n"), lambda l: F.trim(l) != ""
     )
     base = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.round(
             F.when(
                 F.size(words) > 0,
@@ -166,7 +157,7 @@ def repetition_stats(
             6,
         ).alias("dup_line_frac"),
     )
-    bi = shingle_hash_rows(df, text_col, id_col, k=2, word_hash=word_hash)
+    bi = shingle_hash_rows(df, k=2, word_hash=word_hash)
     per = bi.groupBy("id", "h").agg(F.count(F.lit(1)).alias("c"))
     top = per.groupBy("id").agg(
         F.round(F.max("c") / F.sum("c"), 6).alias("top_bigram_frac")
@@ -174,34 +165,28 @@ def repetition_stats(
     return (
         base.join(top, "id", "left")
         .withColumn("top_bigram_frac", F.coalesce("top_bigram_frac", F.lit(0.0)))
-        .withColumnRenamed("id", id_col)
+        .withColumnRenamed("id", "doc_id")
     )
 
 
-def bm25_vs_terms(
-    df: DataFrame,
-    terms: DataFrame,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def bm25_vs_terms(df: DataFrame, terms: DataFrame) -> DataFrame:
     """Okapi BM25 score of every document against a bag of query terms
     (``terms``: one column ``term``). Classic retrieval scoring —
     idf(t) = ln(1 + (N - df + 0.5)/(df + 0.5)),
-    tf-part = tf*(k1+1) / (tf + k1*(1 - b + b*len/avglen)).
+    tf-part = tf*(k1+1) / (tf + k1*(1 - b + b*len/avglen)), with
+    k1 = 1.2 and b = 0.75.
 
     Fully in-plan: N and avg doc length ride along as a 1-row broadcast
     (no driver-side action); terms join is a broadcast semi-filter.
     Per-doc summation over term contributions is ORDER-DETERMINISTIC
     (contributions sorted by term, left-fold double add) so an external
     engine summing in the same order reproduces the score bit-for-bit.
-    Returns (id_col, bm25) for docs matching >= 1 term."""
+    Returns (doc_id, bm25) for docs matching >= 1 term."""
     from emf_spark.datax.dedup import normalized
 
     words = df.select(
-        F.col(id_col).alias("id"),
-        F.split(normalized(F.col(text_col)), " ").alias("w"),
+        F.col("doc_id").alias("id"),
+        F.split(normalized(F.col("text")), " ").alias("w"),
     ).select("id", F.size("w").alias("dl"), F.explode("w").alias("term"))
     corpus = words.groupBy().agg(
         F.count_distinct("id").alias("n_docs"),
@@ -221,11 +206,11 @@ def bm25_vs_terms(
                 + (F.col("n_docs") - F.col("df") + F.lit(0.5))
                 / (F.col("df") + F.lit(0.5))
             )
-            * (F.col("tf") * F.lit(k1 + 1.0))
+            * (F.col("tf") * F.lit(2.2))
             / (
                 F.col("tf")
-                + F.lit(k1)
-                * (F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl"))
+                + F.lit(1.2)
+                * (F.lit(0.25) + F.lit(0.75) * F.col("dl") / F.col("avgdl"))
             ),
         )
     )
@@ -239,7 +224,7 @@ def bm25_vs_terms(
                 lambda acc, x: acc + x["c"],
             ).alias("bm25")
         )
-        .select(F.col("id").alias(id_col), F.round("bm25", 6).alias("bm25"))
+        .select(F.col("id").alias("doc_id"), F.round("bm25", 6).alias("bm25"))
     )
 
 
@@ -249,7 +234,7 @@ DOMAIN_RE = r"https?://([^/\s:]+)"
 
 
 def url_domain_stats(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
+    df: DataFrame, text_col: str = "text"
 ) -> DataFrame:
     """Per-domain URL statistics: (domain, n_urls, n_docs).
 
@@ -261,7 +246,7 @@ def url_domain_stats(
     the skew cost is a map-side combine, not a single hot reducer
     holding raw rows."""
     urls = df.select(
-        F.col(id_col).alias("_doc"),
+        F.col("doc_id").alias("_doc"),
         F.explode(
             F.regexp_extract_all(F.col(text_col), F.lit(URL_RE), 0)
         ).alias("url"),
@@ -310,9 +295,7 @@ def vocab_topk(
     )
 
 
-def bigram_lm_score(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def bigram_lm_score(df: DataFrame) -> DataFrame:
     """Per-document fluency under the corpus's own bigram MLE model:
     the mean conditional probability p(w_i | w_{i-1}) = c2(w1,w2) /
     c1(w1-as-prefix) over the doc's bigram positions. Low scores flag
@@ -333,7 +316,7 @@ def bigram_lm_score(
     """
     from emf_spark.datax.dedup import normalized
 
-    w = F.split(normalized(F.col(text_col)), " ")
+    w = F.split(normalized(F.col("text")), " ")
     n = F.size(w)
     pairs = F.when(
         n >= 2,
@@ -343,7 +326,7 @@ def bigram_lm_score(
         ),
     ).otherwise(F.array())
     big = df.select(
-        F.col(id_col).alias("doc_id"), F.explode(pairs).alias("p")
+        "doc_id", F.explode(pairs).alias("p")
     ).select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     model = big.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c2"))
     prefix = model.groupBy("w1").agg(F.sum("c2").alias("c1"))
@@ -370,7 +353,6 @@ def bigram_lm_score(
 
 def bpe_train(
     df: DataFrame,
-    text_col: str = "text",
     n_merges: int = 50,
     min_pair_count: int = 2,
 ):
@@ -391,7 +373,7 @@ def bpe_train(
     pair reaches ``min_pair_count``."""
     toks = df.select(
         F.explode(
-            F.split(F.lower(F.col(text_col)), r"[^a-z0-9']+")
+            F.split(F.lower(F.col("text")), r"[^a-z0-9']+")
         ).alias("word")
     ).filter(F.col("word") != "")
     vocab = (
@@ -449,8 +431,6 @@ def bpe_train(
 
 def inverted_index(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     max_postings: int = 20,
     min_df: int = 1,
 ) -> DataFrame:
@@ -475,9 +455,9 @@ def inverted_index(
     if max_postings <= 0:
         raise ValueError("max_postings must be positive")
     toks = df.select(
-        F.col(id_col).alias("_doc"),
+        F.col("doc_id").alias("_doc"),
         F.explode(
-            F.split(F.lower(F.col(text_col)), r"[^a-z0-9']+")
+            F.split(F.lower(F.col("text")), r"[^a-z0-9']+")
         ).alias("token"),
     ).filter(F.col("token") != "")
     tf = toks.groupBy("token", "_doc").agg(F.count(F.lit(1)).alias("_tf"))
@@ -546,7 +526,6 @@ def bpe_apply(merges: list[tuple[str, str]]):
 def bpe_encode_corpus(
     df: DataFrame,
     merges: list[tuple[str, str]],
-    text_col: str = "text",
 ) -> DataFrame:
     """Corpus token-frequency table under an ordered BPE merge list:
     (token, cnt) for every symbol the encoded corpus contains.
@@ -559,7 +538,7 @@ def bpe_encode_corpus(
     vocab-cardinality."""
     toks = df.select(
         F.explode(
-            F.split(F.lower(F.col(text_col)), r"[^a-z0-9']+")
+            F.split(F.lower(F.col("text")), r"[^a-z0-9']+")
         ).alias("word")
     ).filter(F.col("word") != "")
     vocab = toks.groupBy("word").agg(F.count(F.lit(1)).alias("_cnt"))
@@ -575,8 +554,6 @@ def chunk_documents(
     df: DataFrame,
     chunk_tokens: int = 128,
     stride: int | None = None,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     min_tokens: int = 1,
 ) -> DataFrame:
     """Split documents into fixed-size overlapping token windows — the
@@ -600,11 +577,11 @@ def chunk_documents(
     if stride < 1:
         raise ValueError("stride must be >= 1")
     words = F.split(
-        F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "), " "
+        F.regexp_replace(F.trim(F.col("text")), r"\s+", " "), " "
     )
     n = F.size(words)
     # blank/whitespace-only text splits to [''] (size 1) — emit nothing
-    has_text = F.length(F.trim(F.col(text_col))) > 0
+    has_text = F.length(F.trim(F.col("text"))) > 0
     starts = F.when(
         has_text & (n >= 1), F.sequence(F.lit(0), n - 1, F.lit(stride))
     ).otherwise(F.array().cast("array<int>"))
@@ -620,8 +597,8 @@ def chunk_documents(
         ),
     )
     return (
-        df.select(F.col(id_col), F.explode(chunks).alias("_c"))
-        .select(id_col, "_c.chunk_id", "_c.start_tok", "_c.chunk", "_c.n_tokens")
+        df.select(F.col("doc_id"), F.explode(chunks).alias("_c"))
+        .select("doc_id", "_c.chunk_id", "_c.start_tok", "_c.chunk", "_c.n_tokens")
         .filter(F.col("n_tokens") >= min_tokens)
     )
 
@@ -651,8 +628,6 @@ def ascii_fold(df: DataFrame, text_col: str = "text",
 
 def collocations(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     window: int = 3,
     min_count: int = 5,
     top: int = 50,
@@ -682,9 +657,9 @@ def collocations(
         raise ValueError("window must be >= 1")
     from emf_spark.datax.dedup import normalized
 
-    words = F.split(normalized(F.col(text_col)), " ")
+    words = F.split(normalized(F.col("text")), " ")
     tok = (
-        df.select(F.col(id_col).alias("id"), words.alias("ws"))
+        df.select(F.col("doc_id").alias("id"), words.alias("ws"))
         .filter(F.length(F.array_join("ws", "")) > 0)
         .select("id", F.posexplode("ws").alias("pos", "w"))
     )
@@ -721,8 +696,6 @@ def collocations(
 
 def keywords(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     top: int = 5,
 ) -> DataFrame:
     """Per-document keyword extraction: top-``top`` tokens per doc by
@@ -753,9 +726,9 @@ def keywords(
 
     from emf_spark.datax.dedup import normalized
 
-    words = F.split(normalized(F.col(text_col)), " ")
+    words = F.split(normalized(F.col("text")), " ")
     tok = (
-        df.select(F.col(id_col).alias("doc_id"), words.alias("ws"))
+        df.select("doc_id", words.alias("ws"))
         .filter(F.length(F.array_join("ws", "")) > 0)
         .select("doc_id", F.explode("ws").alias("w"))
     )

@@ -13,7 +13,7 @@ exactly these counters.
 Design rules shared by every function here:
 
 - **Integer lattice, exact oracles.** Gauge doubles are scaled to
-  integer cents (``round(value * scale)`` → BIGINT) at the boundary,
+  integer cents (``round(value * 100)`` → BIGINT) at the boundary,
   every subsequent step is integer arithmetic, and at most one final
   double division happens after aggregation — so DuckDB replays every
   row bit-for-bit and the driver's zero-tolerance hash compare holds.
@@ -35,11 +35,11 @@ from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 
-def _scaled(value_col: str, scale: int) -> Column:
-    """Gauge double -> integer lattice. ``round`` half-up on the
+def _scaled(value_col: str) -> Column:
+    """Gauge double -> integer cents. ``round`` half-up on the
     scaled double is IEEE-portable for 2-decimal fixtures; callers
     with adversarial decimals should pre-scale upstream."""
-    return F.round(F.col(value_col) * scale).cast("long")
+    return F.round(F.col(value_col) * 100).cast("long")
 
 
 def counter_increase(
@@ -48,7 +48,6 @@ def counter_increase(
     ts_col: str,
     value_col: str,
     tiebreak_col: str,
-    scale: int = 100,
 ) -> DataFrame:
     """Per-series reset-aware counter increase — PromQL ``increase()``
     over the full input range. For consecutive samples ``prev -> cur``
@@ -59,15 +58,14 @@ def counter_increase(
     growth before the range started is unknowable.
 
     Returns one row per series: ``(*key_cols, samples, resets,
-    increase_units, last_units)`` — all BIGINT on the ``scale``
-    lattice.
+    increase_units, last_units)`` — all BIGINT in integer cents.
 
     Scale shape: one window partitioned by the series key (per-series
     lag is the semantic unit of work), then a map-side-combinable
     aggregate on the same key — AQE reuses the window's hash
     partitioning, so the whole operator is a single shuffle."""
     w = Window.partitionBy(*key_cols).orderBy(ts_col, tiebreak_col)
-    v = _scaled(value_col, scale)
+    v = _scaled(value_col)
     prev = F.lag(v).over(w)
     inc = (
         F.when(prev.isNull(), F.lit(0))
@@ -98,7 +96,6 @@ def resample_ffill(
     value_col: str,
     tiebreak_col: str,
     step_seconds: int,
-    scale: int = 100,
 ) -> DataFrame:
     """Gap-fill each series onto a regular ``step_seconds`` grid and
     forward-fill missing buckets from the last observed value. Grid
@@ -128,7 +125,7 @@ def resample_ffill(
         bucket.alias("bucket_start"),
         F.struct(
             F.col(ts_col), F.col(tiebreak_col),
-            _scaled(value_col, scale).alias("_v"),
+            _scaled(value_col).alias("_v"),
         ).alias("_p"),
     )
     last_per_bucket = (
@@ -169,7 +166,6 @@ def ewma(
     tiebreak_col: str,
     alpha_num: int,
     alpha_den: int,
-    scale: int = 100,
 ) -> DataFrame:
     """Exponentially-weighted moving average per series, final value
     only, on the integer lattice: ``s_0 = x_0``; ``s_t = (alpha_num *
@@ -192,7 +188,7 @@ def ewma(
         *key_cols,
         F.struct(
             F.col(ts_col), F.col(tiebreak_col),
-            _scaled(value_col, scale).alias("_v"),
+            _scaled(value_col).alias("_v"),
         ).alias("_p"),
     )
     a, b, d = alpha_num, alpha_den - alpha_num, alpha_den
@@ -222,17 +218,16 @@ def burn_rate(
     error_pred: Column,
     short_seconds: int,
     long_seconds: int,
-    threshold_x: int = 2,
 ) -> DataFrame:
     """Multi-window SLO burn-rate flags: bucket events into SHORT
     windows, compare each short window's error ratio against the
     enclosing LONG window's ratio, and flag short windows burning
-    ``threshold_x`` times faster — the standard paging rule (short
+    twice as fast — the standard paging rule (short
     window confirms the long window's budget burn is current).
 
     Ratios stay exact: basis-point BIGINTs via ``errors * 10000 div
     total`` (truncating); the flag compares ``short_bp >
-    threshold_x * long_bp`` in integers. Returns one row per short
+    2 * long_bp`` in integers. Returns one row per short
     bucket: ``(bucket_start, total, errors, short_bp, long_bp,
     burning)``.
 
@@ -264,7 +259,7 @@ def burn_rate(
             bp(F.col("_le"), F.col("_lt")).alias("long_bp"),
             F.when(
                 bp(F.col("errors"), F.col("total"))
-                > threshold_x * bp(F.col("_le"), F.col("_lt")),
+                > 2 * bp(F.col("_le"), F.col("_lt")),
                 1,
             ).otherwise(0).alias("burning"),
         )
@@ -276,7 +271,6 @@ def mad_anomalies(
     key_cols: list[str],
     value_col: str,
     threshold_x: int = 3,
-    scale: int = 100,
 ) -> DataFrame:
     """Robust per-series anomaly detection: a sample is anomalous when
     ``|x - median| > threshold_x * MAD`` (MAD = median absolute
@@ -298,7 +292,7 @@ def mad_anomalies(
     if threshold_x <= 0:
         raise ValueError("threshold_x must be positive")
     wk = Window.partitionBy(*key_cols)
-    v = _scaled(value_col, scale)
+    v = _scaled(value_col)
     med = F.percentile(F.col("_v"), F.lit(0.5)).over(wk)
     dev = F.abs(F.col("_v") - F.col("_med"))
     mad = F.percentile(F.col("_dev"), F.lit(0.5)).over(wk)
@@ -406,12 +400,8 @@ def rate_limit(
 
 def apdex(
     df: DataFrame,
-    ts_col: str = "ts",
-    latency_col: str = "value",
-    group_cols: tuple[str, ...] = ("event_type",),
     threshold_cents: int = 5000,
     window_seconds: int = 3600,
-    scale: int = 100,
 ) -> DataFrame:
     """Apdex score per group and time window — the standard
     user-satisfaction SLO over a latency stream: ``satisfied`` =
@@ -420,9 +410,9 @@ def apdex(
     stays integer-exact in parts-per-million — ``apdex_ppm =
     (1e6 * (2*sat + tol)) div (2*total)`` — so the classic
     half-weight never touches a float and the verdict is bit-portable
-    across engines. Latencies compare on the ``scale`` integer
-    lattice (cents by default), same convention as the rest of this
-    module.
+    across engines. Latencies (``value``) compare in integer cents,
+    same convention as the rest of this module; rows group by
+    ``event_type`` and a window over ``ts``.
 
     Returns one row per (group, window): group cols, ``bucket_start``
     (epoch seconds), ``total/satisfied/tolerating/frustrated`` counts,
@@ -437,13 +427,13 @@ def apdex(
     """
     if threshold_cents <= 0 or window_seconds <= 0:
         raise ValueError("threshold_cents and window_seconds must be > 0")
-    u = F.unix_timestamp(F.col(ts_col))
-    x = _scaled(latency_col, scale)
+    u = F.unix_timestamp(F.col("ts"))
+    x = _scaled("value")
     t = F.lit(threshold_cents)
     return (
-        df.filter(F.col(latency_col).isNotNull())
+        df.filter(F.col("value").isNotNull())
         .groupBy(
-            *group_cols, (u - u % window_seconds).alias("bucket_start")
+            "event_type", (u - u % window_seconds).alias("bucket_start")
         )
         .agg(
             F.count(F.lit(1)).alias("total"),
@@ -454,7 +444,7 @@ def apdex(
             F.sum(F.when(x > t * 4, 1).otherwise(0)).alias("frustrated"),
         )
         .select(
-            *group_cols, "bucket_start", "total", "satisfied",
+            "event_type", "bucket_start", "total", "satisfied",
             "tolerating", "frustrated",
             F.expr(
                 "(1000000 * (2 * satisfied + tolerating)) div (2 * total)"
@@ -472,7 +462,6 @@ def cusum(
     target_cents: int,
     slack_cents: int,
     threshold_cents: int,
-    scale: int = 100,
 ) -> DataFrame:
     """Two-sided CUSUM change-point detector (Page 1954) per series —
     the sequential drift alarm SRE runbooks reach for when a latency or
@@ -492,7 +481,7 @@ def cusum(
     detector is two LINEAR window functions — a running sum and a
     running min over the same (series, order) window — never an
     iterative loop. Everything stays on the integer-cent lattice
-    (``round(value*scale)``), so DuckDB replays it bit-for-bit.
+    (``round(value*100)``), so DuckDB replays it bit-for-bit.
 
     Returns the series keys + ``(ts, tiebreak)`` + ``cusum_hi_cents``
     / ``cusum_lo_cents`` (the running statistics, always >= 0) and
@@ -507,14 +496,14 @@ def cusum(
     lag/ffill op here; a million series parallelize, and per-series
     work is the unavoidable sequential unit. No joins, no collect.
     """
-    if scale < 1 or threshold_cents < 1:
-        raise ValueError("scale and threshold_cents must be >= 1")
+    if threshold_cents < 1:
+        raise ValueError("threshold_cents must be >= 1")
     if slack_cents < 0:
         raise ValueError("slack_cents must be >= 0")
     for c in ("cusum_hi_cents", "cusum_lo_cents", "alarm_hi", "alarm_lo"):
         if c in df.columns:
             raise ValueError(f"column {c!r} collides with cusum outputs")
-    x = _scaled(value_col, scale)
+    x = _scaled(value_col)
     d_hi = x - F.lit(target_cents + slack_cents)
     d_lo = F.lit(target_cents - slack_cents) - x
     w = (

@@ -24,7 +24,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _fan(spark: SparkSession, df: DataFrame, mult: int = 2) -> DataFrame:
+def _fan(spark: SparkSession, df: DataFrame) -> DataFrame:
     """Round-robin fan-out for single-file scans feeding CPU-heavy
     hashing/regex chains: Spark splits scans by BYTES, which
     underestimates per-row compute, so a one-file table otherwise runs
@@ -32,7 +32,7 @@ def _fan(spark: SparkSession, df: DataFrame, mult: int = 2) -> DataFrame:
     embedding-dedup cosine stage). No-op when the scan already fans
     wide; results of every caller are partition-independent by
     construction (deterministic caps/folds), so this is pure layout."""
-    target = spark.sparkContext.defaultParallelism * mult
+    target = spark.sparkContext.defaultParallelism * 2
     return df.repartition(target) if df.rdd.getNumPartitions() < target else df
 
 
@@ -1070,7 +1070,7 @@ def q_dedup_simhash(spark, sf):
     ).orderBy("id_a", "id_b")
 
 
-def _sql_dedup_simhash(max_bucket: int = 200) -> str:
+def _sql_dedup_simhash() -> str:
     h = _PORT_HASH.format(s="wd")
     votes = ",\n    ".join(
         f"SUM(CASE WHEN (h >> {j}) & 1 = 1 THEN 1 ELSE -1 END) AS b{j}"
@@ -1100,7 +1100,7 @@ banded AS (
 ranked AS (
   SELECT *, ROW_NUMBER() OVER (PARTITION BY band, key ORDER BY doc_id) AS rnk
   FROM banded),
-head AS (SELECT * FROM ranked WHERE rnk <= {max_bucket}),
+head AS (SELECT * FROM ranked WHERE rnk <= 200),
 cand AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, a.sim AS sim_a, b.sim AS sim_b
   FROM head a JOIN head b
@@ -1109,7 +1109,7 @@ cand AS (
   SELECT m.doc_id AS id_a, o.doc_id AS id_b, m.sim AS sim_a, o.sim AS sim_b
   FROM ranked o JOIN ranked m
     ON m.band = o.band AND m.key = o.key AND m.rnk = 1
-  WHERE o.rnk > {max_bucket})
+  WHERE o.rnk > 200)
 SELECT DISTINCT id_a, id_b,
        CAST(bit_count(xor(sim_a, sim_b)) AS INTEGER) AS hamming
 FROM cand WHERE bit_count(xor(sim_a, sim_b)) <= 3
@@ -2849,13 +2849,12 @@ def q_ann_kmeans_clusters(spark, sf):
     return kmeans_exact(e, k=8, iters=2)
 
 
-def _sql_kmeans(k: int = 8, iters: int = 2, dim: int = 64,
-                scale: int = 10**6, source: str = "embeddings") -> str:
-    parts = _sql_kmeans_parts(k, iters, dim, scale, source)
+def _sql_kmeans() -> str:
+    parts = _sql_kmeans_parts(8, 2, 64, 10**6, "embeddings")
     body = ",\n".join(parts)
     return (
         f"WITH {body}\n"
-        f"SELECT vec_id, CAST(cluster AS INT) AS cluster, dist FROM a{iters}"
+        "SELECT vec_id, CAST(cluster AS INT) AS cluster, dist FROM a2"
     )
 
 
@@ -2929,22 +2928,23 @@ def q_ann_pq_topk(spark, sf):
     return pq_topk(e, books, q_scaled, topk=50)
 
 
-def _sql_pq(m_sub: int = 4, k: int = 4, iters: int = 2, dim: int = 64,
-            scale: int = 10**6, topk: int = 50, qid: int = 0) -> str:
-    d = dim // m_sub
+def _sql_pq() -> str:
+    """4 subspaces of the 64-d embeddings, 4 centroids each after 2
+    Lloyd rounds; the top 50 by ADC distance to vector 0."""
+    d = 64 // 4
     rng = f"range(1, {d + 1})"
-    parts = [f"""sv AS (
+    parts = ["""sv AS (
   SELECT vec_id, list_transform(embedding,
-           x -> CAST(round(CAST(x AS DOUBLE) * {scale}, 0) AS BIGINT)) AS sv
+           x -> CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT)) AS sv
   FROM embeddings)"""]
-    for s in range(m_sub):
+    for s in range(4):
         a, b = s * d + 1, (s + 1) * d
         parts.append(f"""x{s} AS (SELECT vec_id, sv[{a}:{b}] AS x FROM sv),
 c{s}_0 AS (
   SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS INT) AS cluster,
          x AS cl
-  FROM (SELECT vec_id, x FROM x{s} ORDER BY vec_id LIMIT {k}))""")
-        for n in range(iters + 1):
+  FROM (SELECT vec_id, x FROM x{s} ORDER BY vec_id LIMIT 4))""")
+        for n in range(3):
             parts.append(f"""a{s}_{n} AS (
   SELECT vec_id, x, cluster FROM (
     SELECT vec_id, x, cluster,
@@ -2955,7 +2955,7 @@ c{s}_0 AS (
                       i -> (v.x[i] - c.cl[i]) * (v.x[i] - c.cl[i])))
                       AS BIGINT) AS dist
           FROM x{s} v, c{s}_{n} c)) WHERE rn = 1)""")
-            if n == iters:
+            if n == 2:
                 break
             parts.append(f"""u{s}_{n} AS (
   SELECT cluster, UNNEST({rng}) AS i,
@@ -2974,25 +2974,25 @@ c{s}_{n + 1} AS (
   SELECT cluster, cl FROM c{s}_{n}
   WHERE cluster NOT IN (SELECT cluster FROM cr{s}_{n + 1}))""")
         parts.append(f"""q{s} AS (SELECT sv[{a}:{b}] AS x FROM sv
-                                  WHERE vec_id = {qid}),
+                                  WHERE vec_id = 0),
 lut{s} AS (
   SELECT c.cluster,
          CAST(list_sum(list_transform({rng},
               i -> (q.x[i] - c.cl[i]) * (q.x[i] - c.cl[i])))
               AS BIGINT) AS ld
-  FROM c{s}_{iters} c, q{s} q)""")
+  FROM c{s}_2 c, q{s} q)""")
     joins = " ".join(
-        f"JOIN a{s}_{iters} a{s} ON a0.vec_id = a{s}.vec_id" for s in range(1, m_sub)
+        f"JOIN a{s}_2 a{s} ON a0.vec_id = a{s}.vec_id" for s in range(1, 4)
     ) + " " + " ".join(
-        f"JOIN lut{s} l{s} ON a{s}.cluster = l{s}.cluster" for s in range(m_sub)
+        f"JOIN lut{s} l{s} ON a{s}.cluster = l{s}.cluster" for s in range(4)
     )
-    total = " + ".join(f"l{s}.ld" for s in range(m_sub))
+    total = " + ".join(f"l{s}.ld" for s in range(4))
     body = ",\n".join(parts)
     return (
         f"WITH {body}\n"
         f"SELECT a0.vec_id, ({total}) AS adist\n"
-        f"FROM a0_{iters} a0 {joins}\n"
-        f"ORDER BY adist, a0.vec_id LIMIT {topk}"
+        f"FROM a0_2 a0 {joins}\n"
+        "ORDER BY adist, a0.vec_id LIMIT 50"
     )
 
 
@@ -3704,19 +3704,19 @@ def q_emf_bloom_filter(spark, sf):
     )
 
 
-def _sql_bloom_filter(m_bits: int = 8192, depth: int = 3) -> str:
+def _sql_bloom_filter() -> str:
     def pos(d: str, val: str) -> str:
         return (
             f"CAST('0x' || substr(md5('bf{d}:' || CAST({val} AS VARCHAR)),"
-            f" 1, 14) AS BIGINT) % {m_bits}"
+            " 1, 14) AS BIGINT) % 8192"
         )
 
     bit_selects = " UNION ALL ".join(
-        f"SELECT {pos(d, 'k')} AS pos FROM keys" for d in range(depth)
+        f"SELECT {pos(d, 'k')} AS pos FROM keys" for d in range(3)
     )
     might = " AND ".join(
         f"({pos(d, 'c_custkey')}) IN (SELECT pos FROM bits)"
-        for d in range(depth)
+        for d in range(3)
     )
     return f"""
 WITH keys AS (SELECT DISTINCT o_custkey AS k FROM orders
@@ -3761,7 +3761,7 @@ def q_graph_pagerank(spark, sf):
     )
 
 
-def _sql_graph_pagerank(iters: int = 2) -> str:
+def _sql_graph_pagerank() -> str:
     floor = 15 * 10**9 // 100
     parts = ["""raw AS (
   SELECT 'c' || o.o_custkey AS s, 's' || l.l_suppkey AS d
@@ -3771,7 +3771,7 @@ e AS (SELECT DISTINCT s, d
 nodes AS (SELECT s AS node FROM e UNION SELECT d FROM e),
 deg AS (SELECT s, COUNT(*) AS deg FROM e GROUP BY 1),
 r0 AS (SELECT node, CAST(1000000000 AS BIGINT) AS rank FROM nodes)"""]
-    for n in range(1, iters + 1):
+    for n in range(1, 3):
         parts.append(f"""i{n} AS (
   SELECT e.d, CAST(SUM(r.rank // g.deg) AS BIGINT) AS inflow
   FROM e JOIN r{n - 1} r ON e.s = r.node JOIN deg g ON e.s = g.s
@@ -3782,7 +3782,7 @@ r{n} AS (
            AS rank
   FROM nodes n LEFT JOIN i{n} i ON n.node = i.d)""")
     body = ",\n".join(parts)
-    return f"WITH {body}\nSELECT node, rank AS pr FROM r{iters}"
+    return f"WITH {body}\nSELECT node, rank AS pr FROM r2"
 
 
 def q_basket_item_pairs(spark, sf):
@@ -5293,7 +5293,7 @@ def q_data_importance_votes(spark, sf):
     )
 
 
-def _sql_data_importance_votes(m: int = 4096) -> str:
+def _sql_data_importance_votes() -> str:
     B = 1_000_003
     acc = f"((wh[i] * {B} + wh[i + 1]) % {_P31})"
     return f"""
@@ -5304,7 +5304,7 @@ WITH words AS (SELECT doc_id, source, {_SQL_WORD_HASHES} AS wh
 grams AS (
   SELECT doc_id, source,
          unnest(list_transform(range(1, greatest(len(wh) - 1, 0) + 1),
-                i -> {acc} % {m})) AS b
+                i -> {acc} % 4096)) AS b
   FROM words),
 counts AS (
   SELECT b,
@@ -5314,8 +5314,8 @@ counts AS (
 tot AS (SELECT SUM(ct) AS nt, SUM(cr) AS nr FROM counts),
 votes AS (
   SELECT b,
-         CASE WHEN (ct + 1) * (nr + {m}) > (cr + 1) * (nt + {m}) THEN 1
-              WHEN (ct + 1) * (nr + {m}) < (cr + 1) * (nt + {m}) THEN -1
+         CASE WHEN (ct + 1) * (nr + 4096) > (cr + 1) * (nt + 4096) THEN 1
+              WHEN (ct + 1) * (nr + 4096) < (cr + 1) * (nt + 4096) THEN -1
               ELSE 0 END AS vote
   FROM counts, tot),
 per AS (
@@ -5505,10 +5505,9 @@ def q_dedup_semantic(spark, sf):
     )
 
 
-def _sql_dedup_semantic(k: int = 8, iters: int = 2, dim: int = 64,
-                        scale: int = 10**6, threshold: float = 0.95) -> str:
-    rng = f"range(1, {dim + 1})"
-    km = ",\n".join(_sql_kmeans_parts(k, iters, dim, scale, "synth"))
+def _sql_dedup_semantic(iters: int = 2) -> str:
+    rng = "range(1, 65)"
+    km = ",\n".join(_sql_kmeans_parts(8, iters, 64, 10**6, "synth"))
     return f"""
 WITH synth AS (
   SELECT vec_id,
@@ -5531,7 +5530,7 @@ nbr AS (
     list_sum(list_transform({rng}, i -> sx.embedding[i] * sy.embedding[i]))
     / (SQRT(list_sum(list_transform(sx.embedding, v -> v * v)))
        * SQRT(list_sum(list_transform(sy.embedding, v -> v * v)))),
-    6) >= {threshold}),
+    6) >= 0.95),
 per AS (
   SELECT ida, COUNT(*) AS n_dups,
          MAX(CASE WHEN db > da OR (db = da AND idb < ida)

@@ -62,12 +62,12 @@ def _round2(x: float) -> float:
 
 
 def _mk_aws(ts: int, dims_sets: list[list[str]], metrics: list[tuple[str, str]],
-            namespace: str = NAMESPACE, dim_key: str = "Dimensions") -> dict:
+            dim_key: str = "Dimensions") -> dict:
     return {
         "Timestamp": ts,
         "CloudWatchMetrics": [
             {
-                "Namespace": namespace,
+                "Namespace": NAMESPACE,
                 dim_key: dims_sets,
                 "Metrics": [{"Name": n, "Unit": u} for n, u in metrics],
             }

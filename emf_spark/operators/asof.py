@@ -33,16 +33,13 @@ def asof_join(
     key: str,
     left_ts: str = "ts",
     right_ts: str = "ts",
-    value_cols: list[str] | None = None,
     prefix: str = "",
 ) -> DataFrame:
-    """Left as-of join: all of ``left``'s columns plus ``value_cols``
-    from the latest ``right`` row with ``right_ts <= left_ts`` per
-    ``key`` (null when no such row). ``prefix`` prefixes the appended
+    """Left as-of join: all of ``left``'s columns plus the other
+    ``right`` columns from the latest ``right`` row with
+    ``right_ts <= left_ts`` per ``key`` (null when no such row). ``prefix`` prefixes the appended
     right columns to dodge collisions."""
-    value_cols = value_cols or [
-        c for c in right.columns if c not in (key, right_ts)
-    ]
+    value_cols = [c for c in right.columns if c not in (key, right_ts)]
     for c in ("_k", "_t", "_rv", "_src", "_rv_f"):
         if c in left.columns:
             raise ValueError(f"left column {c!r} collides with asof internals")

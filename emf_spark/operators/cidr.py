@@ -42,25 +42,21 @@ from pyspark.sql import DataFrame, Window, functions as F
 _RESERVED = ("_cidr_lo", "_cidr_hi", "_cidr_b", "_cidr_pick")
 
 
-def _guarded_prefix(prefix_col: str) -> F.Column:
+def _guarded_prefix() -> F.Column:
     """prefix_len outside [0, 32] is a corrupt dimension row — fail the
     job loudly (an out-of-range shift would otherwise silently wrap)."""
-    p = F.col(prefix_col).cast("int")
+    p = F.col("prefix_len").cast("int")
     return F.when((p >= 0) & (p <= 32), p).otherwise(
         F.raise_error(
             F.concat(
                 F.lit("cidr: prefix_len out of [0,32]: "),
-                F.col(prefix_col).cast("string"),
+                F.col("prefix_len").cast("string"),
             )
         ).cast("int")
     )
 
 
-def flatten_cidrs(
-    cidrs: DataFrame,
-    net_col: str = "net",
-    prefix_col: str = "prefix_len",
-) -> DataFrame:
+def flatten_cidrs(cidrs: DataFrame) -> DataFrame:
     """Compile (possibly nested) CIDR blocks into DISJOINT intervals
     ``(_cidr_lo, _cidr_hi, matched_prefix_len, attrs...)`` where each
     interval carries its longest-prefix winner's attributes.
@@ -88,14 +84,14 @@ def flatten_cidrs(
     2 x |blocks| rows, dimension-sized by this operator's precondition
     (the compiled result must broadcast). Facts never see a window.
     """
-    attrs = [c for c in cidrs.columns if c not in (net_col, prefix_col)]
+    attrs = [c for c in cidrs.columns if c not in ("net", "prefix_len")]
     bad = [c for c in cidrs.columns if c in _RESERVED]
     if bad:
         raise ValueError(f"cidr columns {bad} collide with cidr_enrich internals")
 
-    p = _guarded_prefix(prefix_col)
-    size = F.expr(f"shiftleft(cast(1 as bigint), 32 - cast({prefix_col} as int))")
-    net = F.col(net_col).cast("long")
+    p = _guarded_prefix()
+    size = F.expr("shiftleft(cast(1 as bigint), 32 - cast(prefix_len as int))")
+    net = F.col("net").cast("long")
     lo = (net - net % size).alias("_cidr_lo")
     blocks = cidrs.select(
         lo,
@@ -164,8 +160,6 @@ def cidr_enrich(
     facts: DataFrame,
     cidrs: DataFrame,
     ip_col: str = "ip",
-    net_col: str = "net",
-    prefix_col: str = "prefix_len",
 ) -> DataFrame:
     """Enrich ``facts`` with the attributes of the longest-prefix CIDR
     block containing ``ip_col`` (int64 IPv4). Left semantics: every
@@ -178,7 +172,7 @@ def cidr_enrich(
     interval bounds as residual predicates — at most one match per row
     by construction, zero fact-side shuffle, zero post-aggregate.
     """
-    flat = flatten_cidrs(cidrs, net_col=net_col, prefix_col=prefix_col)
+    flat = flatten_cidrs(cidrs)
     out_cols = [c for c in flat.columns if c not in ("_cidr_lo", "_cidr_hi")]
     clash = [c for c in out_cols if c in facts.columns]
     if clash:

@@ -12,11 +12,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 
-def enrich(df: DataFrame, lookup: DataFrame, default_sink: str = "archive") -> DataFrame:
+def enrich(df: DataFrame, lookup: DataFrame) -> DataFrame:
     """Left-join enrichment attributes; unknown sources route to
-    ``default_sink`` (the reference errors when no sink is configured,
+    the ``archive`` sink (the reference errors when no sink is configured,
     flush/flusher.go:22-24 — we side-route instead of failing the job)."""
     out = df.join(F.broadcast(lookup), "source", "left")
-    return out.withColumn("sink", F.coalesce(F.col("sink"), F.lit(default_sink)))
+    return out.withColumn("sink", F.coalesce(F.col("sink"), F.lit("archive")))
 
 

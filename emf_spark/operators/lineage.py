@@ -70,7 +70,6 @@ def write_events_resumable(
     spark: SparkSession,
     events: DataFrame,
     out_dir: str,
-    stage: str = "events",
 ) -> dict:
     """Resumable per-sink event write: skips manifest-completed
     (sink, window_start) cells, writes the rest partitioned by cell,
@@ -85,7 +84,7 @@ def write_events_resumable(
     manifest = Manifest(spark, out_dir)
     run_id = uuid.uuid4().hex[:12]
     started = time.time()
-    todo = pending_cells(events, manifest, stage).persist()
+    todo = pending_cells(events, manifest, "events").persist()
     path = os.path.join(out_dir, "events")
     written = ~F.col("dropped_oversize")
     try:
@@ -113,7 +112,7 @@ def write_events_resumable(
                 .parquet(path)
             )
             finished = time.time()
-            rows = [(stage, *c, started, finished, run_id, "done") for c in cells]
+            rows = [("events", *c, started, finished, run_id, "done") for c in cells]
             manifest.append(spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1))
     finally:
         todo.unpersist()

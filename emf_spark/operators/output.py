@@ -98,19 +98,19 @@ def _event_cols() -> tuple[Column, Column, Column]:
     )
 
 
-def write_events(df: DataFrame, out_dir: str, mode: str = "overwrite") -> tuple[str, str]:
+def write_events(df: DataFrame, out_dir: str) -> tuple[str, str]:
     """Per-sink event tables: parquet (structured, the 'Iceberg table'
     stand-in) + JSONL (the reference's file-sink format,
     flush/file.go:40-66). Single pass each, partitioned by sink."""
     pq_path = os.path.join(out_dir, "events")
-    df.filter(~F.col("dropped_oversize")).write.mode(mode).partitionBy(
+    df.filter(~F.col("dropped_oversize")).write.mode("overwrite").partitionBy(
         "sink"
     ).parquet(pq_path)
     txt_path = os.path.join(out_dir, "events_jsonl")
     (
         df.filter(~F.col("dropped_oversize"))
         .select("sink", F.col("event_json").alias("value"))
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("sink")
         .text(txt_path)
     )

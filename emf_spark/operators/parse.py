@@ -183,7 +183,7 @@ def dim_hash_expr(dims: Column) -> Column:
     )
 
 
-def parse_emf(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def parse_emf(df: DataFrame) -> DataFrame:
     """payload -> typed EMF columns. Adds:
 
     ``ts`` (epoch ms), ``cwm`` (valid projections), ``dim_names``,
@@ -191,7 +191,7 @@ def parse_emf(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     (array<struct<name, namespace, pairs:array<struct<v,c>>>>),
     ``valid`` (P1 predicate), ``error`` (reject reason or null).
     """
-    for step in _parse_steps(payload_col):
+    for step in _parse_steps("payload"):
         df = df.withColumns(step)
     return df.drop("_top", "_rec", "_pe")
 

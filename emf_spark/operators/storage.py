@@ -11,7 +11,6 @@ def compact_parquet(
     path: str,
     out_path: str,
     target_mb: int = 128,
-    sort_within_by: list[str] | None = None,
 ) -> int:
     """Rewrite a parquet directory into ~``target_mb`` files; returns
     the output file count.
@@ -20,11 +19,10 @@ def compact_parquet(
     (streaming/job.py appends per batch) leaves thousands of KB-scale
     files whose per-file open/footer cost dominates scans long before
     data volume does. Compaction = one read + one round-robin
-    repartition to ceil(bytes/target) + one write; ``sort_within_by``
-    adds a sortWithinPartitions so row-group min/max stats stay
-    selective after the rewrite. Writes to ``out_path`` — swapping it
-    over the source atomically is the caller's/catalog's job (an Iceberg
-    rewrite-files commit at cluster scale; a directory rename here)."""
+    repartition to ceil(bytes/target) + one write. Writes to
+    ``out_path`` — swapping it over the source atomically is the
+    caller's/catalog's job (an Iceberg rewrite-files commit at cluster
+    scale; a directory rename here)."""
     import math
 
     jvm = spark._jvm
@@ -32,10 +30,7 @@ def compact_parquet(
     fs = fs_path.getFileSystem(spark._jsc.hadoopConfiguration())
     total = fs.getContentSummary(fs_path).getLength()
     n = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(path).repartition(n)
-    if sort_within_by:
-        df = df.sortWithinPartitions(*sort_within_by)
-    df.write.mode("overwrite").parquet(out_path)
+    spark.read.parquet(path).repartition(n).write.mode("overwrite").parquet(out_path)
     out = jvm.org.apache.hadoop.fs.Path(out_path)
     return sum(
         1

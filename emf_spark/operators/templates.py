@@ -47,7 +47,6 @@ def mine_templates(
     df: DataFrame,
     line_col: str = "line",
     min_count: int = 1,
-    wildcard: str = WILDCARD,
 ) -> DataFrame:
     """Mine log templates from raw lines.
 
@@ -66,7 +65,7 @@ def mine_templates(
         .filter(F.length("m") > 0)
         .select(
             F.split(
-                F.regexp_replace("m", r"[^ ]*[0-9][^ ]*", wildcard), " "
+                F.regexp_replace("m", r"[^ ]*[0-9][^ ]*", WILDCARD), " "
             ).alias("ws")
         )
         .select(
@@ -87,7 +86,7 @@ def mine_templates(
             "head",
             "pos",
             F.when(F.col("lo") == F.col("hi"), F.col("lo"))
-            .otherwise(F.lit(wildcard))
+            .otherwise(F.lit(WILDCARD))
             .alias("tt"),
             "c_tok",
         )

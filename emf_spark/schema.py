@@ -11,51 +11,9 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-# _aws block: Timestamp (epoch ms) + CloudWatchMetrics projections.
-# Mirrors common/emf.go:14-28 (AWSMetadata / ProjectionDefinition /
-# MetricDefinition) in the reference.
-METRIC_DEF = T.StructType(
-    [
-        T.StructField("Name", T.StringType()),
-        T.StructField("Unit", T.StringType()),
-    ]
-)
-
-PROJECTION_DEF = T.StructType(
-    [
-        T.StructField("Namespace", T.StringType()),
-        T.StructField("Dimensions", T.ArrayType(T.ArrayType(T.StringType()))),
-        T.StructField("Metrics", T.ArrayType(METRIC_DEF)),
-    ]
-)
-
-AWS_SCHEMA = T.StructType(
-    [
-        T.StructField("Timestamp", T.LongType()),
-        T.StructField("CloudWatchMetrics", T.ArrayType(PROJECTION_DEF)),
-    ]
-)
-
-# Structured metric value — emf/metric.go:13-21 MetricValue. Counts come
-# in as doubles and truncate to long (metric.go:193-197,211-213).
-METRIC_VALUE_STRUCT = T.StructType(
-    [
-        T.StructField("Value", T.DoubleType()),
-        T.StructField("Values", T.ArrayType(T.DoubleType())),
-        T.StructField("Counts", T.ArrayType(T.DoubleType())),
-        T.StructField("Min", T.DoubleType()),
-        T.StructField("Max", T.DoubleType()),
-        T.StructField("Sum", T.DoubleType()),
-        T.StructField("Count", T.DoubleType()),
-    ]
-)
-
-# DDL strings for from_json (kept in sync with the StructTypes above).
-AWS_DDL = (
-    "struct<Timestamp:bigint,CloudWatchMetrics:array<struct<"
-    "Namespace:string,Dimensions:array<array<string>>,"
-    "Metrics:array<struct<Name:string,Unit:string>>>>>"
-)
+# Structured metric value — emf/metric.go:13-21 MetricValue, read with
+# from_json. Counts come in as doubles and truncate to long
+# (metric.go:193-197,211-213).
 METRIC_VALUE_DDL = (
     "struct<Value:double,Values:array<double>,Counts:array<double>,"
     "Min:double,Max:double,Sum:double,Count:double>"

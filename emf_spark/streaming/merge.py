@@ -164,9 +164,7 @@ def merge_partial_events(
     return output_op.events_json(assembled)
 
 
-def compact_events(
-    spark, out_dir: str, key_by_namespace: bool = False
-) -> str:
+def compact_events(spark, out_dir: str) -> str:
     """End-of-stream compaction: read the per-batch partial events a
     run_microbatch job appended under ``out_dir``/events, re-merge them
     exactly, and write one final event per group to
@@ -177,7 +175,7 @@ def compact_events(
     import os
 
     events = spark.read.parquet(os.path.join(out_dir, "events"))
-    final = merge_partial_events(events, key_by_namespace)
+    final = merge_partial_events(events)
     path = os.path.join(out_dir, "events_final")
     (
         final.filter(~F.col("dropped_oversize"))

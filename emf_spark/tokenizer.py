@@ -127,6 +127,6 @@ def _tok_batch(series: pd.Series) -> pd.Series:
 tokenize_udf = F.pandas_udf(_tok_batch, ArrayType(IntegerType()))
 
 
-def with_payload(df, tokens_col: str = "tokens", out_col: str = "payload"):
-    """Attach the detokenized JSON payload column."""
-    return df.withColumn(out_col, detokenize_udf(F.col(tokens_col)))
+def with_payload(df):
+    """Attach the detokenized JSON ``payload`` column of ``tokens``."""
+    return df.withColumn("payload", detokenize_udf(F.col("tokens")))

@@ -2235,12 +2235,15 @@ def test_read_store_propagates_corruption(spark, tmp_path):
     dd.minhash_incremental(b, str(bad), num_perm=32, bands=8).collect()
     for p in bad.rglob("*.parquet"):
         p.write_bytes(b"not a parquet file")
+    spark.catalog.clearCache()
     try:
         dd.minhash_incremental(b, str(bad), num_perm=32, bands=8).collect()
         raised = False
     except Exception:
         raised = True
     assert raised  # a broken store must NOT read as empty
+    # and the batch signatures it cached before the read are released
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_snapshot_diff_membership_only(spark):
