@@ -12,10 +12,10 @@ salted two-phase hash aggregation for the histogram core.
 Layout
 ------
 - ``session``    SparkSession factory with scale-tuned defaults
-- ``schema``     all StructTypes (EMF record, metric values, outputs)
+- ``schema``     input and lookup StructTypes, the metric-value parse DDL
 - ``tokenizer``  token <-> bytes contract (Arrow UDFs)
 - ``fixtures``   deterministic EMF corpus generator (seeded; no I/O deps)
-- ``lookup``     broadcast enrichment table (source -> sink/env)
+                 and the enrichment table ``lookup_df`` (source -> sink/env)
 - ``operators``  parse / enrich / route / aggregate / output / lineage
 - ``datax``      training-data ops: dedup, similarity, text stats,
                  multimodal column plumbing

@@ -73,15 +73,6 @@ def _collapse_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def exact_dedup(df: DataFrame) -> DataFrame:
-    """Exact dedup: one survivor (min id) per distinct normalized text."""
-    h = F.md5(normalized(F.col("text")))
-    return (
-        df.groupBy(h.alias("content_hash"))
-        .agg(F.min("doc_id").alias("keep_id"), F.count(F.lit(1)).alias("dup_count"))
-    )
-
-
 def _shingle_idx(n: F.Column, k: int) -> F.Column:
     """Start offsets 0..n-k; EMPTY for docs shorter than k words (so no
     partial shingles, and no out-of-range element_at under ANSI mode —
@@ -106,17 +97,17 @@ def _let(value: F.Column, body) -> F.Column:
     return F.element_at(F.transform(F.array(value), body), 1)
 
 
-def word_shingles(text: F.Column, k: int = 3) -> F.Column:
-    """Distinct k-word shingles as an array column; empty for docs with
-    fewer than k words (consistent with word_shingle_hashes). The word
+def word_shingles(text: F.Column) -> F.Column:
+    """Distinct 3-word shingles as an array column; empty for docs with
+    fewer than 3 words (consistent with word_shingle_hashes). The word
     array is let-bound so normalize+split run once per doc, not once
     per shingle index (see _let)."""
     return _let(
         F.split(normalized(text), " "),
         lambda words: F.array_distinct(
             F.transform(
-                _shingle_idx(F.size(words), k),
-                lambda i: F.concat_ws(" ", F.slice(words, i + 1, k)),
+                _shingle_idx(F.size(words), 3),
+                lambda i: F.concat_ws(" ", F.slice(words, i + 1, 3)),
             )
         ),
     )
@@ -311,8 +302,8 @@ def minhash_near_duplicates(
     ``pre_dedupe_exact`` collapses exact (normalized) duplicates to one
     representative before LSH — identical texts share every band, so a
     corpus with big duplicate clusters otherwise pays O(cluster^2) pairs
-    per band. Exact-dup membership is already available from
-    exact_dedup(); the near-dup pairs reported here relate cluster
+    per band. Exact-dup membership is a content-hash groupBy of the
+    normalized text; the near-dup pairs reported here relate cluster
     representatives (min id per distinct text)."""
     if pre_dedupe_exact:
         df = _collapse_exact(df, text_col, id_col)
@@ -471,8 +462,6 @@ def simhash64(text: F.Column) -> F.Column:
 
 def simhash_fingerprints(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_bits: int = 64,
     word_hash=None,
 ) -> DataFrame:
@@ -486,10 +475,8 @@ def simhash_fingerprints(
 
     wh = word_hash or F.xxhash64
     base = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(
-            F.array_distinct(F.split(normalized(F.col(text_col)), " "))
-        ).alias("w"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.array_distinct(F.split(normalized(F.col("text")), " "))).alias("w"),
     ).select("id", wh(F.col("w")).alias("h"))
     aggs = [
         F.sum(
@@ -531,8 +518,8 @@ def simhash_near_duplicates(
     ``pre_dedupe_exact=True`` collapses exact (normalized) duplicates
     to one representative (min id) before fingerprinting — identical
     texts share ALL bands, the worst degenerate-bucket source; exact
-    membership is recoverable via exact_dedup(), matching
-    minhash_near_duplicates semantics. Pass max_bucket=None +
+    membership is a content-hash groupBy of the normalized text,
+    matching minhash_near_duplicates semantics. Pass max_bucket=None +
     pre_dedupe_exact=False for the exhaustive all-members mode. Both
     modes are deterministic (row_number by id), so either is
     ANSI-SQL-oracle-checkable."""
@@ -826,8 +813,6 @@ def write_signature_store(
     df: DataFrame,
     path: str,
     num_perm: int = 64,
-    shingle_k: int = 3,
-    seed: int = 42,
     mode: str = "overwrite",
 ) -> None:
     """Materialize minhash signatures (id, sig:array<bigint>) to parquet.
@@ -839,7 +824,9 @@ def write_signature_store(
     (num_perm x 8 bytes) regardless of document size. Written
     partitioned by ``_ingest`` (min id of the frame) — the same layout
     minhash_incremental maintains, so a bootstrap store and
-    incrementally-grown stores are interchangeable."""
+    incrementally-grown stores are interchangeable. The signatures use
+    minhash_signatures' default shingle_k (3) and seed (42), which the
+    store's meta records."""
     spark = df.sparkSession
     # full overwrite = store REBUILD: re-pin meta to the new params.
     # Any mode that can leave EXISTING rows in place (append, or
@@ -854,14 +841,11 @@ def write_signature_store(
     )
     rebuild = mode == "overwrite" and not dynamic
     if not rebuild:
-        _store_meta(spark, path, num_perm, shingle_k, seed, None,
-                    write_if_absent=False)
+        _store_meta(spark, path, num_perm, 3, 42, None, write_if_absent=False)
     # persist: the min-id collect AND the write otherwise each run the
     # full shingle+permutation aggregation — ~all of minhash's cost,
     # paid twice per bootstrap (review finding)
-    sigs = minhash_signatures(
-        df, num_perm=num_perm, shingle_k=shingle_k, seed=seed
-    ).persist()
+    sigs = minhash_signatures(df, num_perm=num_perm).persist()
     try:
         key = sigs.agg(F.min("id")).collect()[0][0]
         (
@@ -872,7 +856,7 @@ def write_signature_store(
         )
     finally:
         sigs.unpersist()
-    _store_meta(spark, path, num_perm, shingle_k, seed, None,
+    _store_meta(spark, path, num_perm, 3, 42, None,
                 write_if_absent=True, overwrite=rebuild)
 
 
@@ -904,7 +888,7 @@ def minhash_incremental(
     the incremental union is then a superset-consistent cover; pinned
     by the parity pytest). ``pre_dedupe_exact`` is deliberately absent:
     exact-dup collapse needs the old TEXT, which the store does not
-    carry — run exact_dedup upstream of ingest instead.
+    carry — collapse exact duplicates upstream of ingest instead.
 
     ``update_store`` persists the batch's signatures into a partition
     keyed by the batch's min id (deterministic per batch) with DYNAMIC

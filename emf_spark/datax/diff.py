@@ -155,12 +155,11 @@ def apply_changes(
     changes: DataFrame,
     key_cols: list[str],
     seq_col: str,
-    op_col: str = "op",
 ) -> DataFrame:
     """CDC merge — the Delta/Iceberg MERGE pattern as a pure DataFrame
     program: fold a change feed into a keyed snapshot and return the
     new snapshot. Change rows carry the FULL new row (not per-column
-    patches): ``key_cols + [seq_col, op_col]`` plus every other column
+    patches): ``key_cols + [seq_col, "op"]`` plus every other column
     of ``base``, with op
     'I' (insert), 'U' (upsert), or 'D' (delete the key); any other op
     value fails the job in-plan via raise_error — no separate
@@ -183,16 +182,14 @@ def apply_changes(
     snapshot (U/I rows rewrite identical payloads, D keys are already
     gone)."""
     payload_cols = [c for c in base.columns if c not in key_cols]
-    missing = [c for c in key_cols + [seq_col, op_col] + payload_cols
+    missing = [c for c in key_cols + [seq_col, "op"] + payload_cols
                if c not in changes.columns]
     if missing:
         raise ValueError(f"changes is missing columns {missing}")
-    opv = F.when(
-        F.col(op_col).isin("I", "U", "D"), F.col(op_col)
-    ).otherwise(
+    opv = F.when(F.col("op").isin("I", "U", "D"), F.col("op")).otherwise(
         F.raise_error(
             F.concat(F.lit("apply_changes: bad op value "),
-                     F.coalesce(F.col(op_col), F.lit("NULL")))
+                     F.coalesce(F.col("op"), F.lit("NULL")))
         )
     )
     latest = (

@@ -38,14 +38,12 @@ def quality_filter(
     (an unrounded double at the threshold would flip on the last
     ulp).
 
-    ``min_quality`` gates on a DELIBERATELY simpler monotone metric
-    than textstats.quality_score — ``uniq_ratio * min(len/200, 1)``
-    (distinctness damped for very short docs) — because the gate needs
-    a first-fail attribution chain where each rule tests ONE signal;
-    quality_score's 4-term weighted blend would double-count the
-    length/stopword rules above it. Thresholds tuned against
-    quality_score do NOT transfer (review finding: the two metrics
-    are intentionally distinct, now documented)."""
+    ``min_quality`` gates on a DELIBERATELY simple monotone metric,
+    ``uniq_ratio * min(len/200, 1)`` over the normalized words
+    (distinctness damped for very short docs), because the gate needs
+    a first-fail attribution chain where each rule tests ONE signal; a
+    weighted blend of length and stopword terms would double-count the
+    rules above it."""
     from emf_spark.datax.dedup import normalized
 
     words = F.split(normalized(F.col("text")), " ")

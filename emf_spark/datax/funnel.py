@@ -30,11 +30,10 @@ def funnel_times(
     events: DataFrame,
     steps: Sequence[str],
     key_cols: Sequence[str],
-    ts_col: str = "ts",
-    type_col: str = "event_type",
     strict: bool = True,
 ) -> DataFrame:
-    """Per-unit earliest time each funnel step was reached, in order.
+    """Per-unit earliest ``ts`` at which each funnel step (an
+    ``event_type``) was reached, in order.
 
     Returns one row per unit that reached step 1, with columns
     ``t_1 .. t_n`` (``t_k`` null when step k was never reached after
@@ -45,23 +44,19 @@ def funnel_times(
         raise ValueError("funnel needs at least one step")
     keys = list(key_cols)
     out = (
-        events.filter(F.col(type_col) == steps[0])
+        events.filter(F.col("event_type") == steps[0])
         .groupBy(*keys)
-        .agg(F.min(ts_col).alias("t_1"))
+        .agg(F.min("ts").alias("t_1"))
     )
     for i, step in enumerate(steps[1:], start=2):
         prev = f"t_{i - 1}"
-        after = (
-            F.col(ts_col) > F.col(prev)
-            if strict
-            else F.col(ts_col) >= F.col(prev)
-        )
+        after = F.col("ts") > F.col(prev) if strict else F.col("ts") >= F.col(prev)
         nxt = (
-            events.filter(F.col(type_col) == step)
+            events.filter(F.col("event_type") == step)
             .join(out.select(*keys, prev), on=keys)
             .filter(after)
             .groupBy(*keys)
-            .agg(F.min(ts_col).alias(f"t_{i}"))
+            .agg(F.min("ts").alias(f"t_{i}"))
         )
         out = out.join(nxt, on=keys, how="left")
     return out
@@ -106,12 +101,10 @@ def funnel_summary(times: DataFrame, steps: Sequence[str]) -> DataFrame:
 
 def cohort_retention(
     events: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
     period: str = "week",
 ) -> DataFrame:
-    """Cohort retention matrix: users cohort by the period of their
-    FIRST event; each later period they are active increments that
+    """Cohort retention matrix: users (``user_id``) cohort by the period
+    of their FIRST event; each later period they are active increments that
     (cohort, periods-since) cell — the classic product-analytics
     retention triangle. Returns (cohort, period_n, active_users,
     cohort_size, retention) with retention = active/size as the one
@@ -128,7 +121,7 @@ def cohort_retention(
     per = {"week": 7, "day": 1}
     if period not in per:
         raise ValueError(f"period must be one of {sorted(per)}")
-    u, t = F.col(user_col), F.col(ts_col)
+    u, t = F.col("user_id"), F.col("ts")
     first = events.filter(u.isNotNull() & t.isNotNull()).groupBy(
         u.alias("_u")
     ).agg(F.min(F.date_trunc(period, t)).alias("cohort"))

@@ -30,11 +30,10 @@ def pagerank_exact(
     edges: DataFrame,
     iters: int = 3,
     damping_pct: int = 85,
-    src_col: str = "src",
-    dst_col: str = "dst",
 ) -> DataFrame:
-    """(node, rank) after ``iters`` dampened PageRank rounds, rank an
-    int64 in units of 1e-9 (sum over nodes ~ N * 1e9, the unnormalized
+    """(node, rank) over the ``src``/``dst`` edges after ``iters``
+    dampened PageRank rounds, rank an int64 in units of 1e-9 (sum over
+    nodes ~ N * 1e9, the unnormalized
     convention). Damping is expressed in integer percent so the update
     rule is pure int64: rank' = (100-d)% * SCALE // 100 +
     d% * inflow // 100, inflow = sum over in-edges of
@@ -49,9 +48,7 @@ def pagerank_exact(
         raise ValueError("damping_pct must be in [0, 100]")
     if iters < 0:
         raise ValueError("iters must be >= 0")
-    e = edges.select(
-        F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
-    ).distinct()
+    e = edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d")).distinct()
     # LAZY localCheckpoints: nodes/ed are read every round and the
     # labels every following round, but materializing them eagerly ran
     # one blocking job per checkpoint — rank build time was dominated

@@ -130,39 +130,6 @@ def epoch_shuffle(
     )
 
 
-def write_training_shards(
-    df: DataFrame,
-    path: str,
-    id_col: str,
-    epoch: int,
-    n_shards: int = 16,
-    max_records_per_file: int | None = None,
-) -> None:
-    """Materialize one training epoch as shard-partitioned parquet: the
-    epoch_shuffle permutation written to ``path/shard=K/`` with rows
-    ordered by ``pos`` WITHIN every file, so a loader that walks shards
-    in order (files per shard in name order, rows in file order)
-    replays the exact global permutation without ever sorting — the
-    epoch's order is baked into the layout at write time, which is the
-    only place a 100 TB pipeline can afford it.
-
-    Shard file layout: one Spark partition per shard (the shuffle is
-    the epoch's single Exchange), ``max_records_per_file`` splits a
-    shard into size-bounded files WITHOUT breaking order (Spark writes
-    a partition sequentially, rolling files as the cap hits, and names
-    them part-00000, part-00001, ... in row order)."""
-    shuffled = epoch_shuffle(df, id_col, epoch, n_shards=n_shards)
-    writer = (
-        shuffled.repartition(n_shards, F.col("shard"))
-        .sortWithinPartitions("shard", "pos")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-    )
-    if max_records_per_file is not None:
-        writer = writer.option("maxRecordsPerFile", max_records_per_file)
-    writer.parquet(path)
-
-
 def equidepth_boundaries(
     df: DataFrame,
     n_bins: int = 10,

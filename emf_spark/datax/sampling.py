@@ -184,13 +184,12 @@ def balanced_sample(
     df: DataFrame,
     class_col: str,
     n_per_class: int,
-    id_col: str = "doc_id",
     salt: str = "",
     est_counts: dict[str, int] | None = None,
 ) -> DataFrame:
     """Deterministic class-balanced downsample: at most ``n_per_class``
     rows per class, chosen by the smallest md5-derived hash fraction of
-    (id, salt) — i.e. a uniform pseudo-random sample that is
+    (doc_id, salt) — i.e. a uniform pseudo-random sample that is
     reproducible row-for-row in any engine (no RNG, no
     partition-order dependence; tie-break on id). The dataset-balancing
     primitive: cap head classes, keep tail classes whole.
@@ -211,7 +210,7 @@ def balanced_sample(
     a count/approx pass are within a few percent, far inside that
     envelope. Classes absent from ``est_counts`` take the exact path
     unchanged."""
-    h = hash_fraction(F.col(id_col).cast("string"), salt)
+    h = hash_fraction(F.col("doc_id").cast("string"), salt)
     if est_counts:
         gate = None
         for cls, est in est_counts.items():
@@ -225,7 +224,7 @@ def balanced_sample(
             # and filter(~NULL) would silently DROP those rows — the
             # plain path keeps them as their own window partition
             df = df.filter(~F.coalesce(gate, F.lit(False)))
-    w = Window.partitionBy(class_col).orderBy(h.asc(), F.col(id_col).asc())
+    w = Window.partitionBy(class_col).orderBy(h.asc(), F.col("doc_id").asc())
     return (
         df.withColumn("_rk", F.row_number().over(w))
         .filter(F.col("_rk") <= n_per_class)
@@ -238,7 +237,6 @@ def temperature_mix(
     target_rows: int,
     class_col: str = "source",
     alpha: float = 0.5,
-    id_col: str = "doc_id",
     salt: str = "mix",
 ) -> DataFrame:
     """Temperature-weighted data mixing: resample so class (source /
@@ -246,7 +244,7 @@ def temperature_mix(
     sum(c^alpha)`` rows — the standard multilingual/domain re-balancing
     rule (alpha=1 keeps natural proportions, alpha=0 is uniform across
     classes, alpha~0.3-0.7 up-weights tails). Rows are kept by the
-    deterministic hash gate ``hash_fraction(id, salt) < f_s`` with
+    deterministic hash gate ``hash_fraction(doc_id, salt) < f_s`` with
     ``f_s = min(1, target * w_s / c_s)`` — reproducible row-for-row in
     any engine, no RNG. Classes whose quota exceeds their size keep
     every row (this is a downsampling mixer; epoch-style upsampling is
@@ -288,7 +286,7 @@ def temperature_mix(
         ))
         .select("_cls", "_f")
     )
-    gate = hash_fraction(F.col(id_col).cast("string"), salt) < F.col("_f")
+    gate = hash_fraction(F.col("doc_id").cast("string"), salt) < F.col("_f")
     return (
         df.join(F.broadcast(fr), F.col(class_col).eqNullSafe(F.col("_cls")))
         .filter(gate)
@@ -335,7 +333,6 @@ def priority_sample(
 def importance_votes(
     df: DataFrame,
     is_target_col: str,
-    id_col: str = "doc_id",
     n_buckets: int = 4096,
     word_hash=None,
 ) -> DataFrame:
@@ -352,7 +349,7 @@ def importance_votes(
 
     which is pure int64, so the scores replay bit-for-bit in an
     external engine where ``ln`` itself does not (the HLL oracle
-    lesson). Returns one row per input row: (id_col, n_grams, votes),
+    lesson). Returns one row per input row: (doc_id, n_grams, votes),
     votes = #target-leaning grams − #raw-leaning grams, counted PER
     OCCURRENCE like the paper, over 2-word grams; docs shorter than 2
     words score 0.
@@ -374,14 +371,11 @@ def importance_votes(
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
     flags = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.col(is_target_col).cast("boolean").alias("_t"),
     )
     grams = (
-        shingle_hash_rows(
-            df, id_col=id_col, k=2,
-            word_hash=word_hash,
-        )
+        shingle_hash_rows(df, k=2, word_hash=word_hash)
         .withColumn("_b", F.pmod(F.col("h"), F.lit(n_buckets)))
         .join(flags, "id")
         # both passes read the gram rows; the estimate pass's collect
@@ -426,10 +420,10 @@ def importance_votes(
     )
     grams.unpersist()
     return (
-        df.select(F.col(id_col).alias("id"))
+        df.select(F.col("doc_id").alias("id"))
         .join(per, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             F.coalesce("n_grams", F.lit(0)).alias("n_grams"),
             F.coalesce("votes", F.lit(0).cast("bigint")).alias("votes"),
         )

@@ -1,6 +1,6 @@
 """Text analysis for training-data pipelines: language-ID (stopword
-n-gram heuristic), quality scoring, token counting (whitespace + a
-BPE-ish regex), and document fingerprinting (rolling-hash winnowing).
+n-gram heuristic), document fingerprinting (rolling-hash winnowing),
+repetition and vocabulary stats, BPE training and encoding, chunking.
 All Catalyst expressions; no Python in the row path."""
 
 from __future__ import annotations
@@ -14,24 +14,6 @@ LANG_MARKERS = {
     "de": ["der", "die", "und", "das", "ist"],
     "fr": ["le", "la", "et", "les", "des"],
 }
-
-# BPE-ish token regex: word pieces, numbers, punctuation runs — a public
-# approximation of byte-pair pre-tokenization (GPT-2-style splitting).
-BPE_RE = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"
-
-
-def token_counts(df: DataFrame) -> DataFrame:
-    """Whitespace tokens and BPE-ish regex tokens per document."""
-    words = F.split(F.trim(F.col("text")), r"\s+")
-    bpe = F.regexp_extract_all(F.col("text"), F.lit(BPE_RE), 0)
-    return df.withColumns(
-        {
-            "n_words": F.size(words),
-            "n_bpe_tokens": F.size(bpe),
-            "n_bytes": F.octet_length("text"),
-        }
-    )
-
 
 def lang_scores(text: F.Column) -> F.Column:
     """map<lang, marker-hit-ratio> over the marker lists."""
@@ -61,28 +43,6 @@ def lang_id(df: DataFrame) -> DataFrame:
     return df.withColumn("pred_lang", best["key"]).withColumn(
         "lang_score", F.round(best["value"], 6)
     )
-
-
-def quality_score(df: DataFrame) -> DataFrame:
-    """Composite quality in [0,1]: length band, word-uniqueness,
-    alpha ratio, stopword presence — the usual cheap pretraining filters."""
-    text = F.col("text")
-    words = F.split(F.lower(F.trim(text)), r"\s+")
-    n_words = F.greatest(F.size(words), F.lit(1))
-    uniq_ratio = F.size(F.array_distinct(words)) / n_words
-    alpha_ratio = (
-        F.length(F.regexp_replace(text, r"[^A-Za-z ]", "")) / F.greatest(F.length(text), F.lit(1))
-    )
-    len_band = F.least(F.length(text) / F.lit(500.0), F.lit(1.0))
-    all_markers = sorted({m for ms in LANG_MARKERS.values() for m in ms})
-    stop_hits = F.size(
-        F.array_intersect(words, F.array(*[F.lit(m) for m in all_markers]))
-    )
-    stop_band = F.least(stop_hits.cast("double") / F.lit(3.0), F.lit(1.0))
-    score = F.round(
-        0.3 * uniq_ratio + 0.3 * alpha_ratio + 0.2 * len_band + 0.2 * stop_band, 6
-    )
-    return df.withColumn("quality", score)
 
 
 def fingerprint(df: DataFrame, portable: bool = False) -> DataFrame:

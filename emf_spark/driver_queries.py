@@ -2740,7 +2740,7 @@ WHERE s.df >= 5
 # Ordered BPE merge list pinned from bpe_train(n_merges=12) over the
 # sf0.01 documents corpus — pinned (rather than re-trained in-query) so
 # the oracle replicates ENCODE exactly; training itself is
-# parity-tested in tests/test_datax.py against a sequential reference.
+# parity-tested in tests/test_pii.py against a sequential reference.
 BPE_MERGES = [
     ("e", "r"), ("i", "n"), ("o", "w"), ("o", "r"), ("s", "t"),
     ("m", "er"), ("a", "t"), ("l", "u"), ("a", "r"), ("p", "ar"),

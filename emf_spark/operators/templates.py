@@ -45,10 +45,9 @@ WILDCARD = "<*>"
 
 def mine_templates(
     df: DataFrame,
-    line_col: str = "line",
     min_count: int = 1,
 ) -> DataFrame:
-    """Mine log templates from raw lines.
+    """Mine log templates from the raw lines in column ``line``.
 
     Returns ``(template string, n_lines bigint, n_groups bigint)``
     where ``n_groups`` counts the distinct ``(n_tokens, head)``
@@ -59,7 +58,7 @@ def mine_templates(
     """
     if min_count < 1:
         raise ValueError("min_count must be >= 1")
-    norm = F.regexp_replace(F.trim(F.col(line_col)), r"\s+", " ")
+    norm = F.regexp_replace(F.trim(F.col("line")), r"\s+", " ")
     base = (
         df.select(norm.alias("m"))
         .filter(F.length("m") > 0)

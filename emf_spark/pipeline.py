@@ -139,7 +139,6 @@ def run(
     lookup: DataFrame | None = None,
     window_ms: int = agg.WINDOW_MS,
     key_by_namespace: bool = False,
-    write_routed: bool = True,
     resumable: bool = False,
 ) -> PipelineResult:
     """Full job with writes: staged parse checkpoint, routed rows,
@@ -226,12 +225,11 @@ def run(
         )
         return spark.read.parquet(paths["stats"])
 
-    legs = {"errors": _write_errors, "events": _write_events}
-    if write_routed:
-        legs["routed"] = _write_routed
     # the events cache is released even if a write raises
     try:
-        written = run_legs(**legs)
+        written = run_legs(
+            errors=_write_errors, events=_write_events, routed=_write_routed
+        )
         stats = run_legs(stats=_write_stats)["stats"]
     finally:
         events.unpersist()

@@ -24,13 +24,6 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id bigint, text string")
 
 
-def test_exact_dedup(docs):
-    out = dedup.exact_dedup(docs).collect()
-    by_keep = {r["keep_id"]: r["dup_count"] for r in out}
-    assert by_keep[1] == 3  # docs 1, 2, 6 normalize identically
-    assert by_keep[3] == 1 and by_keep[4] == 1 and by_keep[5] == 1
-
-
 def test_minhash_near_duplicates(docs):
     # raw mode: exact duplicates pair up with est_jaccard 1.0
     pairs = dedup.minhash_near_duplicates(
@@ -79,7 +72,7 @@ def test_short_docs_yield_no_shingles_and_no_ansi_crash(spark):
     )
     rows = df.select(
         "doc_id",
-        dedup.word_shingles(F.col("text"), 3).alias("s"),
+        dedup.word_shingles(F.col("text")).alias("s"),
         dedup.word_shingle_hashes(F.col("text"), 3).alias("h"),
     ).collect()
     by = {r["doc_id"]: (r["s"], r["h"]) for r in rows}
@@ -125,8 +118,8 @@ def test_bucket_cap_keeps_overflow_members_connected(spark):
     }
     assert {(r["id_a"], r["id_b"]) for r in sgot} <= exact
     # DEFAULT mode is scale-safe: exact dups collapse pre-banding, so
-    # the 30-dup family emits no near-dup pairs at all (membership
-    # lives in exact_dedup), and pair count is bounded
+    # the 30-dup family emits no near-dup pairs at all, and pair count
+    # is bounded
     dflt = dedup.simhash_near_duplicates(df, max_hamming=3).collect()
     assert dflt == []
 
@@ -328,17 +321,6 @@ def test_kmeans_exact_empty_cluster_keeps_seed(spark):
         similarity.kmeans_exact(df, k=0)
 
 
-def test_token_counts(spark):
-    df = spark.createDataFrame(
-        [(1, "Hello world, 42 times!")], "doc_id bigint, text string"
-    )
-    r = textstats.token_counts(df).collect()[0]
-    assert r["n_words"] == 4
-    # BPE-ish: Hello | world | , | 42 | times | !
-    assert r["n_bpe_tokens"] == 6
-    assert r["n_bytes"] == len("Hello world, 42 times!")
-
-
 def test_lang_id(spark):
     df = spark.createDataFrame(
         [
@@ -352,19 +334,6 @@ def test_lang_id(spark):
     assert out[1] == "en"
     assert out[2] == "es"
     assert out[3] == "unk"
-
-
-def test_quality_score_ordering(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog and runs to the hills again"),
-            (2, "aaa aaa aaa aaa aaa aaa"),
-            (3, "!!! !!! !!! !!!"),
-        ],
-        "doc_id bigint, text string",
-    )
-    out = {r["doc_id"]: r["quality"] for r in textstats.quality_score(df).collect()}
-    assert out[1] > out[2] > out[3]
 
 
 def test_fingerprint_stability(spark, docs):
@@ -757,79 +726,6 @@ def test_bm25_vs_terms(spark):
     exp2 = idf(2) * tfp(1, 2)
     assert abs(got[1] - round(exp1, 6)) < 1e-6
     assert abs(got[2] - round(exp2, 6)) < 1e-6
-
-
-def test_cli_datax_surface(spark, tmp_path):
-    from emf_spark import cli
-
-    docs = spark.createDataFrame(
-        [
-            (0, "alpha beta gamma delta epsilon zeta", "en", 36),
-            (1, "alpha beta gamma delta epsilon zeta", "en", 36),
-            (2, "los rapidos zorros marrones saltan hoy", "es", 39),
-        ],
-        "doc_id bigint, text string, lang string, n_chars int",
-    )
-    dpath = str(tmp_path / "docs.parquet")
-    docs.write.parquet(dpath)
-    rc = cli.main(["datax", "dedup", "--docs", dpath, "--method", "exact",
-                   "--out", str(tmp_path / "d1")])
-    assert rc == 0
-    assert spark.read.parquet(str(tmp_path / "d1")).count() == 2
-    rc = cli.main(["datax", "decontaminate", "--train", dpath, "--test", dpath,
-                   "--k", "5", "--out", str(tmp_path / "d2")])
-    assert rc == 0
-    rc = cli.main(["datax", "textstats", "--docs", dpath,
-                   "--out", str(tmp_path / "d3")])
-    assert rc == 0
-    cols = set(spark.read.parquet(str(tmp_path / "d3")).columns)
-    assert {"n_words", "pred_lang", "quality", "dup_word_frac"} <= cols or \
-           {"n_words", "dup_word_frac"} <= cols
-
-
-def test_cli_datax_session_new_ops(spark, tmp_path):
-    """The round-4 additions reachable from the CLI: chunk / mix /
-    retention / pagerank / index."""
-    from datetime import datetime as DT
-
-    from emf_spark import cli
-
-    docs = spark.createDataFrame(
-        [(i, "alpha beta gamma delta epsilon zeta eta theta", "en",
-          ["en", "es"][i % 2]) for i in range(20)],
-        "doc_id bigint, text string, lang string, source string",
-    )
-    dpath = str(tmp_path / "docs.parquet")
-    docs.write.parquet(dpath)
-    assert cli.main(["datax", "chunk", "--docs", dpath, "--chunk-tokens", "3",
-                     "--stride", "2", "--out", str(tmp_path / "c1")]) == 0
-    out = spark.read.parquet(str(tmp_path / "c1"))
-    assert out.count() == 20 * 4 and "chunk" in out.columns
-    assert cli.main(["datax", "mix", "--docs", dpath, "--target", "10",
-                     "--class-col", "source", "--out", str(tmp_path / "c2")]) == 0
-    assert 0 < spark.read.parquet(str(tmp_path / "c2")).count() <= 20
-    assert cli.main(["datax", "index", "--docs", dpath, "--min-df", "2",
-                     "--out", str(tmp_path / "c3")]) == 0
-    assert spark.read.parquet(str(tmp_path / "c3")).count() == 8
-
-    ev = spark.createDataFrame(
-        [(i, i % 5, DT(2024, 1, 1 + (i % 10))) for i in range(40)],
-        "event_id bigint, user_id bigint, ts timestamp",
-    )
-    epath = str(tmp_path / "ev.parquet")
-    ev.write.parquet(epath)
-    assert cli.main(["datax", "retention", "--events", epath,
-                     "--out", str(tmp_path / "c4")]) == 0
-    assert spark.read.parquet(str(tmp_path / "c4")).count() > 0
-
-    edges = spark.createDataFrame(
-        [(i % 7, (i * 3) % 7) for i in range(30)], "src bigint, dst bigint"
-    )
-    gpath = str(tmp_path / "g.parquet")
-    edges.write.parquet(gpath)
-    assert cli.main(["datax", "pagerank", "--edges", gpath, "--iters", "2",
-                     "--out", str(tmp_path / "c5")]) == 0
-    assert spark.read.parquet(str(tmp_path / "c5")).count() == 7
 
 
 def test_kmv_distinct(spark):
@@ -1756,7 +1652,7 @@ def test_minhash_incremental_store_meta_mismatch_raises(spark, tmp_path):
         [(i, f"alpha beta gamma delta tail{i}") for i in range(4)],
         ["doc_id", "text"],
     )
-    dd.write_signature_store(b, store, num_perm=32, shingle_k=3, seed=42)
+    dd.write_signature_store(b, store, num_perm=32)
     with pytest.raises(ValueError, match="num_perm"):
         dd.minhash_incremental(b, store, num_perm=64, bands=8)
     with pytest.raises(ValueError):
@@ -2180,8 +2076,7 @@ def test_simhash_bands_scale_with_max_hamming(spark):
         [(i, f"alpha beta gamma delta w{i} v{i % 7} u{i % 3}") for i in range(60)],
         ["doc_id", "text"],
     )
-    fps = {r["id"]: r["sim"] for r in
-           simhash_fingerprints(docs, "text", "doc_id").collect()}
+    fps = {r["id"]: r["sim"] for r in simhash_fingerprints(docs).collect()}
     target = None
     ids = sorted(fps)
     for i in ids:
@@ -2564,72 +2459,6 @@ def test_pq_train_encode_adc_matches_python(spark):
         pq_topk(df, books, q, topk=0, scale=scale)
 
 
-def test_cli_datax_third_session_ops(spark, tmp_path):
-    """This session's additions reachable from the CLI: profile /
-    match / rate / resample / burn / anomalies / triangles / pairs."""
-    from datetime import datetime as DT, timedelta as TD
-
-    from emf_spark import cli
-
-    ev = spark.createDataFrame(
-        [(i, i % 4, DT(2024, 1, 1) + TD(minutes=20 * i),
-          ["ok", "error"][i % 5 == 0], float(i % 9) + 0.25)
-         for i in range(60)],
-        "event_id bigint, user_id bigint, ts timestamp, "
-        "event_type string, value double",
-    )
-    epath = str(tmp_path / "ev.parquet")
-    ev.write.parquet(epath)
-    assert cli.main(["datax", "rate", "--events", epath,
-                     "--out", str(tmp_path / "o1")]) == 0
-    assert spark.read.parquet(str(tmp_path / "o1")).count() == 4
-    assert cli.main(["datax", "resample", "--events", epath, "--step", "7200",
-                     "--out", str(tmp_path / "o2")]) == 0
-    assert spark.read.parquet(str(tmp_path / "o2")).count() >= 4
-    assert cli.main(["datax", "burn", "--events", epath, "--error-type",
-                     "True", "--out", str(tmp_path / "o3")]) == 0
-    assert spark.read.parquet(str(tmp_path / "o3")).count() > 0
-    assert cli.main(["datax", "anomalies", "--events", epath,
-                     "--out", str(tmp_path / "o4")]) == 0
-    assert spark.read.parquet(str(tmp_path / "o4")).count() == 4
-    assert cli.main(["datax", "profile", "--path", epath, "--cols",
-                     "user_id,event_type", "--out", str(tmp_path / "o5")]) == 0
-    prof = spark.read.parquet(str(tmp_path / "o5"))
-    assert prof.count() == 2 and "n_distinct" in prof.columns
-
-    names = spark.createDataFrame(
-        [(i, f"name{i:03d}", f"b{i % 3}") for i in range(30)],
-        "id bigint, name string, blk string",
-    )
-    npath = str(tmp_path / "names.parquet")
-    names.write.parquet(npath)
-    assert cli.main(["datax", "match", "--left", npath, "--right", npath,
-                     "--block-col", "blk", "--max-dist", "0",
-                     "--out", str(tmp_path / "o6")]) == 0
-    m = spark.read.parquet(str(tmp_path / "o6"))
-    assert m.count() == 30 and m.filter("dist != 0").count() == 0
-
-    edges = spark.createDataFrame(
-        [(i % 6, (i * 5 + 1) % 6) for i in range(25)],
-        "src bigint, dst bigint",
-    )
-    gpath = str(tmp_path / "g.parquet")
-    edges.write.parquet(gpath)
-    assert cli.main(["datax", "triangles", "--edges", gpath,
-                     "--out", str(tmp_path / "o7")]) == 0
-    assert spark.read.parquet(str(tmp_path / "o7")).count() >= 0
-
-    bks = spark.createDataFrame(
-        [(i % 8, (i * 7) % 5) for i in range(40)],
-        "basket_id bigint, item_id bigint",
-    )
-    bpath = str(tmp_path / "b.parquet")
-    bks.write.parquet(bpath)
-    assert cli.main(["datax", "pairs", "--baskets", bpath, "--top", "5",
-                     "--out", str(tmp_path / "o8")]) == 0
-    assert spark.read.parquet(str(tmp_path / "o8")).count() == 5
-
-
 # ---------------------------------------------------------------------------
 # line_dedup (corpus-frequency boilerplate segment removal)
 # ---------------------------------------------------------------------------
@@ -2795,28 +2624,22 @@ def test_check_constraints_single_pass_plan_and_guards(spark):
         check_constraints(df, [("completeness", "v", 1, 0)])
 
 
-def test_cli_linededup_and_quality(spark, tmp_path):
-    from emf_spark import cli
+def test_line_dedup_newline_segments_and_check_verdicts(spark):
+    from emf_spark.datax.dedup import line_dedup
+    from emf_spark.datax.quality import check_constraints
 
     docs = spark.createDataFrame(
         [(1, "keep one\nBANNER"), (2, "BANNER\nkeep two"), (3, "BANNER")],
         "doc_id bigint, text string",
     )
-    dpath = str(tmp_path / "docs.parquet")
-    docs.write.parquet(dpath)
-    assert cli.main(["datax", "linededup", "--docs", dpath, "--max-df", "2",
-                     "--out", str(tmp_path / "o1")]) == 0
     out = {r["doc_id"]: r["text_deduped"]
-           for r in spark.read.parquet(str(tmp_path / "o1")).collect()}
+           for r in line_dedup(docs, max_df=2).collect()}
     assert out == {1: "keep one", 2: "keep two", 3: ""}
 
-    assert cli.main([
-        "datax", "quality", "--path", dpath,
-        "--checks", "completeness:text:1:1,unique:doc_id,in:text:BANNER",
-        "--out", str(tmp_path / "o2"),
-    ]) == 0
+    checks = [("completeness", "text", 1, 1), ("unique", "doc_id"),
+              ("values_in", "text", ["BANNER"])]
     rows = {r["check"]: r["passed"]
-            for r in spark.read.parquet(str(tmp_path / "o2")).collect()}
+            for r in check_constraints(docs, checks).collect()}
     assert rows == {"completeness": True, "unique": True, "values_in": False}
 
 
@@ -2962,21 +2785,16 @@ def test_apply_changes_guards(spark):
     assert isinstance(ei.value, Py4JJavaError) or "bad op" in str(ei.value)
 
 
-def test_cli_merge(spark, tmp_path):
-    from emf_spark import cli
+def test_apply_changes_upsert_insert_delete(spark):
+    from emf_spark.datax.diff import apply_changes
 
     base = spark.createDataFrame([(1, 10), (2, 20)], "id bigint, v bigint")
     feed = spark.createDataFrame(
         [(2, 1, "U", 21), (3, 1, "I", 30), (1, 1, "D", None)],
         "id bigint, seq int, op string, v bigint",
     )
-    bp, cp = str(tmp_path / "b.parquet"), str(tmp_path / "c.parquet")
-    base.write.parquet(bp)
-    feed.write.parquet(cp)
-    assert cli.main(["datax", "merge", "--base", bp, "--changes", cp,
-                     "--keys", "id", "--out", str(tmp_path / "o")]) == 0
     rows = {r["id"]: r["v"]
-            for r in spark.read.parquet(str(tmp_path / "o")).collect()}
+            for r in apply_changes(base, feed, ["id"], "seq").collect()}
     assert rows == {2: 21, 3: 30}
 
 
@@ -3101,8 +2919,8 @@ def test_line_dedup_regex_special_delimiter_is_literal(spark):
     assert out == {1: "keep one", 2: "keep two", 3: "a|b"}
 
 
-def test_cli_select_importance(spark, tmp_path):
-    from emf_spark import cli
+def test_importance_votes_signs_follow_the_target_slice(spark):
+    from emf_spark.datax.sampling import importance_votes
 
     docs = spark.createDataFrame(
         [(1, "spark shuffle join agg", "wiki"),
@@ -3110,16 +2928,9 @@ def test_cli_select_importance(spark, tmp_path):
          (3, "cat dog bird fish", "web"),
          (4, "dog bird cat mouse", "web")],
         "doc_id bigint, text string, source string",
-    )
-    dpath = str(tmp_path / "d.parquet")
-    docs.write.parquet(dpath)
-    assert cli.main([
-        "datax", "select", "--docs", dpath,
-        "--target-where", "source = 'wiki'",
-        "--buckets", "64", "--out", str(tmp_path / "o"),
-    ]) == 0
+    ).withColumn("_tgt", F.expr("source = 'wiki'"))
     out = {r["doc_id"]: r["votes"]
-           for r in spark.read.parquet(str(tmp_path / "o")).collect()}
+           for r in importance_votes(docs, "_tgt", n_buckets=64).collect()}
     assert len(out) == 4
     assert out[1] > 0 and out[2] > 0 and out[3] < 0 and out[4] < 0
 
@@ -3427,38 +3238,23 @@ def test_distribution_drift_hand_computed(spark):
     assert sum(r["drift_ppm"] for r in got.values()) == 4 * sixth
 
 
-def test_cli_templates_and_drift(spark, tmp_path):
-    """The fifth-round additions reachable from the CLI: templates
-    (Drain-family mining) and drift (ref-vs-current ppm), each writing
-    parquet and printing a JSON summary."""
-    import json as _json
-
-    from emf_spark import cli
+def test_mine_templates_min_count_and_drift_ppm(spark):
+    """Drain-family template mining with a count floor, and the
+    ref-vs-current drift ppm of a two-category column."""
+    from emf_spark.datax.quality import distribution_drift
+    from emf_spark.operators.templates import mine_templates
 
     logs = spark.createDataFrame(
         [(f"INFO user u{i} logged in",) for i in range(6)]
         + [("WARN disk sda1 full",), ("WARN disk sdb2 full",)],
         ["line"],
     )
-    lp = str(tmp_path / "logs")
-    logs.write.parquet(lp)
-    to = str(tmp_path / "tmpl")
-    rc = cli.main(["datax", "templates", "--logs", lp, "--out", to,
-                   "--min-count", "2"])
-    assert rc == 0
     rows = {r["template"]: r["n_lines"]
-            for r in spark.read.parquet(to).collect()}
+            for r in mine_templates(logs, min_count=2).collect()}
     assert rows == {"INFO user <*> logged in": 6, "WARN disk <*> full": 2}
 
     ref = spark.createDataFrame([("a",)] * 3 + [("b",)] * 1, ["c"])
     cur = spark.createDataFrame([("a",)] * 1 + [("b",)] * 3, ["c"])
-    rp, cp = str(tmp_path / "ref"), str(tmp_path / "cur")
-    ref.write.parquet(rp)
-    cur.write.parquet(cp)
-    do = str(tmp_path / "drift")
-    rc = cli.main(["datax", "drift", "--ref", rp, "--cur", cp,
-                   "--col", "c", "--out", do])
-    assert rc == 0
     got = {r["category"]: (r["drift_ppm"], r["sign"])
-           for r in spark.read.parquet(do).collect()}
+           for r in distribution_drift(ref, cur, "c").collect()}
     assert got == {"a": (500_000, -1), "b": (500_000, 1)}

@@ -105,8 +105,7 @@ def test_cli_resumable_writes_events_once(spark, tmp_path, corpus_path):
     from emf_spark import cli
 
     out = str(tmp_path / "resumable_once")
-    rc = cli.main(["--input", corpus_path, "--out", out, "--resumable",
-                   "--no-routed"])
+    rc = cli.main(["--input", corpus_path, "--out", out, "--resumable"])
     assert rc == 0
     ev = spark.read.parquet(f"{out}/events")
     key = ["sink", "window_start", "dim_hash"]

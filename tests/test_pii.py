@@ -100,23 +100,6 @@ def test_cms_overestimates_never_under(spark):
     assert est2 == {"a": 7, "b": 3, "c": 1, "missing": 0}
 
 
-def test_compact_parquet_collapses_small_files(spark, tmp_path):
-    from emf_spark.operators.storage import compact_parquet
-
-    src = str(tmp_path / "many")
-    spark.range(0, 10_000).withColumnRenamed("id", "v").repartition(
-        40
-    ).write.parquet(src)
-    import glob
-
-    assert len(glob.glob(src + "/*.parquet")) == 40
-    out = str(tmp_path / "few")
-    n = compact_parquet(spark, src, out, target_mb=128)
-    assert n == 1 == len(glob.glob(out + "/*.parquet"))
-    a = {r["v"] for r in spark.read.parquet(out).collect()}
-    assert a == set(range(10_000))
-
-
 def test_pii_scrub_equals_python_re_oracle(spark):
     """Property test: the Spark scrubber must equal a pure-Python
     re-based oracle applying the same patterns in the same progressive

@@ -240,9 +240,7 @@ def test_build_events_matches_run_events(spark, corpus_path, tmp_path, key_by_na
     """The no-write path and the batch path are one composition: the
     events build_events plans hold exactly the rows run writes."""
     out = str(tmp_path / "run")
-    pipeline.run(
-        spark, corpus_path, out, write_routed=False, key_by_namespace=key_by_namespace
-    )
+    pipeline.run(spark, corpus_path, out, key_by_namespace=key_by_namespace)
     cols = ["sink", "window_start"] + (["namespace"] if key_by_namespace else [])
     cols += ["dim_hash", "event_json"]
     written = spark.read.parquet(f"{out}/events").select(*cols)
@@ -285,10 +283,7 @@ def test_run_releases_caches_when_a_write_fails(
     before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
     monkeypatch.setattr(DataFrameWriter, "parquet", failing_write)
     with pytest.raises(OSError, match="injected"):
-        pipeline.run(
-            spark, corpus_path, str(tmp_path / "out"), write_routed=False,
-            resumable=resumable,
-        )
+        pipeline.run(spark, corpus_path, str(tmp_path / "out"), resumable=resumable)
     assert set(spark.sparkContext._jsc.getPersistentRDDs().keySet()) == before
 
 

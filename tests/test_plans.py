@@ -290,7 +290,7 @@ def test_resumable_run_aggregates_once(spark, tmp_path):
     src, out = str(tmp_path / "in"), str(tmp_path / "out")
     fixtures.write_corpus(f"{src}/part-0.parquet", 200)
     with _job_group(spark, tmp_path.name):
-        assert cli.main(["--input", src, "--out", out, "--resumable", "--no-routed"]) == 0
+        assert cli.main(["--input", src, "--out", out, "--resumable"]) == 0
     call = _executions_of(spark, _group_jobs(spark, tmp_path.name))
     store = spark._jsparkSession.sharedState().statusStore()
     events_write = [
@@ -376,7 +376,7 @@ def test_staged_scan_prunes_columns(spark, corpus_path, tmp_path):
     back from the staged checkpoint (only the routed table reads them),
     and the validity filter must push down to the parquet scan."""
     out = str(tmp_path / "plans_out")
-    pipeline.run(spark, corpus_path, out, write_routed=False)
+    pipeline.run(spark, corpus_path, out)
     staged = spark.read.parquet(f"{out}/staged")
     valid, _ = parse_op.split_valid(staged)
     events_plan = plan_of(pipeline.aggregate(valid))

@@ -243,58 +243,6 @@ def test_mode_per_group_tiebreak_and_nulls(spark):
         mode_per_group(df, [], "v")
 
 
-def test_write_training_shards_bakes_permutation_into_layout(spark, tmp_path):
-    """Reading shard dirs in order, files per shard in name order, rows
-    in file order (NO sorting at read time) must replay the exact
-    epoch_shuffle permutation — including when maxRecordsPerFile splits
-    a shard into several files."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    from emf_spark.datax.ordering import epoch_shuffle, write_training_shards
-
-    df = spark.createDataFrame(
-        [(i, f"doc{i}") for i in range(97)], "id bigint, payload string"
-    )
-    out = str(tmp_path / "shards")
-    write_training_shards(
-        df, out, "id", epoch=3, n_shards=4, max_records_per_file=7
-    )
-
-    # expected global permutation from the operator itself
-    exp = [
-        r["id"]
-        for r in epoch_shuffle(df, "id", 3, n_shards=4)
-        .orderBy("shard", "pos")
-        .collect()
-    ]
-
-    got = []
-    shard_dirs = sorted(
-        (d for d in os.listdir(out) if d.startswith("shard=")),
-        key=lambda s: int(s.split("=")[1]),
-    )
-    multi_file = 0
-    for d in shard_dirs:
-        files = sorted(glob.glob(os.path.join(out, d, "part-*")))
-        multi_file += len(files) > 1
-        for f in files:
-            got.extend(pq.read_table(f).column("id").to_pylist())
-    assert got == exp
-    assert sorted(got) == list(range(97))  # a permutation, nothing lost
-    assert multi_file >= 1  # the file cap actually split a shard
-    # different epoch => different permutation (same multiset)
-    exp2 = [
-        r["id"]
-        for r in epoch_shuffle(df, "id", 4, n_shards=4)
-        .orderBy("shard", "pos")
-        .collect()
-    ]
-    assert exp2 != exp and sorted(exp2) == sorted(exp)
-
-
 def test_skew_profile_shares_and_order(spark):
     import pytest as _pytest
 

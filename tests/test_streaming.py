@@ -49,7 +49,7 @@ def test_microbatch_matches_batch_counts(spark, stream_input, tmp_path):
         .agg(F.sum("m.count").alias("cnt"))
     )
     batch_out = str(tmp_path / "batch_out")
-    res = pipeline.run(spark, stream_input, batch_out, write_routed=False)
+    res = pipeline.run(spark, stream_input, batch_out)
     bev = spark.read.parquet(f"{batch_out}/events")
     batch_counts = (
         bev.select("sink", "window_start", "dim_hash", F.explode("metrics").alias("m"))
@@ -88,7 +88,7 @@ def test_merge_partials_equals_batch(spark, stream_input, tmp_path):
     merged = merge_partial_events(partials)
 
     batch_out = str(tmp_path / "batch_out_m")
-    res = pipeline.run(spark, stream_input, batch_out, write_routed=False)
+    res = pipeline.run(spark, stream_input, batch_out)
     batch = spark.read.parquet(f"{batch_out}/events")
 
     key = ["sink", "window_start", "dim_hash"]
@@ -195,9 +195,7 @@ def test_merge_partials_namespace_keyed(spark, stream_input, tmp_path):
         spark.read.parquet(f"{out}/events"), key_by_namespace=True
     )
     batch_out = str(tmp_path / "batch_out_ns")
-    pipeline.run(
-        spark, stream_input, batch_out, write_routed=False, key_by_namespace=True
-    )
+    pipeline.run(spark, stream_input, batch_out, key_by_namespace=True)
     batch = spark.read.parquet(f"{batch_out}/events")
     key = ["sink", "window_start", "namespace", "dim_hash"]
 

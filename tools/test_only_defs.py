@@ -42,7 +42,6 @@ SCANNED = (PACKAGE, "perfbench", "tools", "bench.py", "__spark_entry__.py")
 TESTS = "tests"
 ENTRY_POINTS = (
     "emf_spark.cli:main",
-    "emf_spark.cli:datax_main",
     "emf_spark.pipeline:run",
     "emf_spark.streaming.job:run_microbatch",
 )
@@ -56,6 +55,7 @@ ALLOWED = {
     "emf_spark.tokenizer:detokenize_bytes": "spec form the Arrow detokenizer is tested against",
     "emf_spark.datax.dedup:word_shingle_hashes": "spec form the shingle hashing is tested against",
     "emf_spark.datax.dedup:simhash64": "spec form the SimHash column is tested against",
+    "emf_spark.datax.textstats:bpe_train": "reference trainer that `BPE_MERGES` and `bpe_apply` are tested against",
     "emf_spark.operators.parse:with_parsed_metrics": "spec form the staged parse is tested against",
     "emf_spark.streaming.merge:merge_partial_events": "streaming == batch re-merge of partial events",
     "emf_spark.streaming.merge:compact_events": "streaming == batch re-merge of partial events",
