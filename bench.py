@@ -73,8 +73,7 @@ def run_pipeline_job(spark, path: str, out_dir: str, n: int | None = None) -> di
     from emf_spark import pipeline
 
     t0 = time.time()
-    res = pipeline.run(spark, path, out_dir, window_ms=3_600_000)
-    res.stats.collect()
+    pipeline.run(spark, path, out_dir, window_ms=3_600_000)
     wall = time.time() - t0
     if n is None:
         n = spark.read.parquet(path).count()

@@ -58,16 +58,17 @@ def normalized(text: F.Column) -> F.Column:
     return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
 
 
-def _collapse_exact(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """One representative (min id, its text) per distinct NORMALIZED
-    text — the shared pre-LSH collapse of minhash_near_duplicates and
-    simhash_near_duplicates (review finding: the block was duplicated;
-    a tiebreak/hash change must land exactly once)."""
+def _collapse_exact(df: DataFrame) -> DataFrame:
+    """One representative (min ``doc_id``, its ``text``) per distinct
+    NORMALIZED text — the shared pre-LSH collapse of
+    minhash_near_duplicates and simhash_near_duplicates (review finding:
+    the block was duplicated; a tiebreak/hash change must land exactly
+    once)."""
     return (
-        df.groupBy(F.md5(normalized(F.col(text_col))).alias("_h"))
+        df.groupBy(F.md5(normalized(F.col("text"))).alias("_h"))
         .agg(
-            F.min(id_col).alias(id_col),
-            F.min_by(text_col, F.col(id_col)).alias(text_col),
+            F.min("doc_id").alias("doc_id"),
+            F.min_by("text", F.col("doc_id")).alias("text"),
         )
         .drop("_h")
     )
@@ -155,13 +156,12 @@ def _perm_literals(num_perm: int, seed: int = 42):
 
 def shingle_hash_rows(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     k: int = 3,
     word_hash=None,
     keep_pos: bool = False,
 ) -> DataFrame:
-    """(id, h) rows of k-word rolling-poly shingle hashes — the hot-path
+    """(id, h) rows of the k-word rolling-poly shingle hashes of each
+    ``(doc_id, text)`` row (``id`` is its ``doc_id``) — the hot-path
     form of word_shingle_hashes (identical hash values); ``keep_pos``
     adds the shingle's word offset (id, pos, h) for consumers that need
     occurrence positions (duplicated_ngram_spans). Words EXPLODE to
@@ -178,8 +178,8 @@ def shingle_hash_rows(
 
     wh_fn = word_hash or xxhash_word
     words = df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(F.split(normalized(F.col(text_col)), " ")).alias("pos", "w"),
+        F.col("doc_id").alias("id"),
+        F.posexplode(F.split(normalized(F.col("text")), " ")).alias("pos", "w"),
     ).select("id", "pos", wh_fn(F.col("w")).alias("h"))
     w = Window.partitionBy("id").orderBy("pos")
     expr = F.col("h")
@@ -190,13 +190,7 @@ def shingle_hash_rows(
 
 
 def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 64,
-    shingle_k: int = 3,
-    seed: int = 42,
-    word_hash=None,
+    df: DataFrame, num_perm: int = 64, word_hash=None
 ) -> DataFrame:
     """MinHash signatures as (id, sig:array<bigint> of length num_perm):
     base = word-rolling-poly shingle hash mod P, h_i = (a_i*base + b_i)
@@ -210,11 +204,11 @@ def minhash_signatures(
     hashing per array-element reference because Catalyst does not CSE
     inside lambdas: measured 50x (perms) and 30x (word hashes) slower.
 
-    Docs with no shingles (shorter than shingle_k words) yield no rows.
+    Docs with no shingles (shorter than 3 words) yield no rows.
     ``word_hash`` swaps the per-word hash (default fast xxhash64; pass
     portable_word_hash for an ANSI-SQL-checkable variant)."""
-    perms = _perm_literals(num_perm, seed)
-    base = shingle_hash_rows(df, text_col, id_col, shingle_k, word_hash)
+    perms = _perm_literals(num_perm)
+    base = shingle_hash_rows(df, word_hash=word_hash)
     aggs = [
         F.min((F.col("h") * F.lit(a) + F.lit(b)) % F.lit(_P)).alias(f"_s{i}")
         for i, (a, b) in enumerate(perms)
@@ -285,19 +279,15 @@ def lsh_candidate_pairs(
 
 def minhash_near_duplicates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_perm: int = 64,
     bands: int = 16,
     threshold: float = 0.7,
-    shingle_k: int = 3,
-    seed: int = 42,
     pre_dedupe_exact: bool = True,
     word_hash=None,
     max_bucket: int = 200,
 ) -> DataFrame:
-    """Candidate pairs whose signature-estimated Jaccard >= threshold:
-    (id_a, id_b, est_jaccard).
+    """Candidate pairs of ``(doc_id, text)`` rows whose
+    signature-estimated Jaccard >= threshold: (id_a, id_b, est_jaccard).
 
     ``pre_dedupe_exact`` collapses exact (normalized) duplicates to one
     representative before LSH — identical texts share every band, so a
@@ -306,24 +296,14 @@ def minhash_near_duplicates(
     normalized text; the near-dup pairs reported here relate cluster
     representatives (min id per distinct text)."""
     if pre_dedupe_exact:
-        df = _collapse_exact(df, text_col, id_col)
+        df = _collapse_exact(df)
     # sigs feeds three plan branches (banding + both verify-join sides);
     # a lazy persist dedups the signature aggregation across them when
     # the caller's action runs (callers running many dedup passes in one
     # session can sigs.unpersist() via spark.catalog.clearCache()).
-    sigs = minhash_signatures(
-        df, text_col, id_col, num_perm, shingle_k, seed, word_hash
-    ).persist()
+    sigs = minhash_signatures(df, num_perm=num_perm, word_hash=word_hash).persist()
     pairs = lsh_candidate_pairs(sigs, bands, max_bucket)
-    return _estimate_pairs(sigs, pairs, threshold)
-
-
-def _estimate_pairs(
-    sigs: DataFrame, pairs: DataFrame, threshold: float
-) -> DataFrame:
-    """Signature-estimated Jaccard for candidate (id_a, id_b) pairs —
-    THE one verify implementation shared by the batch and incremental
-    minhash paths (an estimate tweak must land exactly once)."""
+    # signature-estimated Jaccard of each candidate pair
     sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     est = (
@@ -524,7 +504,7 @@ def simhash_near_duplicates(
     modes are deterministic (row_number by id), so either is
     ANSI-SQL-oracle-checkable."""
     if pre_dedupe_exact:
-        df = _collapse_exact(df, "text", "doc_id")
+        df = _collapse_exact(df)
     # pigeonhole: hamming <= h implies >= 1 identical band only when
     # there are h+1 bands — the former fixed 4-band split silently
     # MISSED pairs for max_hamming >= 4 (4 differing bits can land in 4
@@ -807,265 +787,6 @@ def duplication_profile(
         F.min("span_start").alias("first_start"),
         F.max("span_end").alias("last_end"),
     )
-
-
-def write_signature_store(
-    df: DataFrame,
-    path: str,
-    num_perm: int = 64,
-    mode: str = "overwrite",
-) -> None:
-    """Materialize minhash signatures (id, sig:array<bigint>) to parquet.
-
-    The signature store is the incremental-ingest primitive: shingling +
-    permutation minima are ~all of minhash's cost, and they are a pure
-    per-document function — at 100 TB you compute them once per document
-    lifetime, not once per dedup pass. Store rows are tiny
-    (num_perm x 8 bytes) regardless of document size. Written
-    partitioned by ``_ingest`` (min id of the frame) — the same layout
-    minhash_incremental maintains, so a bootstrap store and
-    incrementally-grown stores are interchangeable. The signatures use
-    minhash_signatures' default shingle_k (3) and seed (42), which the
-    store's meta records."""
-    spark = df.sparkSession
-    # full overwrite = store REBUILD: re-pin meta to the new params.
-    # Any mode that can leave EXISTING rows in place (append, or
-    # 'overwrite' under a session-wide dynamic partitionOverwriteMode,
-    # which only replaces touched partitions) must validate BEFORE the
-    # data write — validating after would corrupt the store with
-    # mixed-length signatures and THEN raise (review finding).
-    dynamic = (
-        spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        ).lower() == "dynamic"
-    )
-    rebuild = mode == "overwrite" and not dynamic
-    if not rebuild:
-        _store_meta(spark, path, num_perm, 3, 42, None, write_if_absent=False)
-    # persist: the min-id collect AND the write otherwise each run the
-    # full shingle+permutation aggregation — ~all of minhash's cost,
-    # paid twice per bootstrap (review finding)
-    sigs = minhash_signatures(df, num_perm=num_perm).persist()
-    try:
-        key = sigs.agg(F.min("id")).collect()[0][0]
-        (
-            sigs.withColumn("_ingest", F.lit(int(key if key is not None else 0)))
-            .write.mode(mode)
-            .partitionBy("_ingest")
-            .parquet(path)
-        )
-    finally:
-        sigs.unpersist()
-    _store_meta(spark, path, num_perm, 3, 42, None,
-                write_if_absent=True, overwrite=rebuild)
-
-
-def minhash_incremental(
-    new_df: DataFrame,
-    store_path: str,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perm: int = 64,
-    bands: int = 16,
-    threshold: float = 0.7,
-    shingle_k: int = 3,
-    seed: int = 42,
-    word_hash=None,
-    max_bucket: int = 200,
-    update_store: bool = True,
-) -> DataFrame:
-    """Near-dup pairs of a NEW batch against (store ∪ batch): only the
-    new documents are shingled; stored documents participate via their
-    persisted signatures (band keys re-derive from the sig array — a
-    cheap slice+hash, no text access).
-
-    Returns (id_a, id_b, est_jaccard) pairs with AT LEAST ONE new side
-    (old-old pairs were reported when those documents were new), so
-    ingest-run outputs union to exactly the full-corpus pair set when
-    ids are batch-monotonic and buckets stay under ``max_bucket``
-    (cap-bound buckets pair against the first members BY ID, so a
-    later batch cannot retroactively change an earlier run's pairing —
-    the incremental union is then a superset-consistent cover; pinned
-    by the parity pytest). ``pre_dedupe_exact`` is deliberately absent:
-    exact-dup collapse needs the old TEXT, which the store does not
-    carry — collapse exact duplicates upstream of ingest instead.
-
-    ``update_store`` persists the batch's signatures into a partition
-    keyed by the batch's min id (deterministic per batch) with DYNAMIC
-    partition overwrite — a crashed-and-retried ingest overwrites its
-    own partition instead of double-appending, so the store stays
-    1-row-per-doc under at-least-once execution (same idempotence
-    pattern as the streaming micro-batch writer)."""
-    spark = new_df.sparkSession
-    _store_meta(spark, store_path, num_perm, shingle_k, seed, word_hash,
-                write_if_absent=update_store)
-    new_sigs = minhash_signatures(
-        new_df, text_col, id_col, num_perm, shingle_k, seed, word_hash
-    ).persist()
-    sigs = None
-    try:
-        new_ids = new_sigs.select(F.col("id").alias("_nid")).distinct()
-        old_sigs = _read_store(
-            spark, store_path, "id bigint, sig array<bigint>", drop=["_ingest"]
-        )
-        # a crashed-then-RETRIED ingest finds its own signatures already in
-        # the store (dynamic partition overwrite): anti-join the batch ids
-        # out of the store side so the union carries each doc exactly once —
-        # otherwise every pair row is emitted up to 4x and doubled bucket
-        # membership halves the effective max_bucket cap (ADVICE r3 medium)
-        old_sigs = old_sigs.join(
-            F.broadcast(new_ids), old_sigs.id == F.col("_nid"), "left_anti"
-        )
-        # the union feeds three plan branches (banding + both estimate
-        # sides) exactly like the batch path — without this persist the
-        # store parquet is scanned three times and the incremental path
-        # measured SLOWER than a full recompute (0.72x at 200k+20k docs)
-        sigs = old_sigs.union(new_sigs).persist()
-        pairs = lsh_candidate_pairs(sigs, bands, max_bucket)
-        # keep pairs with >= 1 new side; new ids broadcast (a batch is
-        # small next to the store)
-        pairs = (
-            pairs.join(
-                F.broadcast(new_ids), pairs.id_a == F.col("_nid"), "left"
-            )
-            .withColumnRenamed("_nid", "_na")
-            .join(F.broadcast(new_ids), pairs.id_b == F.col("_nid"), "left")
-            .filter(F.col("_na").isNotNull() | F.col("_nid").isNotNull())
-            .select("id_a", "id_b")
-        )
-        est = _estimate_pairs(sigs, pairs, threshold)
-        if update_store:
-            # materialize BEFORE the store write: est's plan reads the
-            # store files, and a retried ingest's dynamic overwrite
-            # replaces that batch's old partition — collecting the lazy
-            # frame afterwards would hit deleted files
-            est = est.localCheckpoint(eager=True)
-            batch_key = new_sigs.agg(F.min("id")).collect()[0][0]
-            if batch_key is not None:
-                (
-                    new_sigs.withColumn("_ingest", F.lit(int(batch_key)))
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("_ingest")
-                    .parquet(store_path)
-                )
-    except BaseException:
-        # a corrupt store makes _read_store raise, and any later step
-        # may: release what this call cached, then re-raise
-        new_sigs.unpersist()
-        if sigs is not None:
-            sigs.unpersist()
-        raise
-    if update_store:
-        # est is checkpointed — release the corpus-sized caches so a
-        # long-lived session running many ingests does not accumulate
-        # one N+b signature cache per call (review finding). The
-        # update_store=False path returns a LAZY est and must keep them.
-        sigs.unpersist()
-        new_sigs.unpersist()
-    return est
-
-
-def _fs_exists(spark, path: str) -> bool:
-    """Path existence via the Hadoop FileSystem API — works on any
-    Hadoop-supported FS and does not depend on Spark's error-message
-    text (ADVICE r3: 'PATH_NOT_FOUND' substring matching breaks across
-    Spark versions, e.g. 'Path does not exist' pre-3.4)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(hpath))
-
-
-def _read_store(spark, path: str, schema: str, drop: list[str] = ()) -> DataFrame:
-    """Read an incremental-store parquet dir; a MISSING path means
-    first ingest (empty frame of ``schema``), but any other read
-    failure (corrupt footer, permissions) propagates — silently
-    treating a broken store as empty would report zero cross-batch
-    dups and then half-update the store. Missing-path detection uses
-    the FileSystem API (not error-message substrings); a path that
-    EXISTS but holds no data files (e.g. an aborted bootstrap leaving
-    only _SUCCESS) also reads as a first ingest."""
-    from pyspark.errors import AnalysisException
-
-    if not _fs_exists(spark, path):
-        return spark.createDataFrame([], schema)
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException as e:
-        _get = getattr(e, "getCondition", None) or getattr(
-            e, "getErrorClass", lambda: None
-        )
-        err_class = _get() or ""
-        if "UNABLE_TO_INFER_SCHEMA" in (err_class or str(e)):
-            return spark.createDataFrame([], schema)
-        raise
-    return df.drop(*drop) if drop else df
-
-
-_STORE_META_SCHEMA = "num_perm int, shingle_k int, seed int, word_hash string"
-
-
-def _store_meta(spark, store_path: str, num_perm: int, shingle_k: int,
-                seed: int, word_hash, write_if_absent: bool,
-                overwrite: bool = False) -> None:
-    """Pin (num_perm, shingle_k, seed, word_hash) beside the signature
-    store and raise on mismatch (ADVICE r3: an incremental call with
-    different parameters silently deflates est_jaccard — zip_with over
-    unequal-length sig arrays pads with null — instead of failing).
-
-    The record lives in ``<store>/_emf_meta`` as single-row JSON;
-    ``_``-prefixed names are Spark's hidden-file convention, so the
-    store's parquet reads never see it. Stored/compared word_hash is
-    the callable's __name__ (identity of the hash family; a None
-    means the engine-default hash).
-
-    ``overwrite=True`` re-pins the meta unconditionally (a store
-    REBUILD). When the meta file is absent but the store already holds
-    rows (a pre-meta legacy store), ``num_perm`` is cross-checked
-    against the stored signature length before being adopted — adopting
-    the caller's params blind would pin WRONG parameters forever and
-    reject all future correct calls (review finding)."""
-    meta_dir = store_path.rstrip("/") + "/_emf_meta"
-    wh = getattr(word_hash, "__name__", None) if word_hash is not None else None
-    if overwrite:
-        spark.createDataFrame(
-            [(num_perm, shingle_k, seed, wh)], _STORE_META_SCHEMA
-        ).coalesce(1).write.mode("overwrite").json(meta_dir)
-        return
-    if _fs_exists(spark, meta_dir):
-        row = spark.read.schema(_STORE_META_SCHEMA).json(meta_dir).collect()[0]
-        have = (row["num_perm"], row["shingle_k"], row["seed"], row["word_hash"])
-        want = (num_perm, shingle_k, seed, wh)
-        if have != want:
-            raise ValueError(
-                f"signature store {store_path} was built with "
-                f"(num_perm, shingle_k, seed, word_hash)={have}; this call "
-                f"passed {want}. Mixed parameters corrupt est_jaccard — "
-                "rebuild the store or match its parameters."
-            )
-        return
-    # no meta: legacy store — verify num_perm against actual sig length
-    first = None
-    if _fs_exists(spark, store_path):
-        from pyspark.errors import AnalysisException
-
-        try:
-            first = spark.read.parquet(store_path).select(
-                F.size("sig").alias("k")
-            ).first()
-        except AnalysisException:
-            first = None
-    if first is not None and first["k"] != num_perm:
-        raise ValueError(
-            f"signature store {store_path} holds {first['k']}-length "
-            f"signatures but this call passed num_perm={num_perm}; "
-            "match the store's parameters or rebuild it."
-        )
-    if write_if_absent:
-        spark.createDataFrame(
-            [(num_perm, shingle_k, seed, wh)], _STORE_META_SCHEMA
-        ).coalesce(1).write.mode("overwrite").json(meta_dir)
 
 
 def line_dedup(

@@ -3,7 +3,7 @@
 The incremental-publish primitive of a data pipeline: given yesterday's
 and today's snapshot of a keyed dataset, emit (key, status) with status
 in {added, removed, changed} — the delta feed downstream consumers (or
-an incremental dedup/index refresh, see dedup.minhash_incremental)
+an incremental dedup/index refresh)
 actually want, instead of a full re-read.
 
 Scale shape: ONE full-outer shuffle join on the key (both sides shuffle

@@ -217,34 +217,6 @@ def deterministic_centroids(
     return [[float(x) for x in row[0]] for row in rows]
 
 
-def kmeans_refine(
-    df: DataFrame,
-    centroids: list[list[float]],
-    iters: int = 2,
-) -> list[list[float]]:
-    """Lloyd refinement of the seed centroids (cosine assignment, mean
-    update). Per iteration: ONE distributed pass (R fused dot products
-    per row + groupBy mean over dims); only the R centroid rows ever
-    reach the driver. Empty lists keep their previous centroid."""
-    dim = len(centroids[0])
-    cents = [[float(x) for x in c] for c in centroids]
-    for _ in range(iters):
-        assigned = ivf_assign(df, cents)
-        rows = (
-            assigned.groupBy("_list")
-            .agg(
-                *[
-                    F.avg(F.col("embedding")[i].cast("double")).alias(f"c{i}")
-                    for i in range(dim)
-                ]
-            )
-            .collect()
-        )
-        new = {int(r["_list"]): [float(r[f"c{i}"]) for i in range(dim)] for r in rows}
-        cents = [new.get(i, cents[i]) for i in range(len(cents))]
-    return cents
-
-
 def ivf_topk(
     df: DataFrame,
     qvec: list[float],

@@ -6,8 +6,8 @@ The EMF composition is written once and shared by ``build_events``,
 caller's own materialization, ``parse.split_valid`` (valid rows and the
 errors side-output), then ``aggregate`` (windowed salted two-phase
 histogram + metadata merge -> EMF event assembly). ``run`` adds the
-routed write of the valid staged rows, per-sink event writes and
-compression stats.
+routed write of the valid staged rows, per-sink event writes and the
+per-sink compression stats collected from the written events.
 
 The composition's expressions are built once per session: the
 operators build every ``Column`` tree that does not depend on the
@@ -142,7 +142,7 @@ def run(
     resumable: bool = False,
 ) -> PipelineResult:
     """Full job with writes: staged parse checkpoint, routed rows,
-    per-sink events, errors, stats.
+    per-sink events and errors; returns the per-sink stats.
 
     Topology (the input is scanned and detok+parse runs exactly ONCE):
 
@@ -150,7 +150,7 @@ def run(
       staged --split_valid--> errors
       staged --split_valid--> valid --> routed (by sink)
       valid --> aggregate --> events (persisted)
-      events --> per-sink writes; events --> compression stats
+      events --> per-sink writes, then compression stats (collected)
 
     The staged parquet is written and re-read: its vectorized nested
     column scans (dims/cwm/metric_raw) measured ~8x faster than an
@@ -165,9 +165,14 @@ def run(
 
     The errors, routed and events writes are independent given the
     checkpoint and run concurrently through ``run_legs``; the staged
-    write and the stats run as single legs. Every leg's jobs keep the
+    write runs as a single leg before them. Every leg's jobs keep the
     caller's job group and are described ``staged``, ``errors``,
-    ``routed``, ``events`` or ``stats``.
+    ``routed`` or ``events``.
+
+    The events leg collects ``output_op.compression_stats`` over the
+    persisted events once its write has filled that cache, and
+    ``PipelineResult.stats`` holds the rows as a local relation: reading
+    it runs no job, and no stats table is written.
 
     ``resumable`` writes the events through the lineage manifest
     (``lineage.write_events_resumable``) instead of the parquet and
@@ -189,7 +194,7 @@ def run(
     # stays at one or two. A repartition to a fixed count is never
     # coalesced: 2x cores cut a 3k-record parse into 8 tasks on 4 cores.
     staged = stage(spark.read.parquet(input_path).hint("rebalance"), lookup, window_ms)
-    paths = {leg: os.path.join(out_dir, leg) for leg in ("staged", "errors", "stats")}
+    paths = {leg: os.path.join(out_dir, leg) for leg in ("staged", "errors")}
 
     def _write_staged():
         staged.write.mode("overwrite").parquet(paths["staged"])
@@ -211,26 +216,33 @@ def run(
         paths["routed"] = route_op.write_routed(valid, out_dir)
 
     def _write_events():
+        info = None
         if resumable:
             info = lineage.write_events_resumable(spark, events, out_dir)
             paths["events"] = info["path"]
-            return info
-        paths["events"], paths["events_jsonl"] = output_op.write_events(
-            events, out_dir
-        )
-
-    def _write_stats():
-        output_op.compression_stats(events).write.mode("overwrite").parquet(
-            paths["stats"]
-        )
-        return spark.read.parquet(paths["stats"])
+        else:
+            paths["events"], paths["events_jsonl"] = output_op.write_events(
+                events, out_dir
+            )
+        return info, _collected(output_op.compression_stats(events))
 
     # the events cache is released even if a write raises
     try:
         written = run_legs(
             errors=_write_errors, events=_write_events, routed=_write_routed
         )
-        stats = run_legs(stats=_write_stats)["stats"]
     finally:
         events.unpersist()
-    return PipelineResult(valid, errors, events, stats, paths, written["events"])
+    info, stats = written["events"]
+    return PipelineResult(valid, errors, events, stats, paths, info)
+
+
+def _collected(df: DataFrame) -> DataFrame:
+    """``df``'s rows, collected once, as a ``LocalRelation``: reading it
+    again runs no job. (``createDataFrame`` over a Python list plans a
+    ``LogicalRDD`` instead, whose ``collect`` is a job.)"""
+    jdf = df._jdf
+    local = df.sparkSession._jsparkSession.createDataFrame(
+        jdf.collectAsList(), jdf.schema()
+    )
+    return DataFrame(local, df.sparkSession)

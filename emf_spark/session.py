@@ -41,6 +41,16 @@ DEFAULT_CONF = {
     # 0 for both at 2000. 2000 leaves room for the other operators a
     # session runs without evicting the EMF calls' classes.
     "spark.sql.codegen.cache.maxEntries": "2000",
+    # Under AQE a query's whole-stage codegen ids follow the order its
+    # stages are created, and that order follows which of two concurrent
+    # stages finishes first. With the id in each generated class's name
+    # (Spark's default), the first warm micro-batch whose cached-scan
+    # stages finish in the other order compiles its classes again (6;
+    # the other order came in 8 of 30 warm calls at local[8] on a 4-vCPU
+    # host, plans equal but for their codegen ids). Without the id in
+    # the name, both orders generate the same code and share one cache
+    # entry.
+    "spark.sql.codegen.useIdInClassName": "false",
     # PySpark's DataFrame call-site capture (Spark's documentation
     # warns of its non-trivial overhead): on every DataFrame and
     # functions call it walks the Python stack, retries a failing

@@ -245,19 +245,6 @@ def test_ivf_topk(vecs):
     assert len(ids & {0, 1, 2, 3, 4}) >= 3
 
 
-def test_kmeans_refine_improves_or_holds_recall(vecs):
-    df, q = vecs
-    seeds = similarity.deterministic_centroids(df, r=4)
-    refined = similarity.kmeans_refine(df, seeds, iters=2)
-    assert len(refined) == 4 and all(len(c) == 16 for c in refined)
-    truth = {r["id"] for r in similarity.cosine_topk(df, q, k=5).collect()}
-    got = {
-        r["id"]
-        for r in similarity.ivf_topk(df, q, refined, k=5, n_probe=2).collect()
-    }
-    assert len(got & truth) >= 3
-
-
 def test_kmeans_exact_matches_python_reference(vecs):
     """The full iterative algorithm — quantize, seed, argmin with
     lowest-index tie-break, truncate-div centroid mean, empty-cluster
@@ -1202,46 +1189,6 @@ def test_real_feature_wav_with_data_bytes_in_samples():
     assert abs(float(np.linalg.norm(v)) - 1.0) < 1e-5
 
 
-def test_minhash_incremental_matches_full(spark, tmp_path):
-    """Ingest-run union == full-corpus pairs: two batches through the
-    signature store (only the new batch is ever shingled) must produce
-    exactly the pairs a from-scratch run over the whole corpus finds."""
-    from emf_spark.datax import dedup as dd
-
-    base = [
-        "alpha beta gamma delta epsilon zeta eta theta iota kappa lam mu",
-        "one two three four five six seven eight nine ten eleven twelve",
-        "red green blue cyan magenta yellow black white gray pink teal navy",
-    ]
-    rows = []
-    for i in range(30):
-        fam = base[i % 3]
-        words = fam.split()
-        words[-1] = f"tail{i // 3 % 2}"  # two variants per family
-        rows.append((i, " ".join(words)))
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    kw = dict(num_perm=32, bands=8, threshold=0.5, max_bucket=1_000_000)
-    full = {
-        (r["id_a"], r["id_b"], r["est_jaccard"])
-        for r in dd.minhash_near_duplicates(
-            df, pre_dedupe_exact=False, **kw
-        ).collect()
-    }
-    assert len(full) > 20  # non-vacuous: families produce real pairs
-    store = str(tmp_path / "sigstore")
-    b1 = df.filter(F.col("doc_id") < 15)
-    b2 = df.filter(F.col("doc_id") >= 15)
-    inc = set()
-    for b in (b1, b2):
-        inc |= {
-            (r["id_a"], r["id_b"], r["est_jaccard"])
-            for r in dd.minhash_incremental(b, store, **kw).collect()
-        }
-    assert inc == full
-    # the store now carries every signature exactly once
-    assert spark.read.parquet(store).count() == 30
-
-
 def test_bmp_decode_roundtrip(spark):
     """24bpp BMP: stride padding excluded from sums; top-down (negative
     height) decodes identically; truncated raster degrades to unknown."""
@@ -1615,102 +1562,6 @@ def test_gif_decode_media_and_fallbacks(spark):
     r = got["hdr"]
     assert (r["format"], r["width"], r["height"]) == ("gif", 33, 21)
     assert r["n_units"] is None and r["value_sum"] is None
-
-
-def test_minhash_incremental_retry_is_idempotent(spark, tmp_path):
-    """A crashed-then-retried ingest must not double-append signatures
-    (dynamic partition overwrite keyed by batch-min id)."""
-    from emf_spark.datax import dedup as dd
-
-    store = str(tmp_path / "sigstore_retry")
-    b = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta tail{i % 2}") for i in range(8)],
-        ["doc_id", "text"],
-    )
-    kw = dict(num_perm=32, bands=8, threshold=0.5, max_bucket=1_000_000)
-    p1 = sorted(tuple(r) for r in dd.minhash_incremental(b, store, **kw).collect())
-    # retry the SAME batch (simulates crash after store update)
-    p2 = sorted(tuple(r) for r in dd.minhash_incremental(b, store, **kw).collect())
-    assert spark.read.parquet(store).count() == 8  # not 16
-    assert p1  # non-vacuous
-    # ROW-level identity, not set identity: the retry sees its own sigs
-    # already in the store, and without the anti-join each pair row is
-    # emitted up to 4x (ADVICE r3 medium) — sets would mask that
-    assert p2 == p1
-
-
-def test_minhash_incremental_store_meta_mismatch_raises(spark, tmp_path):
-    """The signature store pins (num_perm, shingle_k, seed, word_hash);
-    an incremental call with different parameters must FAIL, not
-    silently deflate est_jaccard (ADVICE r3)."""
-    import pytest
-
-    from emf_spark.datax import dedup as dd
-
-    store = str(tmp_path / "sigstore_meta")
-    b = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta tail{i}") for i in range(4)],
-        ["doc_id", "text"],
-    )
-    dd.write_signature_store(b, store, num_perm=32)
-    with pytest.raises(ValueError, match="num_perm"):
-        dd.minhash_incremental(b, store, num_perm=64, bands=8)
-    with pytest.raises(ValueError):
-        dd.minhash_incremental(b, store, num_perm=32, bands=8, seed=7)
-    # matching params pass the gate
-    dd.minhash_incremental(
-        b, store, num_perm=32, bands=8, update_store=False
-    ).collect()
-
-
-def test_signature_store_meta_validates_before_write(spark, tmp_path):
-    """A mismatched-params append must raise BEFORE touching the store
-    (review finding: validate-after-write corrupted the store with
-    mixed-length signatures and then raised)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from emf_spark.datax import dedup as dd
-
-    store = str(tmp_path / "sigstore_order")
-    b = spark.createDataFrame(
-        [(i, f"alpha beta gamma tail{i}") for i in range(4)],
-        ["doc_id", "text"],
-    )
-    dd.write_signature_store(b, store, num_perm=32)
-    with pytest.raises(ValueError):
-        dd.write_signature_store(
-            b.withColumn("doc_id", F.col("doc_id") + 100),
-            store, num_perm=64, mode="append",
-        )
-    # the store is untouched: still 4 rows, all 32-length sigs
-    rows = spark.read.parquet(store).select(F.size("sig").alias("k")).collect()
-    assert len(rows) == 4 and {r["k"] for r in rows} == {32}
-
-
-def test_signature_store_legacy_no_meta_cross_checks_sig_length(spark, tmp_path):
-    """A pre-meta legacy store must not blindly adopt the caller's
-    params: num_perm is cross-checked against the stored signature
-    length (review finding: blind adoption pinned WRONG params and
-    then rejected all future correct calls)."""
-    import shutil
-
-    import pytest
-
-    from emf_spark.datax import dedup as dd
-
-    store = str(tmp_path / "sigstore_legacy")
-    b = spark.createDataFrame(
-        [(i, f"alpha beta gamma tail{i}") for i in range(4)],
-        ["doc_id", "text"],
-    )
-    dd.write_signature_store(b, store, num_perm=32)
-    shutil.rmtree(str(tmp_path / "sigstore_legacy" / "_emf_meta"))  # simulate pre-meta store
-    with pytest.raises(ValueError, match="32-length"):
-        dd.minhash_incremental(b, store, num_perm=64, bands=8)
-    # correct params adopt + write the meta, and keep working
-    dd.minhash_incremental(b, store, num_perm=32, bands=8).collect()
-    dd.minhash_incremental(b, store, num_perm=32, bands=8).collect()
 
 
 def test_png_decompression_bomb_degrades(spark):
@@ -2119,26 +1970,6 @@ def test_funnel_summary_quote_in_step_name(spark):
         t, ["o'view", "buy"]
     ).collect()}
     assert got == {"o'view": 2, "buy": 1}
-
-
-def test_read_store_propagates_corruption(spark, tmp_path):
-    from emf_spark.datax import dedup as dd
-
-    bad = tmp_path / "corrupt_store"
-    b = spark.createDataFrame([(1, "alpha beta gamma delta")], ["doc_id", "text"])
-    # a store with matching parameters, so the read reaches its data files
-    dd.minhash_incremental(b, str(bad), num_perm=32, bands=8).collect()
-    for p in bad.rglob("*.parquet"):
-        p.write_bytes(b"not a parquet file")
-    spark.catalog.clearCache()
-    try:
-        dd.minhash_incremental(b, str(bad), num_perm=32, bands=8).collect()
-        raised = False
-    except Exception:
-        raised = True
-    assert raised  # a broken store must NOT read as empty
-    # and the batch signatures it cached before the read are released
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_snapshot_diff_membership_only(spark):

@@ -260,7 +260,7 @@ def test_build_events_matches_run_events(spark, corpus_path, tmp_path, key_by_na
     "failing, resumable",
     [
         pytest.param("errors", False, id="errors"),
-        pytest.param("stats", False, id="stats"),
+        pytest.param("events", False, id="events"),
         pytest.param("events", True, id="events-resumable"),
     ],
 )
