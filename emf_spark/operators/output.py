@@ -98,23 +98,16 @@ def _event_cols() -> tuple[Column, Column, Column]:
     )
 
 
-def write_events(df: DataFrame, out_dir: str) -> tuple[str, str]:
-    """Per-sink event tables: parquet (structured, the 'Iceberg table'
-    stand-in) + JSONL (the reference's file-sink format,
-    flush/file.go:40-66). Single pass each, partitioned by sink."""
-    pq_path = os.path.join(out_dir, "events")
+def write_events(df: DataFrame, out_dir: str) -> str:
+    """Per-sink event table, partitioned by sink: parquet (the 'Iceberg
+    table' stand-in). Its ``event_json`` column, one line per row, is
+    the reference's file-sink format (flush/file.go:40-66, SURVEY.md
+    S4)."""
+    path = os.path.join(out_dir, "events")
     df.filter(~F.col("dropped_oversize")).write.mode("overwrite").partitionBy(
         "sink"
-    ).parquet(pq_path)
-    txt_path = os.path.join(out_dir, "events_jsonl")
-    (
-        df.filter(~F.col("dropped_oversize"))
-        .select("sink", F.col("event_json").alias("value"))
-        .write.mode("overwrite")
-        .partitionBy("sink")
-        .text(txt_path)
-    )
-    return pq_path, txt_path
+    ).parquet(path)
+    return path
 
 
 # PutLogEvents batch limits (flush/cloudwatch.go:19-23)

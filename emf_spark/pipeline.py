@@ -2,12 +2,14 @@
 
 The EMF composition is written once and shared by ``build_events``,
 ``run`` and the micro-batch (``streaming/job.py``): ``stage``
-(detokenize -> parse -> broadcast enrich -> event-time window), the
-caller's own materialization, ``parse.split_valid`` (valid rows and the
-errors side-output), then ``aggregate`` (windowed salted two-phase
-histogram + metadata merge -> EMF event assembly). ``run`` adds the
-routed write of the valid staged rows, per-sink event writes and the
-per-sink compression stats collected from the written events.
+(detokenize -> parse -> broadcast enrich -> event-time window), then
+``aggregate`` (windowed salted two-phase histogram + metadata merge ->
+EMF event assembly). ``run`` and the micro-batch flush through
+``checkpoint``: it writes the staged rows to parquet, reads them back
+and splits them (``parse.split_valid``) into valid rows and the errors
+side-output, which every later leg reads. ``run`` adds the routed write
+of the valid staged rows, per-sink event writes and the per-sink
+compression stats collected from the written events.
 
 The composition's expressions are built once per session: the
 operators build every ``Column`` tree that does not depend on the
@@ -35,6 +37,7 @@ from emf_spark.operators import lineage
 from emf_spark.operators import output as output_op
 from emf_spark.operators import parse as parse_op
 from emf_spark.operators import route as route_op
+from emf_spark.schema import TOKENIZED_SCHEMA
 from emf_spark.tokenizer import with_payload
 
 
@@ -96,14 +99,26 @@ def stage(
     tokenized: DataFrame, lookup: DataFrame, window_ms: int = agg.WINDOW_MS
 ) -> DataFrame:
     """Detokenize, parse, enrich and window every record, valid or not,
-    down to ``STAGED_COLS``: the one frame each caller materializes its
-    own way before ``split_valid``. It keeps the input tokens and the
-    lookup attributes, so the valid side is also the routed table; the
-    detokenized payload never survives it."""
+    down to ``STAGED_COLS``: the frame ``run`` and the micro-batch
+    checkpoint before ``split_valid``. It keeps the input tokens
+    and the lookup attributes, so the valid side is also the routed
+    table; the detokenized payload never survives it."""
     parsed = parse_op.parse_emf(with_payload(tokenized))
     return agg.with_window(enrich_op.enrich(parsed, lookup), window_ms).select(
         *STAGED_COLS
     )
+
+
+def checkpoint(staged: DataFrame, path: str) -> tuple[DataFrame, DataFrame]:
+    """Write ``staged`` to parquet at ``path`` as the ``staged`` leg,
+    overwriting what an earlier call left there, and read it back by its
+    own schema (no inference job): ``split_valid`` of the written rows.
+    Every later reader scans the checkpoint, so detokenize and parse run
+    once, and its vectorized nested-column scans (dims/cwm/metric_raw)
+    measured ~8x faster than an in-memory relation."""
+    run_legs(staged=lambda: staged.write.mode("overwrite").parquet(path))
+    read = staged.sparkSession.read.schema(staged.schema).parquet(path)
+    return parse_op.split_valid(read)
 
 
 def aggregate(valid: DataFrame, key_by_namespace: bool = False) -> DataFrame:
@@ -144,6 +159,11 @@ def run(
     """Full job with writes: staged parse checkpoint, routed rows,
     per-sink events and errors; returns the per-sink stats.
 
+    Of the returned ``PipelineResult``, ``.parsed`` and ``.errors`` are
+    lazy reads of this call's staged checkpoint, which the next call to
+    the same ``out_dir`` overwrites, and ``.events`` aggregates again
+    when it is read. Only tests read these three fields.
+
     Topology (the input is scanned and detok+parse runs exactly ONCE):
 
       tokenized --rebalance--> stage --> staged parquet [checkpoint]
@@ -152,10 +172,8 @@ def run(
       valid --> aggregate --> events (persisted)
       events --> per-sink writes, then compression stats (collected)
 
-    The staged parquet is written and re-read: its vectorized nested
-    column scans (dims/cwm/metric_raw) measured ~8x faster than an
-    in-memory relation. ``run`` overwrites it on every call; nothing
-    reads it back across calls.
+    The input is read by ``TOKENIZED_SCHEMA``, so no schema inference
+    job runs.
 
     AQE sizes every stage by its data: it coalesces the rebalance of the
     input, and it also re-plans the persisted events
@@ -165,9 +183,9 @@ def run(
 
     The errors, routed and events writes are independent given the
     checkpoint and run concurrently through ``run_legs``; the staged
-    write runs as a single leg before them. Every leg's jobs keep the
-    caller's job group and are described ``staged``, ``errors``,
-    ``routed`` or ``events``.
+    write (``checkpoint``) runs as a single leg before them. Every leg's
+    jobs keep the caller's job group and are described ``staged``,
+    ``errors``, ``routed`` or ``events``.
 
     The events leg collects ``output_op.compression_stats`` over the
     persisted events once its write has filled that cache, and
@@ -175,9 +193,9 @@ def run(
     it runs no job, and no stats table is written.
 
     ``resumable`` writes the events through the lineage manifest
-    (``lineage.write_events_resumable``) instead of the parquet and
-    JSONL tables: it skips the (sink, window_start) cells an earlier
-    run completed and returns its counters as ``PipelineResult.lineage``.
+    (``lineage.write_events_resumable``) instead of the parquet table:
+    it skips the (sink, window_start) cells an earlier run completed and
+    returns its counters as ``PipelineResult.lineage``.
     Both kinds of write read the same persisted events.
     """
     lookup = lookup if lookup is not None else fixtures.lookup_df(spark)
@@ -193,15 +211,10 @@ def run(
     # fans out to spark.sql.shuffle.partitions tasks and a small one
     # stays at one or two. A repartition to a fixed count is never
     # coalesced: 2x cores cut a 3k-record parse into 8 tasks on 4 cores.
-    staged = stage(spark.read.parquet(input_path).hint("rebalance"), lookup, window_ms)
+    tokenized = spark.read.schema(TOKENIZED_SCHEMA).parquet(input_path)
+    staged = stage(tokenized.hint("rebalance"), lookup, window_ms)
     paths = {leg: os.path.join(out_dir, leg) for leg in ("staged", "errors")}
-
-    def _write_staged():
-        staged.write.mode("overwrite").parquet(paths["staged"])
-        return spark.read.parquet(paths["staged"])
-
-    staged = run_legs(staged=_write_staged)["staged"]
-    valid, errors = parse_op.split_valid(staged)
+    valid, errors = checkpoint(staged, paths["staged"])
     events = aggregate(valid, key_by_namespace).persist()
 
     # 2. errors, 3. routed rows (the valid staged rows, by sink) and
@@ -221,9 +234,7 @@ def run(
             info = lineage.write_events_resumable(spark, events, out_dir)
             paths["events"] = info["path"]
         else:
-            paths["events"], paths["events_jsonl"] = output_op.write_events(
-                events, out_dir
-            )
+            paths["events"] = output_op.write_events(events, out_dir)
         return info, _collected(output_op.compression_stats(events))
 
     # the events cache is released even if a write raises

@@ -23,11 +23,11 @@ DEFAULT_CONF = {
     "spark.sql.adaptive.advisoryPartitionSizeInBytes": "64m",
     # AQE also inside a plan run to fill a cache. With Spark's default
     # (false) a persisted frame keeps all spark.sql.shuffle.partitions
-    # partitions: pipeline.run's events parquet and JSONL writes and its
-    # stats aggregate each ran 8 tasks over a few hundred groups. A warm
-    # 3k-record call on the 4-vCPU host ran 30 events and 10 stats tasks
-    # with it off, 9 and 3 with it on; a warm micro-batch ran the same
-    # 9 jobs and 12 tasks either way.
+    # partitions: pipeline.run's events writes and its stats aggregate
+    # each ran 8 tasks over a few hundred groups. A warm 3k-record call
+    # on the 4-vCPU host ran 30 events and 10 stats tasks with it off, 9
+    # and 3 with it on (measured when the events were also written as
+    # JSONL).
     "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Nested-schema pruning so from_json/struct projections prune at scan.
     "spark.sql.optimizer.nestedSchemaPruning.enabled": "true",

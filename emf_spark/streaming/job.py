@@ -7,13 +7,13 @@ that ticker: a ``foreachBatch`` query over the tokenized parquet file
 stream whose trigger defaults to availableNow (drain what is there,
 then stop) and can be a processing-time interval. The stage
 (``pipeline.stage``: detokenize, parse, broadcast enrich, window) is
-built once per query, on the file stream itself, so a micro-batch only
-persists rows that are already staged. Each micro-batch then runs the
-SAME batch aggregation (event-time tumbling windows inside the batch)
-and writes per-sink events. Its errors write and its events leg (the
-``aggregate`` build and write) run concurrently
-(``pipeline.run_legs``), so the events plan is built while the errors
-write fills the batch's cache. Because event output is keyed by (sink,
+built once per query, on the file stream itself, so a micro-batch
+receives rows that are already staged. Each micro-batch flushes them the
+way ``pipeline.run`` does: ``pipeline.checkpoint`` writes them to
+parquet and reads them back, then the SAME batch aggregation
+(event-time tumbling windows inside the batch) runs over the read-back
+and writes per-sink events, concurrently with the errors write
+(``pipeline.run_legs``). Because event output is keyed by (sink,
 window_start, dim_hash) and the histogram merge is associative,
 re-aggregating a window across micro-batches writes *partial* event
 rows per batch — exactly the reference's semantics of flushing what
@@ -31,12 +31,10 @@ from __future__ import annotations
 
 import os
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from emf_spark import fixtures, pipeline
 from emf_spark.operators import aggregate as agg
-from emf_spark.operators import parse as parse_op
 from emf_spark.schema import TOKENIZED_SCHEMA
 
 
@@ -73,37 +71,32 @@ def _aggregate_batch(
     batch_id: int,
     key_by_namespace: bool = False,
 ) -> None:
-    # The errors write and both aggregation branches read one cached
-    # pass over the batch's staged rows (pipeline.stage ran in the
-    # query), less the columns only a routed copy reads; released even
-    # if a write fails.
-    staged = staged.drop("tokens", "log_group_name", "log_stream_name", "env")
-    staged = staged.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        valid, errors = parse_op.split_valid(staged)
-        # Two concurrent legs: the events plan is built while the errors
-        # write fills the cache. Both writes are scoped to this batch_id,
-        # so a replayed batch overwrites its own partitions.
-        # ALL partials are persisted, including oversize-flagged ones: the
-        # events dir is the MERGE's input store, not the final sink. The
-        # oversize policy applies to the MERGED final event (compact_events
-        # re-renders the JSON and filters there) — silently dropping a
-        # partial here made the merged final event undercount where the
-        # one-shot batch run would have dropped the whole group (review
-        # finding, merge.py's streaming==batch contract).
-        pipeline.run_legs(
-            errors=lambda: write_batch(
-                errors, os.path.join(out_dir, "errors"), batch_id
-            ),
-            events=lambda: write_batch(
-                pipeline.aggregate(valid, key_by_namespace),
-                os.path.join(out_dir, "events"),
-                batch_id,
-                "sink",
-            ),
-        )
-    finally:
-        staged.unpersist()
+    # The errors write and both aggregation branches read one parquet
+    # checkpoint of the batch's staged rows (pipeline.stage ran in the
+    # query), less the columns only a routed copy reads. Each batch
+    # overwrites it, a replayed one included.
+    valid, errors = pipeline.checkpoint(
+        staged.drop("tokens", "log_group_name", "log_stream_name", "env"),
+        os.path.join(out_dir, "staged"),
+    )
+    # Two concurrent legs, both scoped to this batch_id, so a replayed
+    # batch overwrites its own partitions.
+    # ALL partials are persisted, including oversize-flagged ones: the
+    # events dir is the MERGE's input store, not the final sink. The
+    # oversize policy applies to the MERGED final event (compact_events
+    # re-renders the JSON and filters there) — silently dropping a
+    # partial here made the merged final event undercount where the
+    # one-shot batch run would have dropped the whole group (review
+    # finding, merge.py's streaming==batch contract).
+    pipeline.run_legs(
+        errors=lambda: write_batch(errors, os.path.join(out_dir, "errors"), batch_id),
+        events=lambda: write_batch(
+            pipeline.aggregate(valid, key_by_namespace),
+            os.path.join(out_dir, "events"),
+            batch_id,
+            "sink",
+        ),
+    )
 
 
 def run_microbatch(

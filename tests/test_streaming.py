@@ -4,7 +4,6 @@ partial events."""
 
 from __future__ import annotations
 
-import threading
 import time
 
 import pytest
@@ -251,20 +250,9 @@ def _persistent_rdd_ids(spark):
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
-def _plan_nodes(plan) -> list[str]:
-    """Node names of a physical plan's own tree (a cached relation's
-    plan is not a child of its scan, so it is not listed)."""
-    children = plan.children()
-    names = [plan.nodeName()]
-    for i in range(children.length()):
-        names += _plan_nodes(children.apply(i))
-    return names
-
-
 def test_microbatch_releases_cached_parse(spark, stream_input, tmp_path):
-    """Each micro-batch caches its parsed rows for its three readers and
-    releases them before the next batch: a drained query leaves no
-    persisted RDD behind."""
+    """Each micro-batch checkpoints its staged rows to parquet and
+    persists nothing: a drained query leaves no persisted RDD behind."""
     spark.catalog.clearCache()
     before = _persistent_rdd_ids(spark)
     q = sjob.run_microbatch(spark, stream_input, str(tmp_path / "out"))
@@ -273,45 +261,23 @@ def test_microbatch_releases_cached_parse(spark, stream_input, tmp_path):
     assert _persistent_rdd_ids(spark) == before
 
 
-def test_microbatch_events_read_cached_parse_and_release_on_failure(
-    spark, stream_input, tmp_path, monkeypatch
-):
-    """The events write scans the cached parse instead of detokenizing
-    and parsing again, and the cache is released even when that write
-    raises (injected here, after the errors write filled the cache)."""
-    from pyspark.sql.readwriter import DataFrameWriter
+def test_microbatch_legs_read_the_staged_checkpoint(spark, stream_input, tmp_path):
+    """The micro-batch's errors and events writes scan its parquet
+    checkpoint (``out/staged``) instead of detokenizing and parsing
+    again: neither execution runs the detokenize UDF."""
+    from tests.test_plans import _executions_of, _group_jobs, _job_group
 
-    real_parquet = DataFrameWriter.parquet
-    calls, at_failure = [], {}
-    errors_written = threading.Event()
-
-    def failing_events_write(self, path, *args, **kwargs):
-        if path.endswith("events"):
-            # the legs run concurrently: fail only once the errors
-            # write has filled the cache
-            assert errors_written.wait(300)
-            calls.append(path)
-            at_failure["cached"] = _persistent_rdd_ids(spark) - before
-            at_failure["nodes"] = _plan_nodes(self._df._jdf.queryExecution().sparkPlan())
-            raise OSError("injected write failure")
-        calls.append(path)
-        try:
-            return real_parquet(self, path, *args, **kwargs)
-        finally:
-            errors_written.set()
-
-    spark.catalog.clearCache()
-    before = _persistent_rdd_ids(spark)
-    monkeypatch.setattr(DataFrameWriter, "parquet", failing_events_write)
-    with pytest.raises(OSError, match="injected"):
-        sjob._aggregate_batch(
-            _staged(spark, stream_input), str(tmp_path / "out"), 0
-        )
-    assert len(calls) == 2 and calls[1].endswith("events")
-    assert at_failure["cached"], "the parse was not cached when the write ran"
-    nodes = at_failure["nodes"]
-    assert "InMemoryTableScan" in nodes and "ArrowEvalPython" not in nodes, nodes
-    assert _persistent_rdd_ids(spark) == before
+    out = str(tmp_path / "out")
+    with _job_group(spark, tmp_path.name):
+        sjob._aggregate_batch(_staged(spark, stream_input), out, 0)
+    plans = {
+        ex.description(): ex.physicalPlanDescription()
+        for ex in _executions_of(spark, _group_jobs(spark, tmp_path.name))
+    }
+    assert {"staged", "errors", "events"} <= set(plans), sorted(plans)
+    for leg in ("errors", "events"):
+        assert f"{out}/staged]" in plans[leg], plans[leg]
+        assert "ArrowEvalPython" not in plans[leg], plans[leg]
 
 
 @pytest.mark.parametrize("failing", ["errors", "events"])
@@ -320,13 +286,15 @@ def test_microbatch_leg_failure_waits_for_the_other_leg(
 ):
     """The errors and events legs run concurrently: a failure in either
     is raised from the micro-batch only after the other leg finished,
-    and the batch's cache is released."""
+    and the batch leaves no persisted RDD."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     real_parquet = DataFrameWriter.parquet
     finished = []
 
     def write(self, path, *args, **kwargs):
+        if path.endswith("staged"):  # the checkpoint both legs read
+            return real_parquet(self, path, *args, **kwargs)
         if path.endswith(failing):
             raise OSError(f"injected {failing} failure")
         time.sleep(1)  # the other leg outlasts the failure
